@@ -36,7 +36,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 MAX_SPANS = 50
-N_MEDIA = 10_000
+#: distinct span texts and media refs: enough that parquet cannot shrink the
+#: two columns to a small dictionary, so (as in real corpora) they are most
+#: of the bytes that a scan pruned to ``kind, offset`` skips
+N_TEXTS = 200_000
+N_MEDIA = 1_000_000
 #: parquet files per document corpus
 N_FILES = 4
 #: one text in TWIN_EVERY is followed by its near-duplicate twin
@@ -85,8 +89,14 @@ class Texts:
     input_bytes: int
 
 
-def _vocab(prefix: str, n: int) -> pa.Array:
-    return pa.array([f"{prefix}{i}" for i in range(n)], pa.string())
+def _vocab(prefix: str, n: int, suffix=lambda i: "") -> pa.Array:
+    return pa.array([f"{prefix}{i}{suffix(i)}" for i in range(n)], pa.string())
+
+
+def _span_vocabs() -> Tuple[pa.Array, pa.Array]:
+    """The span texts (one to three phrases long) and the media refs."""
+    texts = _vocab("token word ", N_TEXTS, lambda i: " lorem ipsum dolor" * (1 + i % 3))
+    return texts, _vocab("m-", N_MEDIA)
 
 
 def _take(vocab: pa.Array, ix: np.ndarray, valid: np.ndarray) -> pa.Array:
@@ -94,7 +104,7 @@ def _take(vocab: pa.Array, ix: np.ndarray, valid: np.ndarray) -> pa.Array:
     return vocab.take(pa.array(ix, pa.int32(), mask=~valid))
 
 
-def _doc_table(rng: np.random.Generator, first: int, n: int, rate: float, tag: str):
+def _doc_table(rng: np.random.Generator, first: int, n: int, rate: float, tag: str, vocabs):
     """One block of documents (ids ``first .. first+n-1``) plus its flag
     counts and failing-doc count."""
     n_spans = rng.integers(1, MAX_SPANS + 1, n)
@@ -130,8 +140,9 @@ def _doc_table(rng: np.random.Generator, first: int, n: int, rate: float, tag: s
         np.where(kind_bad, 2, np.where(is_text, 0, 1)),
         np.ones(total, bool),
     )
-    text = _take(_vocab("token word", 997), rng.integers(0, 997, total), is_text)
-    media = _take(_vocab("m-", N_MEDIA), rng.integers(0, N_MEDIA, total), ~is_text)
+    texts, medias = vocabs
+    text = _take(texts, rng.integers(0, N_TEXTS, total), is_text)
+    media = _take(medias, rng.integers(0, N_MEDIA, total), ~is_text)
     off = np.where(offset_neg, -(j * 7 + 1), j * 7).astype(np.int32)
     spans_struct = pa.StructArray.from_arrays(
         [kind, text, media, pa.array(off, pa.int32(), mask=offset_null)],
@@ -181,12 +192,13 @@ def documents(root: str, seed: int, n_docs: int, rate: float) -> Docs:
     if meta is None:
         os.makedirs(path, exist_ok=True)
         bounds = np.linspace(0, n_docs, N_FILES + 1).astype(int)
+        vocabs = _span_vocabs()
 
         def write(k: int):
             # one generator per file, so the files can be written in parallel
             rng = np.random.default_rng([seed, n_docs, int(rate * 1e6), k])
             lo, hi = int(bounds[k]), int(bounds[k + 1])
-            table, c, f = _doc_table(rng, lo, hi - lo, rate, f"d{seed}")
+            table, c, f = _doc_table(rng, lo, hi - lo, rate, f"d{seed}", vocabs)
             name = os.path.join(path, f"part-{k:05d}.parquet")
             pq.write_table(table, name)
             return name, c, f
