@@ -149,8 +149,13 @@ class Options:
 
 
 class _Seq:
-    def __init__(self) -> None:
+    """Per-compile state: the depth-first rule-seq counter, and whether each
+    array element's violation builder is gated on its message-free fail
+    condition (set by ``validate`` when it gates rows)."""
+
+    def __init__(self, gate_elements: bool = False) -> None:
         self.n = 0
+        self.gate_elements = gate_elements
 
     def next(self) -> int:
         self.n += 1
@@ -543,6 +548,10 @@ class ConvResult:
     custom_err: Optional[Column] = None  # custom {error,Msg} message column
 
 
+_SCALAR_CONVERTERS = ("to_int", "to_float", "to_boolean", "lowercase")
+_COMPLEX = (T.ArrayType, T.MapType, T.StructType)
+
+
 def _compile_converter(
     conv: Any, col: Column, dt: T.DataType, scope: Scope
 ) -> ConvResult:
@@ -551,6 +560,13 @@ def _compile_converter(
     if conv is None:
         return ConvResult(col, dt)
     if isinstance(conv, str):
+        if conv in _SCALAR_CONVERTERS and isinstance(dt, _COMPLEX):
+            # the reference crashes on every present value ("Couldn't
+            # convert"); a Spark cast of a complex type fails analysis, so
+            # the statically-typed spec is a config error instead
+            raise SpecError(
+                "converter %s cannot convert a %s value" % (conv, dt.simpleString())
+            )
         if conv == "to_int":
             out = col.try_cast("bigint") if not _is_string(dt) else col.try_cast("bigint")
             return ConvResult(out, T.LongType(), fail=col.isNotNull() & out.isNull())
@@ -720,10 +736,21 @@ def _compile_or_validator(
 # --------------------------------------------------------------------------
 # rule compilation
 # --------------------------------------------------------------------------
-def compile_spec(rules: Any, schema: T.StructType, opts: Optional[Options] = None) -> Compiled:
+def compile_spec(
+    rules: Any,
+    schema: T.StructType,
+    opts: Optional[Options] = None,
+    *,
+    gate_elements: bool = False,
+) -> Compiled:
+    """Compile *rules* against *schema*.  ``gate_elements`` is internal to
+    ``validate``'s gated path: each array element builds its violation
+    structs only when its predicate-only fail condition holds
+    (:func:`evalidate_spark.fastpath.element_fail`).  The violations are
+    the same either way; the default stays the ungated reference."""
     opts = opts or Options()
     rules = normalize_rules(rules)
-    seq = _Seq()
+    seq = _Seq(gate_elements)
     scope = _root_scope(schema)
     arrays, outputs = _compile_rules(rules, scope, opts, seq)
     outputs = _merge_outputs(outputs)
@@ -1239,38 +1266,37 @@ def _compile_element_rules(
 
     Explode-free: one `transform` with an index lambda produces per-element
     violation arrays, flattened into the row's violations.  Catalyst keeps
-    this in the same fused projection."""
-    # pre-allocate seq numbers by compiling once against a dummy scope so
-    # numbering matches depth-first order deterministically
-    start = seq.n
+    this in the same fused projection.  PySpark calls ``build`` exactly once
+    to build the lambda, so that one compile advances the shared rule-seq
+    counter in depth-first order and names the converted element fields."""
+    elem_outs: List[OutCol] = []
 
     def build(e: Column, i: Column) -> Column:
-        local = _Seq()
-        local.n = start
         escope = _child_scope(e, edt, parents, True, i.cast("int"))
-        arrays, _ = _compile_rules(list(childs), escope, opts, local)
-        return F.concat(*arrays) if arrays else _empty_viols()
+        arrays, outs = _compile_rules(list(childs), escope, opts, seq)
+        elem_outs.extend(outs)
+        if not arrays:
+            return _empty_viols()
+        v = F.concat(*arrays)
+        if seq.gate_elements:
+            from .fastpath import element_fail
 
-    viols = F.flatten(F.transform(arr, lambda e, i: build(e, i)))
+            fail = F.coalesce(element_fail(childs, e, edt, opts, parents), F.lit(False))
+            v = F.when(fail, v).otherwise(_empty_viols())
+        return v
 
-    # advance the shared counter to account for the element rules
-    probe = _Seq()
-    probe.n = start
-    dummy_scope = _child_scope(F.lit(None).cast(edt.simpleString()), edt, parents, True, None)
-    _, probe_outs = _compile_rules(list(childs), dummy_scope, opts, probe)
-    seq.n = probe.n
+    viols = F.flatten(F.transform(arr, build))
 
     conv_elem: Optional[Column] = None
     conv_dt: T.DataType = edt
-    if probe_outs:
+    if elem_outs:
 
         def conv_one(e: Column) -> Column:
-            local = _Seq()
-            local.n = start
             escope = _child_scope(e, edt, parents, True, None)
-            _, outs = _compile_rules(list(childs), escope, opts, local)
+            # outputs carry no rule-seq, so a throwaway counter will do
+            _, outs = _compile_rules(list(childs), escope, opts, _Seq())
             return F.struct(*[o.col.alias(o.name) for o in outs])
 
         conv_elem = F.transform(arr, conv_one)
-        conv_dt = T.StructType([T.StructField(o.name, o.dtype) for o in probe_outs])
+        conv_dt = T.StructType([T.StructField(o.name, o.dtype) for o in elem_outs])
     return viols, conv_elem, conv_dt

@@ -12,6 +12,12 @@ returns a :class:`ValidationResult` exposing lazy DataFrames:
   the north rule)
 * ``verdicts``  — per-partition pass/fail roll-up via ``spark_partition_id()``
 
+On the default gated path ``verdicts``, ``clean`` and ``failed`` read
+pass/fail from the message-free fail predicate (never from the violations
+array), ``violations`` drops passing rows before its explode, and violation
+structs are built only for failing rows and, inside them, failing array
+elements.
+
 Hard vs soft mode (``/root/reference/src/evalidate.erl:22-34``): soft mode
 never raises; ``enforce()`` reproduces hard mode — it runs an action and
 raises :class:`ValidationError` with the first error if any row violated.
@@ -27,10 +33,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Any, List, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compiler import Compiled, Options, compile_spec
+from .compiler import Compiled, Options, _empty_viols, compile_spec
+from .fastpath import _has_custom, compile_fail_predicate, partition_verdicts
+from .spec import normalize_rules
 
 VIOLATIONS_COL = "violations"
 FIRST_ERROR_COL = "first_error"
@@ -51,13 +59,21 @@ class ValidationResult:
     annotated: DataFrame
     compiled: Compiled
     id_cols: List[str]
+    # the message-free row fail predicate validate() gated on (never NULL);
+    # None = pass/fail is read from size(violations)
+    fail: Optional[Column] = None
+
+    def _fails(self) -> Column:
+        if self.fail is not None:
+            return self.fail
+        return F.size(F.col(VIOLATIONS_COL)) > 0
 
     @property
     def clean(self) -> DataFrame:
         """Rows with no violations, projected to converted output columns
         (the compiled expressions — conversions applied, defaults injected,
         ``no_return`` keys dropped)."""
-        ok = self.annotated.filter(F.size(F.col(VIOLATIONS_COL)) == 0)
+        ok = self.annotated.filter(~self._fails())
         outs = self.compiled.outputs
         if not outs:
             return ok.drop(VIOLATIONS_COL, FIRST_ERROR_COL)
@@ -67,15 +83,21 @@ class ValidationResult:
 
     @property
     def failed(self) -> DataFrame:
-        return self.annotated.filter(F.size(F.col(VIOLATIONS_COL)) > 0)
+        return self.annotated.filter(self._fails())
 
     @property
     def violations(self) -> DataFrame:
         """Exploded typed violation rows (sparse; explode only over failing
-        rows' arrays)."""
-        v = self.annotated.select(
-            *self.id_cols, F.explode(F.col(VIOLATIONS_COL)).alias("v")
-        )
+        rows' arrays — with a fail predicate, passing rows are filtered out
+        before the explode)."""
+        ann = self.annotated if self.fail is None else self.failed
+        # explode_outer + a filter on the (never NULL) violation struct rather
+        # than explode: for a plain explode Catalyst infers size(violations)
+        # > 0 and pushes it below the projection, which then builds every
+        # failing row's violation array twice
+        v = ann.select(
+            *self.id_cols, F.explode_outer(F.col(VIOLATIONS_COL)).alias("v")
+        ).filter(F.col("v").isNotNull())
         return v.select(
             *self.id_cols,
             F.col("v.rule_seq").alias("rule_seq"),
@@ -88,22 +110,9 @@ class ValidationResult:
 
     @property
     def verdicts(self) -> DataFrame:
-        """Per-partition pass/fail verdict rows (north rule).  Keyed by
-        ``spark_partition_id()`` — at most one group per input partition, so
-        the shuffle is negligible at any scale."""
-        return (
-            self.annotated.select(
-                F.spark_partition_id().alias("partition_id"),
-                (F.size(F.col(VIOLATIONS_COL)) == 0).cast("int").alias("ok"),
-            )
-            .groupBy("partition_id")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("ok").alias("passed"),
-                (F.count(F.lit(1)) - F.sum("ok")).alias("failed"),
-            )
-            .withColumn("verdict", F.when(F.col("failed") == 0, F.lit("pass")).otherwise(F.lit("fail")))
-        )
+        """Per-partition pass/fail verdict rows (north rule), keyed by
+        ``spark_partition_id()``."""
+        return partition_verdicts(self.annotated, self._fails())
 
     def metrics(self) -> DataFrame:
         """Per-rule violation counts — one small aggregate."""
@@ -118,7 +127,7 @@ class ValidationResult:
         :class:`ValidationError` with the depth-first first error if any row
         fails; otherwise return the clean output."""
         bad = (
-            self.annotated.filter(F.size(F.col(VIOLATIONS_COL)) > 0)
+            self.failed
             .select(F.col(FIRST_ERROR_COL).alias("e"), *[F.col(c) for c in self.id_cols])
             .limit(1)
             .collect()
@@ -144,34 +153,34 @@ def validate(
     before any job launches (reference config errors,
     ``/root/reference/src/evv.erl:86-87,124-125``).
 
-    ``gate_fast`` (default on) guards the full violation-construction
-    expression behind the cheap predicate-only compile
-    (:mod:`evalidate_spark.fastpath`): rows with zero violations — the
-    overwhelming majority at corpus scale — evaluate only the boolean and
-    skip message/struct building entirely.  The two compilations are
-    equivalence-tested, so results are identical; gating is skipped
-    automatically for specs with custom pandas-UDF validators (the UDF
-    must not run twice)."""
+    ``gate_fast`` (default on) gates the rich path on the cheap
+    message-free fail predicate (:mod:`evalidate_spark.fastpath`): rows
+    with zero violations — the overwhelming majority at corpus scale —
+    evaluate only the boolean and skip message/struct building entirely,
+    and inside a failing row each array element builds its violation
+    structs only if its own fail condition holds.  ``verdicts``, ``clean``,
+    ``failed``, ``enforce`` and the pre-explode filter of ``violations``
+    read the same predicate, so none of them builds a violation array to
+    decide pass/fail.  The two compilations are equivalence-tested, row by
+    row and element by element, so results are identical.  Gating is
+    skipped automatically for specs with custom pandas-UDF validators (the
+    UDF must not run twice); ``gate_fast=False`` is the fully ungated
+    reference."""
     opts = Options(mode=mode, parent_key=parent_key, keep_unruled=keep_unruled)
-    compiled = compile_spec(rules, df.schema, opts)
+    gate = gate_fast and not any(_has_custom(n) for n in normalize_rules(rules))
+    compiled = compile_spec(rules, df.schema, opts, gate_elements=gate)
     ids = list(id_cols) if id_cols else [df.schema.fields[0].name]
     viols = compiled.violations
-    if gate_fast:
-        from .fastpath import _has_custom, compile_fail_predicate
-        from .spec import normalize_rules
-
-        from .compiler import _empty_viols
-
-        nodes = normalize_rules(rules)
-        if not any(_has_custom(n) for n in nodes):
-            fail = compile_fail_predicate(rules, df.schema, opts)
-            viols = F.when(F.coalesce(fail, F.lit(False)), viols).otherwise(
-                _empty_viols()
-            )
+    fail = None
+    if gate:
+        fail = F.coalesce(compile_fail_predicate(rules, df.schema, opts), F.lit(False))
+        viols = F.when(fail, viols).otherwise(_empty_viols())
     annotated = df.withColumn(VIOLATIONS_COL, viols).withColumn(
         FIRST_ERROR_COL, F.try_element_at(F.col(VIOLATIONS_COL), F.lit(1))
     )
-    return ValidationResult(annotated=annotated, compiled=compiled, id_cols=ids)
+    if {VIOLATIONS_COL, FIRST_ERROR_COL} & set(df.columns):
+        fail = None  # the predicate would read the replaced input column
+    return ValidationResult(annotated=annotated, compiled=compiled, id_cols=ids, fail=fail)
 
 
 def validate_zipped(
@@ -201,7 +210,7 @@ def validate_zipped(
     types across rule-sets rejected at compile time."""
     from pyspark.sql import types as TT
 
-    from .compiler import OutCol, _empty_viols, _entry_array, _viol_struct
+    from .compiler import OutCol, _entry_array, _viol_struct
     from .spec import SpecError
 
     opts = Options(mode=mode, parent_key=parent_key)
@@ -212,11 +221,8 @@ def validate_zipped(
     # rule-set and skip message/struct construction
     viol_cols = [c.violations for c in compiled]
     if gate_fast:
-        from .fastpath import _has_custom, compile_fail_predicate
-        from .spec import normalize_rules as _norm
-
         for i, rs in enumerate(rulesets):
-            if any(_has_custom(n) for n in _norm(rs)):
+            if any(_has_custom(n) for n in normalize_rules(rs)):
                 continue
             fail = compile_fail_predicate(rs, df.schema, opts)
             viol_cols[i] = F.when(

@@ -18,7 +18,10 @@ four span fields to ``kind, offset`` — 6× throughput on the north-star
 metric.
 
 Semantics: ``fail_predicate == (size(violations) > 0)`` of the rich path
-— asserted in tests over the fixture with injected violations.  Rules the
+— asserted in tests over the fixture with injected violations.  The same
+equivalence holds per array element: :func:`element_fail` of one element
+≡ ``size(that element's violations) > 0``, which is what lets the gated
+rich compile build violation structs only for failing elements.  Rules the
 predicate-only walker cannot express field-locally (cross-field checks
 inside array elements, custom pandas UDF validators, deep nesting inside
 arrays) fall back to an element-struct ``exists`` — still message-free,
@@ -158,9 +161,9 @@ def _childs_conv_fail(conv: Any, dt: T.DataType) -> bool:
     array).  Statically derivable: over a struct-childs output,
     ``filter_duplicates`` / ``Each`` hit the non-array branch whose fail is
     ``input.isNotNull()`` ≡ present; every other built-in either has no fail
-    condition (casts to string) or fails analysis in the rich compile before
-    gating can matter.  Over array-childs output no built-in converter
-    produces a fail condition."""
+    condition (casts to string) or is rejected with a SpecError by the rich
+    compile before gating can matter.  Over array-childs output no built-in
+    converter produces a fail condition."""
     if not (isinstance(dt, T.StructType) or _string_keyed_map(dt)):
         return False
     return conv == "filter_duplicates" or isinstance(conv, Each)
@@ -308,20 +311,27 @@ def _element_rules_fail(
                 sub, lambda e: e.isNotNull() & _convert_fail(conv, e, fdt, fscope)
             )
     if fallback:
+        fail = fail | F.exists(arr, lambda e: element_fail(fallback, e, edt, opts, path))
+    return fail
 
-        def elem_fail(e: Column) -> Column:
-            if is_map:
-                escope = _map_value_scope(e, edt)
-            else:
-                escope = _field_scope(
-                    names, lambda k, el=e: el if k == "__row__" else el.getField(k)
-                )
-            f_ = F.lit(False)
-            for c in fallback:
-                f_ = f_ | _node_fail(c, escope, opts, path, in_element=True)
-            return f_
 
-        fail = fail | F.exists(arr, elem_fail)
+def element_fail(
+    childs: Sequence[Any], e: Column, edt: T.DataType, opts: Options,
+    path: Tuple[str, ...] = (),
+) -> Column:
+    """Fail condition of ONE array element *e* (inside a higher-order
+    function lambda) under the element *childs* rules — message-free, and
+    ``≡ size(element's violations) > 0`` of the rich element compile
+    (``compiler._compile_element_rules`` gates each element's violation
+    builder on it)."""
+    if _string_keyed_map(edt):
+        escope = _map_value_scope(e, edt)
+    else:
+        names = {f.name: f.dataType for f in edt.fields}
+        escope = _field_scope(names, lambda k: e if k == "__row__" else e.getField(k))
+    fail = F.lit(False)
+    for c in childs:
+        fail = fail | _node_fail(c, escope, opts, path, in_element=True)
     return fail
 
 
@@ -373,12 +383,11 @@ def compile_fail_predicate(
     return fail
 
 
-def verdict_scan(df: DataFrame, rules: Any, **opts: Any) -> DataFrame:
-    """Per-partition pass/fail verdicts via the predicate-only path — THE
-    whole-corpus verdict job at 10^12 scale: pruned scan → boolean → tiny
-    partition-id aggregate.  Row-identical to
-    ``validate(df, rules).verdicts``."""
-    fail = compile_fail_predicate(rules, df.schema, Options(**opts) if opts else None)
+def partition_verdicts(df: DataFrame, fail: Column) -> DataFrame:
+    """Per-partition pass/fail roll-up of a row fail predicate: ``(partition_id,
+    rows, passed, failed, verdict)`` keyed by ``spark_partition_id()`` — at
+    most one group per input partition, so the shuffle is negligible at any
+    scale.  A NULL *fail* counts as a pass."""
     return (
         df.select(
             F.spark_partition_id().alias("partition_id"),
@@ -394,6 +403,15 @@ def verdict_scan(df: DataFrame, rules: Any, **opts: Any) -> DataFrame:
             "verdict", F.when(F.col("failed") == 0, F.lit("pass")).otherwise(F.lit("fail"))
         )
     )
+
+
+def verdict_scan(df: DataFrame, rules: Any, **opts: Any) -> DataFrame:
+    """Per-partition pass/fail verdicts via the predicate-only path — THE
+    whole-corpus verdict job at 10^12 scale: pruned scan → boolean → tiny
+    partition-id aggregate.  Row-identical to
+    ``validate(df, rules).verdicts``."""
+    fail = compile_fail_predicate(rules, df.schema, Options(**opts) if opts else None)
+    return partition_verdicts(df, fail)
 
 
 def keyed_verdicts(

@@ -41,8 +41,12 @@ def canon(v):
         raise NonScalarCell(f"integer out of int64 range: {v}")
     import decimal
 
-    if isinstance(v, decimal.Decimal) and not -_I64 - 1 <= v <= _I64:
-        raise NonScalarCell(f"decimal out of int64 range: {v}")
+    if isinstance(v, decimal.Decimal):
+        # NaN/sNaN raise InvalidOperation from an ordering comparison
+        if not v.is_finite():
+            raise NonScalarCell(f"non-finite decimal: {v}")
+        if not -_I64 - 1 <= v <= _I64:
+            raise NonScalarCell(f"decimal out of int64 range: {v}")
     return str(v)
 
 

@@ -3,20 +3,21 @@ rich engine on the violation-injected fixture; scan pruning verified from
 the executed plan."""
 
 import re
+from collections import Counter
 
 import pytest
 
 from pyspark.sql import functions as _F
 from pyspark.sql import functions as F
 
-from evalidate_spark import Rule, RuleAnd, RuleOr, Allowed, Size, Type, validate
+from evalidate_spark import Default, Rule, RuleAnd, RuleOr, Allowed, Size, Type, validate
 from evalidate_spark.fastpath import compile_fail_predicate, verdict_scan
 from evalidate_spark.fixtures import gen_documents
 from evalidate_spark.operators.spans import span_rules
 
 
 def assert_equiv(df, rules, id_col="doc_id"):
-    rich = validate(df, rules, id_cols=[id_col]).annotated.select(
+    rich = validate(df, rules, gate_fast=False, id_cols=[id_col]).annotated.select(
         F.monotonically_increasing_id().alias("i"),
         (F.size("violations") > 0).alias("rich_fail"),
     )
@@ -27,6 +28,26 @@ def assert_equiv(df, rules, id_col="doc_id"):
     j = rich.join(fast, "i")
     assert j.filter(F.col("rich_fail") != F.col("fast_fail")).count() == 0
     assert rich.filter("rich_fail").count() > 0  # fixture must exercise failures
+
+
+def _rows(df):
+    return Counter(repr(tuple(r)) for r in df.collect())
+
+
+def assert_gated_equals_ungated(df, rules, id_col="doc_id"):
+    """Default (row- and element-gated) validate() ≡ the ungated reference:
+    full violation rows (all six columns), verdicts, clean and failed rows."""
+    gated = validate(df, rules, id_cols=[id_col])
+    ref = validate(df, rules, id_cols=[id_col], gate_fast=False)
+    assert gated.fail is not None and ref.fail is None
+    cols = [id_col, "rule_seq", "rule_id", "key_path", "span_index", "message", "value_repr"]
+    assert gated.violations.columns == ref.violations.columns == cols
+    want = _rows(ref.violations)
+    assert _rows(gated.violations) == want
+    assert want, "fixture must exercise failures"
+    assert _rows(gated.verdicts) == _rows(ref.verdicts)
+    assert _rows(gated.clean) == _rows(ref.clean)
+    assert _rows(gated.failed) == _rows(ref.failed)
 
 
 def assert_equiv_no_require_fail(df, rules):
@@ -73,7 +94,7 @@ class TestFastPath:
 
     def test_verdict_scan_equals_rich_verdicts(self, spark):
         docs = gen_documents(spark, 2000, partitions=4)
-        rich = validate(docs, span_rules(), id_cols=["doc_id"]).verdicts
+        rich = validate(docs, span_rules(), id_cols=["doc_id"], gate_fast=False).verdicts
         fast = verdict_scan(docs, span_rules())
         key = lambda rows: {r["partition_id"]: (r["rows"], r["passed"], r["failed"], r["verdict"]) for r in rows}
         assert key(fast.collect()) == key(rich.collect())
@@ -127,6 +148,18 @@ class TestFastPath:
         with pytest.raises(SpecError, match="predicate-only"):
             compile_fail_predicate(rules, df.schema)
 
+    def test_scalar_converter_on_array_is_spec_error(self, spark):
+        # a Spark cast of array → bigint fails analysis; both compiles
+        # reject the spec up front instead
+        from evalidate_spark.spec import SpecError
+
+        df = spark.createDataFrame([("d1", ["1"])], "doc_id string, arr array<string>")
+        rules = [Rule(key="arr", converter="to_int")]
+        with pytest.raises(SpecError, match="cannot convert"):
+            validate(df, rules)
+        with pytest.raises(SpecError, match="cannot convert"):
+            compile_fail_predicate(rules, df.schema)
+
     def test_doubly_nested_array_childs(self, spark):
         # array<struct> nested inside array<struct> childs: the predicate
         # path must resolve inner fields via element lambdas, not root
@@ -165,6 +198,7 @@ class TestFastPath:
             "doc_id", F.size("violations").alias("n")
         ).collect()
         assert {(r["doc_id"], r["n"]) for r in gated} == {(r["doc_id"], r["n"]) for r in rich}
+        assert_gated_equals_ungated(df, rules)
 
     def test_childs_with_converter_fail_gated(self, spark):
         # converter over struct-childs output: the rich path emits a
@@ -199,3 +233,165 @@ class TestFastPath:
             "doc_id", compile_fail_predicate(rules, df.schema).alias("f")
         ).collect()
         assert {r["doc_id"]: r["f"] for r in fast} == {"a": True, "b": False}
+
+
+ITEMS = "doc_id string, items array<struct<kind:string, off:bigint, n_str:string, lang:string>>"
+
+
+def _item(kind="text", off=0, n_str="1", lang="en"):
+    return {"kind": kind, "off": off, "n_str": n_str, "lang": lang}
+
+
+class TestElementGate:
+    """Inside a failing row, each array element builds its violation
+    structs only when its own fail condition holds; these fixed cases mix
+    passing and failing elements in the same row and pin the full violation
+    rows to the ungated reference."""
+
+    def test_span_rules_rows_on_fixture(self, spark):
+        docs = gen_documents(spark, 3000, partitions=4)
+        assert_gated_equals_ungated(docs, span_rules())
+
+    def test_array_of_maps(self, spark):
+        df = spark.createDataFrame(
+            [
+                ("d1", [{"k": "v", "lang": "en"}, {"k": None}, {}, {"k": "vv", "old": "x"}]),
+                ("d2", [{"k": "v", "lang": "zz"}, {"k": "v"}]),
+                ("d3", None),
+                ("d4", []),
+                ("d5", [{"k": "ok", "lang": "es"}]),
+            ],
+            "doc_id string, tags array<map<string,string>>",
+        )
+        rules = [
+            Rule(key="doc_id"),
+            Rule(
+                key="tags",
+                presence="optional",
+                childs=[
+                    Rule(key="k", validators=[Size(1, 2)]),
+                    Rule(key="lang", presence="optional", validators=[Allowed(["en", "es"])]),
+                    Rule(key="old", presence="deprecated"),
+                ],
+            ),
+        ]
+        assert_gated_equals_ungated(df, rules)
+
+    def test_rule_or_and_on_error_in_elements(self, spark):
+        df = spark.createDataFrame(
+            [
+                ("d1", [_item(), _item(kind="bogus", n_str="toolong"), _item(kind="media")]),
+                ("d2", [_item(kind="bogus", n_str=None), _item(off=None)]),
+                ("d3", [_item()]),
+            ],
+            ITEMS,
+        )
+        rules = [
+            Rule(key="doc_id"),
+            Rule(
+                key="items",
+                childs=[
+                    RuleOr(
+                        rules=[
+                            Rule(key="kind", validators=[Allowed(["text"])]),
+                            Rule(key="n_str", validators=[Size(1, 3)]),
+                        ]
+                    ),
+                    RuleOr(
+                        rules=[
+                            Rule(key="kind", validators=[Allowed(["media"])]),
+                            Rule(key="off"),
+                        ],
+                        on_error="media needs no offset",
+                    ),
+                    RuleAnd(
+                        rules=[Rule(key="off"), Rule(key="lang", validators=[Allowed(["en"])])],
+                        on_error="offset and language",
+                    ),
+                    RuleAnd(rules=[Rule(key="kind", validators=[Size(1, 4)])]),
+                ],
+            ),
+        ]
+        assert_gated_equals_ungated(df, rules)
+
+    def test_converters_and_default_in_elements(self, spark):
+        df = spark.createDataFrame(
+            [
+                ("d1", [_item(n_str="12"), _item(n_str="oops"), _item(n_str=None, lang=None)]),
+                ("d2", [_item(lang="fr"), _item(lang=None)]),
+                ("d3", [_item(n_str="7", lang=None)]),
+            ],
+            ITEMS,
+        )
+        rules = [
+            Rule(key="doc_id"),
+            Rule(
+                key="items",
+                childs=[
+                    Rule(key="kind", validators=[Type("binary")], converter="to_binary"),
+                    Rule(key="n_str", presence="optional", converter="to_int"),
+                    Rule(key="lang", presence=Default("en"), validators=[Allowed(["en", "es"])]),
+                    Rule(key="off", converter="no_return"),
+                ],
+            ),
+        ]
+        assert_gated_equals_ungated(df, rules)
+
+    def test_required_child_missing_from_element_schema(self, spark):
+        df = spark.createDataFrame(
+            [
+                ("d1", [_item(), _item(kind="bogus")]),
+                ("d2", []),
+                ("d3", None),
+            ],
+            ITEMS,
+        )
+        rules = [
+            Rule(key="doc_id"),
+            Rule(
+                key="items",
+                presence="optional",
+                childs=[
+                    Rule(key="kind", validators=[Allowed(["text"])]),
+                    Rule(key="absent_required"),
+                    Rule(key="absent_optional", presence="optional"),
+                ],
+            ),
+        ]
+        assert_gated_equals_ungated(df, rules)
+
+    def test_input_column_named_violations(self, spark):
+        # annotated replaces the input's `violations` column, so pass/fail
+        # must not be re-read from a predicate over that name
+        df = spark.createDataFrame(
+            [("d1", "ok"), ("d2", "way too long")], "doc_id string, violations string"
+        )
+        rules = [Rule(key="doc_id"), Rule(key="violations", validators=[Size(1, 3)])]
+        gated = validate(df, rules, id_cols=["doc_id"])
+        ref = validate(df, rules, id_cols=["doc_id"], gate_fast=False)
+        assert [r["doc_id"] for r in gated.failed.collect()] == ["d2"]
+        assert _rows(gated.violations) == _rows(ref.violations)
+        assert _rows(gated.verdicts) == _rows(ref.verdicts)
+
+    def test_plan_shapes(self, spark, tmp_path):
+        # verdicts read the pruned predicate and build no violation arrays;
+        # violations filter on the predicate before the explode, and build
+        # each failing row's violation array once
+        path = str(tmp_path / "docs_shapes")
+        gen_documents(spark, 500, partitions=2).write.parquet(path)
+        res = validate(spark.read.parquet(path), span_rules(), id_cols=["doc_id"])
+
+        def plan(df):
+            return df._jdf.queryExecution().executedPlan().toString()
+
+        verdicts = plan(res.verdicts)
+        m = re.search(r"ReadSchema: (\S+)", verdicts)
+        assert m, verdicts
+        assert "text" not in m.group(1) and "media_ref" not in m.group(1)
+        assert "flatten(transform(" not in verdicts
+
+        lines = plan(res.violations).splitlines()
+        gen = next(i for i, ln in enumerate(lines) if "Generate" in ln)
+        below = [ln for ln in lines[gen + 1:] if "Filter" in ln]
+        assert below, lines
+        assert sum("flatten(transform(" in ln for ln in lines) == 1

@@ -1,7 +1,11 @@
 """Property-based rich ⇄ fastpath equivalence: for random specs and rows,
 ``compile_fail_predicate`` must equal ``size(violations) > 0`` of the rich
-compiler — the invariant that makes default gating safe.  (Both round-1
+compiler — the invariant that makes default gating safe — and the default
+row- and element-gated ``validate()`` must produce the ungated violation
+rows.  (Both round-1
 fastpath bugs were equivalence violations exactly here.)"""
+
+from collections import Counter
 
 import hypothesis.strategies as st
 from hypothesis import HealthCheck, given, settings
@@ -156,3 +160,13 @@ def test_fastpath_equals_rich(spark_holder, rules, rows):
     got_r = {r["__idx"]: r["rf"] for r in rich}
     got_f = {r["__idx"]: r["ff"] for r in fast}
     assert got_r == got_f, (rules, rows)
+    # the default validate() gates rows AND array elements on that predicate;
+    # its full violation rows (all six columns) must equal the ungated ones
+    cols = ["__idx", "rule_seq", "rule_id", "key_path", "span_index", "message", "value_repr"]
+
+    def viol_rows(gate_fast):
+        v = validate(df, rules, gate_fast=gate_fast, id_cols=["__idx"]).violations
+        assert v.columns == cols
+        return Counter(tuple(r) for r in v.collect())
+
+    assert viol_rows(True) == viol_rows(False), (rules, rows)
