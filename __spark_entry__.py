@@ -2275,9 +2275,9 @@ def q_minhash_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL MinHash-LSH pipeline — signature → banding → bucket cap →
     pair generation — with an md5-keyed hash family so every stage is
     replayable in DuckDB (xxhash64 is not; md5 is in both engines).
-    Production keeps xxhash64 (`minhash_candidates`); this variant makes
-    the identical machinery (same `_bucket_pairs` tail) hash-checkable
-    end-to-end by the driver."""
+    It shares the `_bucket_pairs` tail with the xxhash64 family
+    (`minhash_candidates`, rows-only as `minhash_pairs`), so that tail is
+    hash-checked end-to-end by the driver."""
     d = _t(spark, sf_dir, "documents")
     return dedup.minhash_candidates_md5(d, num_hashes=16, bands=8)
 
@@ -2332,14 +2332,12 @@ def q_simhash_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL SimHash pipeline — shingling → per-bit majority vote →
     16-bit-chunk bucketing → capped pair generation → exact Hamming —
     with an md5-keyed hash family so every stage is replayable in DuckDB
-    (same pattern as `minhash_pairs_md5`; the xxhash64 production variant
-    `simhash_docs` stays rows-only).  DuckDB rebuilds the signature
-    bit-for-bit from md5 + arithmetic shifts, including the wrapping
-    bit-63 sign bit.  Runs the Arrow-batched vote (bit-identical to the
-    expression fold, pinned in pytest) — the interpreted 64-slot HOF
-    aggregate is ~10× the cost of the numpy unpack."""
+    (same pattern as `minhash_pairs_md5`; the xxhash64 family, which runs
+    the same Arrow-batched vote, stays rows-only as `simhash_docs`).
+    DuckDB rebuilds the signature bit-for-bit from md5 + arithmetic
+    shifts, including the wrapping bit-63 sign bit."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.simhash_candidates_md5(d, arrow=True)
+    return dedup.simhash_candidates_md5(d)
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -229,14 +229,6 @@ def main() -> None:
 
     timed("profile_lineitem_hll", q_profile_hll)
 
-    def q_minhash_arrow():
-        from evalidate_spark.functions import dedup
-
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        return _force(dedup.minhash_candidates(d, num_hashes=32, bands=16, arrow=True))
-
-    timed("minhash_pairs_arrow", q_minhash_arrow)
-
     qs = entry.queries()
     for name in (
         "validate_documents",

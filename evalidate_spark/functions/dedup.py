@@ -13,9 +13,9 @@ Scale design (10^12 docs):
   near-identical groups; buckets are capped BEFORE aggregation
   (:func:`similarity.cap_per_group`) so no executor buffer ever holds a
   whole boilerplate bucket, and capped output carries a ``truncated`` flag.
-* **SimHash** — 64-bit signature via bitwise majority vote over token
-  hashes, all with integer Column expressions; Hamming-distance candidate
-  pairing via band buckets on 16-bit chunks.
+* **SimHash** — 64-bit signature via bitwise majority vote over shingle
+  hashes (hashing JVM-side, the vote in one Arrow-batched numpy pass);
+  Hamming-distance candidate pairing via band buckets on 16-bit chunks.
 * **n-gram Jaccard** — exact verification on LSH candidates only
   (array_intersect/array_union on distinct shingle-hash arrays).
 * **embedding cosine** — see :mod:`evalidate_spark.functions.similarity`;
@@ -30,7 +30,7 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .similarity import cap_per_group
+from .similarity import _ensure_parallelism, cap_per_group
 from .text import fingerprint, shingles, tokens
 
 
@@ -365,95 +365,6 @@ def corpus_diff(
 
 
 # ---------------------------------------------------------------- MinHash
-def minhash_signature_arrow(
-    col: Column, num_hashes: int = 64, shingle_k: int = 3
-) -> Column:
-    """MinHash signature via an Arrow-batched pandas UDF — bit-identical to
-    :func:`minhash_signature` (asserted in tests).  The shingle hashing
-    stays JVM-side (one ``transform`` + ``xxhash64``); the per-permutation
-    re-hash crosses to numpy where the whole batch is processed fully
-    vectorised.  Measured ~10-15% faster than the expression fold at
-    num_hashes=64 (the shared shingle-string hashing dominates both); the
-    gap grows with num_hashes, so prefer this variant for wide signatures.
-
-    The re-hash replicates Spark's ``xxhash64(h, i)`` exactly — XXH64 of
-    the 8-LE-byte long with seed 42 chained into XXH64 of the 4-LE-byte int
-    (public xxHash spec; same constants as ``tests/xxh64_oracle.py``) — as
-    wrapping uint64 array arithmetic, with per-row minima via one
-    ``np.minimum.reduceat`` pass per permutation over the batch's
-    concatenated shingle hashes."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    M = (1 << 64) - 1
-    P1 = np.uint64(0x9E3779B185EBCA87)
-    P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-    P3 = np.uint64(0x165667B19E3779F9)
-    P4 = np.uint64(0x85EBCA77C2B2AE63)
-    SEED_ACC8 = np.uint64((42 + 0x27D4EB2F165667C5 + 8) & M)  # hashLong preamble
-
-    def _rotl(x, r):
-        return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
-
-    def _fmix(h):
-        h = h ^ (h >> np.uint64(33))
-        h = h * P2
-        h = h ^ (h >> np.uint64(29))
-        h = h * P3
-        return h ^ (h >> np.uint64(32))
-
-    def _hash_long42(x):  # XXH64 of 8 LE bytes, seed 42 (vector)
-        k1 = _rotl(x * P2, 31) * P1
-        h = SEED_ACC8 ^ k1
-        h = _rotl(h, 27) * P1 + P4
-        return _fmix(h)
-
-    def _hash_int(i, seed):  # XXH64 of 4 LE bytes `i`, seed array (vector)
-        h = seed + np.uint64((0x27D4EB2F165667C5 + 4) & M)
-        h = h ^ (np.uint64(i) * P1)
-        h = _rotl(h, 23) * P2 + P3
-        return _fmix(h)
-
-    @pandas_udf("array<bigint>")
-    def sig(hs: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        lens = _np.array([0 if a is None else len(a) for a in hs])
-        nz = lens > 0
-        # non-null EMPTY array → the fold's initial accumulator (all MAX),
-        # null array → NULL, matching the expression version exactly
-        init = [(1 << 63) - 1] * num_hashes
-        out = [None if a is None else list(init) for a in hs]
-        if nz.any():
-            flat = _np.concatenate(
-                [_np.asarray(a, dtype=_np.int64) for a in hs if a is not None and len(a)]
-            ).astype(_np.uint64)
-            hl = _hash_long42(flat)
-            starts = _np.concatenate(([0], _np.cumsum(lens[nz])[:-1]))
-            mins = _np.empty((num_hashes, int(nz.sum())), dtype=_np.int64)
-            with _np.errstate(over="ignore"):
-                for i in range(num_hashes):
-                    mins[i] = _np.minimum.reduceat(
-                        _hash_int(i, hl).view(_np.int64), starts
-                    )
-            cols = mins.T
-            j = 0
-            for ix, present in enumerate(nz):
-                if present:
-                    out[ix] = [int(v) for v in cols[j]]
-                    j += 1
-        # defensive: shingles() never yields a NULL array (a null text
-        # becomes the single empty shingle [""], pinned in tests), but a
-        # caller-supplied null array maps to NULL like the expression fold
-        return pd.Series(out)
-
-    # udf_safe: the expression feeds the pandas UDF below (see shingles())
-    hs_col = F.transform(
-        shingles(col, shingle_k, udf_safe=True), lambda s: F.xxhash64(s)
-    )
-    return sig(hs_col)
-
-
 def minhash_signature(
     col: Column, num_hashes: int = 64, shingle_k: int = 3
 ) -> Column:
@@ -504,7 +415,6 @@ def minhash_candidates(
     bands: int = 16,
     shingle_k: int = 3,
     max_bucket: int = 64,
-    arrow: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs ``(id_a, id_b, n_bands, truncated)``
     from MinHash LSH: docs sharing ≥1 band bucket, id_a < id_b.
@@ -528,20 +438,14 @@ def minhash_candidates(
     rows = num_hashes // bands
     ids = F.col("`%s`" % id_col)
     tc = F.col("`%s`" % text_col)
-    sig_fn = minhash_signature_arrow if arrow else minhash_signature
-    sig = sig_fn(tc, num_hashes, shingle_k)
+    sig = minhash_signature(tc, num_hashes, shingle_k)
     # Materialise the signature behind an analysis barrier before banding:
     # each band's element_at(sig, …) would otherwise inline a full copy of
     # the num_hashes-permutation expression tree (quadratic plan blow-up —
     # Catalyst's CollapseProject re-duplicates cheap-looking projections).
     # NULL-text rows are dropped up front: xxhash64 hashes a NULL slice to
     # the seed constant, so without the filter NULL docs co-bucket.
-    live = df.filter(tc.isNotNull())
-    # small/compacted corpus → 1-2 input splits would starve the signature
-    # stage (see _banded_md5); never fires when the scan yields >= cores
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if live.rdd.getNumPartitions() < par:
-        live = live.repartition(par)
+    live = _ensure_parallelism(df.filter(tc.isNotNull()))
     sigs = live.select(ids.alias("__id"), sig.alias("__sig"))
     banded = sigs.select(
         "__id", F.explode(minhash_bands(F.col("__sig"), bands, rows)).alias("b")
@@ -583,8 +487,7 @@ def _bucket_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
 
 
 def minhash_signature_md5(
-    col: Column, num_hashes: int = 16, shingle_k: int = 3,
-    method: str = "arrow",
+    col: Column, num_hashes: int = 16, shingle_k: int = 3
 ) -> Column:
     """MinHash signature keyed by md5 (array<string> of 16-hex-char
     prefixes): permutation *i* is ``min over shingles of
@@ -593,39 +496,17 @@ def minhash_signature_md5(
     minimum IS the hash minimum.
 
     md5 exists in both Spark and DuckDB (xxhash64 does not in DuckDB), so
-    this variant makes the ENTIRE LSH pipeline — signature, banding,
-    bucketing, pair generation — replayable as an ANSI-SQL oracle (keep
-    xxhash64 as the production default and use this for cross-engine
-    verification).
+    this family makes the ENTIRE LSH pipeline — signature, banding,
+    bucketing, pair generation — replayable as an ANSI-SQL oracle.  It
+    costs more than :func:`minhash_signature` because every (permutation,
+    shingle) pair is a separate md5 digest.
 
-    Default evaluation is an Arrow pandas_udf over the JVM-built shingle
-    array: stdlib md5 per (permutation, DISTINCT shingle), raw 8-byte
-    digest minima, hex only for the winners.  BIT-IDENTICAL to the
-    expression form (same UTF-8 ``i:shingle`` input, and the bytewise
-    digest order IS the lowercase-hex string order) but skips the
-    interpreted HOF md5+concat per shingle per permutation — the md5
-    verification family was the bench's dominant cost (VERDICT r4 #4),
-    and repeated shingles hash once here.  ``method="hof"`` keeps the
-    pure-Column twin (the shingle array let-bound via a single-element
-    ``transform`` so its tree appears once, not once per permutation);
-    the two are pinned equal in tests/test_minhash_md5_arrow_parity.py."""
-    if method == "hof":
-        per = F.transform(
-            F.array(shingles(col, shingle_k)),
-            lambda sh: F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda i: F.array_min(
-                    F.transform(
-                        sh,
-                        lambda s: F.substring(
-                            F.md5(F.concat_ws(":", i.cast("string"), s)), 1, 16
-                        ),
-                    )
-                ),
-            ),
-        )
-        return F.flatten(per)
-
+    Evaluated as an Arrow pandas_udf over the JVM-built shingle array:
+    stdlib md5 per (permutation, DISTINCT shingle), raw 8-byte digest
+    minima, hex only for the winners.  The bytewise digest order IS the
+    lowercase-hex string order, so this equals the SQL definition above
+    bit for bit (pinned against a hashlib oracle in
+    tests/test_minhash_md5_arrow_parity.py)."""
     import hashlib
 
     from pyspark.sql.functions import pandas_udf
@@ -642,7 +523,7 @@ def minhash_signature_md5(
             if len(arr) == 0:
                 # array_min over an empty array is NULL per permutation
                 # (cannot happen via shingles(), which always yields the
-                # whole-text shingle — pinned here for twin-exactness)
+                # whole-text shingle)
                 return [None] * num_hashes
             # min over duplicates == min over the distinct set
             best = [b"\xff" * 8] * num_hashes
@@ -688,10 +569,11 @@ def _banded_md5(
     bands: int = 8,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """Shared md5-LSH head: text → md5-keyed MinHash signature → banded
+    """Shared md5-LSH head: text → :func:`minhash_signature_md5` → banded
     bucket rows ``(band, h, __id)``.  Used by the candidate-pair pipeline
     (:func:`minhash_candidates_md5`) and the band-occupancy telemetry
-    (:func:`lsh_band_stats`) so both stages see the identical bucketing."""
+    (:func:`lsh_band_stats`) so both stages see the identical bucketing;
+    NULL-text rows are dropped before the signature."""
     if bands < 1 or bands > num_hashes or num_hashes % bands != 0:
         raise ValueError(
             "bands (%d) must divide num_hashes (%d)" % (bands, num_hashes)
@@ -699,15 +581,7 @@ def _banded_md5(
     rows = num_hashes // bands
     ids = F.col("`%s`" % id_col)
     tc = F.col("`%s`" % text_col)
-    live = df.filter(tc.isNotNull())
-    # a small/compacted corpus can arrive as 1-2 input splits and would
-    # run the whole signature stage on as many cores (the cosine_topk_blas
-    # precedent): round-robin up to the cluster's parallelism.  At scale
-    # the scan already yields >> defaultParallelism splits and this never
-    # fires — no shuffle is added to the big-corpus path.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if live.rdd.getNumPartitions() < par:
-        live = live.repartition(par)
+    live = _ensure_parallelism(df.filter(tc.isNotNull()))
     sig = minhash_signature_md5(tc, num_hashes, shingle_k)
     sigs = live.select(ids.alias("__id"), sig.alias("__sig"))
     per_band = F.transform(
@@ -1121,7 +995,7 @@ def near_duplicates(
 # ---------------------------------------------------------------- SimHash
 def _simhash_vote_batch(row_hashes) -> "pd.Series":
     """Whole-batch 64-bit majority vote: *row_hashes* is a sequence of
-    per-row ``np.uint64`` shingle-hash arrays (empty/None rows → 0).
+    per-row 64-bit shingle-hash arrays (empty/None rows → 0).
 
     One flat concat across the batch, then 64 C-speed passes — per bit,
     ``(flat >> b) & 1`` followed by ``np.add.reduceat`` at the row
@@ -1160,57 +1034,67 @@ def _simhash_vote_batch(row_hashes) -> "pd.Series":
     return pd.Series(out)
 
 
-def simhash64_arrow(col: Column, shingle_k: int = 2) -> Column:
-    """SimHash via an Arrow-batched pandas UDF over the shingle-hash array.
-
-    The shingle hashing stays JVM-side (one ``transform`` + ``xxhash64``);
-    only the 64-bit majority vote crosses to Python, where
+def _simhash_vote(hs: Column) -> Column:
+    """64-bit SimHash (bigint) of an array<bigint> of per-shingle 64-bit
+    hashes: the majority vote runs in an Arrow-batched pandas UDF, where
     :func:`_simhash_vote_batch` unpacks the whole batch with 64 vectorised
-    reduceat passes (no per-row Python loop).  ~10× faster than
-    :func:`simhash64`'s pure-expression fold because HOF ``aggregate``
-    over a 64-slot counter array is interpreted per element.
-    Bit-identical to :func:`simhash64`.
-    """
+    reduceat passes.  An interpreted HOF ``aggregate`` over a 64-slot
+    counter array took about 1.7× as long on a signature-only job (5,000
+    sf0.1 documents, local[4]).  The input must be built from
+    capture-free lambdas (``shingles(..., udf_safe=True)``)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("bigint")
     def vote(hs: pd.Series) -> pd.Series:
         return _simhash_vote_batch(hs)
 
-    # udf_safe: the expression feeds the pandas UDF above (see shingles())
-    hs = F.transform(
-        shingles(col, shingle_k, udf_safe=True), lambda s: F.xxhash64(s)
-    )
     return vote(hs)
 
 
 def simhash64(col: Column, shingle_k: int = 2) -> Column:
-    """64-bit SimHash as bigint: majority vote per bit over shingle hashes.
-    Entirely integer Column expressions (aggregate over a 64-slot counter
-    array) — no UDF."""
-    hs = F.transform(shingles(col, shingle_k), lambda s: F.xxhash64(s))
-    counts = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda b: F.when(F.call_function("shiftright", h, b.cast("int")).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-            ),
-            lambda a, v: a + v,
-        ),
+    """64-bit SimHash as bigint: majority vote per bit over the shingles'
+    ``xxhash64`` values (the shingle hashing stays JVM-side; only the vote
+    crosses to Python, see :func:`_simhash_vote`)."""
+    return _simhash_vote(
+        F.transform(shingles(col, shingle_k, udf_safe=True), lambda s: F.xxhash64(s))
     )
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda cnt, b: F.when(cnt > 0, F.call_function("shiftleft", F.lit(1).cast("bigint"), b.cast("int"))).otherwise(
-                F.lit(0).cast("bigint")
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc.bitwiseOR(v),
+
+
+def simhash64_md5(col: Column, shingle_k: int = 2) -> Column:
+    """64-bit SimHash keyed by md5 — :func:`simhash64` with the xxhash64
+    (absent in DuckDB) swapped for a hash both engines have, so the
+    signature replays in SQL.
+
+    Per shingle the hash is the first 16 hex chars of ``md5(shingle)``,
+    read as two 32-bit halves (``conv`` of 8 hex chars each — the full
+    unsigned 64-bit value doesn't fit a signed bigint) and reassembled as
+    the wrapping bigint ``hi << 32 | lo``, which carries the same 64 bits.
+    The vote is :func:`simhash64`'s; bit 63 lands in the sign bit.  The
+    md5 hex string is let-bound via its own ``transform`` so it is
+    computed once per shingle."""
+    hx = F.transform(shingles(col, shingle_k, udf_safe=True), lambda s: F.md5(s))
+    hs = F.transform(
+        hx,
+        lambda h: F.shiftleft(
+            F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"), 32
+        ).bitwiseOR(F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint")),
+    )
+    return _simhash_vote(hs)
+
+
+def _simhash_pairs(
+    df: DataFrame, text_col: str, id_col: str, sig_fn, shingle_k: int, max_bucket: int
+) -> DataFrame:
+    """Shared SimHash candidates head: drop NULL-text rows (they never
+    produce candidates, same rationale as MinHash), guard the split
+    count, sign with *sig_fn*, then :func:`hamming_candidates` over four
+    16-bit chunks."""
+    ids = F.col("`%s`" % id_col)
+    tc = F.col("`%s`" % text_col)
+    live = _ensure_parallelism(df.filter(tc.isNotNull()))
+    sigs = live.select(ids.alias("__id"), sig_fn(tc, shingle_k).alias("__sig"))
+    return hamming_candidates(
+        sigs, id_col="__id", sig_col="__sig", n_chunks=4, max_bucket=max_bucket
     )
 
 
@@ -1228,110 +1112,7 @@ def simhash_candidates(
     computed via bit_count on the XOR.  Buckets are capped at *max_bucket*
     members BEFORE aggregation (first ids by order, deterministic);
     pairs from capped buckets carry ``truncated = true``."""
-    ids = F.col("`%s`" % id_col)
-    tc = F.col("`%s`" % text_col)
-    sig = simhash64(tc, shingle_k)
-    # NULL-text rows never produce candidates (same rationale as MinHash)
-    live = df.filter(tc.isNotNull())
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if live.rdd.getNumPartitions() < par:  # see _banded_md5
-        live = live.repartition(par)
-    sigs = live.select(ids.alias("__id"), sig.alias("__sig"))
-    return hamming_candidates(
-        sigs, id_col="__id", sig_col="__sig", n_chunks=4, max_bucket=max_bucket
-    )
-
-
-def simhash64_md5(col: Column, shingle_k: int = 2) -> Column:
-    """64-bit SimHash keyed by md5 — the cross-engine-verifiable sibling of
-    :func:`simhash64` (which uses xxhash64, absent in DuckDB).
-
-    Per shingle the hash is the first 16 hex chars of ``md5(shingle)``,
-    split into two 32-bit halves (``conv`` of 8 hex chars each — never
-    materialising the full unsigned 64-bit value, which doesn't fit a
-    signed bigint); bit *b* of the hash votes ±1 from the low half for
-    b < 32 and the high half above.  Majority vote per bit, bit 63 set via
-    Java's wrapping ``shiftleft`` exactly like :func:`simhash64`.  Costlier
-    than the production path (string md5 + two ``conv`` per shingle vs one
-    xxhash64): use for cross-engine verification, keep xxhash64 for bulk.
-
-    The md5 hex string is let-bound via an inner ``transform`` so it is
-    computed ONCE per shingle, not once per half."""
-    hx = F.transform(shingles(col, shingle_k), lambda s: F.md5(s))
-    hs = F.transform(
-        hx,
-        lambda h: F.struct(
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("hi"),
-            F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("lo"),
-        ),
-    )
-    counts = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda b: F.when(
-                    F.when(b < 32, F.call_function("shiftright", h["lo"], b.cast("int")))
-                    .otherwise(F.call_function("shiftright", h["hi"], (b - 32).cast("int")))
-                    .bitwiseAND(F.lit(1))
-                    == 1,
-                    1,
-                ).otherwise(-1),
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda cnt, b: F.when(
-                cnt > 0,
-                F.call_function("shiftleft", F.lit(1).cast("bigint"), b.cast("int")),
-            ).otherwise(F.lit(0).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc.bitwiseOR(v),
-    )
-
-
-def simhash64_md5_arrow(col: Column, shingle_k: int = 2) -> Column:
-    """:func:`simhash64_md5` with the majority vote in an Arrow-batched
-    pandas UDF (the :func:`simhash64_arrow` pattern): md5 + the two
-    ``conv`` halves stay JVM-side; numpy reassembles the unsigned 64-bit
-    hash and unpacks all bits of a batch at once.  Bit-identical to the
-    expression fold (pinned in pytest), ~10× faster — the interpreted
-    64-slot HOF ``aggregate`` dominates the expression variant's cost."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("bigint")
-    def vote(his: pd.Series, los: pd.Series) -> pd.Series:
-        rows = [
-            None
-            if hi is None
-            else (
-                np.asarray(hi, dtype=np.int64).astype(np.uint64)
-                << np.uint64(32)
-            )
-            | np.asarray(lo, dtype=np.int64).astype(np.uint64)
-            for hi, lo in zip(his, los)
-        ]
-        return _simhash_vote_batch(rows)
-
-    # udf_safe + capture-free single-level lambdas (see shingles()); md5 is
-    # evaluated once per half — cheaper than shipping hex strings through
-    # Arrow and parsing them in Python
-    sh = shingles(col, shingle_k, udf_safe=True)
-    his = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-    )
-    los = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 9, 8), 16, 10).cast("bigint")
-    )
-    return vote(his, los)
+    return _simhash_pairs(df, text_col, id_col, simhash64, shingle_k, max_bucket)
 
 
 def simhash_candidates_md5(
@@ -1340,30 +1121,14 @@ def simhash_candidates_md5(
     id_col: str = "doc_id",
     shingle_k: int = 2,
     max_bucket: int = 64,
-    arrow: bool = False,
 ) -> DataFrame:
-    """:func:`simhash_candidates` with the md5-keyed signature — makes the
+    """:func:`simhash_candidates` with :func:`simhash64_md5` — makes the
     ENTIRE SimHash pipeline (shingling, per-bit majority vote, 16-bit chunk
     bucketing, capped pair generation, exact Hamming) replayable as an
     ANSI-SQL oracle: DuckDB reproduces the signature bit-for-bit from
     ``md5`` + arithmetic shifts, so the driver's hash gate covers the whole
-    path end-to-end (the xxhash64 production variant stays rows-only).
-    ``arrow=True`` swaps in the bit-identical Arrow-batched vote
-    (:func:`simhash64_md5_arrow`) — same pairs, ~10× cheaper signature."""
-    ids = F.col("`%s`" % id_col)
-    tc = F.col("`%s`" % text_col)
-    sig_fn = simhash64_md5_arrow if arrow else simhash64_md5
-    sig = sig_fn(tc, shingle_k)
-    live = df.filter(tc.isNotNull())
-    # small/compacted corpus -> 1-2 input splits would starve the
-    # signature stage (see _banded_md5); no-op when splits >= cores
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if live.rdd.getNumPartitions() < par:
-        live = live.repartition(par)
-    sigs = live.select(ids.alias("__id"), sig.alias("__sig"))
-    return hamming_candidates(
-        sigs, id_col="__id", sig_col="__sig", n_chunks=4, max_bucket=max_bucket
-    )
+    path end-to-end (the xxhash64 variant stays rows-only)."""
+    return _simhash_pairs(df, text_col, id_col, simhash64_md5, shingle_k, max_bucket)
 
 
 def hamming_candidates(

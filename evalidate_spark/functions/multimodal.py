@@ -25,6 +25,7 @@ partition of payloads fits executor memory; Arrow batch size is capped via
 
 from __future__ import annotations
 
+import struct
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -123,12 +124,12 @@ def decode_media(kind: str, payload: bytes, strict: bool = False) -> dict:
                     decoded=False,
                 )
                 return out
-        except Exception:
+        except (ValueError, IndexError, struct.error):
             # probe_mp4 raises ValueError on contract violations but can
             # surface IndexError/struct.error on truncated box payloads
             # (e.g. ftyp + empty mvhd) — a malformed payload must fall
-            # through to the stub path, never crash the Arrow stage
-            # (same contract as the AVI/WAV branches above/below).
+            # through to the stub path, never crash the Arrow stage.
+            # Anything else is a bug in the probe and propagates.
             pass
     if kind == "audio" and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         try:

@@ -52,6 +52,22 @@ def cap_per_group(
     )
 
 
+def _ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin *df* up to ``defaultParallelism`` partitions when it
+    has fewer.  A small or compacted input can arrive as 1-2 splits and
+    would run a whole signature or scoring stage on that many cores.  At
+    scale the scan already yields more splits than cores, so this never
+    fires there and adds no shuffle to the big-corpus path.
+
+    Reading the partition count goes through ``.rdd``, which plans the
+    frame eagerly at graph-construction time and is unavailable under
+    Spark Connect."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
+
+
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -368,51 +384,24 @@ def embedding_drift(
 
 
 def _with_srp_dots(
-    base: DataFrame, n_planes: int, dim: int, scale: int, method: str = "arrow"
+    base: DataFrame, n_planes: int, dim: int, scale: int
 ) -> DataFrame:
     """Attach ``__dots`` (array of the n_planes integer plane dots) to a
     frame carrying ``__v`` — the shared signature core of
     :func:`srp_candidates_md5` and :func:`srp_state`.
 
-    Default path is an Arrow ``pandas_udf``: ONE int64 numpy matmul per
-    batch (quantise → ``Q @ planesᵀ``).  Integer addition is
-    associative, so the matmul is BIT-IDENTICAL to the Catalyst HOF
-    fold and to the DuckDB oracle — no float summation-order hazard —
-    while replacing ~n_planes·dim interpreted expression steps per row
-    (HOFs never enter whole-stage codegen; ~1 ms/row at 32×64, the
-    dominant cost of the whole verification family in BENCH_r04) with
-    vectorized BLAS-shape work (~1 µs/row).  Quantisation replicates
-    Spark's ``F.round`` HALF_UP via sign-aware ``floor(|x|·scale+0.5)``
-    (the ``cosine_topk_blas`` precedent); overflow is structurally
-    impossible (|dot| ≤ dim·(scale·|x|_max)·1000 ≪ 2^63 inside the
-    :func:`_vec_ok` envelope).
-
-    ``method="hof"`` keeps the pure-Column twin: one transform over a
-    2D plane literal (n_planes separate aggregate trees would cost
-    ~10 s of analyzer/codegen compile alone), quantised vector
-    let-bound so the per-element round is never re-inlined.  The twins
-    are pinned equal in tests/test_srp_arrow_parity.py."""
-    if method == "hof":
-        qv = F.transform(
-            F.col("__v"),
-            lambda x: F.round(x.cast("double") * F.lit(float(scale))).cast("long"),
-        )
-        planes2d = F.array(*[
-            F.array(*[
-                F.lit(_srp_plane_weight(p, d)).cast("long") for d in range(dim)
-            ])
-            for p in range(n_planes)
-        ])
-        dots = F.transform(
-            planes2d,
-            lambda w: F.aggregate(
-                F.zip_with(F.col("__qv"), w, lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ),
-        )
-        return base.withColumn("__qv", qv).withColumn("__dots", dots)
-
+    An Arrow ``pandas_udf``: ONE int64 numpy matmul per batch (quantise →
+    ``Q @ planesᵀ``).  Integer addition is associative, so the matmul is
+    BIT-IDENTICAL to the per-element SQL fold the DuckDB oracle replays —
+    no float summation-order hazard — while replacing ~n_planes·dim
+    interpreted expression steps per row (HOFs never enter whole-stage
+    codegen; ~1 ms/row at 32×64, the dominant cost of the whole
+    verification family in BENCH_r04) with vectorized BLAS-shape work
+    (~1 µs/row).  Quantisation replicates Spark's ``F.round`` HALF_UP via
+    sign-aware ``floor(|x|·scale+0.5)`` (the ``cosine_topk_blas``
+    precedent); overflow is structurally impossible (|dot| ≤
+    dim·(scale·|x|_max)·1000 ≪ 2^63 inside the :func:`_vec_ok` envelope).
+    tests/test_srp_arrow_parity.py pins it against the Column fold."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
@@ -1395,14 +1384,8 @@ def cosine_topk_blas(
     live = corpus.filter(c_id.isNotNull() & _finite_vec(c_vec)).select(
         c_id.alias("__nid"), c_vec.alias("__cv")
     )
-    # a small/compacted corpus can arrive as ONE input split (the sf0.1
-    # embeddings parquet does) and would score on one task; round-robin
-    # it up to the cluster's parallelism.  At scale the scan already
-    # yields >> defaultParallelism splits and this never fires — no
-    # shuffle is added to the big-corpus path.
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    if live.rdd.getNumPartitions() < par:
-        live = live.repartition(par)
+    # the sf0.1 embeddings parquet is ONE input split
+    live = _ensure_parallelism(live)
 
     def score_topk(batches):
         import pandas as pd

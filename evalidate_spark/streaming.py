@@ -20,34 +20,24 @@ from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .compiler import Options, compile_spec
-from .engine import FIRST_ERROR_COL, VIOLATIONS_COL, validate
+from .compiler import Options
+from .engine import VIOLATIONS_COL, validate
 
 
 def annotate_stream(stream_df: DataFrame, rules: Any, **opts: Any) -> DataFrame:
-    """Input stream + ``violations``/``first_error`` columns — one stateless
-    projection, append-mode safe."""
-    compiled = compile_spec(rules, stream_df.schema, Options(**opts) if opts else None)
-    return stream_df.withColumn(VIOLATIONS_COL, compiled.violations).withColumn(
-        FIRST_ERROR_COL, F.try_element_at(F.col(VIOLATIONS_COL), F.lit(1))
-    )
+    """Input stream + ``violations``/``first_error`` columns — the batch
+    engine's ``annotated`` frame (one stateless projection, append-mode
+    safe)."""
+    return validate(stream_df, rules, **opts).annotated
 
 
 def violations_stream(
     stream_df: DataFrame, rules: Any, id_cols: Sequence[str] = ("doc_id",), **opts: Any
 ) -> DataFrame:
-    """Typed violation rows as an append-mode stream."""
-    ann = annotate_stream(stream_df, rules, **opts)
-    v = ann.select(*id_cols, F.explode(F.col(VIOLATIONS_COL)).alias("v"))
-    return v.select(
-        *id_cols,
-        F.col("v.rule_seq").alias("rule_seq"),
-        F.col("v.rule_id").alias("rule_id"),
-        F.col("v.key_path").alias("key_path"),
-        F.col("v.span_index").alias("span_index"),
-        F.col("v.message").alias("message"),
-        F.col("v.value_repr").alias("value_repr"),
-    )
+    """Typed violation rows as an append-mode stream — the batch engine's
+    ``violations`` frame, so passing rows are dropped before the explode
+    and each failing row's violation array is built once."""
+    return validate(stream_df, rules, id_cols=id_cols, **opts).violations
 
 
 def windowed_verdicts(
@@ -1075,8 +1065,10 @@ def vector_health_stream(
     windowed count/sum: state is O(windows) × 7 longs, every counter
     merges per micro-batch, and integer sums make stream ≡ batch EXACT
     (pinned in tests).  Unlike the id-waved batch trend no id column is
-    needed — event time is the axis — so NULL-vector rows are counted
-    (nothing is excluded except rows the watermark drops)."""
+    needed — event time is the axis — so NULL-vector rows are counted.
+    Rows with a NULL *ts_col* belong to no window and are excluded by an
+    explicit ``IS NOT NULL`` filter ahead of the watermark; beyond that
+    only rows the watermark drops are excluded."""
     vc = F.col("`%s`" % vec_col)
     dim_c = F.size(vc)
     inf = F.lit(float("inf"))
@@ -1086,7 +1078,8 @@ def vector_health_stream(
         | F.isnan(x.cast("double"))
         | (F.abs(x.cast("double")) == inf),
     )
-    flagged = stream_df.withWatermark(ts_col, watermark).select(
+    live = stream_df.filter(F.col(ts_col).isNotNull())
+    flagged = live.withWatermark(ts_col, watermark).select(
         F.col(ts_col),
         vc.isNull().cast("long").alias("__nullv"),
         (vc.isNotNull() & (dim_c != F.lit(int(expected_dim))))

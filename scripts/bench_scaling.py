@@ -12,7 +12,7 @@ Each level runs in a fresh subprocess (one JVM per parallelism level); 4
 timed runs, first discarded (codegen JIT warm-up), min of the rest.
 Writes BENCH.md.
 
-Usage: python scripts/bench_scaling.py [n_docs]
+Usage: python scripts/bench_scaling.py [n_docs] [n_vecs]
 """
 
 from __future__ import annotations

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from evalidate_spark.functions import dedup, text
+from tests import md5_oracle
 
 
 def docs_df(spark, rows):
@@ -212,14 +213,6 @@ class TestDedup:
         ham_far = bin((sigs["d1"] ^ sigs["d3"]) & mask).count("1")
         assert ham < ham_far
 
-    def test_simhash_arrow_bit_identical(self, spark):
-        df = docs_df(spark, DOCS)
-        a = {r["doc_id"]: r["s"] for r in
-             df.select("doc_id", dedup.simhash64(F.col("text")).alias("s")).collect()}
-        b = {r["doc_id"]: r["s"] for r in
-             df.select("doc_id", dedup.simhash64_arrow(F.col("text")).alias("s")).collect()}
-        assert a == b
-
     def test_simhash_candidates(self, spark):
         df = docs_df(spark, DOCS)
         got = {(r["id_a"], r["id_b"]): r["hamming"] for r in dedup.simhash_candidates(df).collect()}
@@ -235,13 +228,16 @@ class TestDedup:
             spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .filter(F.col("doc_id") < 40)
             .select("doc_id", "text")
+            .union(spark.createDataFrame([(99999, None)], "doc_id long, text string"))
         )
         rows = d.select(
             "doc_id", "text", dedup.minhash_signature(F.col("text"), 8, 3).alias("sig")
         ).collect()
-        assert len(rows) == 40
+        assert len(rows) == 41
         for r in rows:
-            assert list(r["sig"]) == X.minhash_signature(r["text"], 8, 3), r["doc_id"]
+            # NULL text signs like "" (shingles() yields [""]), not NULL
+            want = X.minhash_signature(r["text"] or "", 8, 3)
+            assert r["sig"] is not None and list(r["sig"]) == want, r["doc_id"]
 
     def test_simhash_matches_xxh64_oracle(self, spark):
         from tests import xxh64_oracle as X
@@ -389,33 +385,6 @@ def test_top_ngrams_python_oracle(spark):
     assert got == [(g, nd[g], occ[g]) for g in want]
 
 
-def test_minhash_arrow_bit_identical(spark):
-    # Arrow/numpy signature variant must match the expression fold (and
-    # hence the xxh64 oracle) bit-for-bit, incl. NULL text
-    d = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .filter(F.col("doc_id") < 60)
-        .select("doc_id", "text")
-        .union(spark.createDataFrame([(99999, None)], "doc_id long, text string"))
-    )
-    expr = {r["doc_id"]: r["s"] and list(r["s"]) for r in
-            d.select("doc_id", dedup.minhash_signature(F.col("text"), 16, 3).alias("s")).collect()}
-    arw = {r["doc_id"]: r["s"] and list(r["s"]) for r in
-           d.select("doc_id", dedup.minhash_signature_arrow(F.col("text"), 16, 3).alias("s")).collect()}
-    assert expr == arw
-    # NULL text behaves like empty text in BOTH versions (shingles() turns a
-    # null token array into [""] via concat_ws) — pinned here
-    assert arw[99999] == expr[99999] is not None
-
-
-def test_minhash_candidates_arrow_same_pairs(spark):
-    df = docs_df(spark, DOCS)
-    key = lambda rows: {(r["id_a"], r["id_b"]): r["n_bands"] for r in rows}
-    a = key(dedup.minhash_candidates(df, num_hashes=32, bands=16).collect())
-    b = key(dedup.minhash_candidates(df, num_hashes=32, bands=16, arrow=True).collect())
-    assert a == b and a
-
-
 def test_minhash_md5_signature_matches_python_oracle(spark):
     """md5-keyed signature ≡ pure-Python hashlib oracle (same shingling,
     same '%d:%s' keying, 16-hex-prefix string min)."""
@@ -426,69 +395,25 @@ def test_minhash_md5_signature_matches_python_oracle(spark):
             "doc_id", dedup.minhash_signature_md5(F.col("text"), 8, 3).alias("s")
         ).collect()
     }
-
-    def oracle(s, h=8, k=3):
-        t = s.split()
-        sh = [" ".join(t[i : i + k]) for i in range(max(len(t) - k + 1, 1))]
-        return [
-            min(
-                hashlib.md5(("%d:%s" % (i, x)).encode()).hexdigest()[:16]
-                for x in sh
-            )
-            for i in range(h)
-        ]
-
     for did, text_ in DOCS:
-        assert got[did] == oracle(text_), did
+        assert got[did] == md5_oracle.minhash_signature_md5(text_, 8, 3), did
 
 
 def test_simhash_md5_signature_matches_python_oracle(spark):
-    """md5-keyed SimHash ≡ pure-Python hashlib oracle: first 16 hex chars
-    of md5(shingle) as the 64-bit hash, per-bit ±1 majority vote, signed
-    two's-complement wrap for bit 63."""
-    df = docs_df(spark, DOCS)
+    """md5-keyed SimHash ≡ pure-Python hashlib oracle on the DOCS rows and
+    the md5 MinHash contract corners (NULL, empty, whitespace-only,
+    below-k, duplicate shingles, unicode)."""
+    rows = DOCS + [("c%d" % i, t) for i, t in enumerate(md5_oracle.CORNERS)]
     got = {
         r["doc_id"]: r["s"]
-        for r in df.select(
+        for r in docs_df(spark, rows).select(
             "doc_id", dedup.simhash64_md5(F.col("text"), 2).alias("s")
         ).collect()
     }
-
-    def oracle(s, k=2):
-        t = s.split()
-        sh = (
-            [" ".join(t[i : i + k]) for i in range(len(t) - k + 1)]
-            if len(t) >= k
-            else [" ".join(t)]
-        )
-        counts = [0] * 64
-        for x in sh:
-            h = int(hashlib.md5(x.encode()).hexdigest()[:16], 16)
-            for b in range(64):
-                counts[b] += 1 if (h >> b) & 1 else -1
-        u = sum(1 << b for b in range(64) if counts[b] > 0)
-        return u - (1 << 64) if u >= (1 << 63) else u
-
-    for did, text_ in DOCS:
-        assert got[did] == oracle(text_), did
-
-
-def test_simhash_md5_arrow_bit_identical(spark):
-    """Arrow-batched md5 vote ≡ the pure-expression fold on every doc."""
-    df = docs_df(spark, DOCS)
-    expr = {
-        r["doc_id"]: r["s"]
-        for r in df.select(
-            "doc_id", dedup.simhash64_md5(F.col("text"), 2).alias("s")
-        ).collect()
-    }
-    arrow = {
-        r["doc_id"]: r["s"]
-        for r in df.select(
-            "doc_id", dedup.simhash64_md5_arrow(F.col("text"), 2).alias("s")
-        ).collect()
-    }
-    assert expr == arrow
+    for did, text_ in rows:
+        assert got[did] == md5_oracle.simhash64_md5(text_, 2), did
+    # NULL text signs like "" (one '' shingle), not NULL
+    assert got["c0"] == got["c1"] is not None
 
 
 def test_simhash_candidates_md5_finds_dups(spark):

@@ -88,6 +88,31 @@ class TestMp4Probe:
         assert img["decoded"] is False and img["width"] != 100
 
 
+    def test_decode_media_truncated_box_falls_back_to_stub(self):
+        # ftyp + a moov holding an empty mvhd: the probe fails on the
+        # truncated box payload, and decode_media returns the stub row
+        def box(cc, payload):
+            return struct.pack(">I", 8 + len(payload)) + cc + payload
+
+        p = box(b"ftyp", b"isom" + b"\x00" * 8) + box(b"moov", box(b"mvhd", b""))
+        assert mp4.is_mp4(p)
+        with pytest.raises((ValueError, IndexError, struct.error)):
+            mp4.probe_mp4(p)
+        out = multimodal.decode_media("video", p)
+        assert out["decoded"] is False
+        assert out["width"] is not None and out["duration_ms"] is not None
+
+    def test_decode_media_probe_bug_propagates(self, monkeypatch):
+        # only parse errors fall back to the stub; a bug in the probe
+        # (here an AttributeError) must surface, not be swallowed
+        def broken(_data):
+            raise AttributeError("probe bug")
+
+        monkeypatch.setattr(mp4, "probe_mp4", broken)
+        with pytest.raises(AttributeError, match="probe bug"):
+            multimodal.decode_media("video", mp4.encode_mp4(16, 16, 400))
+
+
 class TestMp4Property:
     def test_roundtrip_property(self):
         """encode→probe is the identity on (dims, duration, codec,

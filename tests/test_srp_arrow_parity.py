@@ -1,32 +1,58 @@
-"""Arrow/HOF twin pin for the SRP integer-dot core (`_with_srp_dots`):
-the default Arrow path (one int64 numpy matmul per batch) must be
-BIT-IDENTICAL to the pure-Column HOF fold the DuckDB oracles replay —
-integer addition is associative, so any divergence means the
-quantisation (Spark `F.round` HALF_UP vs sign-aware floor(|x|·s+0.5))
-or the plane matrix drifted.  Randomized vectors + the adversarial
-shapes that stress the rounding boundary (exact .5 products, negative
-zero, tiny magnitudes, the hostile embedding corpus)."""
+"""Oracle pin for the SRP integer-dot core (`_with_srp_dots`): the
+Arrow path (one int64 numpy matmul per batch) must be BIT-IDENTICAL to
+the pure-Column fold below, which spells out the per-element SQL the
+DuckDB oracles replay — integer addition is associative, so any
+divergence means the quantisation (Spark `F.round` HALF_UP vs sign-aware
+floor(|x|·s+0.5)) or the plane matrix drifted.  Randomized vectors + the
+adversarial shapes that stress the rounding boundary (exact .5 products,
+negative zero, tiny magnitudes, the hostile embedding corpus)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from evalidate_spark.fixtures import HOSTILE_EMBEDDINGS
-from evalidate_spark.functions.similarity import _vec_ok, _with_srp_dots
+from evalidate_spark.functions.similarity import (
+    _srp_plane_weight,
+    _vec_ok,
+    _with_srp_dots,
+)
+
+
+def _hof_srp_dots(base, n_planes, dim, scale):
+    """Reference: the quantised vector let-bound once, then one transform
+    over a 2D plane literal folding each plane's integer dot."""
+    qv = F.transform(
+        F.col("__v"),
+        lambda x: F.round(x.cast("double") * F.lit(float(scale))).cast("long"),
+    )
+    planes2d = F.array(*[
+        F.array(*[
+            F.lit(_srp_plane_weight(p, d)).cast("long") for d in range(dim)
+        ])
+        for p in range(n_planes)
+    ])
+    dots = F.transform(
+        planes2d,
+        lambda w: F.aggregate(
+            F.zip_with(F.col("__qv"), w, lambda x, y: x * y),
+            F.lit(0).cast("long"),
+            lambda a, x: a + x,
+        ),
+    )
+    return base.withColumn("__qv", qv).withColumn("__dots", dots)
+
+
+def _collect_dots(df):
+    return {r["id"]: list(r["__dots"]) for r in df.select("id", "__dots").collect()}
 
 
 def _dots(spark, rows, dim, n_planes=8, scale=1_000_000):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(rows)], "id long, v array<float>"
     ).select("id", F.col("v").alias("__v"))
-    out = {}
-    for method in ("arrow", "hof"):
-        got = (
-            _with_srp_dots(df, n_planes, dim, scale, method=method)
-            .select("id", "__dots")
-            .collect()
-        )
-        out[method] = {r["id"]: list(r["__dots"]) for r in got}
-    return out
+    return {
+        "arrow": _collect_dots(_with_srp_dots(df, n_planes, dim, scale)),
+        "hof": _collect_dots(_hof_srp_dots(df, n_planes, dim, scale)),
+    }
 
 
 def test_arrow_equals_hof_on_random_vectors(spark):
@@ -63,25 +89,14 @@ def test_arrow_equals_hof_on_hostile_corpus(spark):
         [(i, r[1]) for i, r in enumerate(HOSTILE_EMBEDDINGS)],
         "id long, v array<float>",
     ).filter(_vec_ok(F.col("v"), dim)).select("id", F.col("v").alias("__v"))
-    a = {
-        r["id"]: list(r["__dots"])
-        for r in _with_srp_dots(df, 8, dim, 1_000_000, method="arrow")
-        .select("id", "__dots")
-        .collect()
-    }
-    h = {
-        r["id"]: list(r["__dots"])
-        for r in _with_srp_dots(df, 8, dim, 1_000_000, method="hof")
-        .select("id", "__dots")
-        .collect()
-    }
+    a = _collect_dots(_with_srp_dots(df, 8, dim, 1_000_000))
+    h = _collect_dots(_hof_srp_dots(df, 8, dim, 1_000_000))
     assert a and a == h
 
 
 def test_arrow_path_is_in_the_plan(spark):
-    """The default method really is the Arrow one (an ArrowEvalPython
-    stage), and the HOF twin really is pure-Column (no Python nodes) —
-    guards against a silent default flip in either direction."""
+    """`_with_srp_dots` really runs the Arrow UDF (an ArrowEvalPython
+    stage), and the reference really is pure-Column (no Python nodes)."""
     df = spark.createDataFrame([(1, [0.5] * 8)], "id long, v array<float>")
     df = df.select("id", F.col("v").alias("__v"))
     arrow_plan = (
@@ -89,7 +104,7 @@ def test_arrow_path_is_in_the_plan(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     hof_plan = (
-        _with_srp_dots(df, 4, 8, 1_000_000, method="hof")
+        _hof_srp_dots(df, 4, 8, 1_000_000)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPython" in arrow_plan

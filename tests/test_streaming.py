@@ -66,6 +66,18 @@ class TestStreaming:
         )
         assert got == want and len(got) > 0
 
+    def test_violations_stream_builds_violations_once(self, spark, docs_dir):
+        """violations_stream is validate().violations: no inferred
+        size(violations) filter sits below the Generate, which would build
+        each failing row's violation array a second time."""
+        sv = streaming.violations_stream(_stream(spark, docs_dir), RULES)
+        q = _run_to_memory(sv, "sv_plan_out")
+        plan = q._jsq.explainInternal(True)
+        opt = plan.split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0]
+        below = opt[opt.index("Generate"):].splitlines()
+        assert not [ln for ln in below if "Filter" in ln and "size(" in ln], opt
+        assert spark.table("sv_plan_out").count() > 0
+
     def test_windowed_verdicts(self, spark, docs_dir):
         wv = streaming.windowed_verdicts(
             _stream(spark, docs_dir), RULES, ts_col="ts", window="10 minutes"
@@ -1015,3 +1027,26 @@ def test_vector_health_stream_matches_batch_counters(spark, tmp_path):
            ("n_null_vec", "n_wrong_dim", "n_null_elem", "n_nonfinite",
             "n_zero_norm")}
     assert all(v > 0 for v in agg.values()), agg
+
+
+def test_vector_health_stream_excludes_null_event_time(spark, tmp_path):
+    """Rows with a NULL event time belong to no window: they are filtered
+    out ahead of the watermark and counted nowhere."""
+    path = str(tmp_path / "vh_null_ts")
+    (
+        spark.range(30)
+        .selectExpr(
+            "CASE WHEN id % 3 = 0 THEN NULL ELSE timestamp'2026-01-01 00:00:00'"
+            " + make_interval(0,0,0,0,0,0,id*60) END ts",
+            "transform(sequence(1, 4), d -> cast(id + d AS float)) embedding",
+        )
+        .repartition(2)
+        .write.parquet(path)
+    )
+    vh = streaming.vector_health_stream(
+        _stream(spark, path), "ts", expected_dim=4, window="1 hour"
+    )
+    _run_to_memory(vh, "vh_null_ts_out", mode="complete")
+    rows = spark.table("vh_null_ts_out").collect()
+    assert len(rows) == 1
+    assert rows[0]["n_rows"] == rows[0]["n_valid"] == 20
