@@ -5185,7 +5185,7 @@ ORACLE["token_counts_bpe"] = _bpe_oracle_sql()
 ORACLE["minhash_pairs_md5"] = """
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS tk
-  FROM documents WHERE text IS NOT NULL
+  FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
 ), sh AS (
   SELECT doc_id, list_transform(
     generate_series(1, greatest(len(tk) - 2, 1)),
@@ -5227,7 +5227,7 @@ FROM p GROUP BY 1, 2
 ORACLE["simhash_pairs_md5"] = """
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS tk
-  FROM documents WHERE text IS NOT NULL
+  FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
 ), sh AS (
   SELECT doc_id, list_transform(
     generate_series(1, greatest(len(tk) - 1, 1)),
@@ -8857,7 +8857,7 @@ FROM j, t
 ORACLE["lsh_band_stats"] = """
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS tk
-  FROM documents WHERE text IS NOT NULL
+  FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
 ), sh AS (
   SELECT doc_id, list_transform(
     generate_series(1, greatest(len(tk) - 2, 1)),

@@ -6,8 +6,9 @@ Scale design (10^12 docs):
 * **exact** — hash-groupBy on a content fingerprint.  The shuffle key is a
   16-byte md5, uniformly distributed, map-side combined; AQE handles the
   (rare) pathological fingerprint skew of boilerplate documents.
-* **MinHash + LSH** — per-doc signatures are a single fused projection (no
-  Python, no shuffle); candidate generation explodes only ``bands`` rows per
+* **MinHash + LSH** — per-doc signatures are one hash aggregate over the
+  exploded shingle hashes (no Python; the partial aggregate reduces each
+  doc map-side); candidate generation explodes only ``bands`` rows per
   doc and groupBy-joins on (band, band_hash) buckets.  Only bucket
   collisions are ever paired, so the quadratic blow-up is confined to
   near-identical groups; buckets are capped BEFORE aggregation
@@ -371,13 +372,11 @@ def minhash_signature(
     """MinHash signature (array<bigint> of length *num_hashes*): permutation
     *i* is ``min over shingles of xxhash64(base_hash, i)``.
 
-    One pass: shingle strings are hashed ONCE (``xxhash64`` per shingle),
-    then each permutation is a cheap integer re-hash folded through a
-    single ``aggregate`` with an array accumulator.  Higher-order-function
-    expressions are interpreted (not whole-stage-codegen), so the naive
-    form — num_hashes separate ``array_min(transform(shingles…))`` trees —
-    re-tokenises and re-hashes the text per permutation and blows the plan
-    up quadratically once downstream expressions reference the signature."""
+    The per-row Column form: shingle hashes folded through one
+    interpreted ``aggregate``/``zip_with``.  The LSH pipelines
+    (:func:`minhash_candidates`, :func:`minhash_state`) compute the same
+    values bit for bit with a compiled hash aggregate instead
+    (:func:`_minhash_slots`)."""
     hs = F.transform(shingles(col, shingle_k), lambda s: F.xxhash64(s))
     idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
     return F.aggregate(
@@ -387,24 +386,58 @@ def minhash_signature(
     )
 
 
-def minhash_bands(sig: Column, bands: int, rows: int) -> Column:
-    """LSH band hashes: array of *bands* structs ``(band, h)`` where ``h``
-    hashes the band's *rows* signature slots.
+def _check_shingle_k(shingle_k: int) -> None:
+    # k < 1 slices every shingle empty: one constant signature, all-pairs junk
+    if shingle_k < 1:
+        raise ValueError("shingle_k must be >= 1, got %d" % shingle_k)
 
-    The signature expression is let-bound via a single-element-array
-    ``transform`` so it appears exactly ONCE in the plan — referencing it
-    per band would inline a full copy of the signature tree each time."""
-    per_band = F.transform(
-        F.array(sig),
-        lambda s: F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.cast("int").alias("band"),
-                F.xxhash64(F.slice(s, b * rows + 1, rows)).alias("h"),
-            ),
-        ),
+
+def _lsh_rows(num_hashes: int, bands: int) -> int:
+    """Signature slots per band, after rejecting what would silently give
+    junk: ``bands > num_hashes`` hashes 0-slot bands to a CONSTANT, and a
+    non-divisor ignores trailing slots."""
+    if bands < 1 or bands > num_hashes or num_hashes % bands != 0:
+        raise ValueError(
+            "bands (%d) must divide num_hashes (%d)" % (bands, num_hashes)
+        )
+    return num_hashes // bands
+
+
+def _minhash_slots(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_k: int
+) -> DataFrame:
+    """xxhash64 MinHash signatures as one hash aggregate, all compiled
+    operators: rows ``(__id, __m0 … __m<num_hashes-1>)``, slot ``__m<i>``
+    equal to element *i* of :func:`minhash_signature`.  NULL-text and
+    NULL-id rows are dropped (no content / no identity to match on).
+    Shingle start positions are exploded and each shingle hashed once;
+    ``groupBy(__row, __id)`` takes ``min(xxhash64(h, i))`` per
+    permutation *i*, reduced map-side by the partial aggregate."""
+    ids = F.col("`%s`" % id_col)
+    tc = F.col("`%s`" % text_col)
+    live = _ensure_parallelism(df.filter(tc.isNotNull() & ids.isNotNull()))
+    t, i = F.col("__t"), F.col("__i")
+    starts = F.sequence(F.lit(1), F.greatest(F.size(t) - (shingle_k - 1), F.lit(1)))
+    hashed = live.select(
+        # row-unique key: duplicate ids keep one signature per row
+        F.monotonically_increasing_id().alias("__row"), ids.alias("__id"), tokens(tc).alias("__t")
+    ).select("__row", "__id", "__t", F.explode(starts).alias("__i")).select(
+        "__row", "__id", F.xxhash64(F.concat_ws(" ", F.slice(t, i, F.lit(shingle_k)))).alias("__h")
     )
-    return F.flatten(per_band)
+    return hashed.groupBy("__row", "__id").agg(
+        *[F.min(F.xxhash64("__h", F.lit(j))).alias("__m%d" % j) for j in range(num_hashes)]
+    ).drop("__row")
+
+
+def _explode_bands(sigs: DataFrame, bands: int, band_hash, keep=("__id",)) -> DataFrame:
+    """Signature rows → LSH bucket rows ``(band, h, *keep)``: one struct
+    ``(band, band_hash(band))`` per band, band an int literal."""
+    per_band = F.array(
+        *[F.struct(F.lit(b).alias("band"), band_hash(b).alias("h")) for b in range(bands)]
+    )
+    return sigs.select(*keep, F.explode(per_band).alias("b")).select(
+        F.col("b.band").alias("band"), F.col("b.h").alias("h"), *keep
+    )
 
 
 def minhash_candidates(
@@ -419,6 +452,13 @@ def minhash_candidates(
     """Candidate near-duplicate pairs ``(id_a, id_b, n_bands, truncated)``
     from MinHash LSH: docs sharing ≥1 band bucket, id_a < id_b.
 
+    Plan: :func:`_minhash_slots` (split guard, a row-unique key so that
+    duplicate ids stay separate signatures, the shingle explode, one hash
+    aggregate over the permutation minima), one explode of ``(band,
+    xxhash64(array(<band slots>)))`` structs, then :func:`_bucket_pairs`.
+    NULL-text rows would co-bucket on the seed hash, and NULL ids would
+    take cap slots from real ids; both are dropped up front.
+
     ``max_bucket`` caps bucket membership (boilerplate guard): a bucket of B
     docs yields B·(B−1)/2 pairs, so one viral template could otherwise
     dominate the output.  The cap is applied BEFORE aggregation (window
@@ -427,29 +467,12 @@ def minhash_candidates(
     ids (deterministic by id order) and their pairs carry
     ``truncated = true``.
     """
-    if bands < 1 or bands > num_hashes or num_hashes % bands != 0:
-        # bands > num_hashes → 0-row bands hash the empty slice to a
-        # CONSTANT, co-bucketing every doc (all-pairs garbage, no error);
-        # non-divisible values silently ignore trailing signature slots —
-        # reject both, like hamming_candidates validates n_chunks
-        raise ValueError(
-            "bands (%d) must divide num_hashes (%d)" % (bands, num_hashes)
-        )
-    rows = num_hashes // bands
-    ids = F.col("`%s`" % id_col)
-    tc = F.col("`%s`" % text_col)
-    sig = minhash_signature(tc, num_hashes, shingle_k)
-    # Materialise the signature behind an analysis barrier before banding:
-    # each band's element_at(sig, …) would otherwise inline a full copy of
-    # the num_hashes-permutation expression tree (quadratic plan blow-up —
-    # Catalyst's CollapseProject re-duplicates cheap-looking projections).
-    # NULL-text rows are dropped up front: xxhash64 hashes a NULL slice to
-    # the seed constant, so without the filter NULL docs co-bucket.
-    live = _ensure_parallelism(df.filter(tc.isNotNull()))
-    sigs = live.select(ids.alias("__id"), sig.alias("__sig"))
-    banded = sigs.select(
-        "__id", F.explode(minhash_bands(F.col("__sig"), bands, rows)).alias("b")
-    ).select(F.col("b.band").alias("band"), F.col("b.h").alias("h"), "__id")
+    _check_shingle_k(shingle_k)
+    rows = _lsh_rows(num_hashes, bands)
+    sigs = _minhash_slots(df, text_col, id_col, num_hashes, shingle_k)
+    banded = _explode_bands(sigs, bands, lambda b: F.xxhash64(
+        F.array(*["__m%d" % i for i in range(b * rows, (b + 1) * rows)])
+    ))
     return _bucket_pairs(banded, max_bucket)
 
 
@@ -551,11 +574,10 @@ def minhash_candidates_md5(
 ) -> DataFrame:
     """:func:`minhash_candidates` with the md5-keyed signature — the
     cross-engine-verifiable LSH path.  Band hash = md5 of the '|'-joined
-    signature slice.  NULL-text rows are filtered out up front — a NULL
-    text must never produce candidates, and without the filter every
-    NULL-text doc would share the constant md5('') band hashes
-    (``concat_ws`` skips NULL elements) and be reported as a duplicate of
-    every other one (mirror with ``WHERE text IS NOT NULL`` in SQL
+    signature slice.  NULL-text rows would share the constant md5('')
+    band hashes (``concat_ws`` skips NULL elements) and NULL ids would
+    take cap slots from real ones, so both are filtered out up front
+    (mirror with ``WHERE text IS NOT NULL AND doc_id IS NOT NULL`` in SQL
     oracles)."""
     banded = _banded_md5(df, text_col, id_col, num_hashes, bands, shingle_k)
     return _bucket_pairs(banded, max_bucket)
@@ -573,29 +595,17 @@ def _banded_md5(
     bucket rows ``(band, h, __id)``.  Used by the candidate-pair pipeline
     (:func:`minhash_candidates_md5`) and the band-occupancy telemetry
     (:func:`lsh_band_stats`) so both stages see the identical bucketing;
-    NULL-text rows are dropped before the signature."""
-    if bands < 1 or bands > num_hashes or num_hashes % bands != 0:
-        raise ValueError(
-            "bands (%d) must divide num_hashes (%d)" % (bands, num_hashes)
-        )
-    rows = num_hashes // bands
+    NULL-text and NULL-id rows are dropped before the signature."""
+    _check_shingle_k(shingle_k)
+    rows = _lsh_rows(num_hashes, bands)
     ids = F.col("`%s`" % id_col)
     tc = F.col("`%s`" % text_col)
-    live = _ensure_parallelism(df.filter(tc.isNotNull()))
+    live = _ensure_parallelism(df.filter(tc.isNotNull() & ids.isNotNull()))
     sig = minhash_signature_md5(tc, num_hashes, shingle_k)
     sigs = live.select(ids.alias("__id"), sig.alias("__sig"))
-    per_band = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.md5(
-                F.concat_ws("|", F.slice(F.col("__sig"), b * rows + 1, rows))
-            ).alias("h"),
-        ),
-    )
-    return sigs.select("__id", F.explode(per_band).alias("b")).select(
-        F.col("b.band").alias("band"), F.col("b.h").alias("h"), "__id"
-    )
+    return _explode_bands(sigs, bands, lambda b: F.md5(
+        F.concat_ws("|", F.slice(F.col("__sig"), b * rows + 1, rows))
+    ))
 
 
 def lsh_band_stats(
@@ -683,13 +693,16 @@ def minhash_state(
     excluded (no content / no identity to match on)."""
     if hash_fn not in ("xxhash64", "md5"):
         raise ValueError("hash_fn must be 'xxhash64' or 'md5'")
+    _check_shingle_k(shingle_k)
+    inc = F.lit(increment).alias("increment")
+    if hash_fn == "xxhash64":
+        sigs = _minhash_slots(df, text_col, id_col, num_hashes, shingle_k)
+        slots = ["__m%d" % i for i in range(num_hashes)]
+        return sigs.select(inc, F.col("__id").alias("doc_id"), F.array(*slots).alias("sig"))
     ids = F.col("`%s`" % id_col)
     tc = F.col("`%s`" % text_col)
-    sig_fn = minhash_signature_md5 if hash_fn == "md5" else minhash_signature
     return df.filter(tc.isNotNull() & ids.isNotNull()).select(
-        F.lit(increment).alias("increment"),
-        ids.alias("doc_id"),
-        sig_fn(tc, num_hashes, shingle_k).alias("sig"),
+        inc, ids.alias("doc_id"), minhash_signature_md5(tc, num_hashes, shingle_k).alias("sig")
     )
 
 
@@ -700,30 +713,15 @@ def _state_bands(
     ``(band, h, <id_alias>, increment)`` with *rows* signature slots per
     band.  The band-hash family follows the sig element type (bigint →
     xxhash64, string → md5 over the '|'-joined slice) so it matches how
-    the signature was built.  The sig column is let-bound through a
-    single-element-array ``transform`` so its tree appears ONCE in the
-    plan even if Catalyst collapses the state projection into this one."""
+    the signature was built."""
     use_md5 = state.schema["sig"].dataType.elementType.typeName() == "string"
 
-    def band_structs(s):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.cast("int").alias("band"),
-                (
-                    F.md5(F.concat_ws("|", F.slice(s, b * rows + 1, rows)))
-                    if use_md5
-                    else F.xxhash64(F.slice(s, b * rows + 1, rows)).cast("string")
-                ).alias("h"),
-            ),
-        )
+    def band_hash(b):
+        sl = F.slice(F.col("sig"), b * rows + 1, rows)
+        return F.md5(F.concat_ws("|", sl)) if use_md5 else F.xxhash64(sl).cast("string")
 
-    per = F.flatten(F.transform(F.array(F.col("sig")), band_structs))
-    return state.select(
-        F.col("doc_id").alias(id_alias),
-        F.col("increment"),
-        F.explode(per).alias("b"),
-    ).select("b.band", "b.h", id_alias, "increment")
+    keyed = state.select(F.col("doc_id").alias(id_alias), "increment", "sig")
+    return _explode_bands(keyed, bands, band_hash, (id_alias, "increment"))
 
 
 def dedup_against_state(
@@ -751,11 +749,7 @@ def dedup_against_state(
     |history| × |new|; at 10^12 docs store the state bucketed on doc_id
     (``sources.write_bucketed``) so the sig-lookup joins are
     exchange-free on the state side."""
-    if bands < 1 or bands > num_hashes or num_hashes % bands != 0:
-        raise ValueError(
-            "bands (%d) must divide num_hashes (%d)" % (bands, num_hashes)
-        )
-    rows = num_hashes // bands
+    rows = _lsh_rows(num_hashes, bands)
     nb = _state_bands(new_state, bands, rows, "new_id").drop("increment")
     ob = _state_bands(old_states, bands, rows, "old_id").withColumnRenamed(
         "increment", "old_increment"
@@ -1085,13 +1079,14 @@ def simhash64_md5(col: Column, shingle_k: int = 2) -> Column:
 def _simhash_pairs(
     df: DataFrame, text_col: str, id_col: str, sig_fn, shingle_k: int, max_bucket: int
 ) -> DataFrame:
-    """Shared SimHash candidates head: drop NULL-text rows (they never
-    produce candidates, same rationale as MinHash), guard the split
-    count, sign with *sig_fn*, then :func:`hamming_candidates` over four
-    16-bit chunks."""
+    """Shared SimHash candidates head: drop NULL-text and NULL-id rows
+    (they never produce candidates, same rationale as MinHash), guard the
+    split count, sign with *sig_fn*, then :func:`hamming_candidates` over
+    four 16-bit chunks."""
+    _check_shingle_k(shingle_k)
     ids = F.col("`%s`" % id_col)
     tc = F.col("`%s`" % text_col)
-    live = _ensure_parallelism(df.filter(tc.isNotNull()))
+    live = _ensure_parallelism(df.filter(tc.isNotNull() & ids.isNotNull()))
     sigs = live.select(ids.alias("__id"), sig_fn(tc, shingle_k).alias("__sig"))
     return hamming_candidates(
         sigs, id_col="__id", sig_col="__sig", n_chunks=4, max_bucket=max_bucket

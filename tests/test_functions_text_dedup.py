@@ -605,6 +605,43 @@ class TestNullTextHandling:
             got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
             assert got == {(4, 5)}, got
 
+    def test_lsh_paths_drop_null_ids(self, spark):
+        # NULL ids sort first in a bucket: kept, they took the max_bucket
+        # cap slots and hid the real (1, 2) pair
+        from evalidate_spark.functions import dedup
+
+        body = "real text here body"
+        df = spark.createDataFrame(
+            [(1, body), (2, body), (None, body), (None, body)],
+            "doc_id long, text string",
+        )
+        for pairs in (
+            dedup.minhash_candidates(df, num_hashes=16, bands=8, max_bucket=3),
+            dedup.minhash_candidates_md5(df, max_bucket=3),
+            dedup.simhash_candidates(df, max_bucket=3),
+            dedup.simhash_candidates_md5(df, max_bucket=3),
+        ):
+            rows = pairs.collect()
+            assert [(r["id_a"], r["id_b"], r["truncated"]) for r in rows] == [(1, 2, False)]
+
+    @pytest.mark.parametrize("k", [0, -1])
+    def test_lsh_heads_reject_shingle_k_below_one(self, spark, k):
+        # k = 0 used to sign every doc with one constant: all-pairs junk
+        from evalidate_spark.functions import dedup
+
+        df = self._df(spark)
+        for call in (
+            lambda: dedup.minhash_candidates(df, num_hashes=16, bands=8, shingle_k=k),
+            lambda: dedup.minhash_candidates_md5(df, shingle_k=k),
+            lambda: dedup.lsh_band_stats(df, shingle_k=k),
+            lambda: dedup.minhash_state(df, "u0", shingle_k=k),
+            lambda: dedup.minhash_state(df, "u0", shingle_k=k, hash_fn="md5"),
+            lambda: dedup.simhash_candidates(df, shingle_k=k),
+            lambda: dedup.simhash_candidates_md5(df, shingle_k=k),
+        ):
+            with pytest.raises(ValueError, match="shingle_k"):
+                call()
+
     def test_fingerprint_null_vs_empty_distinct(self, spark):
         from evalidate_spark.functions import dedup
         from evalidate_spark.functions.text import fingerprint
