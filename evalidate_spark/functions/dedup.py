@@ -6,10 +6,11 @@ Scale design (10^12 docs):
 * **exact** — hash-groupBy on a content fingerprint.  The shuffle key is a
   16-byte md5, uniformly distributed, map-side combined; AQE handles the
   (rare) pathological fingerprint skew of boilerplate documents.
-* **MinHash + LSH** — per-doc signatures are one hash aggregate over the
-  exploded shingle hashes (no Python; the partial aggregate reduces each
-  doc map-side); candidate generation explodes only ``bands`` rows per
-  doc and groupBy-joins on (band, band_hash) buckets.  Only bucket
+* **MinHash + LSH** — per-doc signatures are one aggregate over the
+  exploded shingles, one head for both hash families (no Python; the
+  partial aggregate reduces each doc map-side); candidate generation
+  explodes only ``bands`` rows per doc and groupBy-joins on (band,
+  band_hash) buckets.  Only bucket
   collisions are ever paired, so the quadratic blow-up is confined to
   near-identical groups; buckets are capped BEFORE aggregation
   (:func:`similarity.cap_per_group`) so no executor buffer ever holds a
@@ -25,7 +26,7 @@ Scale design (10^12 docs):
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, NamedTuple, Optional
 
 import pandas as pd  # module-level so pandas_udf type hints resolve
 
@@ -403,29 +404,72 @@ def _lsh_rows(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
+class _Family(NamedTuple):
+    """One MinHash hash family, as the Column expressions the shared head
+    (:func:`_minhash_slots`) and the banding apply."""
+
+    key: Callable[[Column], Column]  # shingle string -> per-shingle key
+    slot: Callable[[Column, int], Column]  # (key, i) -> permutation i's value
+    band: Callable[[Column], Column]  # array of a band's slots -> bucket hash
+
+
+# xxhash64 is the production family; md5 is the one DuckDB can replay.  An
+# md5 slot is a 16-hex prefix: lowercase hex orders like the unsigned
+# integer it spells, so the string min IS the hash min.  (A string min
+# plans as a sort aggregate; a bigint encoding via ``conv`` would keep a
+# hash aggregate but cost ~1.5x the CPU.)
+_FAMILIES = {
+    "xxhash64": _Family(
+        key=F.xxhash64,
+        slot=lambda h, i: F.xxhash64(h, F.lit(i)),
+        band=F.xxhash64,
+    ),
+    "md5": _Family(
+        key=lambda sh: sh,
+        slot=lambda h, i: F.substring(F.md5(F.concat(F.lit("%d:" % i), h)), 1, 16),
+        band=lambda slots: F.md5(F.concat_ws("|", slots)),
+    ),
+}
+
+
+def _family(hash_fn: str) -> _Family:
+    if hash_fn not in _FAMILIES:
+        raise ValueError("hash_fn must be 'xxhash64' or 'md5'")
+    return _FAMILIES[hash_fn]
+
+
 def _minhash_slots(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_k: int
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_k: int,
+    hash_fn: str,
 ) -> DataFrame:
-    """xxhash64 MinHash signatures as one hash aggregate, all compiled
+    """The MinHash signature head for both hash families, all compiled
     operators: rows ``(__id, __m0 … __m<num_hashes-1>)``, slot ``__m<i>``
-    equal to element *i* of :func:`minhash_signature`.  NULL-text and
-    NULL-id rows are dropped (no content / no identity to match on).
-    Shingle start positions are exploded and each shingle hashed once;
-    ``groupBy(__row, __id)`` takes ``min(xxhash64(h, i))`` per
-    permutation *i*, reduced map-side by the partial aggregate."""
+    the minimum over the doc's shingles of the family's permutation *i*
+    (:data:`_FAMILIES`).  For xxhash64 that is element *i* of
+    :func:`minhash_signature`; for md5 it is ``substring(md5('i:' ||
+    shingle), 1, 16)``, the SQL the DuckDB oracles replay.
+
+    NULL-text and NULL-id rows are dropped (no content / no identity to
+    match on), then the split guard.  A row-unique key keeps duplicate ids
+    as separate signatures.  Shingle start positions are exploded and each
+    shingle keyed once (``__h``); ``groupBy(__row, __id)`` takes one
+    ``min`` per permutation, reduced map-side by the partial aggregate."""
+    _check_shingle_k(shingle_k)
+    fam = _family(hash_fn)
     ids = F.col("`%s`" % id_col)
     tc = F.col("`%s`" % text_col)
     live = _ensure_parallelism(df.filter(tc.isNotNull() & ids.isNotNull()))
     t, i = F.col("__t"), F.col("__i")
     starts = F.sequence(F.lit(1), F.greatest(F.size(t) - (shingle_k - 1), F.lit(1)))
-    hashed = live.select(
+    keyed = live.select(
         # row-unique key: duplicate ids keep one signature per row
         F.monotonically_increasing_id().alias("__row"), ids.alias("__id"), tokens(tc).alias("__t")
     ).select("__row", "__id", "__t", F.explode(starts).alias("__i")).select(
-        "__row", "__id", F.xxhash64(F.concat_ws(" ", F.slice(t, i, F.lit(shingle_k)))).alias("__h")
+        "__row", "__id", fam.key(F.concat_ws(" ", F.slice(t, i, F.lit(shingle_k)))).alias("__h")
     )
-    return hashed.groupBy("__row", "__id").agg(
-        *[F.min(F.xxhash64("__h", F.lit(j))).alias("__m%d" % j) for j in range(num_hashes)]
+    h = F.col("__h")
+    return keyed.groupBy("__row", "__id").agg(
+        *[F.min(fam.slot(h, j)).alias("__m%d" % j) for j in range(num_hashes)]
     ).drop("__row")
 
 
@@ -438,6 +482,22 @@ def _explode_bands(sigs: DataFrame, bands: int, band_hash, keep=("__id",)) -> Da
     return sigs.select(*keep, F.explode(per_band).alias("b")).select(
         F.col("b.band").alias("band"), F.col("b.h").alias("h"), *keep
     )
+
+
+def _minhash_buckets(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, bands: int,
+    shingle_k: int, hash_fn: str,
+) -> DataFrame:
+    """Text → LSH bucket rows ``(band, h, __id)``: :func:`_minhash_slots`,
+    then one explode of ``(band, <family band hash of the band's slots>)``
+    structs.  The shared head of the candidate pipelines and
+    :func:`lsh_band_stats`, so every stage sees the identical bucketing."""
+    rows = _lsh_rows(num_hashes, bands)
+    band = _family(hash_fn).band
+    sigs = _minhash_slots(df, text_col, id_col, num_hashes, shingle_k, hash_fn)
+    return _explode_bands(sigs, bands, lambda b: band(
+        F.array(*["__m%d" % i for i in range(b * rows, (b + 1) * rows)])
+    ))
 
 
 def minhash_candidates(
@@ -467,12 +527,7 @@ def minhash_candidates(
     ids (deterministic by id order) and their pairs carry
     ``truncated = true``.
     """
-    _check_shingle_k(shingle_k)
-    rows = _lsh_rows(num_hashes, bands)
-    sigs = _minhash_slots(df, text_col, id_col, num_hashes, shingle_k)
-    banded = _explode_bands(sigs, bands, lambda b: F.xxhash64(
-        F.array(*["__m%d" % i for i in range(b * rows, (b + 1) * rows)])
-    ))
+    banded = _minhash_buckets(df, text_col, id_col, num_hashes, bands, shingle_k, "xxhash64")
     return _bucket_pairs(banded, max_bucket)
 
 
@@ -509,60 +564,6 @@ def _bucket_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def minhash_signature_md5(
-    col: Column, num_hashes: int = 16, shingle_k: int = 3
-) -> Column:
-    """MinHash signature keyed by md5 (array<string> of 16-hex-char
-    prefixes): permutation *i* is ``min over shingles of
-    substr(md5(i || ':' || shingle), 1, 16)``.  Fixed-width lowercase hex
-    is order-isomorphic to the unsigned integer it encodes, so the string
-    minimum IS the hash minimum.
-
-    md5 exists in both Spark and DuckDB (xxhash64 does not in DuckDB), so
-    this family makes the ENTIRE LSH pipeline — signature, banding,
-    bucketing, pair generation — replayable as an ANSI-SQL oracle.  It
-    costs more than :func:`minhash_signature` because every (permutation,
-    shingle) pair is a separate md5 digest.
-
-    Evaluated as an Arrow pandas_udf over the JVM-built shingle array:
-    stdlib md5 per (permutation, DISTINCT shingle), raw 8-byte digest
-    minima, hex only for the winners.  The bytewise digest order IS the
-    lowercase-hex string order, so this equals the SQL definition above
-    bit for bit (pinned against a hashlib oracle in
-    tests/test_minhash_md5_arrow_parity.py)."""
-    import hashlib
-
-    from pyspark.sql.functions import pandas_udf
-
-    pre = [("%d:" % i).encode() for i in range(num_hashes)]
-
-    @pandas_udf("array<string>")
-    def _sig(sh: pd.Series) -> pd.Series:
-        md5 = hashlib.md5
-
-        def one(arr):
-            if arr is None:
-                return None
-            if len(arr) == 0:
-                # array_min over an empty array is NULL per permutation
-                # (cannot happen via shingles(), which always yields the
-                # whole-text shingle)
-                return [None] * num_hashes
-            # min over duplicates == min over the distinct set
-            best = [b"\xff" * 8] * num_hashes
-            for s in set(arr):
-                sb = s.encode()
-                for i in range(num_hashes):
-                    d = md5(pre[i] + sb).digest()[:8]
-                    if d < best[i]:
-                        best[i] = d
-            return [b.hex() for b in best]
-
-        return sh.map(one)
-
-    return _sig(shingles(col, shingle_k, udf_safe=True))
-
-
 def minhash_candidates_md5(
     df: DataFrame,
     text_col: str = "text",
@@ -572,40 +573,15 @@ def minhash_candidates_md5(
     shingle_k: int = 3,
     max_bucket: int = 64,
 ) -> DataFrame:
-    """:func:`minhash_candidates` with the md5-keyed signature — the
-    cross-engine-verifiable LSH path.  Band hash = md5 of the '|'-joined
-    signature slice.  NULL-text rows would share the constant md5('')
-    band hashes (``concat_ws`` skips NULL elements) and NULL ids would
-    take cap slots from real ones, so both are filtered out up front
-    (mirror with ``WHERE text IS NOT NULL AND doc_id IS NOT NULL`` in SQL
-    oracles)."""
-    banded = _banded_md5(df, text_col, id_col, num_hashes, bands, shingle_k)
+    """:func:`minhash_candidates` with the md5 hash family — the
+    cross-engine-verifiable LSH path.  Same head (:func:`_minhash_slots`),
+    with slot *i* = ``min(substring(md5('i:' || shingle), 1, 16))`` and
+    band hash = md5 of the '|'-joined band slots, so DuckDB replays the
+    whole pipeline in SQL.  NULL-text and NULL-id rows are dropped up
+    front (mirror with ``WHERE text IS NOT NULL AND doc_id IS NOT NULL``
+    in SQL oracles)."""
+    banded = _minhash_buckets(df, text_col, id_col, num_hashes, bands, shingle_k, "md5")
     return _bucket_pairs(banded, max_bucket)
-
-
-def _banded_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Shared md5-LSH head: text → :func:`minhash_signature_md5` → banded
-    bucket rows ``(band, h, __id)``.  Used by the candidate-pair pipeline
-    (:func:`minhash_candidates_md5`) and the band-occupancy telemetry
-    (:func:`lsh_band_stats`) so both stages see the identical bucketing;
-    NULL-text and NULL-id rows are dropped before the signature."""
-    _check_shingle_k(shingle_k)
-    rows = _lsh_rows(num_hashes, bands)
-    ids = F.col("`%s`" % id_col)
-    tc = F.col("`%s`" % text_col)
-    live = _ensure_parallelism(df.filter(tc.isNotNull() & ids.isNotNull()))
-    sig = minhash_signature_md5(tc, num_hashes, shingle_k)
-    sigs = live.select(ids.alias("__id"), sig.alias("__sig"))
-    return _explode_bands(sigs, bands, lambda b: F.md5(
-        F.concat_ws("|", F.slice(F.col("__sig"), b * rows + 1, rows))
-    ))
 
 
 def lsh_band_stats(
@@ -633,9 +609,12 @@ def lsh_band_stats(
     very shuffle the pair stage pays anyway — plus an 8-row rollup, so it
     is free to run ahead of every dedup campaign.
 
-    All counts are exact int64 (``k·(k−1) div 2``); per-band output is
-    ``bands`` rows, so the final aggregate is trivially small."""
-    banded = _banded_md5(df, text_col, id_col, num_hashes, bands, shingle_k)
+    The buckets are :func:`minhash_candidates_md5`'s, from the same md5
+    head (:func:`_minhash_buckets`), so the report counts exactly the
+    bucketing the pair stage sees.  All counts are exact int64 (``k·(k−1)
+    div 2``); per-band output is ``bands`` rows, so the final aggregate is
+    trivially small."""
+    banded = _minhash_buckets(df, text_col, id_col, num_hashes, bands, shingle_k, "md5")
     per_bucket = banded.groupBy("band", "h").agg(
         F.count(F.lit(1)).alias("k")
     )
@@ -682,7 +661,10 @@ def minhash_state(
     doc, one row ``(increment, doc_id, sig)`` where ``sig`` is the doc's
     MinHash signature (``array<bigint>`` for the xxhash64 production
     family, ``array<string>`` of 16-hex md5 prefixes for the
-    cross-engine-verifiable ``hash_fn='md5'`` family).
+    cross-engine-verifiable ``hash_fn='md5'`` family).  Both families come
+    from the one signature head the candidate pipelines use
+    (:func:`_minhash_slots`), so a state row carries exactly the slots
+    :func:`minhash_candidates` / :func:`minhash_candidates_md5` band.
 
     This is the near-dup sibling of :func:`incremental_dedup`'s exact
     fingerprint index: append each increment's state to a parquet table
@@ -690,38 +672,37 @@ def minhash_state(
     NEW ingest against the whole corpus history reading ONLY this state —
     at 10^12 docs the signatures are ~0.1% of the text payload, and the
     historical text is never rescanned.  NULL-text and NULL-id rows are
-    excluded (no content / no identity to match on)."""
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError("hash_fn must be 'xxhash64' or 'md5'")
-    _check_shingle_k(shingle_k)
-    inc = F.lit(increment).alias("increment")
-    if hash_fn == "xxhash64":
-        sigs = _minhash_slots(df, text_col, id_col, num_hashes, shingle_k)
-        slots = ["__m%d" % i for i in range(num_hashes)]
-        return sigs.select(inc, F.col("__id").alias("doc_id"), F.array(*slots).alias("sig"))
-    ids = F.col("`%s`" % id_col)
-    tc = F.col("`%s`" % text_col)
-    return df.filter(tc.isNotNull() & ids.isNotNull()).select(
-        inc, ids.alias("doc_id"), minhash_signature_md5(tc, num_hashes, shingle_k).alias("sig")
+    excluded (no content / no identity to match on); duplicate ids keep
+    one row each."""
+    sigs = _minhash_slots(df, text_col, id_col, num_hashes, shingle_k, hash_fn)
+    slots = ["__m%d" % i for i in range(num_hashes)]
+    return sigs.select(
+        F.lit(increment).alias("increment"), F.col("__id").alias("doc_id"),
+        F.array(*slots).alias("sig"),
     )
 
 
 def _state_bands(
-    state: DataFrame, bands: int, rows: int, id_alias: str
+    state: DataFrame, hash_fn: str, num_hashes: int, bands: int, id_alias: str
 ) -> DataFrame:
     """(increment, doc_id, sig) state rows → exploded LSH bucket rows
-    ``(band, h, <id_alias>, increment)`` with *rows* signature slots per
-    band.  The band-hash family follows the sig element type (bigint →
-    xxhash64, string → md5 over the '|'-joined slice) so it matches how
-    the signature was built."""
-    use_md5 = state.schema["sig"].dataType.elementType.typeName() == "string"
-
-    def band_hash(b):
-        sl = F.slice(F.col("sig"), b * rows + 1, rows)
-        return F.md5(F.concat_ws("|", sl)) if use_md5 else F.xxhash64(sl).cast("string")
-
-    keyed = state.select(F.col("doc_id").alias(id_alias), "increment", "sig")
-    return _explode_bands(keyed, bands, band_hash, (id_alias, "increment"))
+    ``(band, h, <id_alias>, increment)``, banded with *hash_fn*'s band hash
+    (:data:`_FAMILIES`) as :func:`_minhash_buckets` bands the same
+    signature.  A sig whose length is not *num_hashes* fails the query:
+    its bands would hash misaligned or empty slices (all-pairs junk)."""
+    rows = _lsh_rows(num_hashes, bands)
+    band = _family(hash_fn).band
+    sig = F.col("sig")
+    checked = F.when(
+        F.size(sig) != num_hashes,
+        F.raise_error(F.format_string(
+            "minhash_state sig has %d slots, num_hashes is %d", F.size(sig), F.lit(num_hashes)
+        )),
+    ).otherwise(sig)
+    keyed = state.select(F.col("doc_id").alias(id_alias), "increment", checked.alias("sig"))
+    return _explode_bands(
+        keyed, bands, lambda b: band(F.slice(sig, b * rows + 1, rows)), (id_alias, "increment")
+    )
 
 
 def dedup_against_state(
@@ -748,10 +729,21 @@ def dedup_against_state(
     slot comparison.  Cost is driven by bucket collisions, never by
     |history| × |new|; at 10^12 docs store the state bucketed on doc_id
     (``sources.write_bucketed``) so the sig-lookup joins are
-    exchange-free on the state side."""
-    rows = _lsh_rows(num_hashes, bands)
-    nb = _state_bands(new_state, bands, rows, "new_id").drop("increment")
-    ob = _state_bands(old_states, bands, rows, "old_id").withColumnRenamed(
+    exchange-free on the state side.
+
+    Both states must come from the same ``hash_fn`` (the sig element
+    types must agree, else ``ValueError``: the two families never share a
+    bucket), and every sig must hold *num_hashes* slots (checked in-plan:
+    the query fails on the first sig of another length)."""
+    new_t, old_t = (st.schema["sig"].dataType.elementType for st in (new_state, old_states))
+    if new_t != old_t:
+        raise ValueError(
+            "new_state and old_states sig types differ (%s vs %s): build both "
+            "with the same minhash_state hash_fn" % (new_t.simpleString(), old_t.simpleString())
+        )
+    hash_fn = "md5" if new_t.typeName() == "string" else "xxhash64"
+    nb = _state_bands(new_state, hash_fn, num_hashes, bands, "new_id").drop("increment")
+    ob = _state_bands(old_states, hash_fn, num_hashes, bands, "old_id").withColumnRenamed(
         "increment", "old_increment"
     )
     # cap each side independently; min_size=1 — a 1-member bucket on one
@@ -1216,8 +1208,9 @@ def lsh_recall_report(
         (n_true_pairs, n_candidate_pairs, n_hit, recall_bp, precision_bp)
 
     Ground truth is :func:`ssjoin_pairs` (EXACT shingle-Jaccard >=
-    *threshold*, zero false negatives), candidates are
-    :func:`minhash_candidates` (or the md5 family) with the SAME shingle
+    *threshold*, zero false negatives), candidates are the *hash_fn*
+    family's LSH pairs (:func:`minhash_candidates` /
+    :func:`minhash_candidates_md5`, same bucket cap) with the SAME shingle
     definition; both are evaluated on a deterministic hash sample
     (:func:`~evalidate_spark.functions.sampling.sample_deterministic`) so
     the probe costs a *sample_fraction* slice of the corpus and is
@@ -1230,22 +1223,18 @@ def lsh_recall_report(
     full-outer pair join + a single-row aggregate."""
     from .sampling import sample_deterministic
 
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError("hash_fn must be 'xxhash64' or 'md5'")
     s = (
         sample_deterministic(df, sample_fraction, id_col=id_col, salt=salt)
         if sample_fraction < 1.0
         else df
     )
+    # the candidate functions' own bucket cap (64)
+    banded = _minhash_buckets(s, text_col, id_col, num_hashes, bands, shingle_k, hash_fn)
+    cand = _bucket_pairs(banded, 64).select("id_a", "id_b", F.lit(1).alias("__c"))
     truth = ssjoin_pairs(
         s, threshold=threshold, shingle_k=shingle_k, id_col=id_col,
         text_col=text_col,
     ).select("id_a", "id_b", F.lit(1).alias("__t"))
-    cand_fn = minhash_candidates_md5 if hash_fn == "md5" else minhash_candidates
-    cand = cand_fn(
-        s, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
-        bands=bands, shingle_k=shingle_k,
-    ).select("id_a", "id_b", F.lit(1).alias("__c"))
     j = truth.join(cand, ["id_a", "id_b"], "full_outer")
     agg = j.agg(
         F.sum("__t").cast("long").alias("n_true_pairs"),

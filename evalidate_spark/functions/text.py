@@ -695,8 +695,9 @@ def shingles(col: Column, k: int = 3, udf_safe: bool = False) -> Column:
       times per ROW, still linear).  Required when the result feeds a
       pandas UDF: ``ExtractPythonUDFs`` cannot extract a UDF whose input
       tree contains a lambda capturing an outer lambda's variable and
-      Spark dies with INTERNAL_ERROR "Cannot evaluate expression" — the
-      Arrow MinHash/SimHash variants hit exactly that."""
+      Spark dies with INTERNAL_ERROR "Cannot evaluate expression".  The
+      SimHash Arrow vote is the only such consumer left (MinHash shingles
+      through its own compiled explode, ``dedup._minhash_slots``)."""
     toks = tokens(col)
     if udf_safe:
         m = F.greatest(F.size(toks) - (k - 1), F.lit(1))

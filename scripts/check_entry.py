@@ -1,7 +1,8 @@
 """Local stand-in for the driver's correctness gate: runs every
 ``__spark_entry__.queries()`` entry at a given SF dir and compares
 row-count, schema (column names), and order-insensitive value hash against
-``oracle_sql()`` via DuckDB.  Usage: python scripts/check_entry.py [sf_dir]."""
+``oracle_sql()`` via DuckDB.  Usage: python scripts/check_entry.py [sf_dir] [query ...]
+(with query names, only those queries run)."""
 
 from __future__ import annotations
 

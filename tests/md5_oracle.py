@@ -1,5 +1,5 @@
 """Pure-Python hashlib oracles for the md5-keyed LSH signatures
-(``dedup.minhash_signature_md5``, ``dedup.simhash64_md5``) — the
+(``dedup.minhash_state(..., hash_fn="md5")``, ``dedup.simhash64_md5``) — the
 companion of ``tests/xxh64_oracle.py`` for the family DuckDB can replay.
 
 Shingling is ``xxh64_oracle.shingle_list``; a NULL text signs like the
@@ -14,7 +14,7 @@ from tests.xxh64_oracle import shingle_list
 # contract corners both md5 signature pins run
 CORNERS = [
     None,                       # NULL text -> the '' whole-text shingle
-    #   (same as empty; every md5-LSH caller filters NULL text upstream)
+    #   in simhash64_md5; minhash_state leaves the row out
     "",                         # empty -> whole-text '' shingle
     "   ",                      # whitespace-only
     "one",                      # below shingle_k: single whole-text shingle

@@ -386,15 +386,15 @@ def test_top_ngrams_python_oracle(spark):
 
 
 def test_minhash_md5_signature_matches_python_oracle(spark):
-    """md5-keyed signature ≡ pure-Python hashlib oracle (same shingling,
-    same '%d:%s' keying, 16-hex-prefix string min)."""
+    """md5-family ``minhash_state`` signatures ≡ pure-Python hashlib
+    oracle (same shingling, same '%d:%s' keying, 16-hex-prefix string
+    min)."""
     df = docs_df(spark, DOCS)
     got = {
-        r["doc_id"]: list(r["s"])
-        for r in df.select(
-            "doc_id", dedup.minhash_signature_md5(F.col("text"), 8, 3).alias("s")
-        ).collect()
+        r["doc_id"]: list(r["sig"])
+        for r in dedup.minhash_state(df, "u0", num_hashes=8, shingle_k=3, hash_fn="md5").collect()
     }
+    assert len(got) == len(DOCS)
     for did, text_ in DOCS:
         assert got[did] == md5_oracle.minhash_signature_md5(text_, 8, 3), did
 
@@ -1199,6 +1199,28 @@ class TestMinHashState:
         _, s_old, s_new = self._states(spark)
         with pytest.raises(ValueError, match="divide"):
             dedup.dedup_against_state(s_new, s_old, bands=5, num_hashes=16)
+
+    @pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+    def test_num_hashes_mismatch_fails_query(self, spark, hash_fn):
+        # 16-slot states queried as 64 slots: every band would hash an
+        # empty or misaligned slice and unrelated docs would all match
+        _, s_old, s_new = self._states(spark, hash_fn)
+        q = dedup.dedup_against_state(s_new, s_old, bands=16, num_hashes=64)
+        with pytest.raises(Exception, match="sig has 16 slots, num_hashes is 64"):
+            q.collect()
+
+    def test_mixed_hash_families_rejected_before_any_job(self, spark):
+        # an md5 state never shares a bucket with an xxhash64 one
+        _, s_old, _ = self._states(spark, "xxhash64")
+        _, _, s_new = self._states(spark, "md5")
+        sc = spark.sparkContext
+        sc.setJobGroup("mixed-families", "mixed hash families")
+        try:
+            with pytest.raises(ValueError, match="sig types differ"):
+                dedup.dedup_against_state(s_new, s_old, bands=8, num_hashes=16)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("mixed-families") == []
 
 
 class TestLshRecallReport:

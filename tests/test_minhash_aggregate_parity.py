@@ -1,10 +1,13 @@
-"""Parity pin for the xxhash64 MinHash LSH head: ``minhash_candidates``
-(one hash aggregate over exploded shingle hashes, struct banding) must
-return exactly the pairs of the per-row fold pipeline below — the
+"""Parity pin for the shared MinHash LSH head (one aggregate over
+exploded shingles, struct banding).  xxhash64: ``minhash_candidates``
+must return exactly the pairs of the per-row fold pipeline below — the
 ``minhash_signature`` Column form, HOF banding over the signature array,
-then the shared ``_bucket_pairs`` tail.  ``minhash_state`` signatures are
-pinned against the pure-Python XXH64 oracle, and the plan shape is
-pinned so the interpreted fold cannot come back unnoticed."""
+then the shared ``_bucket_pairs`` tail.  md5: ``minhash_candidates_md5``
+must return the pairs of hashlib signatures (``tests/md5_oracle.py``)
+banded by the SQL definition the DuckDB oracles replay.  ``minhash_state``
+xxhash64 signatures are pinned against the pure-Python XXH64 oracle, and
+the plan shape of both families is pinned so neither the interpreted fold
+nor a Python UDF can come back unnoticed."""
 
 import os
 
@@ -14,7 +17,7 @@ from pyspark.sql import functions as F
 from __spark_entry__ import DEFAULT_SF
 from evalidate_spark.functions import dedup
 from evalidate_spark.functions.similarity import _ensure_parallelism
-from tests import xxh64_oracle as X
+from tests import md5_oracle, xxh64_oracle as X
 
 SF = os.path.join(DEFAULT_SF, "documents.parquet")
 
@@ -48,6 +51,29 @@ def _fold_candidates(df, num_hashes, bands, shingle_k=3, max_bucket=64):
     banded = sigs.select(
         "__id", F.explode(_fold_bands(F.col("__sig"), bands, rows)).alias("b")
     ).select(F.col("b.band").alias("band"), F.col("b.h").alias("h"), "__id")
+    return dedup._bucket_pairs(banded, max_bucket)
+
+
+def _md5_oracle_candidates(spark, df, num_hashes, bands, shingle_k=3, max_bucket=64):
+    """Reference md5 pipeline: hashlib signatures per live row (NULL text
+    and NULL id dropped, duplicate ids kept), banded in SQL as
+    ``md5(concat_ws('|', <band slice>))``, then ``_bucket_pairs``."""
+    rows = num_hashes // bands
+    sigs = spark.createDataFrame(
+        [
+            (i, md5_oracle.minhash_signature_md5(t, num_hashes, shingle_k))
+            for i, t in df.select("doc_id", "text").collect()
+            if i is not None and t is not None
+        ],
+        "__id long, __sig array<string>",
+    )
+    banded = sigs.select(
+        "__id",
+        F.posexplode(F.expr(
+            "transform(sequence(0, %d), b -> md5(concat_ws('|', slice(__sig, b * %d + 1, %d))))"
+            % (bands - 1, rows, rows)
+        )).alias("band", "h"),
+    )
     return dedup._bucket_pairs(banded, max_bucket)
 
 
@@ -92,6 +118,29 @@ def test_candidates_equal_fold_on_edge_frame(spark):
     assert all(None not in (a, b) for a, b, _, _ in got)
 
 
+@pytest.mark.parametrize("num_hashes,bands", [(16, 8), (32, 16)])
+def test_md5_candidates_equal_oracle_on_documents(spark, num_hashes, bands):
+    d = spark.read.parquet(SF).select("doc_id", "text")
+    want = _pairs(_md5_oracle_candidates(spark, d, num_hashes, bands))
+    assert want, "corpus must produce candidate pairs"
+    got = dedup.minhash_candidates_md5(d, num_hashes=num_hashes, bands=bands)
+    assert _pairs(got) == want
+
+
+def test_md5_candidates_equal_oracle_on_edge_frame(spark):
+    d = _edge_df(spark)
+    for max_bucket in (3, 64):
+        want = _pairs(_md5_oracle_candidates(spark, d, 16, 4, max_bucket=max_bucket))
+        got = _pairs(
+            dedup.minhash_candidates_md5(d, num_hashes=16, bands=4, max_bucket=max_bucket)
+        )
+        assert got == want, max_bucket
+    # duplicate ids stay two signatures; identical texts share all 4 bands
+    assert any(p[:2] == (1, 1) for p in got)
+    assert any(p[:2] == (1, 2) and p[2] >= 4 for p in got) and (4, 5, 4, False) in got
+    assert all(None not in (a, b) for a, b, _, _ in got)
+
+
 def test_candidates_equal_fold_on_degenerate_bucket(spark):
     df = spark.range(10_000).select(
         F.col("id").alias("doc_id"),
@@ -125,3 +174,13 @@ def test_minhash_candidates_plan_is_one_hash_aggregate(spark):
     physical = qe.executedPlan().toString()
     assert "HashAggregate(keys=[__row" in physical
     assert "min(xxhash64(__h" in physical
+
+
+def test_minhash_candidates_md5_plan_is_one_aggregate(spark):
+    # no Python UDF; the string minima are one aggregate keyed on __row
+    # (sort-based: Spark keeps a hash aggregate for fixed-width buffers only)
+    d = spark.read.parquet(SF).select("doc_id", "text")
+    physical = dedup.minhash_candidates_md5(d)._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in physical and "BatchEvalPython" not in physical
+    assert "SortAggregate(key=[__row" in physical
+    assert "min(substring(md5(cast(concat(0:, __h" in physical

@@ -1,17 +1,15 @@
-"""Oracle pin for the md5 MinHash signature (`minhash_signature_md5`):
-the Arrow UDF (stdlib md5 over distinct shingles, raw-digest minima)
-must equal the SQL definition the DuckDB oracles replay —
-``min(substr(md5(i || ':' || shingle), 1, 16))`` per permutation — as
-computed by the hashlib oracle in ``tests/md5_oracle.py``.  The bytewise
-8-byte digest order IS the lowercase 16-hex string order.  Randomized
-corpora + the contract corners (NULL text, empty text, whitespace-only,
-duplicate shingles, unicode, short docs below shingle_k)."""
+"""Oracle pin for the md5 MinHash signature: ``minhash_state(...,
+hash_fn="md5")`` signatures, built by the shared compiled head
+(``dedup._minhash_slots``), must equal the SQL definition the DuckDB
+oracles replay — ``min(substr(md5(i || ':' || shingle), 1, 16))`` per
+permutation — as computed by the hashlib oracle in
+``tests/md5_oracle.py``.  Randomized corpora + the contract corners
+(empty text, whitespace-only, duplicate shingles, unicode, short docs
+below shingle_k); the NULL-text corner is left out of the state."""
 
 import random
 
-from pyspark.sql import functions as F
-
-from evalidate_spark.functions.dedup import minhash_signature_md5
+from evalidate_spark.functions import dedup
 from tests import md5_oracle
 
 
@@ -19,13 +17,15 @@ def _sigs(spark, texts, num_hashes=8, shingle_k=3):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "id long, text string"
     )
-    rows = df.select(
-        "id", minhash_signature_md5(F.col("text"), num_hashes, shingle_k).alias("sig")
+    rows = dedup.minhash_state(
+        df, "u0", id_col="id", num_hashes=num_hashes, shingle_k=shingle_k, hash_fn="md5"
     ).collect()
-    got = {r["id"]: (None if r["sig"] is None else list(r["sig"])) for r in rows}
+    got = {r["doc_id"]: list(r["sig"]) for r in rows}
+    assert len(got) == len(rows)
     want = {
         i: md5_oracle.minhash_signature_md5(t, num_hashes, shingle_k)
         for i, t in enumerate(texts)
+        if t is not None
     }
     return got, want
 
@@ -40,16 +40,18 @@ def test_arrow_equals_hof_on_random_corpus(spark):
     got, want = _sigs(spark, texts)
     assert got == want
     # non-vacuous: signatures differ across docs and are 16-hex strings
-    sigs = [tuple(v) for v in got.values() if v]
+    sigs = [tuple(v) for v in got.values()]
     assert len(set(sigs)) > 10
-    assert all(len(h) == 16 for v in sigs for h in v if h is not None)
+    assert all(len(h) == 16 for v in sigs for h in v)
 
 
 def test_arrow_equals_hof_on_contract_corners(spark):
     got, want = _sigs(spark, md5_oracle.CORNERS)
     assert got == want
-    # NULL/empty/whitespace texts all collapse to the '' shingle signature
-    assert got[0] == got[1] == got[2]
+    # the NULL-text row has no state; empty and whitespace-only texts
+    # collapse to the '' shingle signature
+    assert md5_oracle.CORNERS[0] is None and 0 not in got
+    assert got[1] == got[2]
 
 
 def test_identical_texts_share_signatures(spark):
