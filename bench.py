@@ -168,10 +168,12 @@ def main() -> None:
     query_metrics: dict[str, dict] = {}
     meter = _StageMetrics(spark)
 
-    def timed(name, fn, runs=2):
+    def timed(name, fn, runs=3):
         """min of *runs* — the first run pays one-off codegen compilation +
         parquet footer reads, and this VM's run-to-run noise is 2-5×;
-        steady-state throughput is what scales to the cluster.  Byte/row
+        steady-state throughput is what scales to the cluster.  The
+        default is 3: at min of 2, ``scripts/bench_diff.py`` reported
+        that noise as movers.  Byte/row
         telemetry is taken from the LAST run (shuffle/input volumes are
         deterministic across runs; only wall time is noisy)."""
         best = None

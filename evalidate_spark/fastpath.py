@@ -383,26 +383,38 @@ def compile_fail_predicate(
     return fail
 
 
+def _passes(fail: Column) -> Column:
+    """0/1 pass flag of a row fail predicate; a NULL *fail* counts as a pass."""
+    return (~F.coalesce(fail, F.lit(False))).cast("int")
+
+
+def verdict_aggs(ok: Column) -> List[Column]:
+    """The verdict roll-up's aggregates over a 0/1 pass flag:
+    ``rows, passed, failed``.  Shared by :func:`partition_verdicts` and
+    ``streaming.windowed_verdicts``."""
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(ok).alias("passed"),
+        (F.count(F.lit(1)) - F.sum(ok)).alias("failed"),
+    ]
+
+
+def verdict_rows(agg_df: DataFrame) -> DataFrame:
+    """Finishing projection of :func:`verdict_aggs`: appends ``verdict``."""
+    return agg_df.withColumn(
+        "verdict", F.when(F.col("failed") == 0, F.lit("pass")).otherwise(F.lit("fail"))
+    )
+
+
 def partition_verdicts(df: DataFrame, fail: Column) -> DataFrame:
     """Per-partition pass/fail roll-up of a row fail predicate: ``(partition_id,
     rows, passed, failed, verdict)`` keyed by ``spark_partition_id()`` — at
     most one group per input partition, so the shuffle is negligible at any
     scale.  A NULL *fail* counts as a pass."""
-    return (
-        df.select(
-            F.spark_partition_id().alias("partition_id"),
-            (~F.coalesce(fail, F.lit(False))).cast("int").alias("ok"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("ok").alias("passed"),
-            (F.count(F.lit(1)) - F.sum("ok")).alias("failed"),
-        )
-        .withColumn(
-            "verdict", F.when(F.col("failed") == 0, F.lit("pass")).otherwise(F.lit("fail"))
-        )
+    flags = df.select(
+        F.spark_partition_id().alias("partition_id"), _passes(fail).alias("ok")
     )
+    return verdict_rows(flags.groupBy("partition_id").agg(*verdict_aggs(F.col("ok"))))
 
 
 def verdict_scan(df: DataFrame, rules: Any, **opts: Any) -> DataFrame:

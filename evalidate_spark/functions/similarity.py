@@ -536,6 +536,32 @@ def srp_dedup_against_state(
     )
 
 
+def centroid_aggs(v: Column, dim: int, scale: int = 1_000_000) -> List[Column]:
+    """The centroid family's aggregates over valid (:func:`_vec_ok`)
+    vectors *v*: ``n_vecs`` and the per-dim int64 sums ``__s<d>`` of
+    ``round(x·scale)`` (0 on an empty input).  Read by
+    :func:`embedding_centroid_state` and ``streaming.centroid_stream``."""
+    aggs = [F.count(F.lit(1)).cast("long").alias("n_vecs")]
+    for d in range(dim):
+        el = F.element_at(v, d + 1).cast("double")
+        aggs.append(
+            F.coalesce(
+                F.sum(F.round(el * F.lit(float(scale))).cast("long")),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("__s%d" % d)
+        )
+    return aggs
+
+
+def centroid_rows(agg_df: DataFrame, dim: int, keep=()) -> DataFrame:
+    """The centroid family's finishing projection: the *keep* columns,
+    ``n_vecs`` and the ``sums`` array."""
+    sums = F.array(*[F.col("__s%d" % d) for d in range(dim)]).alias("sums")
+    return agg_df.select(*keep, "n_vecs", sums)
+
+
 def embedding_centroid_state(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -556,29 +582,13 @@ def embedding_centroid_state(
     reaches n_rows × |x|_max × scale — at 10^12 total rows the default
     scale=10^6 holds only for |x|≤9 (normalised embeddings); lower
     ``scale`` or widen to decimal beyond that, since long sums wrap
-    silently."""
+    silently.  The aggregates are :func:`centroid_aggs`, finished by
+    :func:`centroid_rows`."""
     ic, vc = F.col("`%s`" % id_col), F.col("`%s`" % vec_col)
-    base = df.filter(
-        ic.isNotNull()
-        & _vec_ok(vc, dim)
-    ).select(vc.alias("__v"))
-    aggs = [F.count(F.lit(1)).cast("long").alias("n_vecs")]
-    for d in range(dim):
-        el = F.element_at(F.col("__v"), d + 1).cast("double")
-        aggs.append(
-            F.coalesce(
-                F.sum(F.round(el * F.lit(float(scale))).cast("long")),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("__s%d" % d)
-        )
+    base = df.filter(ic.isNotNull() & _vec_ok(vc, dim)).select(vc.alias("__v"))
     # a global agg yields exactly one row even on empty input (count 0,
     # sums coalesced to 0) — the empty-increment state is valid
-    return base.agg(*aggs).select(
-        "n_vecs",
-        F.array(*[F.col("__s%d" % d) for d in range(dim)]).alias("sums"),
-    )
+    return centroid_rows(base.agg(*centroid_aggs(F.col("__v"), dim, scale)), dim)
 
 
 def merge_centroid_states(states: DataFrame) -> DataFrame:

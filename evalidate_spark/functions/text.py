@@ -1081,23 +1081,11 @@ def gopher_rules(
     ).drop("__no_text")
 
 
-def filter_funnel(
-    flags: DataFrame,
-    rules: Sequence[str],
-    fails_col: str = "fails",
-) -> DataFrame:
-    """Cumulative filter funnel over a per-doc rule-verdict table (e.g.
-    :func:`gopher_rules` output, whose ``fails`` is a comma-joined sorted
-    rule-name list): apply *rules* in the given order and report, per
-    stage, how many documents survive rules ``1..k`` and how many the
-    stage dropped — the funnel chart a pipeline owner reads to see which
-    filter does the cutting.  A stage-0 ``input`` row carries the corpus
-    size.
-
-    Survivors at stage k = docs whose fails set is disjoint from
-    ``rules[:k]`` — ONE aggregate over the flags table (k disjointness
-    sums fused into a single pass), then a constant-size explode; nothing
-    iterative, nothing collected."""
+def funnel_aggs(rules: Sequence[str], fails_col: str = "fails") -> list:
+    """The funnel family's aggregates over the per-doc comma-joined
+    *fails_col*: ``__in`` (docs entering) and ``__s<k>`` (docs whose fails
+    set is disjoint from ``rules[:k+1]``).  Read by :func:`filter_funnel`
+    and ``streaming.funnel_stream``; :func:`funnel_rows` finishes them."""
     fl = F.split(F.coalesce(F.col("`%s`" % fails_col), F.lit("")), ",")
     aggs = [F.count(F.lit(1)).alias("__in")]
     for i in range(len(rules)):
@@ -1105,7 +1093,15 @@ def filter_funnel(
         aggs.append(
             F.sum((~F.arrays_overlap(fl, prefix)).cast("long")).alias("__s%d" % i)
         )
-    one = flags.agg(*aggs)
+    return aggs
+
+
+def funnel_rows(
+    agg_df: DataFrame, rules: Sequence[str], keep: Sequence[str] = ()
+) -> DataFrame:
+    """The funnel family's finishing projection: the stage-0 ``input``
+    row, then one row per rule — ``stage_ix, rule, docs_surviving,
+    docs_dropped`` after the *keep* columns."""
     stages = [
         F.struct(
             F.lit(0).alias("stage_ix"),
@@ -1124,7 +1120,31 @@ def filter_funnel(
                 (prev - F.col("__s%d" % i)).cast("long").alias("docs_dropped"),
             )
         )
-    return one.select(F.explode(F.array(*stages)).alias("x")).select("x.*")
+    from ..operators.table_checks import _unpivot
+
+    return _unpivot(agg_df, stages, keep)
+
+
+def filter_funnel(
+    flags: DataFrame,
+    rules: Sequence[str],
+    fails_col: str = "fails",
+) -> DataFrame:
+    """Cumulative filter funnel over a per-doc rule-verdict table (e.g.
+    :func:`gopher_rules` output, whose ``fails`` is a comma-joined sorted
+    rule-name list): apply *rules* in the given order and report, per
+    stage, how many documents survive rules ``1..k`` and how many the
+    stage dropped — the funnel chart a pipeline owner reads to see which
+    filter does the cutting.  A stage-0 ``input`` row carries the corpus
+    size; with no *rules* it is the only row.
+
+    Survivors at stage k = docs whose fails set is disjoint from
+    ``rules[:k]`` — ONE aggregate over the flags table (k disjointness
+    sums fused into a single pass, :func:`funnel_aggs`), then a
+    constant-size explode (:func:`funnel_rows`); nothing iterative,
+    nothing collected."""
+    rules = list(rules)
+    return funnel_rows(flags.agg(*funnel_aggs(rules, fails_col)), rules)
 
 
 def c4_filters(

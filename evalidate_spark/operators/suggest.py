@@ -36,6 +36,8 @@ from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from .table_checks import _NUMERIC, _unpivot
+
 __all__ = [
     "suggest_constraints",
     "suggestions_to_spec",
@@ -57,9 +59,6 @@ _TYPE_MAP = {
     "double": "float",
     "boolean": "boolean",
 }
-
-_NUMERIC = {"byte", "short", "integer", "long", "float", "double", "decimal"}
-
 
 def suggest_constraints(
     df: DataFrame,
@@ -121,54 +120,55 @@ def suggest_constraints(
             )
     row = df.agg(*aggs)
 
-    def entry(c: str, rule: str, param: str, keep: str) -> str:
+    def col(c: str, suffix: str):
+        return F.col(f"`{c}__{suffix}`")
+
+    def entry(c: str, rule: str, param, keep):
         # identical field names in every struct: array() requires it
-        return (
-            f"struct('{c}' as column, '{rule}' as rule, {param} as param, "
-            f"{keep} as keep)"
+        return F.struct(
+            F.lit(c).alias("column"),
+            F.lit(rule).alias("rule"),
+            param.alias("param"),
+            keep.alias("keep"),
         )
 
     parts = []
     for c in cols:
         has_bounds = types[c] in _NUMERIC or types[c] == "string"
-        parts.append(entry(c, "required", "''", f"`{c}__nn` = __n AND __n > 0"))
+        parts.append(
+            entry(
+                c, "required", F.lit(""),
+                (col(c, "nn") == F.col("__n")) & (F.col("__n") > 0),
+            )
+        )
         tname = _TYPE_MAP.get(types[c])
         if tname:
-            parts.append(entry(c, "type", f"'{tname}'", "true"))
+            parts.append(entry(c, "type", F.lit(tname), F.lit(True)))
         if c in candidates:
             parts.append(
                 entry(
                     c,
                     "allowed",
-                    f"concat_ws(',', `{c}__set`)",
-                    f"size(`{c}__set`) between 1 and {max_allowed}",
+                    F.concat_ws(",", col(c, "set")),
+                    F.size(col(c, "set")).between(1, max_allowed),
                 )
             )
         if has_bounds:
-            keep = f"`{c}__nn` > 0"
+            keep = col(c, "nn") > 0
             if types[c] in _NUMERIC:
                 # Size bounds are integers in the reference DSL — a column
                 # whose envelope exceeds int64 gets no size rule at all
-                keep += (
-                    f" AND `{c}__rlo` >= -9.2233720368547e18"
-                    f" AND `{c}__rhi` <= 9.2233720368547e18"
+                keep = (
+                    keep
+                    & (col(c, "rlo") >= F.lit(-9.2233720368547e18))
+                    & (col(c, "rhi") <= F.lit(9.2233720368547e18))
                 )
-            parts.append(
-                entry(
-                    c,
-                    "size",
-                    f"concat('[', cast(`{c}__lo` as string), ',', "
-                    f"cast(`{c}__hi` as string), ']')",
-                    keep,
-                )
+            bounds = F.concat(
+                F.lit("["), col(c, "lo").cast("string"), F.lit(","),
+                col(c, "hi").cast("string"), F.lit("]"),
             )
-    from .table_checks import explode_structs
-
-    return (
-        explode_structs(row, parts)
-        .where(F.col("s.keep"))
-        .select("s.column", "s.rule", "s.param")
-    )
+            parts.append(entry(c, "size", bounds, keep))
+    return _unpivot(row, parts).where(F.col("keep")).select("column", "rule", "param")
 
 
 def suggestions_to_spec(rows, schema_types: Optional[dict] = None) -> list:

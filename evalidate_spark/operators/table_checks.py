@@ -31,17 +31,89 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 
-def explode_structs(
-    row: DataFrame, parts: Sequence[str], keep: Sequence[str] = ()
+_NUMERIC = ("byte", "short", "integer", "long", "float", "double", "decimal")
+
+
+def _unpivot(
+    agg_df: DataFrame, structs: Sequence[Column], keep: Sequence[str] = ()
 ) -> DataFrame:
-    """One-row wide aggregate → long rows: explode an array of struct
-    literals (SQL fragments over the aggregate's columns) as ``s``,
-    carrying the *keep* columns (e.g. a streaming window) alongside.
-    Shared by :func:`profile`, :func:`merge_profile_states`,
-    ``streaming.profile_stream`` and ``operators.suggest`` so the
-    struct-literal quoting lives in one place."""
-    ex = F.explode(F.expr("array(%s)" % ",".join(parts))).alias("s")
-    return row.select(*[F.col("`%s`" % k) for k in keep], ex)
+    """Wide aggregate rows → long rows: explode one struct per output row,
+    carrying the *keep* columns (a group key such as a streaming
+    ``window``) alongside."""
+    ex = F.explode(F.array(*structs)).alias("s")
+    return agg_df.select(*keep, ex).select(*keep, "s.*")
+
+
+def profile_aggs(
+    df: DataFrame,
+    columns: Sequence[str],
+    distinct: str = "approx",
+    quantiles: Sequence[float] = (),
+    exact_quantiles: bool = False,
+) -> List[Column]:
+    """The profile family's aggregates: ``__n``, then per column
+    ``{c}__nulls``, typed ``{c}__min`` / ``{c}__max`` and one distinct
+    term — ``{c}__distinct`` (``"approx"``: HLL++, ``"exact"``: count
+    distinct) or the mergeable DataSketches ``{c}__hll`` (``"hll"``) — plus
+    ``{c}__q`` for numeric columns when *quantiles* is non-empty.  Read by
+    :func:`profile`, :func:`profile_state` and
+    ``streaming.profile_stream``; :func:`profile_rows` finishes them."""
+    types = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    aggs: List[Column] = [F.count(F.lit(1)).alias("__n")]
+    for c in columns:
+        qc = F.col("`%s`" % c)
+        aggs += [
+            F.sum(qc.isNull().cast("long")).alias(f"{c}__nulls"),
+            F.min(qc).alias(f"{c}__min"),
+            F.max(qc).alias(f"{c}__max"),
+        ]
+        if distinct == "hll":
+            # hll_sketch_agg accepts int/bigint/string/binary only; coerce the
+            # rest to a value-faithful string key (dates, doubles, decimals)
+            if types.get(c) in ("integer", "long", "string", "binary"):
+                sk = qc
+            elif types.get(c) in ("byte", "short"):
+                sk = qc.cast("int")
+            else:
+                sk = qc.cast("string")
+            aggs.append(F.hll_sketch_agg(sk).alias(f"{c}__hll"))
+        else:
+            dfn = F.approx_count_distinct if distinct == "approx" else F.countDistinct
+            aggs.append(dfn(qc).alias(f"{c}__distinct"))
+        if quantiles and types.get(c) in _NUMERIC:
+            pfn = F.percentile if exact_quantiles else F.percentile_approx
+            aggs.append(
+                pfn(qc.cast("double"), [float(p) for p in quantiles]).alias(f"{c}__q")
+            )
+    return aggs
+
+
+def profile_rows(
+    agg_df: DataFrame,
+    columns: Sequence[str],
+    with_quantiles: bool = False,
+    keep: Sequence[str] = (),
+) -> DataFrame:
+    """The profile family's finishing projection: one row per column,
+    ``column, n_rows, n_nulls, n_distinct, min_repr, max_repr`` after the
+    *keep* columns, plus ``quantiles`` (NULL where the aggregate has no
+    ``{c}__q``) when *with_quantiles*."""
+    have = set(agg_df.columns)
+    rows = []
+    for c in columns:
+        fields = [
+            F.lit(c).alias("column"),
+            F.col("__n").alias("n_rows"),
+            F.col(f"`{c}__nulls`").alias("n_nulls"),
+            F.col(f"`{c}__distinct`").alias("n_distinct"),
+            F.col(f"`{c}__min`").cast("string").alias("min_repr"),
+            F.col(f"`{c}__max`").cast("string").alias("max_repr"),
+        ]
+        if with_quantiles:
+            q = F.col(f"`{c}__q`") if f"{c}__q" in have else F.lit(None)
+            fields.append(q.cast("array<double>").alias("quantiles"))
+        rows.append(F.struct(*fields))
+    return _unpivot(agg_df, rows, keep)
 
 
 def profile(
@@ -65,37 +137,9 @@ def profile(
     products), so it cross-checks bit-for-bit against DuckDB's
     ``quantile_cont``."""
     cols = list(columns) if columns else [f.name for f in df.schema.fields]
-    numeric = {
-        f.name
-        for f in df.schema.fields
-        if f.dataType.typeName() in ("byte", "short", "integer", "long", "float", "double", "decimal")
-    }
-    aggs: List = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        qc = F.col("`%s`" % c)
-        aggs.append(F.sum(qc.isNull().cast("long")).alias(f"{c}__nulls"))
-        if approx_distinct:
-            aggs.append(F.approx_count_distinct(qc).alias(f"{c}__distinct"))
-        else:
-            aggs.append(F.countDistinct(qc).alias(f"{c}__distinct"))
-        aggs.append(F.min(qc).cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(qc).cast("string").alias(f"{c}__max"))
-        if c in numeric and quantiles:
-            pfn = F.percentile if exact_quantiles else F.percentile_approx
-            aggs.append(
-                pfn(qc.cast("double"), [float(p) for p in quantiles]).alias(f"{c}__q")
-            )
-    row = df.agg(*aggs)
-    # unpivot driver-side expression (still lazy — one stack over 1 row)
-    parts = []
-    for c in cols:
-        q = f"`{c}__q`" if c in numeric and quantiles else "cast(null as array<double>)"
-        parts.append(
-            f"struct('{c}' as column, __n as n_rows, `{c}__nulls` as n_nulls, "
-            f"`{c}__distinct` as n_distinct, `{c}__min` as min_repr, "
-            f"`{c}__max` as max_repr, {q} as quantiles)"
-        )
-    return explode_structs(row, parts).select("s.*")
+    distinct = "approx" if approx_distinct else "exact"
+    aggs = profile_aggs(df, cols, distinct, quantiles, exact_quantiles)
+    return profile_rows(df.agg(*aggs), cols, with_quantiles=True)
 
 
 def profile_state(df: DataFrame, columns: Sequence[str], increment: str) -> DataFrame:
@@ -112,28 +156,11 @@ def profile_state(df: DataFrame, columns: Sequence[str], increment: str) -> Data
     same shape :func:`profile` produces, without touching the data again:
     counts add, min/max fold, sketches union (``hll_union_agg``).  This
     is also the checkpoint/resume path for metrics — states survive in
-    the manifest layout and a re-run merges instead of rescans.
+    the manifest layout and a re-run merges instead of rescans.  The
+    aggregates are :func:`profile_aggs` (``"hll"``).
     """
-    types = {f.name: f.dataType.typeName() for f in df.schema.fields}
-    aggs: List = [
-        F.lit(increment).alias("increment"),
-        F.count(F.lit(1)).alias("__n"),
-    ]
-    for c in columns:
-        qc = F.col("`%s`" % c)
-        aggs.append(F.sum(qc.isNull().cast("long")).alias(f"{c}__nulls"))
-        aggs.append(F.min(qc).alias(f"{c}__min"))
-        aggs.append(F.max(qc).alias(f"{c}__max"))
-        # hll_sketch_agg accepts int/bigint/string/binary only; coerce the
-        # rest to a value-faithful string key (dates, doubles, decimals)
-        if types.get(c) in ("integer", "long", "string", "binary"):
-            sk = qc
-        elif types.get(c) in ("byte", "short"):
-            sk = qc.cast("int")
-        else:
-            sk = qc.cast("string")
-        aggs.append(F.hll_sketch_agg(sk).alias(f"{c}__hll"))
-    return df.agg(*aggs)
+    row = df.agg(*profile_aggs(df, columns, "hll"))
+    return row.select(F.lit(increment).alias("increment"), "*")
 
 
 def merge_profile_states(states: DataFrame) -> DataFrame:
@@ -146,7 +173,8 @@ def merge_profile_states(states: DataFrame) -> DataFrame:
     exact for every other field, and associative: any grouping of
     increments folds to the same result (asserted in
     ``tests/test_table_ops.py``).  Cost is O(#increments × #columns)
-    state rows — independent of data size.
+    state rows — independent of data size.  The finish is
+    :func:`profile_rows`.
     """
     cols = sorted(
         {f.name[: -len("__hll")] for f in states.schema.fields if f.name.endswith("__hll")}
@@ -154,19 +182,12 @@ def merge_profile_states(states: DataFrame) -> DataFrame:
     aggs: List = [F.sum("__n").alias("__n")]
     for c in cols:
         aggs.append(F.sum(f"`{c}__nulls`").alias(f"{c}__nulls"))
-        aggs.append(F.min(f"`{c}__min`").cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(f"`{c}__max`").cast("string").alias(f"{c}__max"))
+        aggs.append(F.min(f"`{c}__min`").alias(f"{c}__min"))
+        aggs.append(F.max(f"`{c}__max`").alias(f"{c}__max"))
         aggs.append(
             F.hll_sketch_estimate(F.hll_union_agg(f"`{c}__hll`")).alias(f"{c}__distinct")
         )
-    row = states.agg(*aggs)
-    parts = [
-        f"struct('{c}' as column, __n as n_rows, `{c}__nulls` as n_nulls, "
-        f"`{c}__distinct` as n_distinct, `{c}__min` as min_repr, "
-        f"`{c}__max` as max_repr)"
-        for c in cols
-    ]
-    return explode_structs(row, parts).select("s.*")
+    return profile_rows(states.agg(*aggs), cols)
 
 
 def uniqueness_violations(
@@ -958,6 +979,48 @@ def column_entropy(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     return result
 
 
+def quantile_aggs(columns: Sequence[str], k: int = 200) -> List[Column]:
+    """The quantile family's aggregates: ``__n``, then per column the
+    exact value count ``{c}__cnt`` and a KLL sketch ``{c}__kll`` (NULLs
+    ignored).  Read by :func:`quantile_state` and
+    ``streaming.quantile_stream``; :func:`quantile_rows` finishes them."""
+    aggs: List[Column] = [F.count(F.lit(1)).alias("__n")]
+    for c in columns:
+        qc = F.col("`%s`" % c).cast("double")
+        aggs.append(F.count(qc).alias(f"{c}__cnt"))
+        aggs.append(F.kll_sketch_agg_double(qc, F.lit(int(k))).alias(f"{c}__kll"))
+    return aggs
+
+
+def quantile_rows(
+    agg_df: DataFrame,
+    columns: Sequence[str],
+    quantiles: Sequence[float],
+    keep: Sequence[str] = (),
+) -> DataFrame:
+    """The quantile family's finishing projection over ``{c}__cnt`` /
+    ``{c}__kll``: one row per column, ``column, n_values, min_val,
+    max_val, q_<pct>...`` after the *keep* columns; sketch reads are NULL
+    for a column with no values."""
+    qnames = [("q_%g" % (q * 100)).replace(".", "_") for q in quantiles]
+    rows = []
+    for c in columns:
+        cnt, m = F.col(f"`{c}__cnt`"), F.col(f"`{c}__kll`")
+
+        def at(rank: float) -> Column:
+            return F.when(cnt > 0, F.kll_sketch_get_quantile_double(m, F.lit(rank)))
+
+        fields = [
+            F.lit(c).alias("column"),
+            F.coalesce(cnt, F.lit(0)).cast("long").alias("n_values"),
+            at(0.0).alias("min_val"),
+            at(1.0).alias("max_val"),
+        ]
+        fields += [at(float(q)).alias(qn) for q, qn in zip(quantiles, qnames)]
+        rows.append(F.struct(*fields))
+    return _unpivot(agg_df, rows, keep)
+
+
 def quantile_state(
     df: DataFrame, columns: Sequence[str], increment: str, k: int = 200
 ) -> DataFrame:
@@ -973,16 +1036,10 @@ def quantile_state(
     affordable: each increment is scanned once, forever, and any
     subset of increments folds in O(states) via
     :func:`merge_quantile_states` — the same never-rescan contract as
-    the HLL profile states, now for KS/PSI-style distribution checks."""
-    aggs: List = [
-        F.lit(increment).alias("increment"),
-        F.count(F.lit(1)).alias("__n"),
-    ]
-    for c in columns:
-        qc = F.col("`%s`" % c).cast("double")
-        aggs.append(F.count(qc).alias(f"{c}__cnt"))
-        aggs.append(F.kll_sketch_agg_double(qc, F.lit(int(k))).alias(f"{c}__kll"))
-    return df.agg(*aggs)
+    the HLL profile states, now for KS/PSI-style distribution checks.
+    The aggregates are :func:`quantile_aggs`."""
+    row = df.agg(*quantile_aggs(columns, k))
+    return row.select(F.lit(increment).alias("increment"), "*")
 
 
 def merge_quantile_states(
@@ -995,40 +1052,16 @@ def merge_quantile_states(
     min/max and count losslessly, asserted against SQL in the driver
     gate); the ``q_`` columns are estimates within the sketch's rank
     error (tolerance-asserted in pytest).  Merging is associative;
-    cost is O(#increments × #columns) rows, independent of data size."""
+    cost is O(#increments × #columns) rows, independent of data size.
+    The finish is :func:`quantile_rows`."""
     cols = sorted(
         {f.name[: -len("__kll")] for f in states.schema.fields if f.name.endswith("__kll")}
     )
     aggs: List = []
     for c in cols:
         aggs.append(F.sum(f"`{c}__cnt`").alias(f"{c}__cnt"))
-        aggs.append(F.kll_merge_agg_double(f"`{c}__kll`").alias(f"{c}__m"))
-    row = states.agg(*aggs)
-    qnames = [("q_%g" % (q * 100)).replace(".", "_") for q in quantiles]
-    sels = []
-    for c in cols:
-        m = F.col(f"`{c}__m`")
-        fields = [
-            F.lit(c).alias("column"),
-            F.coalesce(F.col(f"`{c}__cnt`"), F.lit(0)).cast("long").alias("n_values"),
-            F.when(
-                F.col(f"`{c}__cnt`") > 0, F.kll_sketch_get_quantile_double(m, F.lit(0.0))
-            ).alias("min_val"),
-            F.when(
-                F.col(f"`{c}__cnt`") > 0, F.kll_sketch_get_quantile_double(m, F.lit(1.0))
-            ).alias("max_val"),
-        ]
-        for q, qn in zip(quantiles, qnames):
-            fields.append(
-                F.when(
-                    F.col(f"`{c}__cnt`") > 0,
-                    F.kll_sketch_get_quantile_double(m, F.lit(float(q))),
-                ).alias(qn)
-            )
-        sels.append(F.struct(*fields))
-    return row.select(
-        F.explode(F.array(*sels)).alias("s")
-    ).select("s.*")
+        aggs.append(F.kll_merge_agg_double(f"`{c}__kll`").alias(f"{c}__kll"))
+    return quantile_rows(states.agg(*aggs), cols, quantiles)
 
 
 def quantile_drift_states(
@@ -1260,9 +1293,10 @@ def pass_rate_cols(n_rows: str = "n_rows", n_failed: str = "n_failed"):
     """``(pass_bp, status)`` columns from int64 ``n_rows``/``n_failed``
     SQL expressions — the SINGLE Spark-side definition of the check
     pass-rate contract (vacuous 10000 on zero rows, exact int64 ``div``
-    basis points).  Shared by :func:`check_expressions` and
-    ``CheckpointedRun.check_results``; ``streaming.checks_stream``'s
-    struct-SQL fragment and the generated DuckDB oracles mirror it."""
+    basis points).  Shared by :func:`check_rows` (so by
+    :func:`check_expressions` and ``streaming.checks_stream``) and
+    ``CheckpointedRun.check_results``; the generated DuckDB oracles
+    mirror it."""
     pass_bp = (
         F.when(F.expr(n_rows) == 0, F.lit(10000).cast("long"))
         .otherwise(F.expr(f"({n_rows} - {n_failed}) * 10000L div {n_rows}"))
@@ -1274,6 +1308,55 @@ def pass_rate_cols(n_rows: str = "n_rows", n_failed: str = "n_failed"):
         .alias("status")
     )
     return pass_bp, status
+
+
+def _check_list(checks, who: str) -> list:
+    """``check_id -> SQL predicate`` mapping or pair list → a non-empty
+    list of ``(check_id, predicate)`` pairs."""
+    checks = list(checks.items()) if isinstance(checks, dict) else list(checks)
+    if not checks:
+        raise ValueError("%s needs at least one check" % who)
+    return checks
+
+
+def check_fails(pred: str) -> Column:
+    """A check's row fail predicate: NULL/unknown counts as a failure
+    (see :func:`check_expressions`)."""
+    return ~F.coalesce(F.expr(pred).cast("boolean"), F.lit(False))
+
+
+def check_aggs(checks) -> List[Column]:
+    """The checks family's aggregates over a :func:`_check_list`: ``__n``
+    and one failure count ``__f<i>`` per check.  Read by
+    :func:`check_expressions` and ``streaming.checks_stream``;
+    :func:`check_rows` finishes them."""
+    aggs = [F.count(F.lit(1)).cast("long").alias("__n")]
+    for i, (_, pred) in enumerate(checks):
+        aggs.append(
+            F.coalesce(  # sum over an empty table is NULL, not 0
+                F.sum(F.when(check_fails(pred), F.lit(1)).otherwise(F.lit(0))),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("__f%d" % i)
+        )
+    return aggs
+
+
+def check_rows(agg_df: DataFrame, checks, keep: Sequence[str] = ()) -> DataFrame:
+    """The checks family's finishing projection: one row per check,
+    ``check_id, n_rows, n_failed, pass_bp, status`` after the *keep*
+    columns."""
+    rows = [
+        F.struct(
+            F.lit(str(cid)).alias("check_id"),
+            F.col("__n").alias("n_rows"),
+            F.col("__f%d" % i).alias("n_failed"),
+            *pass_rate_cols("__n", "__f%d" % i),
+        )
+        for i, (cid, _) in enumerate(checks)
+    ]
+    return _unpivot(agg_df, rows, keep)
 
 
 def check_expressions(df: DataFrame, checks) -> DataFrame:
@@ -1296,39 +1379,10 @@ def check_expressions(df: DataFrame, checks) -> DataFrame:
     10000 on an empty table).  Plan: every check compiles to one
     conditional-sum column inside a single partial+final aggregate — k
     checks cost ONE table scan and one 1-row-per-partition exchange,
-    regardless of k; the per-check fan-out happens on the 1-row result."""
-    checks = list(checks.items()) if isinstance(checks, dict) else list(checks)
-    if not checks:
-        raise ValueError("check_expressions needs at least one check")
-    aggs = [F.count(F.lit(1)).cast("long").alias("__n")]
-    for i, (_, pred) in enumerate(checks):
-        ok = F.coalesce(F.expr(pred).cast("boolean"), F.lit(False))
-        aggs.append(
-            F.coalesce(  # sum over an empty table is NULL, not 0
-                F.sum(F.when(ok, F.lit(0)).otherwise(F.lit(1))), F.lit(0)
-            )
-            .cast("long")
-            .alias("__f%d" % i)
-        )
-    fan = F.array(
-        *[
-            F.struct(
-                F.lit(str(cid)).alias("check_id"),
-                F.col("__f%d" % i).alias("n_failed"),
-            )
-            for i, (cid, _) in enumerate(checks)
-        ]
-    )
-    return (
-        df.agg(*aggs)
-        .select(F.col("__n").alias("n_rows"), F.explode(fan).alias("c"))
-        .select(
-            F.col("c.check_id").alias("check_id"),
-            "n_rows",
-            F.col("c.n_failed").alias("n_failed"),
-            *pass_rate_cols("n_rows", "c.n_failed"),
-        )
-    )
+    regardless of k; the per-check fan-out happens on the 1-row result
+    (:func:`check_aggs`, then :func:`check_rows`)."""
+    checks = _check_list(checks, "check_expressions")
+    return check_rows(df.agg(*check_aggs(checks)), checks)
 
 
 def expression_violations(
@@ -1336,25 +1390,17 @@ def expression_violations(
 ) -> DataFrame:
     """Row-level violation output for :func:`check_expressions` — one row
     per (failing row × failed check): ``(check_id, *id_cols)``.  Same
-    NULL-fails contract as the summary.
+    NULL-fails contract as the summary (:func:`check_fails`).
 
     One scan, zero shuffle, no row explosion on passing rows: each row
     computes the array of check ids it fails (usually empty), non-empty
     arrays explode in place.  Output volume is exactly the number of
     violations — the right shape to sink next to the engine's typed
     violation rows at any table size."""
-    checks = list(checks.items()) if isinstance(checks, dict) else list(checks)
-    if not checks:
-        raise ValueError("expression_violations needs at least one check")
+    checks = _check_list(checks, "expression_violations")
     failed = F.array_compact(
         F.array(
-            *[
-                F.when(
-                    ~F.coalesce(F.expr(pred).cast("boolean"), F.lit(False)),
-                    F.lit(str(cid)),
-                )
-                for cid, pred in checks
-            ]
+            *[F.when(check_fails(pred), F.lit(str(cid))) for cid, pred in checks]
         )
     )
     ids = [F.col("`%s`" % c) for c in id_cols]
@@ -2127,6 +2173,64 @@ def violation_examples(
     )
 
 
+_HEALTH_TREND = (
+    "n_rows", "n_null_vec", "n_wrong_dim", "n_null_elem", "n_nonfinite",
+    "n_zero_norm", "n_valid",
+)
+
+
+def vector_health_aggs(v: Column, expected_dim: int) -> List[Column]:
+    """The vector-health family's integer counters over vector column *v*:
+    ``n_rows, n_null_vec, n_empty_vec, n_wrong_dim, min_dim, max_dim,
+    n_null_elem, n_nonfinite, n_zero_norm, n_valid`` (``n_valid``: the
+    ``similarity._vec_ok`` scoring contract).  Read by
+    :func:`embedding_health`, :func:`embedding_health_trend` and
+    ``streaming.vector_health_stream``; a counter no consumer selects is
+    pruned from the aggregate by the optimizer."""
+    from ..functions.similarity import _vec_ok
+
+    dim = F.size(v)
+
+    def cnt(cond: Column, name: str) -> Column:
+        return F.coalesce(
+            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))), F.lit(0)
+        ).cast("long").alias(name)
+
+    zero = F.lit(0.0)
+    inf = F.lit(float("inf"))
+    return [
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        cnt(v.isNull(), "n_null_vec"),
+        cnt(dim == 0, "n_empty_vec"),
+        cnt(v.isNotNull() & (dim != F.lit(expected_dim)), "n_wrong_dim"),
+        F.min(dim).cast("long").alias("min_dim"),
+        F.max(dim).cast("long").alias("max_dim"),
+        cnt(
+            F.coalesce(F.exists(v, lambda x: x.isNull()), F.lit(False)),
+            "n_null_elem",
+        ),
+        cnt(
+            F.coalesce(
+                F.exists(v, lambda x: F.isnan(x) | (F.abs(x) == inf)),
+                F.lit(False),
+            ),
+            "n_nonfinite",
+        ),
+        cnt(
+            (dim > 0) & F.coalesce(F.forall(v, lambda x: x == zero), F.lit(False)),
+            "n_zero_norm",
+        ),
+        cnt(_vec_ok(v, expected_dim), "n_valid"),
+    ]
+
+
+def vector_health_rows(agg_df: DataFrame, keep: Sequence[str] = ()) -> DataFrame:
+    """The per-wave / per-window health report: the *keep* columns, then
+    ``n_rows, n_null_vec, n_wrong_dim, n_null_elem, n_nonfinite,
+    n_zero_norm, n_valid``."""
+    return agg_df.select(*keep, *_HEALTH_TREND)
+
+
 def embedding_health(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -2162,40 +2266,8 @@ def embedding_health(
     (bit-stable cross-engine; no float summaries)."""
     if expected_dim <= 0:
         raise ValueError("expected_dim must be a positive int")
-    v = F.col("`%s`" % vec_col)
-    dim = F.size(v)
-
-    def cnt(cond: Column, name: str) -> Column:
-        return F.coalesce(
-            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))), F.lit(0)
-        ).cast("long").alias(name)
-
-    zero = F.lit(0.0)
-    inf = F.lit(float("inf"))
-    return df.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        cnt(v.isNull(), "n_null_vec"),
-        cnt(dim == 0, "n_empty_vec"),
-        cnt(v.isNotNull() & (dim != F.lit(expected_dim)), "n_wrong_dim"),
-        F.min(dim).cast("long").alias("min_dim"),
-        F.max(dim).cast("long").alias("max_dim"),
-        cnt(
-            F.coalesce(F.exists(v, lambda x: x.isNull()), F.lit(False)),
-            "n_null_elem",
-        ),
-        cnt(
-            F.coalesce(
-                F.exists(v, lambda x: F.isnan(x) | (F.abs(x) == inf)),
-                F.lit(False),
-            ),
-            "n_nonfinite",
-        ),
-        cnt(
-            (dim > 0)
-            & F.coalesce(F.forall(v, lambda x: x == zero), F.lit(False)),
-            "n_zero_norm",
-        ),
-    )
+    aggs = vector_health_aggs(F.col("`%s`" % vec_col), expected_dim)
+    return df.agg(*aggs).drop("n_valid")
 
 
 def embedding_health_trend(
@@ -2225,14 +2297,12 @@ def embedding_health_trend(
     if n_waves < 1:
         raise ValueError("n_waves must be >= 1")
     ic, v = F.col("`%s`" % id_col), F.col("`%s`" % vec_col)
-    dim = F.size(v)
     base = df.filter(ic.isNotNull()).select(ic.alias("__id"), v.alias("__v"))
     lim = base.agg(
         F.greatest(
             F.max(F.greatest(F.col("__id"), F.lit(0))) + 1, F.lit(1)
         ).alias("__m")
     )
-    v, dim = F.col("__v"), F.size(F.col("__v"))
     waved = base.crossJoin(F.broadcast(lim)).select(
         F.expr(
             f"least({int(n_waves) - 1}L,"
@@ -2242,47 +2312,9 @@ def embedding_health_trend(
         .alias("wave"),
         "__v",
     )
-
-    def cnt(cond: Column, name: str) -> Column:
-        return F.coalesce(
-            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))), F.lit(0)
-        ).cast("long").alias(name)
-
-    zero = F.lit(0.0)
-    inf = F.lit(float("inf"))
-    bad_elem = lambda x: x.isNull() | F.isnan(x.cast("double")) | (
-        F.abs(x.cast("double")) == inf
-    )
-    return (
-        waved.groupBy("wave")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            cnt(v.isNull(), "n_null_vec"),
-            cnt(v.isNotNull() & (dim != F.lit(expected_dim)), "n_wrong_dim"),
-            cnt(
-                F.coalesce(F.exists(v, lambda x: x.isNull()), F.lit(False)),
-                "n_null_elem",
-            ),
-            cnt(
-                F.coalesce(
-                    F.exists(v, lambda x: F.isnan(x) | (F.abs(x) == inf)),
-                    F.lit(False),
-                ),
-                "n_nonfinite",
-            ),
-            cnt(
-                (dim > 0)
-                & F.coalesce(F.forall(v, lambda x: x == zero), F.lit(False)),
-                "n_zero_norm",
-            ),
-            cnt(
-                v.isNotNull()
-                & (dim == F.lit(expected_dim))
-                & (F.size(F.filter(v, bad_elem)) == 0),
-                "n_valid",
-            ),
-        )
-        .orderBy("wave")
+    aggs = vector_health_aggs(F.col("__v"), expected_dim)
+    return vector_health_rows(waved.groupBy("wave").agg(*aggs), keep=("wave",)).orderBy(
+        "wave"
     )
 
 

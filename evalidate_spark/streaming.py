@@ -10,18 +10,44 @@ when documents arrive continuously (e.g. a landing directory or Kafka).
 Because the engine compiles to a single stateless projection, the
 violations stream is **append-mode compatible** — no state store, no
 watermark needed; Spark's own streaming checkpoint gives exactly-once
-sink semantics.  Only the windowed verdict aggregation is stateful and
-needs a watermark.
+sink semantics.  Only the windowed aggregations are stateful and need a
+watermark.
+
+**One definition per metric family.**  A windowed twin never re-types
+its batch operator's aggregates: each family has one
+``<family>_aggs(...)`` list of aggregate Columns and one
+``<family>_rows(agg_df, ..., keep=())`` finishing projection next to its
+batch operator, and the twin is ``<family>_rows(_windowed(...).agg(
+*<family>_aggs(...)), keep=("window",))``.  Stream ≡ batch per window is
+pinned in ``tests/test_streaming.py``.
+
+**NULL event time.**  A row whose event-time column is NULL belongs to
+no window: every windowed twin drops it in :func:`_windowed`, ahead of
+the watermark, and counts it nowhere.
 """
 
 from __future__ import annotations
 
 from typing import Any, Optional, Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, GroupedData, Window, functions as F
 
-from .compiler import Options
-from .engine import VIOLATIONS_COL, validate
+from .engine import validate
+from .fastpath import _passes, verdict_aggs, verdict_rows
+
+
+def _windowed(
+    stream_df: DataFrame, ts_col: str, window: str, watermark: str
+) -> GroupedData:
+    """The one event-time group-by of the windowed twins: drop NULL
+    *ts_col* rows, set the *watermark*, group by a tumbling
+    ``window``."""
+    ts = F.col("`%s`" % ts_col)
+    return (
+        stream_df.filter(ts.isNotNull())
+        .withWatermark(ts_col, watermark)
+        .groupBy(F.window(ts, window).alias("window"))
+    )
 
 
 def annotate_stream(stream_df: DataFrame, rules: Any, **opts: Any) -> DataFrame:
@@ -46,48 +72,24 @@ def windowed_verdicts(
     ts_col: str,
     window: str = "1 minute",
     watermark: str = "5 minutes",
-    fast: bool = True,
     **opts: Any,
 ) -> DataFrame:
     """Event-time windowed pass/fail roll-up (the streaming analogue of the
-    per-partition verdicts): one watermarked window aggregate, update/append
-    mode per Spark's watermark rules — late rows beyond *watermark* drop.
+    per-partition verdicts): ``(window, rows, passed, failed, verdict)``
+    from one watermarked window aggregate, update/append mode per Spark's
+    watermark rules — late rows beyond *watermark* drop.
 
-    ``fast`` (default) compiles the predicate-only boolean
-    (:mod:`evalidate_spark.fastpath`) instead of the full violations array —
-    the verdict needs only pass/fail, so message/struct construction is
-    skipped entirely (same equivalence-tested compile as batch
-    ``verdict_scan``).  Falls back to the rich compile for specs with
-    custom pandas-UDF validators."""
-    src: DataFrame
-    ok: F.Column  # type: ignore[name-defined]
-    use_fast = False
-    if fast:
-        from .fastpath import _has_custom, compile_fail_predicate
-        from .spec import normalize_rules
-
-        use_fast = not any(_has_custom(n) for n in normalize_rules(rules))
-    if use_fast:
-        failp = compile_fail_predicate(
-            rules, stream_df.schema, Options(**opts) if opts else None
-        )
-        src = stream_df
-        ok = (~F.coalesce(failp, F.lit(False))).cast("int")
-    else:
-        src = annotate_stream(stream_df, rules, **opts)
-        ok = (F.size(F.col(VIOLATIONS_COL)) == 0).cast("int")
-    return (
-        src.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("window"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(ok).alias("passed"),
-            (F.count(F.lit(1)) - F.sum(ok)).alias("failed"),
-        )
-        .withColumn(
-            "verdict", F.when(F.col("failed") == 0, F.lit("pass")).otherwise(F.lit("fail"))
-        )
+    Shares ``fastpath.verdict_aggs`` / ``verdict_rows`` with the batch
+    ``partition_verdicts``.  Pass/fail is ``validate(...)``'s fail
+    predicate, as for batch ``verdicts``: the message-free boolean, so no
+    violation array is built, except for specs with custom pandas-UDF
+    validators, where it is ``size(violations) > 0``."""
+    res = validate(stream_df, rules, **opts)
+    flags = res.annotated.select(
+        F.col("`%s`" % ts_col), _passes(res._fails()).alias("ok")
     )
+    agg = _windowed(flags, ts_col, window, watermark).agg(*verdict_aggs(F.col("ok")))
+    return verdict_rows(agg)
 
 
 def profile_stream(
@@ -103,30 +105,16 @@ def profile_stream(
     in ONE watermarked incremental aggregate (every term — count, sum,
     min, max, ``approx_count_distinct`` — merges per micro-batch; state is
     O(windows x columns), never O(rows)).  Output is long-format rows
-    ``(window, column, ...)`` via the shared one-row unpivot, so a
-    streaming sink accumulates the same shape the batch profile emits —
-    batch equivalence is pinned in ``tests/test_streaming.py``."""
-    from .operators.table_checks import explode_structs
+    ``(window, column, ...)``, the batch profile's shape without
+    ``quantiles``.  Shares ``table_checks.profile_aggs`` /
+    ``profile_rows``."""
+    from .operators.table_checks import profile_aggs, profile_rows
 
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in columns:
-        qc = F.col("`%s`" % c)
-        aggs.append(F.sum(qc.isNull().cast("long")).alias(f"{c}__nulls"))
-        aggs.append(F.approx_count_distinct(qc).alias(f"{c}__distinct"))
-        aggs.append(F.min(qc).cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(qc).cast("string").alias(f"{c}__max"))
-    row = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("window"))
-        .agg(*aggs)
+    columns = list(columns)
+    agg = _windowed(stream_df, ts_col, window, watermark).agg(
+        *profile_aggs(stream_df, columns)
     )
-    parts = [
-        f"struct('{c}' as column, __n as n_rows, `{c}__nulls` as n_nulls, "
-        f"`{c}__distinct` as n_distinct, `{c}__min` as min_repr, "
-        f"`{c}__max` as max_repr)"
-        for c in columns
-    ]
-    return explode_structs(row, parts, keep=("window",)).select("window", "s.*")
+    return profile_rows(agg, columns, keep=("window",))
 
 
 def quantile_stream(
@@ -146,36 +134,15 @@ def quantile_stream(
     O(rows)), then quantile extraction as a plain projection over the
     aggregate output.  ``n_values / min_val / max_val`` are exact, the
     ``q_`` columns estimates within the sketch's rank error — the same
-    split as the batch operator, equivalence pinned in
-    ``tests/test_streaming.py``."""
-    from .operators.table_checks import explode_structs
+    split as the batch operator.  Shares ``table_checks.quantile_aggs`` /
+    ``quantile_rows``."""
+    from .operators.table_checks import quantile_aggs, quantile_rows
 
-    aggs = []
-    for c in columns:
-        qc = F.col("`%s`" % c).cast("double")
-        aggs.append(F.count(qc).alias(f"{c}__cnt"))
-        aggs.append(F.kll_sketch_agg_double(qc, F.lit(int(k))).alias(f"{c}__kll"))
-    row = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("window"))
-        .agg(*aggs)
+    columns = list(columns)
+    agg = _windowed(stream_df, ts_col, window, watermark).agg(
+        *quantile_aggs(columns, k)
     )
-    qnames = [("q_%g" % (q * 100)).replace(".", "_") for q in quantiles]
-    parts = []
-    for c in columns:
-        qcols = ", ".join(
-            "CASE WHEN `%s__cnt` > 0 THEN kll_sketch_get_quantile_double("
-            "`%s__kll`, cast(%r as double)) END as %s" % (c, c, float(q), qn)
-            for q, qn in zip(quantiles, qnames)
-        )
-        parts.append(
-            f"struct('{c}' as column, coalesce(`{c}__cnt`, 0L) as n_values, "
-            f"CASE WHEN `{c}__cnt` > 0 THEN kll_sketch_get_quantile_double("
-            f"`{c}__kll`, cast(0.0 as double)) END as min_val, "
-            f"CASE WHEN `{c}__cnt` > 0 THEN kll_sketch_get_quantile_double("
-            f"`{c}__kll`, cast(1.0 as double)) END as max_val, {qcols})"
-        )
-    return explode_structs(row, parts, keep=("window",)).select("window", "s.*")
+    return quantile_rows(agg, columns, quantiles, keep=("window",))
 
 
 def checks_stream(
@@ -194,39 +161,13 @@ def checks_stream(
     Each check is one conditional sum inside a single watermarked
     incremental aggregate — counts merge per micro-batch, state is
     O(windows × checks), never O(rows) — so a constraint dashboard over an
-    arriving corpus costs the same plan shape as the batch audit.  Batch
-    equivalence per window is pinned in ``tests/test_streaming.py``."""
-    from .operators.table_checks import explode_structs
+    arriving corpus costs the same plan shape as the batch audit.  Shares
+    ``table_checks.check_aggs`` / ``check_rows``."""
+    from .operators.table_checks import _check_list, check_aggs, check_rows
 
-    checks = list(checks.items()) if isinstance(checks, dict) else list(checks)
-    if not checks:
-        raise ValueError("checks_stream needs at least one check")
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, (_, pred) in enumerate(checks):
-        ok = F.coalesce(F.expr(pred).cast("boolean"), F.lit(False))
-        aggs.append(
-            F.coalesce(
-                F.sum(F.when(ok, F.lit(0)).otherwise(F.lit(1))), F.lit(0)
-            )
-            .cast("long")
-            .alias("__f%d" % i)
-        )
-    row = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("window"))
-        .agg(*aggs)
-    )
-    parts = []
-    for i, (cid, _) in enumerate(checks):
-        cid_sql = str(cid).replace("'", "''")
-        parts.append(
-            f"struct('{cid_sql}' as check_id, cast(__n as bigint) as n_rows, "
-            f"`__f{i}` as n_failed, "
-            f"CASE WHEN __n = 0 THEN 10000L "
-            f"ELSE (__n - `__f{i}`) * 10000L div __n END as pass_bp, "
-            f"CASE WHEN `__f{i}` = 0 THEN 'pass' ELSE 'fail' END as status)"
-        )
-    return explode_structs(row, parts, keep=("window",)).select("window", "s.*")
+    checks = _check_list(checks, "checks_stream")
+    agg = _windowed(stream_df, ts_col, window, watermark).agg(*check_aggs(checks))
+    return check_rows(agg, checks, keep=("window",))
 
 
 def funnel_stream(
@@ -241,43 +182,19 @@ def funnel_stream(
     :func:`evalidate_spark.functions.text.filter_funnel`: per window and
     stage, ``(window, stage_ix, rule, docs_surviving, docs_dropped)``
     with the same disjoint-from-``rules[:k]`` survivor rule over the
-    per-doc ``fails`` list.
+    per-doc ``fails`` list (no *rules*: only the stage-0 ``input`` row).
 
     All k disjointness sums are fused into ONE watermarked incremental
-    aggregate (state O(windows × stages), never O(rows)), then unpivoted
-    with the shared struct-explode — the arriving-corpus funnel dashboard
-    costs the same plan shape as the batch report.  Batch equivalence per
-    window is pinned in ``tests/test_streaming.py``."""
-    from .operators.table_checks import explode_structs
+    aggregate (state O(windows × stages), never O(rows)), then unpivoted —
+    the arriving-corpus funnel dashboard costs the same plan shape as the
+    batch report.  Shares ``text.funnel_aggs`` / ``funnel_rows``."""
+    from .functions.text import funnel_aggs, funnel_rows
 
     rules = list(rules)
-    if not rules:
-        raise ValueError("funnel_stream needs at least one rule")
-    fl = F.split(F.coalesce(F.col("`%s`" % fails_col), F.lit("")), ",")
-    aggs = [F.count(F.lit(1)).alias("__in")]
-    for i in range(len(rules)):
-        prefix = F.array(*[F.lit(r) for r in rules[: i + 1]])
-        aggs.append(
-            F.sum((~F.arrays_overlap(fl, prefix)).cast("long")).alias("__s%d" % i)
-        )
-    row = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col("`%s`" % ts_col), window).alias("window"))
-        .agg(*aggs)
+    agg = _windowed(stream_df, ts_col, window, watermark).agg(
+        *funnel_aggs(rules, fails_col)
     )
-    parts = [
-        "struct(0 as stage_ix, 'input' as rule, "
-        "cast(__in as bigint) as docs_surviving, 0L as docs_dropped)"
-    ]
-    for i, r in enumerate(rules):
-        prev = "__in" if i == 0 else "`__s%d`" % (i - 1)
-        r_sql = str(r).replace("'", "''")
-        parts.append(
-            f"struct({i + 1} as stage_ix, '{r_sql}' as rule, "
-            f"`__s{i}` as docs_surviving, "
-            f"{prev} - `__s{i}` as docs_dropped)"
-        )
-    return explode_structs(row, parts, keep=("window",)).select("window", "s.*")
+    return funnel_rows(agg, rules, keep=("window",))
 
 
 def asof_join_stream(
@@ -423,12 +340,8 @@ def drift_stream(
             ],
         )
     )
-    st = (
-        stream_df.withWatermark(ts_col, watermark)
-        .filter(c.isNotNull())
-        .crossJoin(F.broadcast(base_row))
-    )
-    agg = st.groupBy(F.window(F.col("`%s`" % ts_col), window)).agg(
+    st = stream_df.filter(c.isNotNull()).crossJoin(F.broadcast(base_row))
+    agg = _windowed(st, ts_col, window, watermark).agg(
         F.count(F.lit(1)).alias("n"),
         *[F.sum((bucket == b).cast("long")).alias(f"__c{b}") for b in range(bins)],
         *[F.first(f"__pb{b}").alias(f"__pb{b}") for b in range(bins)],
@@ -495,15 +408,17 @@ def running_verdicts(
 
     State per key is two longs (rows, failed) — O(#keys), no growth with
     stream length.  Arrow-batched: the per-batch rows arrive as pandas
-    frames, never row-at-a-time Python."""
+    frames, never row-at-a-time Python.  A row fails by
+    ``validate(...)``'s fail predicate, the one ``windowed_verdicts``
+    reads."""
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ann = annotate_stream(stream_df, rules, **opts)
-    flagged = ann.select(
+    res = validate(stream_df, rules, **opts)
+    flagged = res.annotated.select(
         F.col("`%s`" % key_col).alias("k"),
-        (F.size(F.col(VIOLATIONS_COL)) > 0).cast("long").alias("bad"),
+        res._fails().cast("long").alias("bad"),
     )
 
     def update(key, pdfs, state):
@@ -686,11 +601,8 @@ def rate_stream(
 
     if bucket_s <= 0:
         raise ValueError("bucket_s must be positive")
-    nn = stream_df.filter(F.col("`%s`" % ts_col).isNotNull()).withWatermark(
-        ts_col, watermark
-    )
     agg = (
-        nn.groupBy(F.window(F.col("`%s`" % ts_col), "%d seconds" % bucket_s))
+        _windowed(stream_df, ts_col, "%d seconds" % bucket_s, watermark)
         .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
         .select(F.col("window.start").alias("__ws"), "n_events")
     )
@@ -900,13 +812,13 @@ def quality_stream(
         ),
         1,
     )
-    flagged = stream_df.withWatermark(ts_col, watermark).select(
-        F.col(ts_col),
+    flagged = stream_df.select(
+        F.col("`%s`" % ts_col),
         F.coalesce(per["nt"], F.lit(0)).alias("__nt"),
         F.coalesce(per["dt"], F.lit(0)).alias("__dt"),
     )
     return (
-        flagged.groupBy(F.window(F.col(ts_col), window).alias("window"))
+        _windowed(flagged, ts_col, window, watermark)
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum((F.col("__nt") < int(short_tokens)).cast("long")).alias(
@@ -953,11 +865,9 @@ def novelty_stream(
 
     tc = F.col("`%s`" % text_col)
     fp = fingerprint(tc)
-    d = stream_df.withWatermark(ts_col, watermark).select(
-        F.col(ts_col), fp.alias("__fp")
-    )
+    d = stream_df.select(F.col("`%s`" % ts_col), fp.alias("__fp"))
     return (
-        d.groupBy(F.window(F.col(ts_col), window).alias("window"))
+        _windowed(d, ts_col, window, watermark)
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.count("__fp").cast("long").alias("n_fps"),
@@ -999,47 +909,15 @@ def centroid_stream(
     micro-batch-order-dependent and would break stream ≡ batch
     equality, which the tests pin EXACTLY).  The exclusion contract
     matches the batch state: NULL vectors, wrong dimension, or NULL/
-    non-finite elements are dropped before aggregation."""
+    non-finite elements are dropped before aggregation
+    (``similarity._vec_ok``).  Shares ``similarity.centroid_aggs`` /
+    ``centroid_rows``."""
+    from .functions.similarity import _vec_ok, centroid_aggs, centroid_rows
+
     vc = F.col("`%s`" % vec_col)
-    d = (
-        stream_df.withWatermark(ts_col, watermark)
-        .filter(
-            vc.isNotNull()
-            & (F.size(vc) == dim)
-            & (
-                F.size(
-                    F.filter(
-                        vc,
-                        lambda x: x.isNull()
-                        | F.isnan(x.cast("double"))
-                        | (F.abs(x.cast("double")) == F.lit(float("inf"))),
-                    )
-                )
-                == 0
-            )
-        )
-        .select(F.col(ts_col), vc.alias("__v"))
-    )
-    aggs = [F.count(F.lit(1)).cast("long").alias("n_vecs")]
-    for i in range(dim):
-        el = F.element_at(F.col("__v"), i + 1).cast("double")
-        aggs.append(
-            F.coalesce(
-                F.sum(F.round(el * F.lit(1_000_000.0)).cast("long")),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("__s%d" % i)
-        )
-    return (
-        d.groupBy(F.window(F.col(ts_col), window).alias("window"))
-        .agg(*aggs)
-        .select(
-            "window",
-            "n_vecs",
-            F.array(*[F.col("__s%d" % i) for i in range(dim)]).alias("sums"),
-        )
-    )
+    valid = stream_df.filter(_vec_ok(vc, dim))
+    agg = _windowed(valid, ts_col, window, watermark).agg(*centroid_aggs(vc, dim))
+    return centroid_rows(agg, dim, keep=("window",))
 
 
 def vector_health_stream(
@@ -1060,63 +938,16 @@ def vector_health_stream(
     within one watermark delay instead of at the next batch audit, and
     BEFORE the poisoned vectors reach an index build.
 
-    Every flag is computed in the pre-aggregation projection (pure
-    Column expressions over the array), so the stateful part is a plain
-    windowed count/sum: state is O(windows) × 7 longs, every counter
-    merges per micro-batch, and integer sums make stream ≡ batch EXACT
-    (pinned in tests).  Unlike the id-waved batch trend no id column is
-    needed — event time is the axis — so NULL-vector rows are counted.
-    Rows with a NULL *ts_col* belong to no window and are excluded by an
-    explicit ``IS NOT NULL`` filter ahead of the watermark; beyond that
-    only rows the watermark drops are excluded."""
-    vc = F.col("`%s`" % vec_col)
-    dim_c = F.size(vc)
-    inf = F.lit(float("inf"))
-    bad = F.filter(
-        vc,
-        lambda x: x.isNull()
-        | F.isnan(x.cast("double"))
-        | (F.abs(x.cast("double")) == inf),
-    )
-    live = stream_df.filter(F.col(ts_col).isNotNull())
-    flagged = live.withWatermark(ts_col, watermark).select(
-        F.col(ts_col),
-        vc.isNull().cast("long").alias("__nullv"),
-        (vc.isNotNull() & (dim_c != F.lit(int(expected_dim))))
-        .cast("long")
-        .alias("__wrongd"),
-        F.coalesce(F.exists(vc, lambda x: x.isNull()), F.lit(False))
-        .cast("long")
-        .alias("__nulle"),
-        F.coalesce(
-            F.exists(vc, lambda x: F.isnan(x) | (F.abs(x) == inf)),
-            F.lit(False),
-        )
-        .cast("long")
-        .alias("__nonf"),
-        (
-            (dim_c > 0)
-            & F.coalesce(F.forall(vc, lambda x: x == F.lit(0.0)), F.lit(False))
-        )
-        .cast("long")
-        .alias("__zero"),
-        (
-            vc.isNotNull()
-            & (dim_c == F.lit(int(expected_dim)))
-            & (F.size(bad) == 0)
-        )
-        .cast("long")
-        .alias("__valid"),
-    )
-    return (
-        flagged.groupBy(F.window(F.col(ts_col), window).alias("window"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("__nullv").cast("long").alias("n_null_vec"),
-            F.sum("__wrongd").cast("long").alias("n_wrong_dim"),
-            F.sum("__nulle").cast("long").alias("n_null_elem"),
-            F.sum("__nonf").cast("long").alias("n_nonfinite"),
-            F.sum("__zero").cast("long").alias("n_zero_norm"),
-            F.sum("__valid").cast("long").alias("n_valid"),
-        )
-    )
+    Every counter is a conditional sum over pure Column expressions on
+    the array, so the stateful part is a plain windowed count/sum: every
+    counter merges per micro-batch, and integer sums make stream ≡ batch
+    EXACT (pinned in tests).  Unlike the id-waved batch trend no id
+    column is needed — event time is the axis — so NULL-vector rows are
+    counted; only NULL-event-time rows and rows the watermark drops are
+    excluded.  Shares ``table_checks.vector_health_aggs`` /
+    ``vector_health_rows``."""
+    from .operators.table_checks import vector_health_aggs, vector_health_rows
+
+    aggs = vector_health_aggs(F.col("`%s`" % vec_col), int(expected_dim))
+    agg = _windowed(stream_df, ts_col, window, watermark).agg(*aggs)
+    return vector_health_rows(agg, keep=("window",))

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from evalidate_spark import Rule, Size, Allowed, validate
+from evalidate_spark.spec import CustomValidator
 from evalidate_spark import streaming
 
 
@@ -89,17 +90,28 @@ class TestStreaming:
         assert len(rows) == 6
         assert all(r["verdict"] == ("pass" if r["failed"] == 0 else "fail") for r in rows)
         assert any(r["failed"] > 0 for r in rows)
-        # the rich (fast=False) compile must agree window-for-window
-        wv_rich = streaming.windowed_verdicts(
-            _stream(spark, docs_dir), RULES, ts_col="ts", window="10 minutes",
-            fast=False,
+        # each window ≡ a batch validate() roll-up of the static input —
+        # also for a custom-validator spec, whose pass/fail is read from
+        # size(violations) instead of the fail predicate
+        custom = [
+            Rule(key="doc_id"),
+            Rule(key="text", validators=[CustomValidator(lambda v: len(v) >= 5)]),
+            Rule(key="lang", validators=[Allowed(["en", "es"])]),
+        ]
+        wv_custom = streaming.windowed_verdicts(
+            _stream(spark, docs_dir), custom, ts_col="ts", window="10 minutes"
         )
-        _run_to_memory(wv_rich, "wv_rich_out", mode="complete")
-        key = lambda rs: {
-            (r["window"]["start"], r["window"]["end"]): (r["rows"], r["passed"], r["failed"])
-            for r in rs
-        }
-        assert key(spark.table("wv_rich_out").collect()) == key(rows)
+        _run_to_memory(wv_custom, "wv_custom_out", mode="complete")
+        static = spark.read.parquet(docs_dir)
+        for rules, got in ((RULES, rows), (custom, spark.table("wv_custom_out").collect())):
+            res = validate(static, rules)
+            w = F.window("ts", "10 minutes")
+            n = {r["w"]: r["count"] for r in res.annotated.groupBy(w.alias("w")).count().collect()}
+            bad = {r["w"]: r["count"] for r in res.failed.groupBy(w.alias("w")).count().collect()}
+            want = {k: (v, v - bad.get(k, 0), bad.get(k, 0)) for k, v in n.items()}
+            assert {
+                r["window"]: (r["rows"], r["passed"], r["failed"]) for r in got
+            } == want
 
     def test_dedup_stream_bounded_state(self, spark, tmp_path):
         path = str(tmp_path / "dups_in")
@@ -500,6 +512,21 @@ def test_funnel_stream_matches_batch_funnel(spark, tmp_path):
             assert got[(w, r["stage_ix"])] == (
                 r["rule"], r["docs_surviving"], r["docs_dropped"]
             ), (w, r["stage_ix"])
+
+    # no rules: both twins report only the stage-0 input row
+    _run_to_memory(
+        streaming.funnel_stream(_stream(spark, path), "ts", [], window="30 minutes"),
+        "fn_empty_out", mode="complete",
+    )
+    got = {
+        r["window"]["start"]: tuple(r)[1:]
+        for r in spark.table("fn_empty_out").collect()
+    }
+    want = {}
+    for w in [r["w"] for r in batch.select("w").distinct().collect()]:
+        (row,) = filter_funnel(batch.filter(F.col("w") == w).drop("w"), []).collect()
+        want[w] = tuple(row)
+    assert got == want and len(want) == 4
 
 
 def test_sequence_anomalies_stream_matches_batch(spark, tmp_path):
@@ -1029,24 +1056,132 @@ def test_vector_health_stream_matches_batch_counters(spark, tmp_path):
     assert all(v > 0 for v in agg.values()), agg
 
 
-def test_vector_health_stream_excludes_null_event_time(spark, tmp_path):
-    """Rows with a NULL event time belong to no window: they are filtered
-    out ahead of the watermark and counted nowhere."""
-    path = str(tmp_path / "vh_null_ts")
+@pytest.fixture(scope="module")
+def null_ts_dir(spark, tmp_path_factory):
+    """30 rows in one hour, every third with a NULL event time: one input
+    shared by every windowed twin."""
+    path = str(tmp_path_factory.mktemp("null_ts") / "in")
     (
         spark.range(30)
         .selectExpr(
             "CASE WHEN id % 3 = 0 THEN NULL ELSE timestamp'2026-01-01 00:00:00'"
             " + make_interval(0,0,0,0,0,0,id*60) END ts",
+            "concat('d', id) doc_id",
+            "concat('text body ', cast(id AS string)) text",
+            "CASE WHEN id % 2 = 0 THEN 'zz' ELSE 'en' END lang",
+            "cast(id AS double) v",
+            "CASE WHEN id % 4 = 0 THEN 'r1' ELSE '' END fails",
             "transform(sequence(1, 4), d -> cast(id + d AS float)) embedding",
         )
         .repartition(2)
         .write.parquet(path)
     )
-    vh = streaming.vector_health_stream(
-        _stream(spark, path), "ts", expected_dim=4, window="1 hour"
-    )
-    _run_to_memory(vh, "vh_null_ts_out", mode="complete")
-    rows = spark.table("vh_null_ts_out").collect()
+    return path
+
+
+# twin -> (stream query over the null_ts_dir input, its row-count field)
+_NULL_TS_TWINS = {
+    "profile": (lambda s: streaming.profile_stream(s, "ts", ["v"], window="1 hour"), "n_rows"),
+    "quantile": (lambda s: streaming.quantile_stream(s, "ts", ["v"], window="1 hour"), "n_values"),
+    "checks": (lambda s: streaming.checks_stream(s, "ts", {"c": "v >= 0"}, window="1 hour"), "n_rows"),
+    "funnel": (
+        lambda s: streaming.funnel_stream(s, "ts", ["r1"], window="1 hour").filter("stage_ix = 0"),
+        "docs_surviving",
+    ),
+    "verdicts": (lambda s: streaming.windowed_verdicts(s, RULES, "ts", window="1 hour"), "rows"),
+    "quality": (lambda s: streaming.quality_stream(s, "ts", window="1 hour"), "n_docs"),
+    "novelty": (lambda s: streaming.novelty_stream(s, "ts", window="1 hour"), "n_docs"),
+    "centroid": (lambda s: streaming.centroid_stream(s, "ts", dim=4, window="1 hour"), "n_vecs"),
+    "vector_health": (
+        lambda s: streaming.vector_health_stream(s, "ts", expected_dim=4, window="1 hour"),
+        "n_valid",
+    ),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(_NULL_TS_TWINS))
+def test_windowed_stream_excludes_null_event_time(spark, null_ts_dir, twin):
+    """Rows with a NULL event time belong to no window: every windowed
+    twin drops them and counts them nowhere."""
+    build, field = _NULL_TS_TWINS[twin]
+    name = "null_ts_%s_out" % twin
+    _run_to_memory(build(_stream(spark, null_ts_dir)), name, mode="complete")
+    rows = spark.table(name).collect()
     assert len(rows) == 1
-    assert rows[0]["n_rows"] == rows[0]["n_valid"] == 20
+    assert rows[0][field] == 20
+    if twin == "vector_health":
+        assert rows[0]["n_rows"] == 20
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["profile", "merge_profile_states", "profile_stream", "quantile_stream",
+     "suggest_constraints"],
+)
+def test_column_named_with_quote_is_reported_verbatim(spark, tmp_path, op):
+    """A column name with a single quote reaches the output verbatim."""
+    from evalidate_spark.operators.suggest import suggest_constraints
+    from evalidate_spark.operators.table_checks import (
+        merge_profile_states,
+        profile,
+        profile_state,
+    )
+
+    c = "it's"
+    path = str(tmp_path / "quote_col")
+    spark.range(6).selectExpr(
+        "timestamp'2026-01-01 00:00:00' + make_interval(0,0,0,0,0,0,id*60) ts",
+        "CASE WHEN id = 0 THEN NULL ELSE cast(id AS double) END `it's`",
+    ).write.parquet(path)
+    static = spark.read.parquet(path)
+    if op == "suggest_constraints":
+        got = {tuple(r) for r in suggest_constraints(static, [c]).collect()}
+        assert (c, "type", "float") in got and (c, "size", "[1,5]") in got
+        return
+    if op == "profile":
+        out = profile(static, [c], quantiles=()).collect()
+    elif op == "merge_profile_states":
+        out = merge_profile_states(profile_state(static, [c], "u1")).collect()
+    else:
+        fn = getattr(streaming, op)
+        _run_to_memory(fn(_stream(spark, path), "ts", [c], window="1 hour"),
+                       "quote_%s_out" % op, mode="complete")
+        out = spark.table("quote_%s_out" % op).collect()
+    (row,) = out
+    assert row["column"] == c
+    if op == "quantile_stream":
+        assert (row["n_values"], row["min_val"], row["max_val"]) == (5, 1.0, 5.0)
+    else:
+        assert (row["n_rows"], row["n_nulls"], row["min_repr"], row["max_repr"]) == (
+            6, 1, "1.0", "5.0"
+        )
+
+
+@pytest.mark.parametrize("op", ["checks_stream", "funnel_stream"])
+def test_check_ids_and_rules_are_reported_verbatim(spark, tmp_path, op):
+    """Check ids and funnel rules with a backslash or a quote come back
+    exactly as the batch twin reports them."""
+    from evalidate_spark.functions.text import filter_funnel
+    from evalidate_spark.operators.table_checks import check_expressions
+
+    names = ["a\\b", "x'y"]
+    path = str(tmp_path / "quote_ids")
+    spark.createDataFrame(
+        [(i, float(i), ",".join(names[: i % 3])) for i in range(6)],
+        "i long, v double, fails string",
+    ).selectExpr(
+        "timestamp'2026-01-01 00:00:00' + make_interval(0,0,0,0,0,0,i*60) ts",
+        "v", "fails",
+    ).write.parquet(path)
+    static = spark.read.parquet(path)
+    if op == "checks_stream":
+        checks = {names[0]: "v > 1", names[1]: "v < 4"}
+        q = streaming.checks_stream(_stream(spark, path), "ts", checks, window="1 hour")
+        want = {tuple(r) for r in check_expressions(static, checks).collect()}
+    else:
+        q = streaming.funnel_stream(_stream(spark, path), "ts", names, window="1 hour")
+        want = {tuple(r) for r in filter_funnel(static, names).collect()}
+    _run_to_memory(q, "ids_%s_out" % op, mode="complete")
+    got = {tuple(r)[1:] for r in spark.table("ids_%s_out" % op).collect()}
+    assert got == want
+    assert set(names) <= {r[0 if op == "checks_stream" else 1] for r in got}
