@@ -2333,7 +2333,8 @@ def novelty_trend(
     dedup (:func:`incremental_dedup`): it measures how much of each new
     ingest wave is already in the corpus.  Plan: one fingerprint shuffle
     (min-id per fingerprint via window — same key as exact dedup), then
-    a ``n_buckets``-row rollup; the id-range max is a one-row aggregate
+    a ``n_buckets``-row rollup; the buckets are ``table_checks._waves``,
+    whose id-range max is a one-row aggregate over the pre-window docs,
     joined by broadcast.  NULL-text docs count in ``n_docs`` but can
     never be repeats (no fingerprint — unknown content is not evidence
     of duplication); NULL-id docs are excluded (no position in ingest
@@ -2342,17 +2343,14 @@ def novelty_trend(
     window by a key that is NULL for every fingerprint-less doc would
     funnel all of them into ONE window partition (a pure-waste straggler
     at corpus scale, since ``__first`` is never consumed for NULL fps)."""
+    from ..operators.table_checks import _waves
+
     if n_buckets < 1:
         raise ValueError("novelty_trend: n_buckets must be >= 1")
     tc = F.col("`%s`" % text_col)
     ids = F.col("`%s`" % id_col)
     d = df.filter(ids.isNotNull()).select(
         ids.alias("__id"), fingerprint(tc).alias("__fp")
-    )
-    lim = d.agg(
-        F.greatest(F.max(F.greatest(F.col("__id"), F.lit(0))) + 1, F.lit(1)).alias(
-            "__m"
-        )
     )
     w = Window.partitionBy("__fp")
     marked = (
@@ -2365,19 +2363,8 @@ def novelty_trend(
             )
         )
     )
-    flagged = (
-        marked.crossJoin(F.broadcast(lim))
-        .select(
-            # negative ids clamp to bucket 0; non-negative ids spread over
-            # equal ranges of [0, max]; pure int64 DIV (operands >= 0)
-            F.expr(
-                f"least({int(n_buckets) - 1}L,"
-                f" greatest(__id, 0) * {int(n_buckets)}L DIV __m)"
-            )
-            .cast("int")
-            .alias("bucket"),
-            "__rep",
-        )
+    flagged = _waves(marked, n_buckets, bound_of=d).select(
+        F.col("__w").alias("bucket"), "__rep"
     )
     return flagged.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_docs"),

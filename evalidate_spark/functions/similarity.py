@@ -287,7 +287,7 @@ def embedding_drift(
 ) -> DataFrame:
     """Wave-over-wave embedding-distribution drift — the vector-space
     twin of ``text.vocab_drift``: vectors slice into *n_waves* equal
-    id-ranges (ingest order proxy, as in ``dedup.novelty_trend``) and
+    id-ranges (the ingest-order proxy ``table_checks._waves``) and
     each wave reports the cosine between ITS centroid and the previous
     wave's — ``(wave, n_vecs, centroid_cos_prev)`` (NULL for the first
     wave).  A falling curve is how a silent encoder-version change, a
@@ -311,6 +311,8 @@ def embedding_drift(
     unnormalised vectors at that row count, lower ``scale`` (10^3 buys
     |x|≤9·10^3) or widen the accumulators to decimal; non-ANSI Spark
     long sums wrap SILENTLY on overflow, so stay inside the envelope."""
+    from ..operators.table_checks import _waves
+
     if n_waves < 1:
         raise ValueError("embedding_drift: n_waves must be >= 1")
     ic, vc = F.col("`%s`" % id_col), F.col("`%s`" % vec_col)
@@ -318,20 +320,7 @@ def embedding_drift(
         ic.isNotNull()
         & _vec_ok(vc, dim)
     ).select(ic.alias("__id"), vc.alias("__v"))
-    lim = base.agg(
-        F.greatest(
-            F.max(F.greatest(F.col("__id"), F.lit(0))) + 1, F.lit(1)
-        ).alias("__m")
-    )
-    waved = base.crossJoin(F.broadcast(lim)).select(
-        F.expr(
-            f"least({int(n_waves) - 1}L,"
-            f" greatest(__id, 0) * {int(n_waves)}L DIV __m)"
-        )
-        .cast("int")
-        .alias("wave"),
-        "__v",
-    )
+    waved = _waves(base, n_waves).select(F.col("__w").alias("wave"), "__v")
     aggs = [F.count(F.lit(1)).cast("long").alias("n_vecs")]
     for d in range(dim):
         el = F.element_at(F.col("__v"), d + 1).cast("double")
@@ -706,7 +695,6 @@ def lsh_bucket_pairs(
     seed: int = 42,
     max_bucket: int = 256,
     dim: Optional[int] = None,
-    method: str = "arrow",
 ) -> DataFrame:
     """All-pairs candidate generation via random-hyperplane LSH: bucket =
     sign bits of *planes* fixed random projections (deterministic seed),
@@ -726,16 +714,16 @@ def lsh_bucket_pairs(
     (:func:`_finite_vec` — a non-finite projection sign is undefined and
     the within-bucket cosine would rank engine-divergently).
 
-    ``method``: ``"arrow"`` (default) computes the sign-bit bucket as
-    ONE float64 numpy matmul per Arrow batch — the production shape for
-    a 10^12-vector corpus (the pure-Column HOF dot is interpreted, not
-    codegen'd: ~planes·dim expression steps per row).  ``"hof"`` keeps
-    the Column fold.  Unlike the integer-exact SRP family the float dot
-    is not formally order-independent, so the twins are pinned equal on
-    test fixtures rather than proven equal — a sign can only differ
-    when a projection lands within ~1 ulp of zero, and the recall
-    constructions used by the gates (exact duplicates share buckets
-    under ANY per-vector function) are unaffected either way."""
+    The sign-bit bucket is ONE float64 numpy matmul per Arrow batch — the
+    production shape for a 10^12-vector corpus (a pure-Column HOF dot is
+    interpreted, not codegen'd: ~planes·dim expression steps per row,
+    and measured slower in wall and CPU time at 8 and 16 planes).  Unlike the integer-exact SRP family
+    the float dot is not formally order-independent, so
+    ``tests/test_srp_arrow_parity.py`` pins it against that Column fold
+    on test fixtures rather than proving it equal — a sign can only
+    differ when a projection lands within ~1 ulp of zero, and the
+    recall constructions used by the gates (exact duplicates share
+    buckets under ANY per-vector function) are unaffected either way."""
     import numpy as np
 
     if dim is None:
@@ -764,35 +752,26 @@ def lsh_bucket_pairs(
     rng = np.random.default_rng(seed)
     planes_m = rng.standard_normal((planes, dim))
 
-    if method == "hof":
-        vec = F.col("__v")
-        bits = [
-            (dot(vec, F.array(*[F.lit(float(x)) for x in row])) >= 0).cast("int").alias(f"b{i}")
-            for i, row in enumerate(planes_m)
-        ]
-        bucket = F.concat_ws("", *[b.cast("string") for b in bits])
-    else:
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        pm = planes_m.T.copy()  # (dim, planes)
+    pm = planes_m.T.copy()  # (dim, planes)
 
-        @pandas_udf("string")
-        def _bucket(vs: pd.Series) -> pd.Series:
-            if len(vs) == 0:
-                return pd.Series([], dtype=object)
-            v = np.stack([np.asarray(x, dtype=np.float64) for x in vs])
-            bits = (v @ pm >= 0).astype(np.uint8) + ord("0")
-            return pd.Series(
-                [b.tobytes().decode("ascii") for b in bits]
-            )
+    @pandas_udf("string")
+    def _bucket(vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype=object)
+        v = np.stack([np.asarray(x, dtype=np.float64) for x in vs])
+        bits = (v @ pm >= 0).astype(np.uint8) + ord("0")
+        return pd.Series(
+            [b.tobytes().decode("ascii") for b in bits]
+        )
 
-        bucket = _bucket(F.col("__v"))
     sigs = df.select(
         F.col("`%s`" % id_col).alias("__id"), F.col("`%s`" % vec_col).alias("__v")
     ).select(
         "__id",
         "__v",
-        bucket.alias("__bucket"),
+        _bucket(F.col("__v")).alias("__bucket"),
     )
     # cap BEFORE aggregating: the collect_list buffer holds ≤ max_bucket full
     # vectors per bucket, never the whole (possibly-degenerate) bucket

@@ -1842,12 +1842,15 @@ def vocab_drift(
     collapsing ``new_occ_bp`` across waves is vocabulary exhaustion —
     both are the ingest-monitoring twin of :func:`vocab_spectrum`.
 
-    Plan: ONE token-keyed shuffle — per-token conditional counts for all
-    waves in a single groupBy (no per-wave join), a broadcast one-row
-    total, then an ``n_waves−1``-row driver-free rollup.  Shares floor to
-    int bp before differencing, so the arithmetic is exact and
-    replayable; NULL texts and NULL ids contribute nothing (no tokens /
-    no wave position)."""
+    Plan: lowercased tokens exploded per doc, waves from
+    ``table_checks._waves``, then the shared wave-over-wave roll-up
+    ``table_checks._wave_transitions`` keyed on the token — ONE
+    token-keyed shuffle and an ``n_waves−1``-row driver-free rollup.
+    Shares floor to int bp before differencing, so the arithmetic is
+    exact and replayable; NULL texts and NULL ids contribute nothing (no
+    tokens / no wave position)."""
+    from ..operators.table_checks import _wave_transitions, _waves
+
     if n_waves < 2:
         raise ValueError("vocab_drift: n_waves must be >= 2")
     tc = F.col("`%s`" % text_col)
@@ -1855,69 +1858,10 @@ def vocab_drift(
     d = df.filter(tc.isNotNull() & ids.isNotNull()).select(
         ids.alias("__id"), tokens(tc).alias("__tk")
     )
-    lim = d.agg(
-        F.greatest(F.max(F.greatest(F.col("__id"), F.lit(0))) + 1, F.lit(1)).alias(
-            "__m"
-        )
+    waved = _waves(d, n_waves).select(
+        "__w", F.explode(F.transform(F.col("__tk"), F.lower)).alias("__t")
     )
-    waved = d.crossJoin(F.broadcast(lim)).select(
-        F.expr(
-            f"least({int(n_waves) - 1}L,"
-            f" greatest(__id, 0) * {int(n_waves)}L DIV __m)"
-        ).alias("__w"),
-        F.explode(F.transform(F.col("__tk"), F.lower)).alias("__t"),
-    )
-    cnt_cols = [
-        F.sum(F.when(F.col("__w") == w, 1).otherwise(0))
-        .cast("long")
-        .alias("c%d" % w)
-        for w in range(n_waves)
-    ]
-    # pin the vocab-sized per-token table (the group_drift precedent):
-    # wave totals AND the transition rollup both read it, and without the
-    # checkpoint each branch re-runs the token shuffle
-    per_tok = waved.groupBy("__t").agg(*cnt_cols).localCheckpoint(eager=False)
-    tot = per_tok.agg(
-        *[F.sum("c%d" % w).alias("t%d" % w) for w in range(n_waves)]
-    )
-    wide = per_tok.crossJoin(F.broadcast(tot))
-    # ONE aggregate computes every transition's terms (3·(n_waves−1)
-    # columns on a single row) — no per-transition rescan of the token
-    # table, no reliance on exchange reuse — then a tiny unpivot
-    aggs = []
-    for w in range(n_waves - 1):
-        a, b = "c%d" % w, "c%d" % (w + 1)
-        ta, tb = "t%d" % w, "t%d" % (w + 1)
-        share_a = f"{a} * 10000L DIV greatest({ta}, 1)"
-        share_b = f"{b} * 10000L DIV greatest({tb}, 1)"
-        aggs += [
-            F.expr(f"sum(abs(({share_a}) - ({share_b}))) DIV 2")
-            .cast("long")
-            .alias("tvd_%d" % w),
-            F.sum(F.when((F.col(a) == 0) & (F.col(b) > 0), 1).otherwise(0))
-            .cast("long")
-            .alias("nt_%d" % w),
-            F.expr(
-                f"sum(CASE WHEN {a} = 0 THEN {b} ELSE 0 END)"
-                f" * 10000L DIV greatest(sum({b}), 1)"
-            )
-            .cast("long")
-            .alias("no_%d" % w),
-        ]
-    row = wide.agg(*aggs)
-    transitions = F.array(
-        *[
-            F.struct(
-                F.lit(w).cast("int").alias("from_wave"),
-                F.lit(w + 1).cast("int").alias("to_wave"),
-                F.col("tvd_%d" % w).alias("tvd_bp"),
-                F.col("nt_%d" % w).alias("new_types"),
-                F.col("no_%d" % w).alias("new_occ_bp"),
-            )
-            for w in range(n_waves - 1)
-        ]
-    )
-    return row.select(F.explode(transitions).alias("t")).select("t.*")
+    return _wave_transitions(waved, n_waves, "new_types", "new_occ_bp")
 
 
 def lang_top_tokens(

@@ -18,6 +18,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..spec import Allowed, Rule, Size, Type
+from .table_checks import _wave_transitions, _waves
 
 KINDS = ("text", "media")
 
@@ -41,6 +42,23 @@ def span_rules() -> list:
 
 def _spans(col: str) -> Column:
     return F.col("`%s`" % col)
+
+
+def _kind_sig(spans: Column, kind_chars: Sequence[tuple], other_char: str) -> Column:
+    """A doc's span-kind signature: one char per span from *kind_chars*
+    (unknown/NULL kinds become *other_char*), ``''`` for a NULL or empty
+    span array (never NULL).  The one fold behind :func:`span_grammar`,
+    :func:`span_templates`, :func:`template_drift` and
+    :func:`template_source_matrix`."""
+
+    def char(s):
+        e = None
+        for kind, c in kind_chars:
+            e = (F.when(s["kind"] == kind, F.lit(c)) if e is None
+                 else e.when(s["kind"] == kind, F.lit(c)))
+        return e.otherwise(F.lit(other_char))
+
+    return F.coalesce(F.array_join(F.transform(spans, char), ""), F.lit(""))
 
 
 def kind_consistency_violations(spans: Column) -> Column:
@@ -250,17 +268,7 @@ def span_grammar(
     10 kB string), so this stays cheap at 10^12 docs."""
     spans = _spans(spans_col)
     media_char = dict(kind_chars).get("media", "m")
-
-    def _char(s):
-        e = None
-        for kind, c in kind_chars:
-            e = (F.when(s["kind"] == kind, F.lit(c)) if e is None
-                 else e.when(s["kind"] == kind, F.lit(c)))
-        return e.otherwise(F.lit(other_char))
-
-    sig = F.coalesce(
-        F.array_join(F.transform(spans, _char), ""), F.lit("")
-    )
+    sig = _kind_sig(spans, kind_chars, other_char)
     runs = F.split(sig, "[^%s]+" % media_char)
     max_run = F.coalesce(
         F.array_max(F.transform(runs, lambda r: F.length(r))), F.lit(0)
@@ -306,17 +314,7 @@ def span_templates(
     if min_docs < 1:
         raise ValueError("span_templates: min_docs must be >= 1")
     spans = _spans(spans_col)
-
-    def _char(s):
-        e = None
-        for kind, c in kind_chars:
-            e = (F.when(s["kind"] == kind, F.lit(c)) if e is None
-                 else e.when(s["kind"] == kind, F.lit(c)))
-        return e.otherwise(F.lit(other_char))
-
-    sig = F.coalesce(
-        F.array_join(F.transform(spans, _char), ""), F.lit("")
-    )
+    sig = _kind_sig(spans, kind_chars, other_char)
     per_template = (
         docs.select(
             sig.alias("template"),
@@ -369,91 +367,24 @@ def template_drift(
     structural analogue of ``similarity.embedding_drift`` — the three
     drift monitors cover text, vectors, and layout.
 
-    Plan: identical to vocab_drift minus the explode (one TEMPLATE per
-    doc): one template-keyed groupBy computes all waves' conditional
-    counts, a broadcast 1-row total, then ONE aggregate emits every
-    transition's exact int-bp terms and a tiny unpivot — the shuffle is
+    Plan: one :func:`_kind_sig` TEMPLATE per doc, waves from
+    ``table_checks._waves``, then the shared wave-over-wave roll-up
+    ``table_checks._wave_transitions`` keyed on the template: one
+    template-keyed groupBy computes all waves' conditional counts, a
+    broadcast 1-row total, then ONE aggregate emits every transition's
+    exact int-bp terms and a tiny unpivot — the shuffle is
     template-cardinality, never corpus-cardinality, and nothing is
     rescanned per transition.  NULL ids are excluded (no wave position);
     NULL/empty span arrays participate as the ``''`` template (layout
     absence drifting in IS drift)."""
     if n_waves < 2:
         raise ValueError("template_drift: n_waves must be >= 2")
-    spans = _spans(spans_col)
     ids = F.col("`%s`" % doc_id)
-
-    def _char(s):
-        e = None
-        for kind, c in kind_chars:
-            e = (F.when(s["kind"] == kind, F.lit(c)) if e is None
-                 else e.when(s["kind"] == kind, F.lit(c)))
-        return e.otherwise(F.lit(other_char))
-
-    sig = F.coalesce(
-        F.array_join(F.transform(spans, _char), ""), F.lit("")
-    )
     d = docs.filter(ids.isNotNull()).select(
-        ids.alias("__id"), sig.alias("__t")
+        ids.alias("__id"),
+        _kind_sig(_spans(spans_col), kind_chars, other_char).alias("__t"),
     )
-    lim = d.agg(
-        F.greatest(
-            F.max(F.greatest(F.col("__id"), F.lit(0))) + 1, F.lit(1)
-        ).alias("__m")
-    )
-    waved = d.crossJoin(F.broadcast(lim)).select(
-        F.expr(
-            f"least({int(n_waves) - 1}L,"
-            f" greatest(__id, 0) * {int(n_waves)}L DIV __m)"
-        ).alias("__w"),
-        "__t",
-    )
-    cnt_cols = [
-        F.sum(F.when(F.col("__w") == w, 1).otherwise(0))
-        .cast("long")
-        .alias("c%d" % w)
-        for w in range(n_waves)
-    ]
-    # pin the template-cardinality table (group_drift precedent): wave
-    # totals and the transition rollup both read it
-    per_tpl = waved.groupBy("__t").agg(*cnt_cols).localCheckpoint(eager=False)
-    tot = per_tpl.agg(
-        *[F.sum("c%d" % w).alias("t%d" % w) for w in range(n_waves)]
-    )
-    wide = per_tpl.crossJoin(F.broadcast(tot))
-    aggs = []
-    for w in range(n_waves - 1):
-        a, b = "c%d" % w, "c%d" % (w + 1)
-        ta, tb = "t%d" % w, "t%d" % (w + 1)
-        share_a = f"{a} * 10000L DIV greatest({ta}, 1)"
-        share_b = f"{b} * 10000L DIV greatest({tb}, 1)"
-        aggs += [
-            F.expr(f"sum(abs(({share_a}) - ({share_b}))) DIV 2")
-            .cast("long")
-            .alias("tvd_%d" % w),
-            F.sum(F.when((F.col(a) == 0) & (F.col(b) > 0), 1).otherwise(0))
-            .cast("long")
-            .alias("nt_%d" % w),
-            F.expr(
-                f"sum(CASE WHEN {a} = 0 THEN {b} ELSE 0 END)"
-                f" * 10000L DIV greatest(sum({b}), 1)"
-            )
-            .cast("long")
-            .alias("no_%d" % w),
-        ]
-    row = wide.agg(*aggs)
-    transitions = F.array(
-        *[
-            F.struct(
-                F.lit(w).cast("int").alias("from_wave"),
-                F.lit(w + 1).cast("int").alias("to_wave"),
-                F.col("tvd_%d" % w).alias("tvd_bp"),
-                F.col("nt_%d" % w).alias("new_templates"),
-                F.col("no_%d" % w).alias("new_docs_bp"),
-            )
-            for w in range(n_waves - 1)
-        ]
-    )
-    return row.select(F.explode(transitions).alias("t")).select("t.*")
+    return _wave_transitions(_waves(d, n_waves), n_waves, "new_templates", "new_docs_bp")
 
 
 def template_source_matrix(
@@ -481,17 +412,7 @@ def template_source_matrix(
     if min_docs < 1:
         raise ValueError("template_source_matrix: min_docs must be >= 1")
     spans = _spans(spans_col)
-
-    def _char(s):
-        e = None
-        for kind, c in kind_chars:
-            e = (F.when(s["kind"] == kind, F.lit(c)) if e is None
-                 else e.when(s["kind"] == kind, F.lit(c)))
-        return e.otherwise(F.lit(other_char))
-
-    sig = F.coalesce(
-        F.array_join(F.transform(spans, _char), ""), F.lit("")
-    )
+    sig = _kind_sig(spans, kind_chars, other_char)
     src = F.coalesce(
         F.col("`%s`" % source_col).cast("string"), F.lit("__null__")
     )

@@ -19,12 +19,13 @@ additions (``BASELINE.json: north_rule``), designed for 10^12-row scale:
   dimension; broadcast when the dim is small (explicit ``broadcast()``
   hint), sort-merge + AQE skew split otherwise.
 * ``drift`` — PSI + KS distance between two datasets' numeric columns from
-  equi-width histograms computed distributed (one agg per dataset);
-  comparison is a driver-side numpy op on ~num_bins values.
+  equi-width histograms computed distributed (one agg per dataset); the
+  PSI/KS fold over the ~num_bins bins runs in Spark too.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -42,6 +43,102 @@ def _unpivot(
     ``window``) alongside."""
     ex = F.explode(F.array(*structs)).alias("s")
     return agg_df.select(*keep, ex).select(*keep, "s.*")
+
+
+def _waves(
+    df: DataFrame, n_waves: int, bound_of: Optional[DataFrame] = None
+) -> DataFrame:
+    """*df* plus an int ``__w``: the ingest wave of its ``__id`` column,
+    one of *n_waves* equal id-ranges of ``[0, max(__id)]`` — the
+    ingest-order proxy of every wave monitor (doc/vector ids are assigned
+    in arrival order).  Negative ids clamp to wave 0 and the max id lands
+    in wave ``n_waves − 1``; pure int64 DIV (operands >= 0).
+
+    The bound ``__m = greatest(max(greatest(__id, 0)) + 1, 1)`` is a
+    one-row aggregate over *bound_of* (default *df*), joined by
+    broadcast.  ``dedup.novelty_trend`` passes the pre-window frame so
+    the bound is never computed over its fingerprint window."""
+    bound = (df if bound_of is None else bound_of).agg(
+        F.greatest(F.max(F.greatest(F.col("__id"), F.lit(0))) + 1, F.lit(1)).alias(
+            "__m"
+        )
+    )
+    wave = F.expr(
+        f"least({int(n_waves) - 1}L, greatest(__id, 0) * {int(n_waves)}L DIV __m)"
+    )
+    return (
+        df.crossJoin(F.broadcast(bound))
+        .withColumn("__w", wave.cast("int"))
+        .drop("__m")
+    )
+
+
+def _wave_transitions(
+    keyed: DataFrame, n_waves: int, new_keys: str, new_share: str
+) -> DataFrame:
+    """Wave-over-wave roll-up of a keyed frame with ``__w`` and ``__t``
+    columns (one row per key occurrence; other columns are ignored) → ``(from_wave, to_wave, tvd_bp, <new_keys>,
+    <new_share>)`` for each consecutive wave pair.
+
+    ``tvd_bp`` is the total-variation distance between the two waves'
+    key distributions (Σ|share_a − share_b| over keys, halved) with each
+    share floored to int bp before differencing, so the arithmetic is
+    exact and replayable; *new_keys* / *new_share* count keys (and their
+    occurrence share of the TO wave) absent from the FROM wave.
+
+    Plan: ONE key-keyed shuffle — per-key conditional counts for all
+    waves in a single groupBy (no per-wave join), a broadcast one-row
+    total, then ONE aggregate computing every transition's terms
+    (3·(n_waves−1) columns on a single row — no per-transition rescan)
+    and a tiny unpivot.  Shared by ``text.vocab_drift`` and
+    ``spans.template_drift``."""
+    cnt_cols = [
+        F.sum(F.when(F.col("__w") == w, 1).otherwise(0))
+        .cast("long")
+        .alias("c%d" % w)
+        for w in range(n_waves)
+    ]
+    # pin the key-cardinality table (the group_drift precedent): wave
+    # totals AND the transition roll-up both read it, and without the
+    # checkpoint each branch re-runs the key shuffle
+    per_key = keyed.groupBy("__t").agg(*cnt_cols).localCheckpoint(eager=False)
+    tot = per_key.agg(
+        *[F.sum("c%d" % w).alias("t%d" % w) for w in range(n_waves)]
+    )
+    wide = per_key.crossJoin(F.broadcast(tot))
+    aggs = []
+    for w in range(n_waves - 1):
+        a, b = "c%d" % w, "c%d" % (w + 1)
+        ta, tb = "t%d" % w, "t%d" % (w + 1)
+        share_a = f"{a} * 10000L DIV greatest({ta}, 1)"
+        share_b = f"{b} * 10000L DIV greatest({tb}, 1)"
+        aggs += [
+            F.expr(f"sum(abs(({share_a}) - ({share_b}))) DIV 2")
+            .cast("long")
+            .alias("tvd_%d" % w),
+            F.sum(F.when((F.col(a) == 0) & (F.col(b) > 0), 1).otherwise(0))
+            .cast("long")
+            .alias("nt_%d" % w),
+            F.expr(
+                f"sum(CASE WHEN {a} = 0 THEN {b} ELSE 0 END)"
+                f" * 10000L DIV greatest(sum({b}), 1)"
+            )
+            .cast("long")
+            .alias("no_%d" % w),
+        ]
+    return _unpivot(
+        wide.agg(*aggs),
+        [
+            F.struct(
+                F.lit(w).cast("int").alias("from_wave"),
+                F.lit(w + 1).cast("int").alias("to_wave"),
+                F.col("tvd_%d" % w).alias("tvd_bp"),
+                F.col("nt_%d" % w).alias(new_keys),
+                F.col("no_%d" % w).alias(new_share),
+            )
+            for w in range(n_waves - 1)
+        ],
+    )
 
 
 def profile_aggs(
@@ -355,26 +452,131 @@ def referential_violations_bloom(
     return definitely_absent.unionByName(residual)
 
 
-def histogram_df(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
-    """Equi-width histogram as a DataFrame ``(bucket, n)`` — fully
-    distributed: one tiny agg for bounds (broadcast back as a 1-row cross
-    join), one groupBy of ≤ *bins* keys (map-side combined).  This is the
-    shared input of PSI/KS drift; counts are integers so it also serves as
-    the DuckDB-checkable face of the drift operator."""
-    c = F.col("`%s`" % col).cast("double")
-    bounds = df.filter(c.isNotNull()).agg(F.min(c).alias("__lo"), F.max(c).alias("__hi"))
+def _equi_width(baseline: DataFrame, c: Column, bins: int):
+    """The equi-width binning of *c* over the baseline's bounds:
+    ``(edges, bucket)`` — a one-row ``(__lo, __hi)`` aggregate of the
+    baseline's non-NULL values, and the bucket Column over those
+    columns (``floor((c − lo) / width)`` clamped to ``[0, bins − 1]``).
+    A constant baseline (``hi == lo``) puts everything in bucket 0
+    explicitly instead of via NULL division.  Shared by
+    :func:`histogram_df`, :func:`drift_df`, :func:`drift` and
+    ``streaming.drift_stream``."""
+    edges = baseline.filter(c.isNotNull()).agg(
+        F.min(c).alias("__lo"), F.max(c).alias("__hi")
+    )
     width = (F.col("__hi") - F.col("__lo")) / bins
-    # hi == lo (constant column): everything lands in bucket 0 explicitly
-    # instead of via null division (same guard as drift_df's histogram)
     bucket = F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(
         F.least(
             F.lit(bins - 1),
             F.greatest(F.lit(0), F.floor((c - F.col("__lo")) / width).cast("int")),
         )
     )
+    return edges, bucket
+
+
+def _psi_term(cur: Column, base: Column) -> Column:
+    """One bin's PSI term ``(a − b)·ln(a / b)`` over the two shares, each
+    clamped to 1e-6 so an empty bin stays finite.  The single PSI
+    definition: :func:`_drift_fold`, :func:`_psi_tvd_bp` and
+    ``streaming.drift_stream`` all sum it."""
+    eps = F.lit(1e-6)
+    a, b = F.greatest(cur, eps), F.greatest(base, eps)
+    return (a - b) * F.log(a / b)
+
+
+def _drift_fold(
+    current: DataFrame,
+    baseline: DataFrame,
+    col: str,
+    edges: DataFrame,
+    bucket: Column,
+    n_bins: int,
+) -> DataFrame:
+    """The batch numeric drift fold: one ``(column, psi, ks)`` row,
+    unfloored, for *col* binned by *bucket* (a Column over the one-row
+    *edges* frame, which is broadcast onto each side).
+
+    Plan: one histogram groupBy per dataset (≤ *n_bins* groups,
+    map-side combined), both left-joined onto the ``range(n_bins)`` bin
+    grid, the :func:`_psi_term` sum and the largest cumulative-share gap
+    (KS) over the grid in bin order, and a 1-row final agg.  An empty or
+    all-NULL baseline has no histogram: ``psi`` and ``ks`` are NULL (no
+    baseline → NULL, the contract of :func:`profile_anomalies`).  Shared
+    by :func:`drift_df`, :func:`drift` and :func:`drift_quantile`."""
+    c = F.col("`%s`" % col).cast("double")
+
+    def hist(df: DataFrame, name: str) -> DataFrame:
+        counts = (
+            df.filter(c.isNotNull())
+            .crossJoin(F.broadcast(edges))
+            .groupBy(bucket.alias("bucket"))
+            .agg(F.count(F.lit(1)).alias("__c"))
+        )
+        total = F.sum("__c").over(Window.partitionBy())
+        return counts.select("bucket", (F.col("__c") / total).alias(name))
+
+    grid = baseline.sparkSession.range(n_bins).select(
+        F.col("id").cast("int").alias("bucket")
+    )
+    j = (
+        grid.join(hist(baseline, "pb"), "bucket", "left")
+        .join(hist(current, "pc"), "bucket", "left")
+        .select(
+            "bucket",
+            F.col("pb").isNotNull().alias("__seen"),
+            F.coalesce("pb", F.lit(0.0)).alias("pb"),
+            F.coalesce("pc", F.lit(0.0)).alias("pc"),
+        )
+    )
+    w = Window.partitionBy().orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    scored = j.select(
+        "__seen",
+        _psi_term(F.col("pc"), F.col("pb")).alias("psi_term"),
+        F.abs(F.sum("pb").over(w) - F.sum("pc").over(w)).alias("ks_gap"),
+    )
+    seen = F.max("__seen")
+    return scored.agg(
+        F.lit(col).alias("column"),
+        F.when(seen, F.sum("psi_term")).alias("psi"),
+        F.when(seen, F.max("ks_gap")).alias("ks"),
+    )
+
+
+def _equi_width_drift(
+    current: DataFrame, baseline: DataFrame, columns: Sequence[str], bins: int
+) -> DataFrame:
+    """:func:`_drift_fold` over :func:`_equi_width` bins for every
+    column, unioned — unfloored ``(column, psi, ks)``."""
+    outs = []
+    for col in columns:
+        c = F.col("`%s`" % col).cast("double")
+        edges, bucket = _equi_width(baseline, c, bins)
+        outs.append(_drift_fold(current, baseline, col, edges, bucket, bins))
+    return reduce(DataFrame.unionAll, outs)
+
+
+def _floor_bp(folded: DataFrame) -> DataFrame:
+    """``(column, psi, ks)`` → ``(column, psi_bp, ks_bp)`` in integer
+    basis points (``floor(stat * 10_000)``)."""
+    return folded.select(
+        "column",
+        F.floor(F.col("psi") * 10_000).cast("long").alias("psi_bp"),
+        F.floor(F.col("ks") * 10_000).cast("long").alias("ks_bp"),
+    )
+
+
+def histogram_df(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
+    """Equi-width histogram as a DataFrame ``(bucket, n)`` — fully
+    distributed: one tiny agg for bounds (broadcast back as a 1-row cross
+    join), one groupBy of ≤ *bins* keys (map-side combined).  The bins
+    are :func:`_equi_width`, the drift monitors' own; counts are
+    integers so it also serves as the DuckDB-checkable face of the drift
+    operator."""
+    c = F.col("`%s`" % col).cast("double")
+    edges, bucket = _equi_width(df, c, bins)
     return (
         df.filter(c.isNotNull())
-        .crossJoin(F.broadcast(bounds))
+        .crossJoin(F.broadcast(edges))
         .groupBy(bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -389,76 +591,17 @@ def drift_df(
     """PSI + KS drift per numeric column, fully distributed — returns
     ``(column, psi_bp, ks_bp)`` in integer basis points
     (``floor(stat * 10_000)``) so results are exactly comparable across
-    engines despite float formatting.
+    engines despite float formatting.  NULL ``psi_bp``/``ks_bp`` when the
+    baseline has no non-NULL value.
 
-    Plan per column: one tiny bounds agg on the baseline (broadcast), one
-    histogram groupBy per dataset (≤ *bins* groups, map-side combined), a
+    Plan per column: the :func:`_equi_width` bounds agg on the baseline
+    (broadcast) and bucket, then :func:`_drift_fold` — one histogram
+    groupBy per dataset (≤ *bins* groups, map-side combined), a
     *bins*-row join, and a 1-row final agg.  All driver-free; per-column
     plans are unioned into one job."""
-    import math  # noqa: F401  (documenting the ln used below)
-
     if not columns:
         raise ValueError("drift_df needs at least one column")
-    eps = 1e-6
-    outs: List[DataFrame] = []
-    for col in columns:
-        c = F.col("`%s`" % col).cast("double")
-        bounds = (
-            baseline.filter(c.isNotNull())
-            .agg(F.min(c).alias("__lo"), F.max(c).alias("__hi"))
-        )
-
-        def hist(df: DataFrame, name: str) -> DataFrame:
-            width = (F.col("__hi") - F.col("__lo")) / bins
-            bucket = F.when(
-                F.col("__hi") == F.col("__lo"), F.lit(0)
-            ).otherwise(
-                F.least(
-                    F.lit(bins - 1),
-                    F.greatest(F.lit(0), F.floor((c - F.col("__lo")) / width).cast("int")),
-                )
-            )
-            counts = (
-                df.filter(c.isNotNull())
-                .crossJoin(F.broadcast(bounds))
-                .groupBy(bucket.alias("bucket"))
-                .agg(F.count(F.lit(1)).alias("__c"))
-            )
-            total = F.sum("__c").over(Window.partitionBy())
-            return counts.select("bucket", (F.col("__c") / total).alias(name))
-
-        b = hist(baseline, "pb")
-        cu = hist(current, "pc")
-        grid = b.sparkSession.range(bins).select(F.col("id").cast("int").alias("bucket"))
-        j = (
-            grid.join(b, "bucket", "left")
-            .join(cu, "bucket", "left")
-            .select(
-                "bucket",
-                F.coalesce("pb", F.lit(0.0)).alias("pb"),
-                F.coalesce("pc", F.lit(0.0)).alias("pc"),
-            )
-        )
-        w = Window.partitionBy().orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-        term = (
-            (F.greatest(F.col("pc"), F.lit(eps)) - F.greatest(F.col("pb"), F.lit(eps)))
-            * F.log(F.greatest(F.col("pc"), F.lit(eps)) / F.greatest(F.col("pb"), F.lit(eps)))
-        )
-        scored = j.select(
-            term.alias("psi_term"),
-            F.abs(F.sum("pb").over(w) - F.sum("pc").over(w)).alias("ks_gap"),
-        )
-        outs.append(
-            scored.agg(
-                F.lit(col).alias("column"),
-                F.floor(F.sum("psi_term") * 10_000).cast("long").alias("psi_bp"),
-                F.floor(F.max("ks_gap") * 10_000).cast("long").alias("ks_bp"),
-            )
-        )
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionAll(o)
-    return result
+    return _floor_bp(_equi_width_drift(current, baseline, columns, bins))
 
 
 def iqr_outliers(
@@ -629,69 +772,26 @@ def drift_quantile(
     ``exact=True`` swaps in exact ``percentile`` for oracle/audit parity.
 
     Returns ``(column, psi_bp, ks_bp)`` in integer basis points like
-    :func:`drift_df`.  Plan per column: one tiny cuts agg on the baseline
-    (broadcast, q-1 doubles), one groupBy per dataset over ≤ q buckets
-    (bucket = count of cuts below the value, an array-HOF — no join per
-    bin), a q-row join, 1-row final agg."""
+    :func:`drift_df`, NULL when the baseline has no non-NULL value.
+    Plan per column: one tiny cuts agg on the baseline (broadcast, q-1
+    doubles) and the bucket (count of cuts below the value, an array-HOF
+    — no join per bin), then :func:`_drift_fold`: one groupBy per
+    dataset over ≤ q buckets, a q-row join, 1-row final agg."""
     if not columns:
         raise ValueError("drift_quantile needs at least one column")
     if q < 2:
         raise ValueError("q must be >= 2")
-    eps = 1e-6
     probs = [k / q for k in range(1, q)]
     pfn = F.percentile if exact else F.percentile_approx
     outs: List[DataFrame] = []
     for col in columns:
         c = F.col("`%s`" % col).cast("double")
         cuts = baseline.filter(c.isNotNull()).agg(pfn(c, probs).alias("__cuts"))
-
-        def bucketed(df: DataFrame, name: str) -> DataFrame:
-            # bucket = #cuts strictly below the value (ties stay low) —
-            # same op as DuckDB len(list_filter(cuts, x -> v > x))
-            b = F.size(F.filter(F.col("__cuts"), lambda x: c > x))
-            counts = (
-                df.filter(c.isNotNull())
-                .crossJoin(F.broadcast(cuts))
-                .groupBy(b.alias("bucket"))
-                .agg(F.count(F.lit(1)).alias("__c"))
-            )
-            total = F.sum("__c").over(Window.partitionBy())
-            return counts.select("bucket", (F.col("__c") / total).alias(name))
-
-        bb = bucketed(baseline, "pb")
-        cu = bucketed(current, "pc")
-        grid = bb.sparkSession.range(q).select(F.col("id").cast("int").alias("bucket"))
-        j = (
-            grid.join(bb, "bucket", "left")
-            .join(cu, "bucket", "left")
-            .select(
-                "bucket",
-                F.coalesce("pb", F.lit(0.0)).alias("pb"),
-                F.coalesce("pc", F.lit(0.0)).alias("pc"),
-            )
-        )
-        w = Window.partitionBy().orderBy("bucket").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        term = (
-            (F.greatest(F.col("pc"), F.lit(eps)) - F.greatest(F.col("pb"), F.lit(eps)))
-            * F.log(F.greatest(F.col("pc"), F.lit(eps)) / F.greatest(F.col("pb"), F.lit(eps)))
-        )
-        scored = j.select(
-            term.alias("psi_term"),
-            F.abs(F.sum("pb").over(w) - F.sum("pc").over(w)).alias("ks_gap"),
-        )
-        outs.append(
-            scored.agg(
-                F.lit(col).alias("column"),
-                F.floor(F.sum("psi_term") * 10_000).cast("long").alias("psi_bp"),
-                F.floor(F.max("ks_gap") * 10_000).cast("long").alias("ks_bp"),
-            )
-        )
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionAll(o)
-    return result
+        # bucket = #cuts strictly below the value (ties stay low) — same
+        # op as DuckDB len(list_filter(cuts, x -> v > x))
+        bucket = F.size(F.filter(F.col("__cuts"), lambda x: c > x))
+        outs.append(_drift_fold(current, baseline, col, cuts, bucket, q))
+    return _floor_bp(reduce(DataFrame.unionAll, outs))
 
 
 def drift_categorical(
@@ -786,14 +886,13 @@ def _top_categories(freq: DataFrame, count_col: str, top_k: int) -> DataFrame:
 def _psi_tvd_bp(cur, base):
     """The SINGLE definition of the categorical drift fold — PSI and
     total-variation aggregate columns in integer basis points over two
-    share columns (``cur`` vs ``base``, both 9-dp rounded upstream):
-    1e-6 eps clamp inside the PSI log term, floor(·×10000).  Shared by
+    share columns (``cur`` vs ``base``, both 9-dp rounded upstream): the
+    :func:`_psi_term` sum and half the absolute-share sum, each
+    floor(·×10000).  Shared by
     :func:`drift_categorical` (pc vs pb) and :func:`group_drift`
     (group vs corpus) and mirrored by both oracles."""
-    eps = F.lit(1e-6)
-    a, b = F.greatest(cur, eps), F.greatest(base, eps)
     return (
-        F.floor(F.sum((a - b) * F.log(a / b)) * 10_000)
+        F.floor(F.sum(_psi_term(cur, base)) * 10_000)
         .cast("long")
         .alias("psi_bp"),
         F.floor(0.5 * F.sum(F.abs(cur - base)) * 10_000)
@@ -802,62 +901,21 @@ def _psi_tvd_bp(cur, base):
     )
 
 
-def _histogram(df: DataFrame, col: str, lo: float, hi: float, bins: int) -> List[float]:
-    """Equi-width histogram as relative frequencies — one distributed agg."""
-    c = F.col("`%s`" % col).cast("double")
-    width = (hi - lo) / bins or 1.0
-    bucket = F.least(
-        F.lit(bins - 1), F.greatest(F.lit(0), F.floor((c - lo) / width).cast("int"))
-    )
-    counts = (
-        df.filter(c.isNotNull())
-        .groupBy(bucket.alias("__b"))
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .collect()
-    )
-    total = sum(r["__c"] for r in counts) or 1
-    hist = [0.0] * bins
-    for r in counts:
-        hist[r["__b"]] = r["__c"] / total
-    return hist
-
-
 def drift(
     current: DataFrame,
     baseline: DataFrame,
     columns: Sequence[str],
     bins: int = 10,
 ) -> List[Dict[str, float]]:
-    """PSI and KS statistics per numeric column between two datasets.
-
-    Each dataset contributes one groupBy-histogram job (shuffle of ≤ *bins*
-    rows per partition); PSI/KS math is driver-side on *bins* floats.
+    """PSI and KS statistics per numeric column between two datasets:
+    ``[{"column", "psi", "ks"}]``, the :func:`drift_df` fold collected
+    unfloored (:func:`_equi_width` bins, :func:`_drift_fold`).  ``psi``
+    and ``ks`` are ``None`` when the baseline has no non-NULL value.
     Standard thresholds: PSI < 0.1 stable, 0.1–0.25 moderate, > 0.25 drifted.
     """
-    out: List[Dict[str, float]] = []
-    for col in columns:
-        c = F.col("`%s`" % col).cast("double")
-        bounds = baseline.agg(F.min(c).alias("lo"), F.max(c).alias("hi")).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
-        if lo is None or hi is None or lo == hi:
-            out.append({"column": col, "psi": 0.0, "ks": 0.0})
-            continue
-        hb = _histogram(baseline, col, lo, hi, bins)
-        hc = _histogram(current, col, lo, hi, bins)
-        eps = 1e-6
-        psi = 0.0
-        ks = 0.0
-        cb = cc = 0.0
-        import math
-
-        for b, c_ in zip(hb, hc):
-            pb, pc = max(b, eps), max(c_, eps)
-            psi += (pc - pb) * math.log(pc / pb)
-            cb += b
-            cc += c_
-            ks = max(ks, abs(cb - cc))
-        out.append({"column": col, "psi": psi, "ks": ks})
-    return out
+    if not columns:
+        return []
+    return [r.asDict() for r in _equi_width_drift(current, baseline, columns, bins).collect()]
 
 
 def skew_report(
@@ -1155,7 +1213,7 @@ def quantile_drift_states(
                 ks_col.alias("ks_bp"),
             )
         )
-    return both.select(F.explode(F.array(*sels)).alias("s")).select("s.*")
+    return _unpivot(both, sels)
 
 
 def overlap_estimate(
@@ -1284,9 +1342,7 @@ def profile_anomalies(
                 ).alias("volume_anomaly"),
             )
         )
-    return j.select(
-        "increment", F.explode(F.array(*parts)).alias("s")
-    ).select("increment", "s.*")
+    return _unpivot(j, parts, keep=("increment",))
 
 
 def pass_rate_cols(n_rows: str = "n_rows", n_failed: str = "n_failed"):
@@ -2279,7 +2335,7 @@ def embedding_health_trend(
 ) -> DataFrame:
     """Per-ingest-wave :func:`embedding_health` — the WHEN to the global
     report's WHAT: rows slice into *n_waves* equal id-ranges (the ingest
-    proxy shared with ``similarity.embedding_drift`` and
+    proxy :func:`_waves`, shared with ``similarity.embedding_drift`` and
     ``dedup.novelty_trend``) and each wave reports the same integer
     counters plus ``n_valid`` (vectors passing the full scoring
     contract: non-NULL, exactly *expected_dim* wide, every element
@@ -2298,20 +2354,7 @@ def embedding_health_trend(
         raise ValueError("n_waves must be >= 1")
     ic, v = F.col("`%s`" % id_col), F.col("`%s`" % vec_col)
     base = df.filter(ic.isNotNull()).select(ic.alias("__id"), v.alias("__v"))
-    lim = base.agg(
-        F.greatest(
-            F.max(F.greatest(F.col("__id"), F.lit(0))) + 1, F.lit(1)
-        ).alias("__m")
-    )
-    waved = base.crossJoin(F.broadcast(lim)).select(
-        F.expr(
-            f"least({int(n_waves) - 1}L,"
-            f" greatest(__id, 0) * {int(n_waves)}L DIV __m)"
-        )
-        .cast("int")
-        .alias("wave"),
-        "__v",
-    )
+    waved = _waves(base, n_waves).select(F.col("__w").alias("wave"), "__v")
     aggs = vector_health_aggs(F.col("__v"), expected_dim)
     return vector_health_rows(waved.groupBy("wave").agg(*aggs), keep=("wave",)).orderBy(
         "wave"
@@ -2908,7 +2951,7 @@ def correlation_matrix(df: DataFrame, columns: Sequence[str]) -> DataFrame:
                 ).alias("corr_bp"),
             )
         )
-    return one.select(F.explode(F.array(*rows)).alias("r")).select("r.*")
+    return _unpivot(one, rows)
 
 
 def verdict_agreement(
@@ -3164,7 +3207,7 @@ def completeness_trend(
                 .alias("slope_cbp"),
             )
         )
-    return m.select(F.explode(F.array(*structs)).alias("__s")).select("__s.*")
+    return _unpivot(m, structs)
 
 
 def concentration_profile(

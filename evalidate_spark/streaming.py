@@ -28,6 +28,8 @@ the watermark, and counts it nowhere.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, GroupedData, Window, functions as F
@@ -295,9 +297,9 @@ def drift_stream(
 ) -> DataFrame:
     """Per-event-time-window PSI/KS drift of a stream against a STATIC
     baseline — the online twin of
-    :func:`evalidate_spark.operators.table_checks.drift_df` (same
-    equi-width buckets over baseline bounds, same eps/ln term, same
-    integer-basis-point output).
+    :func:`evalidate_spark.operators.table_checks.drift_df` (the same
+    ``table_checks._equi_width`` buckets over baseline bounds, the same
+    ``table_checks._psi_term``, the same integer-basis-point output).
 
     Streaming shape: the baseline reduces to ONE broadcast row (bounds +
     per-bucket probabilities, computed batch-side once); the stream needs
@@ -307,20 +309,15 @@ def drift_stream(
     O(open windows · bins), independent of stream length.
 
     Emits ``(window_start, window_end, n, psi_bp, ks_bp)`` when the
-    watermark closes each window."""
-    eps = 1e-6
+    watermark closes each window; ``psi_bp``/``ks_bp`` are NULL when the
+    baseline has no non-NULL value, as in ``drift_df``."""
+    from .operators.table_checks import _equi_width, _psi_term
+
     c = F.col("`%s`" % col).cast("double")
-    nn_b = baseline.filter(c.isNotNull())
-    bounds = nn_b.agg(F.min(c).alias("__lo"), F.max(c).alias("__hi"))
-    width = (F.col("__hi") - F.col("__lo")) / bins
-    bucket = F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(
-        F.least(
-            F.lit(bins - 1),
-            F.greatest(F.lit(0), F.floor((c - F.col("__lo")) / width).cast("int")),
-        )
-    )
+    bounds, bucket = _equi_width(baseline, c, bins)
     base_row = (
-        nn_b.crossJoin(F.broadcast(bounds))
+        baseline.filter(c.isNotNull())
+        .crossJoin(F.broadcast(bounds))
         .groupBy()
         .agg(
             F.first("__lo").alias("__lo"),
@@ -346,24 +343,19 @@ def drift_stream(
         *[F.sum((bucket == b).cast("long")).alias(f"__c{b}") for b in range(bins)],
         *[F.first(f"__pb{b}").alias(f"__pb{b}") for b in range(bins)],
     )
-
-    def term(b: int):
-        pc = F.col(f"__c{b}") / F.col("n")
-        pb = F.col(f"__pb{b}")
-        gpc, gpb = F.greatest(pc, F.lit(eps)), F.greatest(pb, F.lit(eps))
-        return (gpc - gpb) * F.log(gpc / gpb)
-
-    psi = term(0)
-    for b in range(1, bins):
-        psi = psi + term(b)
+    pcs = [F.col(f"__c{b}") / F.col("n") for b in range(bins)]
+    pbs = [F.col(f"__pb{b}") for b in range(bins)]
+    psi = reduce(operator.add, [_psi_term(pc, pb) for pc, pb in zip(pcs, pbs)])
     cum_pb, cum_pc, ks = None, None, None
-    for b in range(bins):
-        pc = F.col(f"__c{b}") / F.col("n")
-        pb = F.col(f"__pb{b}")
+    for pc, pb in zip(pcs, pbs):
         cum_pb = pb if cum_pb is None else cum_pb + pb
         cum_pc = pc if cum_pc is None else cum_pc + pc
         gap = F.abs(cum_pb - cum_pc)
         ks = gap if ks is None else F.greatest(ks, gap)
+    # an empty baseline leaves every __pb NULL: the cumulative sums make
+    # ks NULL, and this guard does the same for psi (whose clamp would
+    # otherwise read NULL as 1e-6)
+    psi = F.when(F.col("__pb0").isNotNull(), psi)
     return agg.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),

@@ -112,18 +112,58 @@ def test_arrow_path_is_in_the_plan(spark):
     assert "BatchEvalPython" not in hof_plan
 
 
-class TestLshBucketArrowParity:
-    """Float LSH bucket twin (`lsh_bucket_pairs` method=arrow vs hof):
-    not formally order-independent like the integer family, so the pin
-    is fixture equality — random vectors, the hostile corpus, and the
-    full pair output of an injected-duplicate construction."""
+def _hof_lsh_pairs(spark, rows, planes, dim, seed=42):
+    """Reference for `lsh_bucket_pairs`' Arrow sign-bit bucket: the
+    pure-Column fold it replaced (one HOF dot per hyperplane, sign bits
+    concatenated), with the same plane matrix and the same row filter.
+    Returns every same-bucket id pair ``(a, b)``, ``a < b``."""
+    import numpy as np
 
-    def _pairs(self, spark, rows, method, planes=8, dim=4):
+    from evalidate_spark.functions.similarity import _finite_vec, dot
+
+    planes_m = np.random.default_rng(seed).standard_normal((planes, dim))
+    vec = F.col("__v")
+    bits = [
+        (dot(vec, F.array(*[F.lit(float(x)) for x in row])) >= 0).cast("int").alias(f"b{i}")
+        for i, row in enumerate(planes_m)
+    ]
+    bucket = F.concat_ws("", *[b.cast("string") for b in bits])
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = (
+        df.filter(
+            F.col("vec_id").isNotNull()
+            & (F.size("embedding") == dim)
+            & _finite_vec(F.col("embedding"))
+        )
+        .select("vec_id", F.col("embedding").alias("__v"))
+        .select("vec_id", bucket.alias("b"))
+        .collect()
+    )
+    by_bucket = {}
+    for r in got:
+        by_bucket.setdefault(r["b"], []).append(r["vec_id"])
+    return sorted(
+        (a, b)
+        for ids in by_bucket.values()
+        for a in ids
+        for b in ids
+        if a < b
+    )
+
+
+class TestLshBucketArrowParity:
+    """Float LSH bucket (`lsh_bucket_pairs`' Arrow matmul vs the HOF
+    reference above): not formally order-independent like the integer
+    family, so the pin is fixture equality — random vectors, the hostile
+    corpus, and the full pair output of an injected-duplicate
+    construction."""
+
+    def _pairs(self, spark, rows, planes=8, dim=4):
         from evalidate_spark.functions.similarity import lsh_bucket_pairs
 
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         got = lsh_bucket_pairs(
-            df, planes=planes, max_bucket=64, dim=dim, method=method
+            df, planes=planes, max_bucket=64, dim=dim
         ).collect()
         return sorted(
             (r["id_a"], r["id_b"], r["cosine"], r["truncated"]) for r in got
@@ -136,17 +176,17 @@ class TestLshBucketArrowParity:
         rows = [
             (i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(80)
         ] + [(1000 + i, [rng.uniform(-1, 1)] * 4) for i in range(5)]
-        a = self._pairs(spark, rows, "arrow")
-        h = self._pairs(spark, rows, "hof")
-        assert a == h
+        a = self._pairs(spark, rows)
         assert a  # non-vacuous: some bucket produced pairs
+        assert not any(p[3] for p in a)  # no bucket hit the cap
+        assert [p[:2] for p in a] == _hof_lsh_pairs(spark, rows, 8, 4)
 
     def test_exact_duplicates_always_pair_either_method(self, spark):
         v = [0.3, -0.2, 0.9, 0.1]
         rows = [(1, v), (2, v), (3, [-0.9, 0.4, 0.0, -0.3])]
-        for method in ("arrow", "hof"):
-            pairs = self._pairs(spark, rows, method)
-            assert any(p[:2] == (1, 2) and p[2] == 1.0 for p in pairs)
+        pairs = self._pairs(spark, rows)
+        assert any(p[:2] == (1, 2) and p[2] == 1.0 for p in pairs)
+        assert (1, 2) in _hof_lsh_pairs(spark, rows, 8, 4)
 
     def test_hostile_corpus_equal_and_nonfinite_excluded(self, spark):
         from evalidate_spark.fixtures import HOSTILE_EMBEDDINGS
@@ -155,9 +195,9 @@ class TestLshBucketArrowParity:
             (i, r[1]) for i, r in enumerate(HOSTILE_EMBEDDINGS)
             if r[1] is not None
         ]
-        a = self._pairs(spark, rows, "arrow", dim=64)
-        h = self._pairs(spark, rows, "hof", dim=64)
-        assert a == h
+        a = self._pairs(spark, rows, dim=64)
+        assert not any(p[3] for p in a)
+        assert [p[:2] for p in a] == _hof_lsh_pairs(spark, rows, 8, 64)
         nonfinite_ix = {
             i for i, r in enumerate(HOSTILE_EMBEDDINGS)
             if r[1] is not None

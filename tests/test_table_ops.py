@@ -1,6 +1,8 @@
 """Table-level operators: stats profile, uniqueness, referential anti-join,
 drift, span structure — cross-checked against DuckDB / direct computation."""
 
+import math
+
 import duckdb
 import pytest
 
@@ -102,6 +104,87 @@ def test_drift_detects_shift(spark):
     moved = drift(shifted, base, ["value"])[0]
     assert stable["psi"] < 0.01 and stable["ks"] < 0.01
     assert moved["psi"] > 0.25 and moved["ks"] > 0.2
+    # drift() is drift_df's fold collected unfloored
+    from evalidate_spark.operators.table_checks import drift_df
+
+    for cur, got in ((same, stable), (shifted, moved)):
+        [bp] = drift_df(cur, base, ["value"]).collect()
+        assert (math.floor(got["psi"] * 10_000), math.floor(got["ks"] * 10_000)) == (
+            bp["psi_bp"],
+            bp["ks_bp"],
+        )
+
+
+def _drift_twin_bp(spark, twin, baseline, current):
+    """``(psi_bp, ks_bp)`` of one numeric drift twin on two one-column
+    frames; ``drift()`` floored to bp, ``drift_stream`` over a batch frame
+    whose rows all fall in one window."""
+    from evalidate_spark import streaming
+    from evalidate_spark.operators.table_checks import drift_df, drift_quantile
+
+    base = spark.createDataFrame([(v,) for v in baseline], "v double")
+    cur = spark.createDataFrame(
+        [(v,) for v in current], "v double"
+    ).withColumn("ts", F.lit("2026-01-01 00:00:01").cast("timestamp"))
+    if twin == "drift":
+        [r] = drift(cur, base, ["v"])
+        return tuple(
+            None if r[k] is None else math.floor(r[k] * 10_000) for k in ("psi", "ks")
+        )
+    if twin == "drift_stream":
+        [r] = streaming.drift_stream(cur, base, "v").collect()
+    elif twin == "drift_df":
+        [r] = drift_df(cur, base, ["v"]).collect()
+    else:
+        [r] = drift_quantile(cur, base, ["v"], exact=True).collect()
+    return r["psi_bp"], r["ks_bp"]
+
+
+_TWINS = ("drift_df", "drift_quantile", "drift", "drift_stream")
+
+
+@pytest.mark.parametrize(
+    "twin,baseline,current,want",
+    [
+        # no baseline → NULL, for every numeric twin
+        *[(t, [], [1.0, 2.0], (None, None)) for t in _TWINS],
+        *[(t, [None, None], [1.0, 2.0], (None, None)) for t in _TWINS],
+        # edge cases where the twins already agreed
+        ("drift_df", [2.0, 2.0], [1.0, 2.0, 3.0], (0, 0)),
+        ("drift_quantile", [2.0, 2.0], [1.0, 2.0, 3.0], (43741, 3333)),
+        ("drift_df", [1.0, 2.0, 3.0], [1.0, float("nan")], (92103, 6666)),
+        ("drift_df", [1.0, 2.0, 3.0], [], (127168, 10000)),
+        ("drift_quantile", [1.0, 2.0, 3.0], [], (127168, 10000)),
+    ],
+    ids=[f"{t}-{b}" for b in ("empty", "all_null") for t in _TWINS]
+    + ["df-constant", "quantile-constant", "df-nan", "df-empty_current", "quantile-empty_current"],
+)
+def test_numeric_drift_twins_baseline_contract(spark, twin, baseline, current, want):
+    assert _drift_twin_bp(spark, twin, baseline, current) == want
+
+
+def test_waves_boundaries(spark):
+    """The ingest-wave slicer every wave monitor shares: negative ids go
+    to wave 0, the max id to wave n−1, an all-negative input to wave 0,
+    n=1 puts everything in wave 0, and the bound can come from another
+    frame."""
+    from evalidate_spark.operators.table_checks import _waves
+
+    def waves(ids, n, bound_ids=None):
+        df = spark.createDataFrame([(i,) for i in ids], "__id long")
+        of = None if bound_ids is None else spark.createDataFrame(
+            [(i,) for i in bound_ids], "__id long"
+        )
+        rows = _waves(df, n, bound_of=of).collect()
+        assert set(rows[0].asDict()) == {"__id", "__w"}
+        return {r["__id"]: r["__w"] for r in rows}
+
+    assert waves([-5, 0, 4, 5, 9], 5) == {-5: 0, 0: 0, 4: 2, 5: 2, 9: 4}
+    assert waves([-3, -1], 4) == {-3: 0, -1: 0}
+    assert waves([-2, 0, 7, 100], 1) == {-2: 0, 0: 0, 7: 0, 100: 0}
+    # the bound is max over bound_of: 5 of [0, 10) is wave 2, of [0, 6) wave 3
+    assert waves([5], 4, bound_ids=[5, 9]) == {5: 2}
+    assert waves([5], 4) == {5: 3}
 
 
 def test_generated_documents_shape(spark):
