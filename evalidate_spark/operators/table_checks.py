@@ -452,16 +452,23 @@ def referential_violations_bloom(
     return definitely_absent.unionByName(residual)
 
 
+def _binned(c: Column) -> Column:
+    """The values a numeric drift input bins: not NULL and not NaN.  A NaN
+    has no place on a number line, so every drift twin drops it where it
+    drops NULL — from the edges, the cuts and both histograms."""
+    return c.isNotNull() & ~F.isnan(c)
+
+
 def _equi_width(baseline: DataFrame, c: Column, bins: int):
     """The equi-width binning of *c* over the baseline's bounds:
     ``(edges, bucket)`` — a one-row ``(__lo, __hi)`` aggregate of the
-    baseline's non-NULL values, and the bucket Column over those
+    baseline's :func:`_binned` values, and the bucket Column over those
     columns (``floor((c − lo) / width)`` clamped to ``[0, bins − 1]``).
     A constant baseline (``hi == lo``) puts everything in bucket 0
     explicitly instead of via NULL division.  Shared by
     :func:`histogram_df`, :func:`drift_df`, :func:`drift` and
     ``streaming.drift_stream``."""
-    edges = baseline.filter(c.isNotNull()).agg(
+    edges = baseline.filter(_binned(c)).agg(
         F.min(c).alias("__lo"), F.max(c).alias("__hi")
     )
     width = (F.col("__hi") - F.col("__lo")) / bins
@@ -499,15 +506,16 @@ def _drift_fold(
     Plan: one histogram groupBy per dataset (≤ *n_bins* groups,
     map-side combined), both left-joined onto the ``range(n_bins)`` bin
     grid, the :func:`_psi_term` sum and the largest cumulative-share gap
-    (KS) over the grid in bin order, and a 1-row final agg.  An empty or
-    all-NULL baseline has no histogram: ``psi`` and ``ks`` are NULL (no
+    (KS) over the grid in bin order, and a 1-row final agg.  NULL and NaN
+    values are dropped (:func:`_binned`).  An empty or all-NULL/NaN
+    baseline has no histogram: ``psi`` and ``ks`` are NULL (no
     baseline → NULL, the contract of :func:`profile_anomalies`).  Shared
     by :func:`drift_df`, :func:`drift` and :func:`drift_quantile`."""
     c = F.col("`%s`" % col).cast("double")
 
     def hist(df: DataFrame, name: str) -> DataFrame:
         counts = (
-            df.filter(c.isNotNull())
+            df.filter(_binned(c))
             .crossJoin(F.broadcast(edges))
             .groupBy(bucket.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("__c"))
@@ -575,7 +583,7 @@ def histogram_df(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
     c = F.col("`%s`" % col).cast("double")
     edges, bucket = _equi_width(df, c, bins)
     return (
-        df.filter(c.isNotNull())
+        df.filter(_binned(c))
         .crossJoin(F.broadcast(edges))
         .groupBy(bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -591,8 +599,8 @@ def drift_df(
     """PSI + KS drift per numeric column, fully distributed — returns
     ``(column, psi_bp, ks_bp)`` in integer basis points
     (``floor(stat * 10_000)``) so results are exactly comparable across
-    engines despite float formatting.  NULL ``psi_bp``/``ks_bp`` when the
-    baseline has no non-NULL value.
+    engines despite float formatting.  NULL and NaN values fall in no bin;
+    NULL ``psi_bp``/``ks_bp`` when the baseline has no other value.
 
     Plan per column: the :func:`_equi_width` bounds agg on the baseline
     (broadcast) and bucket, then :func:`_drift_fold` — one histogram
@@ -772,7 +780,7 @@ def drift_quantile(
     ``exact=True`` swaps in exact ``percentile`` for oracle/audit parity.
 
     Returns ``(column, psi_bp, ks_bp)`` in integer basis points like
-    :func:`drift_df`, NULL when the baseline has no non-NULL value.
+    :func:`drift_df`, NULL when the baseline has no non-NULL, non-NaN value.
     Plan per column: one tiny cuts agg on the baseline (broadcast, q-1
     doubles) and the bucket (count of cuts below the value, an array-HOF
     — no join per bin), then :func:`_drift_fold`: one groupBy per
@@ -786,7 +794,7 @@ def drift_quantile(
     outs: List[DataFrame] = []
     for col in columns:
         c = F.col("`%s`" % col).cast("double")
-        cuts = baseline.filter(c.isNotNull()).agg(pfn(c, probs).alias("__cuts"))
+        cuts = baseline.filter(_binned(c)).agg(pfn(c, probs).alias("__cuts"))
         # bucket = #cuts strictly below the value (ties stay low) — same
         # op as DuckDB len(list_filter(cuts, x -> v > x))
         bucket = F.size(F.filter(F.col("__cuts"), lambda x: c > x))
@@ -910,7 +918,7 @@ def drift(
     """PSI and KS statistics per numeric column between two datasets:
     ``[{"column", "psi", "ks"}]``, the :func:`drift_df` fold collected
     unfloored (:func:`_equi_width` bins, :func:`_drift_fold`).  ``psi``
-    and ``ks`` are ``None`` when the baseline has no non-NULL value.
+    and ``ks`` are ``None`` when the baseline has no non-NULL, non-NaN value.
     Standard thresholds: PSI < 0.1 stable, 0.1–0.25 moderate, > 0.25 drifted.
     """
     if not columns:

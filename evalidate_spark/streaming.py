@@ -310,13 +310,14 @@ def drift_stream(
 
     Emits ``(window_start, window_end, n, psi_bp, ks_bp)`` when the
     watermark closes each window; ``psi_bp``/``ks_bp`` are NULL when the
-    baseline has no non-NULL value, as in ``drift_df``."""
-    from .operators.table_checks import _equi_width, _psi_term
+    baseline has no non-NULL, non-NaN value, as in ``drift_df`` (NaN
+    events fall in no bin and are not counted in ``n``)."""
+    from .operators.table_checks import _binned, _equi_width, _psi_term
 
     c = F.col("`%s`" % col).cast("double")
     bounds, bucket = _equi_width(baseline, c, bins)
     base_row = (
-        baseline.filter(c.isNotNull())
+        baseline.filter(_binned(c))
         .crossJoin(F.broadcast(bounds))
         .groupBy()
         .agg(
@@ -337,7 +338,7 @@ def drift_stream(
             ],
         )
     )
-    st = stream_df.filter(c.isNotNull()).crossJoin(F.broadcast(base_row))
+    st = stream_df.filter(_binned(c)).crossJoin(F.broadcast(base_row))
     agg = _windowed(st, ts_col, window, watermark).agg(
         F.count(F.lit(1)).alias("n"),
         *[F.sum((bucket == b).cast("long")).alias(f"__c{b}") for b in range(bins)],

@@ -100,17 +100,8 @@ def main(argv=None) -> int:
 
     with open(args.rules) as fh:
         rules = rules_from_json(fh.read())
-
-    spark = SparkSession.builder.appName("evalidate-validation-run").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    os.makedirs(args.out, exist_ok=True)
-    shutil.copyfile(args.rules, os.path.join(args.out, "rules.json"))  # lineage
-
-    profile_cols = [c.strip() for c in args.profile_columns.split(",") if c.strip()]
-    quantile_cols = [c.strip() for c in args.quantile_columns.split(",") if c.strip()]
-    hotkey_cols = [c.strip() for c in args.hotkey_columns.split(",") if c.strip()]
-    uniq_cols = [c.strip() for c in args.uniqueness_columns.split(",") if c.strip()]
+    # malformed JSON inputs are rejected before the JVM starts and before
+    # the output directory (and its lineage copies) exists
     checks = None
     if args.checks:
         with open(args.checks) as fh:
@@ -122,11 +113,8 @@ def main(argv=None) -> int:
                 "--checks file %s must be a non-empty JSON object of "
                 "check_id -> SQL predicate" % args.checks
             )
-        shutil.copyfile(args.checks, os.path.join(args.out, "checks.json"))  # lineage
-    schema_report = None
+    contract = None
     if args.schema_contract:
-        from evalidate_spark.operators.table_checks import schema_conformance
-
         with open(args.schema_contract) as fh:
             contract = json.load(fh)
         if not isinstance(contract, dict) or not contract:
@@ -134,6 +122,23 @@ def main(argv=None) -> int:
                 "--schema-contract file %s must be a non-empty JSON object "
                 "of column -> Spark simpleString type" % args.schema_contract
             )
+
+    spark = SparkSession.builder.appName("evalidate-validation-run").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+
+    os.makedirs(args.out, exist_ok=True)
+    shutil.copyfile(args.rules, os.path.join(args.out, "rules.json"))  # lineage
+
+    profile_cols = [c.strip() for c in args.profile_columns.split(",") if c.strip()]
+    quantile_cols = [c.strip() for c in args.quantile_columns.split(",") if c.strip()]
+    hotkey_cols = [c.strip() for c in args.hotkey_columns.split(",") if c.strip()]
+    uniq_cols = [c.strip() for c in args.uniqueness_columns.split(",") if c.strip()]
+    if checks:
+        shutil.copyfile(args.checks, os.path.join(args.out, "checks.json"))  # lineage
+    schema_report = None
+    if contract:
+        from evalidate_spark.operators.table_checks import schema_conformance
+
         shutil.copyfile(
             args.schema_contract, os.path.join(args.out, "schema_contract.json")
         )  # lineage

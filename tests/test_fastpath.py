@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as _F
 from pyspark.sql import functions as F
 
-from evalidate_spark import Default, Rule, RuleAnd, RuleOr, Allowed, Size, Type, validate
+from evalidate_spark import Default, Rule, RuleAnd, RuleOr, Allowed, Regexp, Size, Type, validate
 from evalidate_spark.fastpath import compile_fail_predicate, verdict_scan
 from evalidate_spark.fixtures import gen_documents
 from evalidate_spark.operators.spans import span_rules
@@ -109,6 +109,24 @@ class TestFastPath:
         schema = m.group(1)
         assert "text" not in schema and "media_ref" not in schema
         assert "kind" in schema and "offset" in schema
+
+    def test_verdict_predicate_in_whole_stage_codegen(self, spark, tmp_path):
+        # span element checks compile to codegen'd collection built-ins, so
+        # ColumnarToRow, the predicate and the partial aggregate share one
+        # codegen stage: no interpreted lambda, the same pruned scan
+        path = str(tmp_path / "docs_codegen")
+        gen_documents(spark, 500, partitions=2).write.parquet(path)
+        res = verdict_scan(spark.read.parquet(path), span_rules())
+        res.collect()  # the final (adaptive) plan carries the codegen stage ids
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert "lambdafunction" not in plan, plan
+        pred = re.search(r"(\*\(\d+\) )?Project \[SPARK_PARTITION_ID\(\)", plan)
+        assert pred and pred.group(1), plan
+        stage = pred.group(1)
+        assert stage + "ColumnarToRow" in plan and stage + "HashAggregate" in plan, plan
+        assert re.findall(r"ReadSchema: (\S+)", plan)[0] == (
+            "struct<doc_id:string,spans:array<struct<kind:string,offset:int>>>"
+        )
 
     def test_annotated_plan_is_shuffle_free(self, spark, tmp_path):
         # the rich validation pass is ONE fused projection: scan → project,
@@ -395,3 +413,109 @@ class TestElementGate:
         below = [ln for ln in lines[gen + 1:] if "Filter" in ln]
         assert below, lines
         assert sum("flatten(transform(" in ln for ln in lines) == 1
+
+
+_INF, _NAN = float("inf"), float("nan")
+_ITEM = "kind string, tag string, n int, x double, gone string, s string"
+
+
+def _it(kind="a", tag="t0", n=1, x=1.0, gone=None, s="ab"):
+    return (kind, tag, n, x, gone, s)
+
+
+# (doc_id, items): one case per row, so a row-by-row compare pins each form
+_VECTOR_ROWS = [
+    ("null", None),
+    ("empty", []),
+    ("null_elems", [None, None]),
+    ("null_fields", [_it(None, None, None, None, None, None)]),
+    ("ok", [_it(), _it(kind="b", tag="t10", x=10.0, s="cd")]),
+    ("bad_kind", [_it(), _it(kind="z")]),
+    ("bad_tag", [_it(tag="t11")]),
+    ("bad_n", [_it(n=2)]),
+    ("nan", [_it(x=_NAN)]),
+    ("inf", [_it(), _it(x=_INF)]),
+    ("ninf", [_it(x=-_INF)]),
+    ("neg_zero", [_it(x=-0.0)]),
+    ("negative", [_it(x=-1.0)]),
+    ("gone", [_it(), _it(gone="g")]),
+    ("s_regexp", [_it(s="Ab")]),
+    ("s_allowed", [_it(s="zz")]),
+    ("s_size", [_it(s="abcd")]),
+]
+
+
+def _items_rule(*childs):
+    return [Rule(key="items", presence="optional", childs=list(childs))]
+
+
+# child rule -> (docs that fail it, exists calls in its predicate)
+_VECTOR_CASES = {
+    "required_allowed2": (
+        Rule(key="kind", presence="required", validators=[Type("binary"), Allowed(["a", "b"])]),
+        {"null_elems", "null_fields", "bad_kind"}, 0,
+    ),
+    "allowed11_fallback": (
+        Rule(key="tag", presence="optional", validators=[Allowed(["t%d" % i for i in range(11)])]),
+        {"bad_tag"}, 1,
+    ),
+    "mixed_allowed_fallback": (
+        Rule(key="n", presence="optional", validators=[Allowed([1, 2.5])]), {"bad_n"}, 1,
+    ),
+    "float_size": (
+        Rule(key="x", presence="optional", validators=[Size(0, 10)]), {"nan", "inf", "ninf", "negative"}, 0,
+    ),
+    "deprecated": (Rule(key="gone", presence="deprecated"), {"gone"}, 0),
+}
+
+
+def _fail_sets(df, rules):
+    """(rich, fast) failing doc ids: ``size(violations) > 0`` of the
+    ungated rich compile vs the fast path's predicate, on the same rows."""
+    rows = validate(df, rules, gate_fast=False).annotated.select(
+        "doc_id",
+        (F.size("violations") > 0).alias("rich"),
+        F.coalesce(compile_fail_predicate(rules, df.schema), F.lit(False)).alias("fast"),
+    ).collect()
+    return ({r["doc_id"] for r in rows if r["rich"]}, {r["doc_id"] for r in rows if r["fast"]})
+
+
+class TestVectorForms:
+    """Element checks over a subfield array compile to collection built-ins
+    (or one merged ``exists`` per subfield) with the rich path's verdict."""
+
+    @pytest.fixture(scope="class")
+    def items(self, spark):
+        return spark.createDataFrame(
+            _VECTOR_ROWS, "doc_id string, items array<struct<%s>>" % _ITEM
+        )
+
+    @pytest.mark.parametrize("case", sorted(_VECTOR_CASES))
+    def test_form_matches_rich_path(self, items, case):
+        child, want, n_exists = _VECTOR_CASES[case]
+        rules = _items_rule(child)
+        rich, fast = _fail_sets(items, rules)
+        assert rich == fast == want
+        pred = str(compile_fail_predicate(rules, items.schema))
+        assert pred.count("exists(") == n_exists, pred
+
+    def test_regexp_merges_with_vector_checks(self, items):
+        # required + Allowed on `s` stay built-ins; the Regexp and the
+        # string Size of a second rule on `s` share ONE exists
+        rules = _items_rule(
+            Rule(key="s", presence="required", validators=[Allowed(["ab", "cd"]), Regexp("^[a-z]+$")]),
+            Rule(key="s", presence="optional", validators=[Size(1, 3)]),
+        )
+        rich, fast = _fail_sets(items, rules)
+        assert rich == fast == {"null_elems", "null_fields", "s_regexp", "s_allowed", "s_size"}
+        pred = str(compile_fail_predicate(rules, items.schema))
+        assert pred.count("exists(") == 1 and "array_except" in pred, pred
+
+    def test_all_forms_together(self, items):
+        rules = _items_rule(
+            *(child for child, _, _ in _VECTOR_CASES.values()),
+            Rule(key="s", presence="optional", validators=[Regexp("^[a-z]+$")]),
+        )
+        rich, fast = _fail_sets(items, rules)
+        want = set().union(*(w for _, w, _ in _VECTOR_CASES.values())) | {"s_regexp"}
+        assert rich == fast == want

@@ -139,6 +139,8 @@ class TestSubmitJob:
             capture_output=True, text=True, cwd="/root/repo", timeout=600,
         )
         assert p.returncode != 0 and "non-empty JSON object" in p.stderr
+        # rejected before the session starts: no output dir, no lineage
+        assert not (tmp_path / "out2").exists()
 
     def test_spark_submit_pyfiles(self, spark, tmp_path):
         """The north rule's literal submission mode: ``spark-submit

@@ -136,11 +136,13 @@ def _drift_twin_bp(spark, twin, baseline, current):
     elif twin == "drift_df":
         [r] = drift_df(cur, base, ["v"]).collect()
     else:
-        [r] = drift_quantile(cur, base, ["v"], exact=True).collect()
+        exact = twin == "drift_quantile"
+        [r] = drift_quantile(cur, base, ["v"], exact=exact).collect()
     return r["psi_bp"], r["ks_bp"]
 
 
-_TWINS = ("drift_df", "drift_quantile", "drift", "drift_stream")
+_TWINS = ("drift_df", "drift_quantile", "drift", "drift_stream", "drift_quantile_sketch")
+_NAN = float("nan")
 
 
 @pytest.mark.parametrize(
@@ -155,12 +157,31 @@ _TWINS = ("drift_df", "drift_quantile", "drift", "drift_stream")
         ("drift_df", [1.0, 2.0, 3.0], [1.0, float("nan")], (92103, 6666)),
         ("drift_df", [1.0, 2.0, 3.0], [], (127168, 10000)),
         ("drift_quantile", [1.0, 2.0, 3.0], [], (127168, 10000)),
+        # NaN is dropped like NULL: a NaN-only baseline is no baseline, and
+        # a NaN in the current frame falls in no bin of any twin
+        *[(t, [_NAN, None, _NAN], [1.0, 2.0], (None, None)) for t in _TWINS],
+        *[(t, [1.0, 2.0, 3.0], [1.0, _NAN], (92103, 6666)) for t in _TWINS[1:]],
+        ("drift_df", [1.0, 2.0, 3.0, 4.0, _NAN], [3.0] * 4, (103615, 5000)),
+        ("drift", [1.0, 2.0, 3.0, 4.0, _NAN], [3.0] * 4, (103615, 5000)),
     ],
     ids=[f"{t}-{b}" for b in ("empty", "all_null") for t in _TWINS]
-    + ["df-constant", "quantile-constant", "df-nan", "df-empty_current", "quantile-empty_current"],
+    + ["df-constant", "quantile-constant", "df-nan", "df-empty_current", "quantile-empty_current"]
+    + [f"{t}-all_nan" for t in _TWINS]
+    + [f"{t}-nan_current" for t in _TWINS[1:]]
+    + ["df-nan_baseline", "drift-nan_baseline"],
 )
 def test_numeric_drift_twins_baseline_contract(spark, twin, baseline, current, want):
     assert _drift_twin_bp(spark, twin, baseline, current) == want
+
+
+@pytest.mark.parametrize("twin", _TWINS)
+def test_numeric_drift_twins_drop_nan_baseline(spark, twin):
+    """One NaN in the baseline changes neither its edges, nor its cuts, nor
+    its histogram."""
+    base, cur = [1.0, 2.0, 3.0, 4.0], [3.0] * 4
+    want = _drift_twin_bp(spark, twin, base, cur)
+    assert want != (None, None)
+    assert _drift_twin_bp(spark, twin, base + [_NAN], cur) == want
 
 
 def test_waves_boundaries(spark):
