@@ -14,7 +14,7 @@ returns a :class:`ValidationResult` exposing lazy DataFrames:
 
 On the default gated path ``verdicts``, ``clean`` and ``failed`` read
 pass/fail from the message-free fail predicate (never from the violations
-array), ``violations`` drops passing rows before its explode, and violation
+array), ``violations`` explodes the gated array, and violation
 structs are built only for failing rows and, inside them, failing array
 elements.
 
@@ -87,15 +87,16 @@ class ValidationResult:
 
     @property
     def violations(self) -> DataFrame:
-        """Exploded typed violation rows (sparse; explode only over failing
-        rows' arrays — with a fail predicate, passing rows are filtered out
-        before the explode)."""
-        ann = self.annotated if self.fail is None else self.failed
+        """Exploded typed violation rows (sparse; with a fail predicate,
+        passing rows explode an empty array and build no violations)."""
         # explode_outer + a filter on the (never NULL) violation struct rather
         # than explode: for a plain explode Catalyst infers size(violations)
         # > 0 and pushes it below the projection, which then builds every
-        # failing row's violation array twice
-        v = ann.select(
+        # failing row's violation array twice.  No filter on the fail
+        # predicate either: a whole-stage-codegen Filter evaluates it again,
+        # without the projection's common-subexpression elimination, so each
+        # subfield array would be extracted once per reference
+        v = self.annotated.select(
             *self.id_cols, F.explode_outer(F.col(VIOLATIONS_COL)).alias("v")
         ).filter(F.col("v").isNotNull())
         return v.select(
@@ -159,10 +160,11 @@ def validate(
     evaluate only the boolean and skip message/struct building entirely,
     and inside a failing row each array element builds its violation
     structs only if its own fail condition holds.  ``verdicts``, ``clean``,
-    ``failed``, ``enforce`` and the pre-explode filter of ``violations``
-    read the same predicate, so none of them builds a violation array to
-    decide pass/fail.  The two compilations are equivalence-tested, row by
-    row and element by element, so results are identical.  Gating is
+    ``failed`` and ``enforce`` read the same predicate, so none of them
+    builds a violation array to decide pass/fail; ``violations`` explodes
+    the gated array, so each row evaluates the predicate once.  The two
+    compilations are equivalence-tested, row by row and element by
+    element, so results are identical.  Gating is
     skipped automatically for specs with custom pandas-UDF validators (the
     UDF must not run twice); ``gate_fast=False`` is the fully ungated
     reference."""

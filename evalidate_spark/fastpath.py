@@ -31,10 +31,11 @@ interpreter, so it is kept for what has no built-in form:
 - ``Size`` on a numeric subfield: ``array_min`` / ``array_max`` against the
   bounds;
 - a ``Type`` that holds for the subfield's type: no check at all;
-- everything else (``Regexp``, string ``Size``, ``OrV``, ``Native``, a
-  runtime ``Type``, converter failures, longer or non-string ``Allowed``
-  lists, map/array/struct subfields): ONE ``exists`` per subfield, whose
-  body ORs all of them.
+- everything else stays in an ``exists`` over the subfield array: one per
+  rule for its other validators (``Regexp``, string ``Size``, ``OrV``,
+  ``Native``, a runtime ``Type``, longer or non-string ``Allowed`` lists),
+  one for its converter's failures, and one per presence check on a
+  map/array/struct subfield.
 
 Semantics: ``fail_predicate == (size(violations) > 0)`` of the rich path
 — asserted in tests over the fixture with injected violations.  The same
@@ -49,7 +50,7 @@ only the pruning narrows.
 
 from __future__ import annotations
 
-from typing import Any, Callable, Dict, Iterable, List, Optional, Sequence, Tuple
+from typing import Any, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
@@ -100,20 +101,13 @@ def _string_keyed_map(dt: T.DataType) -> bool:
     return isinstance(dt, T.MapType) and isinstance(dt.keyType, T.StringType)
 
 
-def _any(conds: Iterable[Column]) -> Column:
-    out = F.lit(False)
-    for c in conds:
-        out = out | c
-    return out
-
-
 def _clauses_fail(validators: Sequence[Any], col: Column, dt: T.DataType, scope: Scope) -> Column:
     """OR of all validator fail conditions (messages built but never
     referenced → they never reach the plan)."""
-    return _any(
-        F.coalesce(cl.cond, F.lit(False))
-        for cl in _compile_validators(list(validators), col, dt, scope)
-    )
+    fail = F.lit(False)
+    for cl in _compile_validators(list(validators), col, dt, scope):
+        fail = fail | F.coalesce(cl.cond, F.lit(False))
+    return fail
 
 
 def _custom_conv(conv: Any) -> bool:
@@ -288,13 +282,17 @@ def _one_key_fail(
     return fail
 
 
-# ``array_except`` rebuilds a hash set of its right-hand array on every row.
-# Past 10 values Spark already plans ``IN`` as a prebuilt ``InSet``, so longer
-# ``Allowed`` lists stay inside the subfield's ``exists``.  Measured on the
-# 400k-doc verdict_scan corpus (JVM CPU-s, median of 4 warm runs, same 3,189
-# failing docs), ``exists`` vs ``array_except``: 2 values 2.02 vs 1.46,
-# 20 values 1.66 vs 1.36, 200 values 1.71 vs 6.35.
-_SET_FORM_MAX_VALUES = 10
+# ``array_except`` rebuilds a hash set of its right-hand array on every row,
+# so a long ``Allowed`` list costs more as a built-in than inside an
+# ``exists`` (where ``IN`` becomes a prebuilt ``InSet``).  Measured on the
+# 400k-doc verdict_scan corpus (seed 2, local[4], JVM CPU-s of pruned scan
+# -> predicate -> partition aggregate, median of 6 warm runs, the same 3,189
+# failing docs), ``exists`` vs ``array_except``: 2 values 3.84 vs 2.25,
+# 32 values 3.81 vs 2.63, 40 values 3.72 vs 2.85, 44 values 3.64 vs 2.85,
+# 48 values 3.66 vs 4.02 (median of 4: 100 values 3.84 vs 7.78, 200 values
+# 3.94 vs 13.89).  The crossover lies between 44 and 48 values; the cut
+# keeps a margin below it.
+_SET_FORM_MAX_VALUES = 40
 
 # element types the array set built-ins hash and compare
 _SET_TYPES = (
@@ -320,7 +318,7 @@ def _has_other(sub: Column, vals: Sequence[Any], fdt: T.DataType) -> Column:
 def _vector_fail(v: Any, sub: Column, fdt: T.DataType, fscope: Scope) -> Optional[Column]:
     """"Some non-NULL element of the subfield array *sub* fails validator
     *v*" as codegen'd collection built-ins, or None when *v* has no such
-    form (the caller folds it into the subfield's one ``exists``)."""
+    form (the caller checks it in an ``exists``)."""
     if isinstance(v, Type) and _type_matches(v.of, sub, fdt, fscope) is None:
         return F.lit(False)  # statically true: no clause
     if isinstance(v, Size) and _is_number(fdt):
@@ -354,16 +352,14 @@ def _element_rules_fail(
     further nesting gets compiled against the SUBFIELD ARRAY
     (``col("parent.field")``), so the parquet scan reads only the referenced
     subfields.  Its presence checks and :func:`_vector_fail` validators
-    become collection built-ins that stay inside whole-stage codegen; every
-    other check on the same subfield goes into ONE ``exists`` per subfield.
+    become collection built-ins that stay inside whole-stage codegen; its
+    other validators share one ``exists``, its converter gets another.
     Anything else falls back to an ``exists`` over the element struct
     (correct, just unpruned)."""
     is_map = _string_keyed_map(edt)
     names = {} if is_map else {f.name: f.dataType for f in edt.fields}
     fail = F.lit(False)
     fallback: List[Any] = []
-    # subfield -> element checks (e -> fail) merged into one exists
-    checks: Dict[str, List[Callable[[Column], Column]]] = {}
     for c in childs:
         # the F.col(dotted-path) subfield-array form is only valid when the
         # array itself is root-addressable; inside an element lambda (and
@@ -388,17 +384,12 @@ def _element_rules_fail(
         fdt = names[k]
         fscope = _field_scope({k: fdt}, lambda kk, s=sub: s)
         atomic = isinstance(fdt, _SET_TYPES)
-        elem = checks.setdefault(k, [])
         if c.presence == REQUIRED:
-            if atomic:
-                fail = fail | _has_null(sub, fdt)
-            else:
-                elem.append(lambda e: e.isNull())
+            fail = fail | (_has_null(sub, fdt) if atomic else F.exists(sub, lambda e: e.isNull()))
         elif c.presence == DEPRECATED:
-            if atomic:
-                fail = fail | _has_other(sub, (), fdt)
-            else:
-                elem.append(lambda e: e.isNotNull())
+            fail = fail | (
+                _has_other(sub, (), fdt) if atomic else F.exists(sub, lambda e: e.isNotNull())
+            )
             continue
         rest = []
         for v in c.validators or ():
@@ -408,25 +399,17 @@ def _element_rules_fail(
             else:
                 fail = fail | vf
         if rest:
-            elem.append(
-                lambda e, vs=rest, d=fdt, s=fscope: e.isNotNull() & _clauses_fail(vs, e, d, s)
+            fail = fail | F.exists(
+                sub, lambda e: e.isNotNull() & _clauses_fail(rest, e, fdt, fscope)
             )
         if c.converter not in (None, "no_return"):
-            elem.append(
-                lambda e, cv=c.converter, d=fdt, s=fscope:
-                    e.isNotNull() & _convert_fail(cv, e, d, s)
+            conv = c.converter
+            fail = fail | F.exists(
+                sub, lambda e: e.isNotNull() & _convert_fail(conv, e, fdt, fscope)
             )
-    for k, elem in checks.items():
-        if elem:
-            fail = fail | _exists_any(F.col(".".join(path + (k,))), elem)
     if fallback:
         fail = fail | F.exists(arr, lambda e: element_fail(fallback, e, edt, opts, path))
     return fail
-
-
-def _exists_any(arr: Column, checks: Sequence[Callable[[Column], Column]]) -> Column:
-    """ONE ``exists`` over *arr* whose body ORs every element check."""
-    return F.exists(arr, lambda e: _any(f(e) for f in checks))
 
 
 def element_fail(

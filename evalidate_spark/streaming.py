@@ -63,8 +63,8 @@ def violations_stream(
     stream_df: DataFrame, rules: Any, id_cols: Sequence[str] = ("doc_id",), **opts: Any
 ) -> DataFrame:
     """Typed violation rows as an append-mode stream — the batch engine's
-    ``violations`` frame, so passing rows are dropped before the explode
-    and each failing row's violation array is built once."""
+    ``violations`` frame, so passing rows build no violations and each
+    failing row's violation array is built once."""
     return validate(stream_df, rules, id_cols=id_cols, **opts).violations
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import functions as _F
 from pyspark.sql import functions as F
 
 from evalidate_spark import Default, Rule, RuleAnd, RuleOr, Allowed, Regexp, Size, Type, validate
-from evalidate_spark.fastpath import compile_fail_predicate, verdict_scan
+from evalidate_spark.fastpath import _SET_FORM_MAX_VALUES, compile_fail_predicate, verdict_scan
 from evalidate_spark.fixtures import gen_documents
 from evalidate_spark.operators.spans import span_rules
 
@@ -393,8 +393,9 @@ class TestElementGate:
 
     def test_plan_shapes(self, spark, tmp_path):
         # verdicts read the pruned predicate and build no violation arrays;
-        # violations filter on the predicate before the explode, and build
-        # each failing row's violation array once
+        # violations explode the gated array: the predicate is evaluated
+        # once, inside the projection that builds each failing row's
+        # violation array once
         path = str(tmp_path / "docs_shapes")
         gen_documents(spark, 500, partitions=2).write.parquet(path)
         res = validate(spark.read.parquet(path), span_rules(), id_cols=["doc_id"])
@@ -409,10 +410,9 @@ class TestElementGate:
         assert "flatten(transform(" not in verdicts
 
         lines = plan(res.violations).splitlines()
-        gen = next(i for i, ln in enumerate(lines) if "Generate" in ln)
-        below = [ln for ln in lines[gen + 1:] if "Filter" in ln]
-        assert below, lines
-        assert sum("flatten(transform(" in ln for ln in lines) == 1
+        build = [ln for ln in lines if "flatten(transform(" in ln]
+        assert len(build) == 1, lines
+        assert [ln for ln in lines if "array_intersect(" in ln] == build, lines
 
 
 _INF, _NAN = float("inf"), float("nan")
@@ -429,9 +429,9 @@ _VECTOR_ROWS = [
     ("empty", []),
     ("null_elems", [None, None]),
     ("null_fields", [_it(None, None, None, None, None, None)]),
-    ("ok", [_it(), _it(kind="b", tag="t10", x=10.0, s="cd")]),
+    ("ok", [_it(), _it(kind="b", tag="t1", x=10.0, s="cd")]),
     ("bad_kind", [_it(), _it(kind="z")]),
-    ("bad_tag", [_it(tag="t11")]),
+    ("bad_tag", [_it(tag="u")]),
     ("bad_n", [_it(n=2)]),
     ("nan", [_it(x=_NAN)]),
     ("inf", [_it(), _it(x=_INF)]),
@@ -445,6 +445,10 @@ _VECTOR_ROWS = [
 ]
 
 
+def _tags(n):
+    return Allowed(["t%d" % i for i in range(n)])
+
+
 def _items_rule(*childs):
     return [Rule(key="items", presence="optional", childs=list(childs))]
 
@@ -455,8 +459,12 @@ _VECTOR_CASES = {
         Rule(key="kind", presence="required", validators=[Type("binary"), Allowed(["a", "b"])]),
         {"null_elems", "null_fields", "bad_kind"}, 0,
     ),
-    "allowed11_fallback": (
-        Rule(key="tag", presence="optional", validators=[Allowed(["t%d" % i for i in range(11)])]),
+    "allowed_at_cut": (
+        Rule(key="tag", presence="optional", validators=[_tags(_SET_FORM_MAX_VALUES)]),
+        {"bad_tag"}, 0,
+    ),
+    "allowed_past_cut_fallback": (
+        Rule(key="tag", presence="optional", validators=[_tags(_SET_FORM_MAX_VALUES + 1)]),
         {"bad_tag"}, 1,
     ),
     "mixed_allowed_fallback": (
@@ -482,7 +490,8 @@ def _fail_sets(df, rules):
 
 class TestVectorForms:
     """Element checks over a subfield array compile to collection built-ins
-    (or one merged ``exists`` per subfield) with the rich path's verdict."""
+    (or an ``exists`` where there is no built-in form) with the rich path's
+    verdict."""
 
     @pytest.fixture(scope="class")
     def items(self, spark):
@@ -499,9 +508,9 @@ class TestVectorForms:
         pred = str(compile_fail_predicate(rules, items.schema))
         assert pred.count("exists(") == n_exists, pred
 
-    def test_regexp_merges_with_vector_checks(self, items):
+    def test_regexp_next_to_vector_checks(self, items):
         # required + Allowed on `s` stay built-ins; the Regexp and the
-        # string Size of a second rule on `s` share ONE exists
+        # string Size of a second rule on `s` get one exists per rule
         rules = _items_rule(
             Rule(key="s", presence="required", validators=[Allowed(["ab", "cd"]), Regexp("^[a-z]+$")]),
             Rule(key="s", presence="optional", validators=[Size(1, 3)]),
@@ -509,7 +518,7 @@ class TestVectorForms:
         rich, fast = _fail_sets(items, rules)
         assert rich == fast == {"null_elems", "null_fields", "s_regexp", "s_allowed", "s_size"}
         pred = str(compile_fail_predicate(rules, items.schema))
-        assert pred.count("exists(") == 1 and "array_except" in pred, pred
+        assert pred.count("exists(") == 2 and "array_except" in pred, pred
 
     def test_all_forms_together(self, items):
         rules = _items_rule(
