@@ -14,12 +14,14 @@ A run processes the input in **units** — groups of input parquet files
 1. validate the unit's rows (one fused projection);
 2. append violation rows to ``<out>/violations/`` (parquet, partitioned
    by ``unit_id`` so a re-run of a unit could be surgically replaced);
-3. append per-partition verdicts to ``<out>/verdicts/``;
+3. append per-partition verdicts to ``<out>/verdicts/`` and the rows of
+   every enabled state family (``_FAMILIES``) to ``<out>/<name>_states/``;
 4. atomically record the unit in the manifest
    (``<out>/manifest/<unit_id>.json`` — one file per unit, written via
    temp-file + rename, so a crash mid-run never leaves a half-claimed
-   unit) together with lineage (input files, row/violation counts,
-   wall-clock, engine version).
+   unit) together with lineage (input files, wall-clock, engine version,
+   and the row/failed-row/partition counts, observed on the verdicts
+   write itself — no job reads the verdicts back).
 
 Resume = list units, skip those already in the manifest.  Because every
 side effect of a unit lands before its manifest entry, re-running a
@@ -37,10 +39,10 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional, Sequence
+from dataclasses import dataclass
+from typing import Any, Callable, Dict, List, NamedTuple, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import __version__
 from .engine import validate
@@ -48,12 +50,68 @@ from .engine import validate
 MANIFEST_DIR = "manifest"
 VIOLATIONS_DIR = "violations"
 VERDICTS_DIR = "verdicts"
-PROFILE_STATES_DIR = "profile_states"
-QUANTILE_STATES_DIR = "quantile_states"
-CHECK_STATES_DIR = "check_states"
-HOTKEY_STATES_DIR = "hotkey_states"
-UNIQUENESS_STATES_DIR = "uniqueness_states"
-CENTROID_STATES_DIR = "centroid_states"
+
+
+class _Family(NamedTuple):
+    """One per-unit state family of a :class:`CheckpointedRun`."""
+
+    #: names the state table ``<out_dir>/<name>_states``
+    name: str
+    #: the ``CheckpointedRun`` field that switches the family on
+    option: str
+    #: key of the run-level fold in the job summary
+    #: (``scripts/run_validation_job.py``), and the fold that fills it
+    report: str
+    fold: Callable[["CheckpointedRun"], Any]
+    #: ``(run, unit_df, unit_id) -> state rows`` with an ``increment`` column
+    state: Callable[["CheckpointedRun", DataFrame, str], DataFrame]
+
+    @property
+    def subdir(self) -> str:
+        return "%s_states" % self.name
+
+
+def _tc():
+    # imported on first use: importing this module stays light
+    from .operators import table_checks
+
+    return table_checks
+
+
+def _rows(df: DataFrame) -> List[Dict[str, Any]]:
+    return [r.asDict() for r in df.collect()]
+
+
+def _centroid_state(run: "CheckpointedRun", df: DataFrame, unit_id: str) -> DataFrame:
+    from .functions.similarity import embedding_centroid_state
+
+    return embedding_centroid_state(
+        df, vec_col=run.centroid_vec_col, id_col=list(run.id_cols)[0], dim=run.centroid_dim
+    ).withColumn("increment", F.lit(unit_id))
+
+
+#: every per-unit state family, in write order: ``run`` writes the enabled
+#: ones, each read-back gets its states through ``CheckpointedRun._states``
+_FAMILIES: Dict[str, _Family] = {
+    f.name: f
+    for f in (
+        _Family("profile", "profile_columns", "profile", lambda run: _rows(run.profile()),
+                lambda run, df, uid: _tc().profile_state(df, list(run.profile_columns), uid)),
+        _Family("quantile", "quantile_columns", "quantiles", lambda run: _rows(run.quantiles()),
+                lambda run, df, uid: _tc().quantile_state(df, list(run.quantile_columns), uid)),
+        _Family("check", "checks", "checks", lambda run: _rows(run.check_results()),
+                lambda run, df, uid: _tc().check_expressions(df, run.checks).withColumn(
+                    "increment", F.lit(uid))),
+        _Family("hotkey", "hotkey_columns", "hot_keys", lambda run: _rows(run.hot_keys()),
+                lambda run, df, uid: _tc().hotkey_state(df, list(run.hotkey_columns), uid)),
+        _Family("uniqueness", "uniqueness_columns", "uniqueness",
+                lambda run: _rows(run.uniqueness_summary()),
+                lambda run, df, uid: _tc().uniqueness_state(
+                    df, list(run.uniqueness_columns), uid)),
+        _Family("centroid", "centroid_vec_col", "centroid_drift",
+                lambda run: run.centroid_drift(), _centroid_state),
+    )
+}
 
 
 def list_units(input_path: str, files_per_unit: int = 8) -> List[Dict[str, Any]]:
@@ -188,98 +246,33 @@ class CheckpointedRun:
             viol.write.mode("overwrite").partitionBy("unit_id").parquet(
                 os.path.join(self.out_dir, VIOLATIONS_DIR)
             )
-            verd = res.verdicts.withColumn("unit_id", F.lit(unit["unit_id"]))
-            verd.write.mode("overwrite").partitionBy("unit_id").parquet(
+            # the manifest counts are observed on the verdicts write itself
+            # (an empty unit observes NULL sums and 0 partitions), so no
+            # second job reads back what was just written
+            stats = Observation()
+            res.verdicts.withColumn("unit_id", F.lit(unit["unit_id"])).observe(
+                stats,
+                F.sum("rows").alias("rows"),
+                F.sum("failed").alias("failed_rows"),
+                F.count(F.lit(1)).alias("partitions"),
+            ).write.mode("overwrite").partitionBy("unit_id").parquet(
                 os.path.join(self.out_dir, VERDICTS_DIR)
             )
 
-            if self.profile_columns:
-                from .operators.table_checks import profile_state
-
+            for fam in self._families():
                 # partitioned by the increment (= unit id) under dynamic
                 # overwrite: a unit re-run after a crash-before-manifest
                 # replaces its state row instead of double-counting it
-                profile_state(
-                    df, list(self.profile_columns), unit["unit_id"]
-                ).write.mode("overwrite").partitionBy("increment").parquet(
-                    os.path.join(self.out_dir, PROFILE_STATES_DIR)
+                fam.state(self, df, unit["unit_id"]).write.mode(
+                    "overwrite"
+                ).partitionBy("increment").parquet(
+                    os.path.join(self.out_dir, fam.subdir)
                 )
 
-            if self.quantile_columns:
-                from .operators.table_checks import quantile_state
-
-                quantile_state(
-                    df, list(self.quantile_columns), unit["unit_id"]
-                ).write.mode("overwrite").partitionBy("increment").parquet(
-                    os.path.join(self.out_dir, QUANTILE_STATES_DIR)
-                )
-
-            if self.checks:
-                from .operators.table_checks import check_expressions
-
-                check_expressions(df, self.checks).withColumn(
-                    "increment", F.lit(unit["unit_id"])
-                ).write.mode("overwrite").partitionBy("increment").parquet(
-                    os.path.join(self.out_dir, CHECK_STATES_DIR)
-                )
-
-            if self.hotkey_columns:
-                from .operators.table_checks import hotkey_state
-
-                hotkey_state(
-                    df, list(self.hotkey_columns), unit["unit_id"]
-                ).write.mode("overwrite").partitionBy("increment").parquet(
-                    os.path.join(self.out_dir, HOTKEY_STATES_DIR)
-                )
-
-            if self.uniqueness_columns:
-                from .operators.table_checks import uniqueness_state
-
-                uniqueness_state(
-                    df, list(self.uniqueness_columns), unit["unit_id"]
-                ).write.mode("overwrite").partitionBy("increment").parquet(
-                    os.path.join(self.out_dir, UNIQUENESS_STATES_DIR)
-                )
-
-            if self.centroid_vec_col:
-                from .functions.similarity import embedding_centroid_state
-
-                embedding_centroid_state(
-                    df,
-                    vec_col=self.centroid_vec_col,
-                    id_col=list(self.id_cols)[0],
-                    dim=self.centroid_dim,
-                ).withColumn(
-                    "increment", F.lit(unit["unit_id"])
-                ).write.mode("overwrite").partitionBy("increment").parquet(
-                    os.path.join(self.out_dir, CENTROID_STATES_DIR)
-                )
-
-            # stats from the verdicts JUST WRITTEN (a tiny parquet read of
-            # one row per input partition) — not by re-running the whole
-            # validation as a second action, which would double per-unit
-            # cost and could diverge from the written data if inputs change
-            # between the two actions.  Schema passed EXPLICITLY: an
-            # empty unit (a zero-row input file is legal parquet) writes
-            # no footer, and a schema-less read of a footer-less dir
-            # fails with UNABLE_TO_INFER_SCHEMA instead of counting 0
-            stats = (
-                self.spark.read.schema(verd.schema)
-                .parquet(os.path.join(self.out_dir, VERDICTS_DIR))
-                .filter(F.col("unit_id") == unit["unit_id"])
-                .agg(
-                    F.sum("rows").alias("rows"),
-                    F.sum("failed").alias("failed_rows"),
-                    F.count(F.lit(1)).alias("partitions"),
-                )
-                .collect()[0]
-            )
             rec = {
                 "unit_id": unit["unit_id"],
                 "input_files": unit["files"],
-                "rows": int(stats["rows"] or 0),
-                "failed_rows": int(stats["failed_rows"] or 0),
-                "partitions": int(stats["partitions"] or 0),
+                **{k: int(v or 0) for k, v in stats.get.items()},
                 "wall_s": round(time.perf_counter() - t0, 3),
                 "engine_version": __version__,
                 "ts": time.time(),
@@ -301,54 +294,57 @@ class CheckpointedRun:
     def verdicts(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.out_dir, VERDICTS_DIR))
 
-    def profile(self) -> DataFrame:
-        """Run-level column stats folded from the per-unit mergeable
-        states (``column, n_rows, n_nulls, n_distinct, min_repr,
-        max_repr``) — cost is O(units × columns) state rows, no data
-        rescan.  Requires ``profile_columns`` to have been set.
+    def _families(self) -> List[_Family]:
+        """The state families this run keeps, in write order."""
+        return [f for f in _FAMILIES.values() if getattr(self, f.option)]
 
-        The states are cross-checked against the manifest before the
+    def _states(self, name: str) -> Tuple[DataFrame, List[str]]:
+        """The *name* family's state rows of the completed units, and
+        those units' ids (sorted).
+
+        The states are cross-checked against the manifest before any
         fold: every completed unit must have a state (else the merge
         would silently undercount — e.g. units completed by an earlier
-        run without ``profile_columns``), and states from units no
+        run without the family's option), and states from units no
         longer in the manifest (stale out_dir reuse) are excluded."""
-        from .operators.table_checks import merge_profile_states
-
-        if not self.profile_columns:
-            raise ValueError("profile_columns was not set on this run")
-        states, done = self._checked_states(PROFILE_STATES_DIR, "profile_columns")
-        return merge_profile_states(states.filter(F.col("increment").isin(done)))
-
-    def _checked_states(self, subdir: str, opt_name: str):
-        """Read a state table and cross-check it against the manifest:
-        every completed unit must have a state row (else the merge would
-        silently undercount), and stale states from units no longer in
-        the manifest are excluded by the caller's filter."""
+        fam = _FAMILIES[name]
+        if not getattr(self, fam.option):
+            raise ValueError("%s was not set on this run" % fam.option)
         done = sorted(self.completed_units())
-        states = self.spark.read.parquet(os.path.join(self.out_dir, subdir))
-        have = {r["increment"] for r in states.select("increment").distinct().collect()}
+        if not done:
+            raise ValueError(
+                "no %s state: no unit of this run has completed" % name
+            )
+        path = os.path.join(self.out_dir, fam.subdir)
+        # no state table at all when every completed unit ran without the family
+        states = self.spark.read.parquet(path) if os.path.isdir(path) else None
+        have = set() if states is None else {
+            r["increment"] for r in states.select("increment").distinct().collect()
+        }
         missing = [u for u in done if u not in have]
         if missing:
             raise ValueError(
                 "no %s state for completed unit(s) %s — were they run "
-                "without %s?"
-                % (subdir[: -len("_states")], ", ".join(missing), opt_name)
+                "without %s?" % (name, ", ".join(missing), fam.option)
             )
-        return states, done
+        return states.filter(F.col("increment").isin(done)), done
+
+    def profile(self) -> DataFrame:
+        """Run-level column stats folded from the per-unit mergeable
+        states (``column, n_rows, n_nulls, n_distinct, min_repr,
+        max_repr``) — cost is O(units × columns) state rows, no data
+        rescan.  Requires ``profile_columns`` to have been set; the
+        states are cross-checked against the manifest first
+        (:meth:`_states`), as in every fold below."""
+        return _tc().merge_profile_states(self._states("profile")[0])
 
     def centroid(self) -> DataFrame:
         """Run-level embedding-centroid state folded from the per-unit
         states (one row: ``n_vecs, sums``) — exact integer arithmetic,
-        no completed unit ever rescanned.  Same manifest cross-check as
-        :meth:`profile`."""
+        no completed unit ever rescanned."""
         from .functions.similarity import merge_centroid_states
 
-        if not self.centroid_vec_col:
-            raise ValueError("centroid_vec_col was not set on this run")
-        states, done = self._checked_states(CENTROID_STATES_DIR, "centroid_vec_col")
-        return merge_centroid_states(
-            states.filter(F.col("increment").isin(done)).select("n_vecs", "sums")
-        )
+        return merge_centroid_states(self._states("centroid")[0].select("n_vecs", "sums"))
 
     def centroid_drift(self) -> List[Dict[str, Any]]:
         """Per-unit drift report from states alone: each unit's centroid
@@ -358,16 +354,11 @@ class CheckpointedRun:
         ``None``.  Returns ``[{unit_id, n_vecs, cos_prior}, ...]``."""
         from .functions.similarity import centroid_state_cosine
 
-        if not self.centroid_vec_col:
-            raise ValueError("centroid_vec_col was not set on this run")
-        states, done = self._checked_states(CENTROID_STATES_DIR, "centroid_vec_col")
-        rows = {
-            r["increment"]: r
-            for r in states.filter(F.col("increment").isin(done)).collect()
-        }
+        states, done = self._states("centroid")
+        rows = {r["increment"]: r for r in states.collect()}
         out: List[Dict[str, Any]] = []
         acc_n, acc_sums = 0, [0] * self.centroid_dim
-        for uid in sorted(done):
+        for uid in done:
             r = rows[uid]
             cos = None
             if acc_n > 0 and r["n_vecs"] > 0:
@@ -383,14 +374,8 @@ class CheckpointedRun:
     def quantiles(self) -> DataFrame:
         """Run-level quantile estimates folded from the per-unit KLL
         states (``column, n_values, min_val, max_val, q_25..q_99``) —
-        count/min/max exact, quantiles within sketch rank error.  Same
-        manifest cross-check as :meth:`profile`."""
-        from .operators.table_checks import merge_quantile_states
-
-        if not self.quantile_columns:
-            raise ValueError("quantile_columns was not set on this run")
-        states, done = self._checked_states(QUANTILE_STATES_DIR, "quantile_columns")
-        return merge_quantile_states(states.filter(F.col("increment").isin(done)))
+        count/min/max exact, quantiles within sketch rank error."""
+        return _tc().merge_quantile_states(self._states("quantile")[0])
 
     def quantile_drift(
         self, baseline_units: Sequence[str], current_units: Sequence[str]
@@ -398,15 +383,11 @@ class CheckpointedRun:
         """KS drift (integer basis points) between two completed-unit
         subsets — e.g. all historical units vs the latest ingest —
         computed purely from the stored KLL states, no data rescan."""
-        from .operators.table_checks import quantile_drift_states
-
-        if not self.quantile_columns:
-            raise ValueError("quantile_columns was not set on this run")
-        states, done = self._checked_states(QUANTILE_STATES_DIR, "quantile_columns")
+        states, done = self._states("quantile")
         for u in list(baseline_units) + list(current_units):
             if u not in done:
                 raise ValueError("unit %s is not a completed unit" % u)
-        return quantile_drift_states(
+        return _tc().quantile_drift_states(
             states.filter(F.col("increment").isin(list(baseline_units))),
             states.filter(F.col("increment").isin(list(current_units))),
         )
@@ -415,15 +396,9 @@ class CheckpointedRun:
         """Run-level constraint pass rates folded from the per-unit check
         counts — ``(check_id, n_rows, n_failed, pass_bp, status)`` with
         the same int64-``div`` arithmetic as ``check_expressions``.
-        Cost is O(units × checks) state rows, no data rescan; same
-        manifest cross-check as :meth:`profile`."""
-        from .operators.table_checks import pass_rate_cols
-
-        if not self.checks:
-            raise ValueError("checks was not set on this run")
-        states, done = self._checked_states(CHECK_STATES_DIR, "checks")
+        Cost is O(units × checks) state rows, no data rescan."""
         folded = (
-            states.filter(F.col("increment").isin(done))
+            self._states("check")[0]
             .groupBy("check_id")
             .agg(
                 F.sum("n_rows").cast("long").alias("n_rows"),
@@ -431,41 +406,23 @@ class CheckpointedRun:
             )
         )
         return folded.select(
-            "check_id", "n_rows", "n_failed", *pass_rate_cols()
+            "check_id", "n_rows", "n_failed", *_tc().pass_rate_cols()
         )
 
     def hot_keys(self, top_k: int = 10) -> DataFrame:
         """Run-level heavy hitters folded from the per-unit Count-Min
         states — ``(column, key, est_count, n_values, share_bp)`` —
         merged through Spark's own JVM sketch (bit-identical to a
-        whole-run sketch), no data rescan.  Same manifest cross-check as
-        :meth:`profile`."""
-        from .operators.table_checks import merge_hotkey_states
-
-        if not self.hotkey_columns:
-            raise ValueError("hotkey_columns was not set on this run")
-        states, done = self._checked_states(HOTKEY_STATES_DIR, "hotkey_columns")
-        return merge_hotkey_states(
-            self.spark, states.filter(F.col("increment").isin(done)), top_k
-        )
+        whole-run sketch), no data rescan."""
+        return _tc().merge_hotkey_states(self.spark, self._states("hotkey")[0], top_k)
 
     def uniqueness_summary(self) -> DataFrame:
         """Cross-unit key uniqueness folded from the per-unit Theta
         states — ``(column, n_values, sum_unit_distinct, union_distinct,
         cross_unit_keys)``; ``cross_unit_keys`` counts keys later units
         reintroduced.  Exact while each column stays under the sketch
-        retention; no data rescan; same manifest cross-check as
-        :meth:`profile`."""
-        from .operators.table_checks import merge_uniqueness_states
-
-        if not self.uniqueness_columns:
-            raise ValueError("uniqueness_columns was not set on this run")
-        states, done = self._checked_states(
-            UNIQUENESS_STATES_DIR, "uniqueness_columns"
-        )
-        return merge_uniqueness_states(
-            states.filter(F.col("increment").isin(done))
-        )
+        retention; no data rescan."""
+        return _tc().merge_uniqueness_states(self._states("uniqueness")[0])
 
     def rule_trends(self, spike_bp: int = 5000) -> DataFrame:
         """Per-unit, per-rule violation counts with a spike flag —

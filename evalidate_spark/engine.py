@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from .compiler import Compiled, Options, _empty_viols, compile_spec
 from .fastpath import _has_custom, compile_fail_predicate, partition_verdicts
+from .session import _require_ansi
 from .spec import normalize_rules
 
 VIOLATIONS_COL = "violations"
@@ -168,6 +169,7 @@ def validate(
     skipped automatically for specs with custom pandas-UDF validators (the
     UDF must not run twice); ``gate_fast=False`` is the fully ungated
     reference."""
+    _require_ansi(df)
     opts = Options(mode=mode, parent_key=parent_key, keep_unruled=keep_unruled)
     gate = gate_fast and not any(_has_custom(n) for n in normalize_rules(rules))
     compiled = compile_spec(rules, df.schema, opts, gate_elements=gate)
@@ -215,6 +217,7 @@ def validate_zipped(
     from .compiler import OutCol, _entry_array, _viol_struct
     from .spec import SpecError
 
+    _require_ansi(df)
     opts = Options(mode=mode, parent_key=parent_key)
     compiled = [compile_spec(rs, df.schema, opts) for rs in rulesets]
     rid = F.col("`%s`" % ruleset_id_col)

@@ -64,6 +64,7 @@ from .compiler import (
     _is_string,
     _type_matches,
 )
+from .session import _require_ansi
 from .spec import (
     DEPRECATED,
     REQUIRED,
@@ -519,6 +520,7 @@ def verdict_scan(df: DataFrame, rules: Any, **opts: Any) -> DataFrame:
     whole-corpus verdict job at 10^12 scale: pruned scan → boolean → tiny
     partition-id aggregate.  Row-identical to
     ``validate(df, rules).verdicts``."""
+    _require_ansi(df)
     fail = compile_fail_predicate(rules, df.schema, Options(**opts) if opts else None)
     return partition_verdicts(df, fail)
 
@@ -537,6 +539,7 @@ def keyed_verdicts(
     Returns ``(unit_name, n_rows, n_failed, verdict)``; same predicate-only
     plan: pruned scan → one fused boolean → one tiny hash aggregate (the
     shuffle moves #units rows, nothing else)."""
+    _require_ansi(df)
     fail = compile_fail_predicate(rules, df.schema, Options(**opts) if opts else None)
     return (
         df.select(

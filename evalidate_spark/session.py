@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -36,3 +36,14 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "true")
     )
     return builder.getOrCreate()
+
+
+def _require_ansi(df: DataFrame) -> None:
+    """Raise unless *df*'s session runs with ANSI mode on, which the
+    library's NULL contracts assume (see :func:`get_spark`)."""
+    if df.sparkSession.conf.get("spark.sql.ansi.enabled").lower() != "true":
+        raise RuntimeError(
+            "evalidate_spark needs spark.sql.ansi.enabled=true (its NULL "
+            "contracts assume ANSI semantics: size(NULL) is NULL, overflow "
+            "raises); this session has it off"
+        )

@@ -24,6 +24,10 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _names(csv: str) -> tuple:
+    return tuple(c.strip() for c in csv.split(",") if c.strip())
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="input parquet directory")
@@ -129,10 +133,6 @@ def main(argv=None) -> int:
     os.makedirs(args.out, exist_ok=True)
     shutil.copyfile(args.rules, os.path.join(args.out, "rules.json"))  # lineage
 
-    profile_cols = [c.strip() for c in args.profile_columns.split(",") if c.strip()]
-    quantile_cols = [c.strip() for c in args.quantile_columns.split(",") if c.strip()]
-    hotkey_cols = [c.strip() for c in args.hotkey_columns.split(",") if c.strip()]
-    uniq_cols = [c.strip() for c in args.uniqueness_columns.split(",") if c.strip()]
     if checks:
         shutil.copyfile(args.checks, os.path.join(args.out, "checks.json"))  # lineage
     schema_report = None
@@ -161,12 +161,12 @@ def main(argv=None) -> int:
         args.input,
         rules,
         args.out,
-        id_cols=[c.strip() for c in args.id_cols.split(",") if c.strip()],
+        id_cols=_names(args.id_cols),
         files_per_unit=args.files_per_unit,
-        profile_columns=tuple(profile_cols),
-        quantile_columns=tuple(quantile_cols),
-        hotkey_columns=tuple(hotkey_cols),
-        uniqueness_columns=tuple(uniq_cols),
+        profile_columns=_names(args.profile_columns),
+        quantile_columns=_names(args.quantile_columns),
+        hotkey_columns=_names(args.hotkey_columns),
+        uniqueness_columns=_names(args.uniqueness_columns),
         checks=checks,
         centroid_vec_col=args.centroid_vec_col or None,
         centroid_dim=args.centroid_dim,
@@ -174,20 +174,11 @@ def main(argv=None) -> int:
     summary = run.run(max_units=args.max_units)
     if schema_report is not None:
         summary["schema_conformance"] = schema_report
-    if profile_cols and not run.pending_units():
-        summary["profile"] = [r.asDict() for r in run.profile().collect()]
-    if quantile_cols and not run.pending_units():
-        summary["quantiles"] = [r.asDict() for r in run.quantiles().collect()]
-    if checks and not run.pending_units():
-        summary["checks"] = [r.asDict() for r in run.check_results().collect()]
-    if hotkey_cols and not run.pending_units():
-        summary["hot_keys"] = [r.asDict() for r in run.hot_keys().collect()]
-    if uniq_cols and not run.pending_units():
-        summary["uniqueness"] = [
-            r.asDict() for r in run.uniqueness_summary().collect()
-        ]
-    if args.centroid_vec_col and not run.pending_units():
-        summary["centroid_drift"] = run.centroid_drift()
+    # run-level folds only once every unit is done; a run with no unit
+    # (an empty input) has nothing to fold
+    if summary["total_units_done"] and not run.pending_units():
+        for fam in run._families():
+            summary[fam.report] = fam.fold(run)
     print(json.dumps(summary))
     return 0
 

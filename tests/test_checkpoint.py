@@ -118,6 +118,27 @@ def test_profile_states_resume_and_merge(spark, input_dir, tmp_path):
     # lang has 2 true values — HLL is exact at this cardinality
     assert merged["lang"]["n_distinct"] == direct["lang"]["n_distinct"]
 
+    # the re-run unit replaced its violations and verdicts, never doubled
+    # them: 29 text + 40 lang violations, one per (doc, rule)
+    viol = run.violations().select("doc_id", "rule_id")
+    assert viol.count() == viol.distinct().count() == 69
+    # each manifest record's counts (observed on the verdicts write)
+    # equal that unit's sums in the written verdicts table
+    written = {
+        r["unit_id"]: (r["rows"], r["failed_rows"], r["partitions"])
+        for r in run.verdicts().groupBy("unit_id").agg(
+            F.sum("rows").alias("rows"),
+            F.sum("failed").alias("failed_rows"),
+            F.count(F.lit(1)).alias("partitions"),
+        ).collect()
+    }
+    assert written == {
+        u: (r["rows"], r["failed_rows"], r["partitions"])
+        for u, r in run.completed_units().items()
+    }
+    assert sum(v[0] for v in written.values()) == 200
+    assert sum(v[1] for v in written.values()) == 63  # id % 7 == 0 or id % 5 == 0
+
 
 def test_profile_raises_on_uncovered_units(spark, input_dir, tmp_path):
     """Units completed WITHOUT profile_columns have no state — profile()
@@ -216,6 +237,9 @@ def test_check_results_raises_when_not_configured(spark, input_dir, tmp_path):
         spark, input_dir, RULES, out, files_per_unit=2,
         checks={"ok": "n >= 0"},
     )
+    # no unit has a check state yet: no state table exists at all
+    with pytest.raises(ValueError, match="no check state for completed unit"):
+        run.check_results()
     run.run()
     # first two units completed without checks -> no state for them
     with pytest.raises(ValueError, match="no check state"):
@@ -392,9 +416,39 @@ def test_centroid_states_resume_merge_and_drift(spark, tmp_path):
     assert max(cs) > 0.99 and min(cs) < -0.5
 
 
-def test_centroid_raises_when_not_configured(spark, tmp_path):
+READ_BACKS = {
+    "profile": (),
+    "quantiles": (),
+    "quantile_drift": ([], []),
+    "check_results": (),
+    "hot_keys": (),
+    "uniqueness_summary": (),
+    "centroid": (),
+    "centroid_drift": (),
+}
+
+
+@pytest.mark.parametrize("read_back", sorted(READ_BACKS))
+def test_read_back_raises_when_not_configured(spark, tmp_path, read_back):
+    """Every read-back refuses a family the run was not configured for."""
     run = CheckpointedRun(spark, str(tmp_path), RULES, str(tmp_path / "x"))
-    with pytest.raises(ValueError):
-        run.centroid()
-    with pytest.raises(ValueError):
-        run.centroid_drift()
+    with pytest.raises(ValueError, match="was not set on this run"):
+        getattr(run, read_back)(*READ_BACKS[read_back])
+
+
+def test_folds_with_zero_completed_units(spark, tmp_path):
+    """An input with no parquet file completes no unit; every fold then
+    names its family and says so instead of failing on a missing state
+    table."""
+    src = tmp_path / "empty_in"
+    src.mkdir()
+    run = CheckpointedRun(
+        spark, str(src), RULES, str(tmp_path / "z"),
+        profile_columns=("lang",), quantile_columns=("n",),
+        checks={"ok": "n >= 0"}, hotkey_columns=("lang",),
+        uniqueness_columns=("doc_id",), centroid_vec_col="embedding",
+    )
+    assert run.run()["total_units_done"] == 0
+    for read_back, args in READ_BACKS.items():
+        with pytest.raises(ValueError, match="state: no unit of this run has completed"):
+            getattr(run, read_back)(*args)

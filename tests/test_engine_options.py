@@ -1,5 +1,6 @@
-"""Engine option coverage: keep_unruled output projection and hard-mode
-enforce()/validate_and_convert (reference evalidate.erl:22-34)."""
+"""Engine option coverage: keep_unruled output projection, hard-mode
+enforce()/validate_and_convert (reference evalidate.erl:22-34), and the
+ANSI-mode session contract."""
 
 import pytest
 
@@ -67,3 +68,30 @@ class TestHardMode:
         res = validate(_df(spark), RULES, id_cols=["doc_id"])
         with pytest.raises(ValidationError):
             res.enforce()
+
+
+def test_entry_points_refuse_ansi_off(spark):
+    """The NULL contracts assume ANSI semantics (size(NULL) is NULL, not
+    -1): validate, validate_zipped, verdict_scan and keyed_verdicts
+    refuse a session with it off before compiling anything."""
+    from evalidate_spark import validate_zipped, verdict_scan
+    from evalidate_spark.fastpath import keyed_verdicts
+
+    df = _df(spark)
+    calls = [
+        lambda: validate(df, RULES),
+        lambda: validate_zipped(df.withColumn("ruleset_id", F.lit(0)), [RULES]),
+        lambda: verdict_scan(df, RULES),
+        lambda: keyed_verdicts(df, RULES, F.lit("u")),
+    ]
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for call in calls:
+            with pytest.raises(RuntimeError, match=key):
+                call()
+    finally:
+        spark.conf.set(key, prev)
+    for call in calls:
+        call()  # restored: each builds its plan again
