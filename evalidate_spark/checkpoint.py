@@ -312,21 +312,29 @@ class CheckpointedRun:
             raise ValueError("%s was not set on this run" % fam.option)
         done = sorted(self.completed_units())
         if not done:
-            raise ValueError(
-                "no %s state: no unit of this run has completed" % name
-            )
+            raise ValueError("no %s state: no unit of this run has completed" % name)
         path = os.path.join(self.out_dir, fam.subdir)
-        # no state table at all when every completed unit ran without the family
-        states = self.spark.read.parquet(path) if os.path.isdir(path) else None
-        have = set() if states is None else {
-            r["increment"] for r in states.select("increment").distinct().collect()
-        }
-        missing = [u for u in done if u not in have]
+        # partitioned by increment (= unit id): the units holding a state are
+        # its increment=<unit> directories, listed without a job (none when
+        # every completed unit ran without the family)
+        have = os.listdir(path) if os.path.isdir(path) else []
+        missing = [u for u in done if "increment=" + u not in have]
         if missing:
             raise ValueError(
                 "no %s state for completed unit(s) %s — were they run "
                 "without %s?" % (name, ", ".join(missing), fam.option)
             )
+        # reading with the schema Spark wrote into a part file's footer
+        # spares the read its schema-inference job
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        part = os.path.join(path, "increment=" + done[0])
+        footer = pq.read_schema(
+            os.path.join(part, min(f for f in os.listdir(part) if f.endswith(".parquet")))
+        ).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+        schema = StructType.fromJson(json.loads(footer)).add("increment", "string")
+        states = self.spark.read.schema(schema).parquet(path)
         return states.filter(F.col("increment").isin(done)), done
 
     def profile(self) -> DataFrame:
@@ -445,7 +453,6 @@ class CheckpointedRun:
         contract as ``profile_anomalies``.  A fully-clean run (no
         violations written anywhere → footer-less output dir) returns an
         empty frame rather than failing."""
-        from pyspark.sql import types as T
         from pyspark.sql.utils import AnalysisException
 
         done = sorted(self.completed_units())
@@ -454,15 +461,8 @@ class CheckpointedRun:
         except AnalysisException:
             return self.spark.createDataFrame(
                 [],
-                T.StructType(
-                    [
-                        T.StructField("unit_id", T.StringType()),
-                        T.StructField("rule_id", T.StringType()),
-                        T.StructField("n_violations", T.LongType()),
-                        T.StructField("ratio_bp", T.LongType()),
-                        T.StructField("spike", T.BooleanType()),
-                    ]
-                ),
+                "unit_id string, rule_id string, n_violations bigint, ratio_bp bigint, "
+                "spike boolean",
             )
         v = (
             # only manifested units: a crashed unit's partial violation

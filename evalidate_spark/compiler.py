@@ -11,6 +11,11 @@ Driver-side compiler that turns a :mod:`evalidate_spark.spec` rule tree into
   ``no_return`` keys dropped) mirroring the reference's output reshaping
   (``/root/reference/src/evalidate.erl:145-206``).
 
+The same rule walk returns each node's message-free fail Column next to its
+violations, so one compile also gives the row's fail predicate; a fail-only
+walk (:func:`evalidate_spark.fastpath.compile_fail_predicate`) builds
+nothing else.
+
 Fail-fast parity: the reference throws at the first violating rule in
 depth-first order (``/root/reference/src/evalidate.erl:211-212``).  We compute
 *all* violations per row (richer), ordered by depth-first ``rule_seq``, so the
@@ -22,6 +27,8 @@ bit-for-bit; see :mod:`evalidate_spark.errors`.
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass, replace
 from typing import Any, Callable, List, Optional, Sequence, Tuple
 
@@ -149,13 +156,13 @@ class Options:
 
 
 class _Seq:
-    """Per-compile state: the depth-first rule-seq counter, and whether each
-    array element's violation builder is gated on its message-free fail
-    condition (set by ``validate`` when it gates rows)."""
+    """Per-compile state: the depth-first rule-seq counter, and whether the
+    walk builds only the fail half (no violation, message or output
+    Column)."""
 
-    def __init__(self, gate_elements: bool = False) -> None:
+    def __init__(self, fail_only: bool = False) -> None:
         self.n = 0
-        self.gate_elements = gate_elements
+        self.fail_only = fail_only
 
     def next(self) -> int:
         self.n += 1
@@ -173,6 +180,9 @@ class Scope:
     parents: Tuple[str, ...] = ()
     in_element: bool = False  # True inside HOF lambda (no UDFs allowed)
     span_index: Optional[Column] = None
+    # values are root columns, addressable as F.col(".".join(parents + (key,)))
+    # — what the fail half's subfield-array forms need (fastpath)
+    rooted: bool = False
 
 
 @dataclass
@@ -195,9 +205,6 @@ class Compiled:
     violations: Column  # array<struct<...>> in depth-first order
     outputs: List[OutCol]
     opts: Options
-
-    def first_error(self) -> Column:
-        return F.try_element_at(self.violations, F.lit(1))
 
 
 def _viol_struct(
@@ -246,7 +253,7 @@ class VClause:
     ``{false, Msg}`` (wrapped + overridable)."""
 
     cond: Column
-    message: Column
+    message: Callable[[], Column]  # built only where a violation is
     error_kind: bool = False
 
 
@@ -354,50 +361,42 @@ def _compile_validators(
     Evaluation order == list order, reproducing the reference's
     short-circuit (``/root/reference/src/evv.erl:18-29``)."""
     clauses: List[VClause] = []
+
+    def value_msg(repr_: Callable[[Column, T.DataType], Column], tail: str) -> Callable[[], Column]:
+        return lambda: F.concat(
+            F.lit("Value '"), c_unscriptize(repr_(col, dt)), F.lit("' is not valid. " + tail)
+        )
+
     for v in validators:
         if isinstance(v, Type):
             ok = _type_matches(v.of, col, dt, scope)
             if ok is None:
                 continue  # statically true
-            msg = F.concat(
-                F.lit("Value '"),
-                c_unscriptize(c_ts_repr(col, dt)),
-                F.lit("' is not valid. Type of value is not '%s'" % E.type_cond_name(v.of)),
-            )
-            clauses.append(VClause(~ok, msg))
+            tail = "Type of value is not '%s'" % E.type_cond_name(v.of)
+            clauses.append(VClause(~ok, value_msg(c_ts_repr, tail)))
         elif isinstance(v, Size):
             sz, param = _size_of(col, dt)
             if v.min is not None:
-                clauses.append(
-                    VClause(sz < v.min, F.lit(E.size_min_msg(param, v.min)))
-                )
+                msg = E.size_min_msg(param, v.min)
+                clauses.append(VClause(sz < v.min, lambda m=msg: F.lit(m)))
             if v.max is not None:
-                clauses.append(
-                    VClause(sz > v.max, F.lit(E.size_max_msg(param, v.max)))
-                )
+                msg = E.size_max_msg(param, v.max)
+                clauses.append(VClause(sz > v.max, lambda m=msg: F.lit(m)))
         elif isinstance(v, Regexp):
             if _is_string(dt):
-                msg = F.concat(
-                    F.lit("Value '"),
-                    c_unscriptize(c_ts_repr(col, dt)),
-                    F.lit("' is not valid. Validation with regexp '%s' failed" % v.pattern),
-                )
-                clauses.append(VClause(~col.rlike(v.pattern), msg))
+                tail = "Validation with regexp '%s' failed" % v.pattern
+                clauses.append(VClause(~col.rlike(v.pattern), value_msg(c_ts_repr, tail)))
             else:
                 # non-binary value → {error, Bad regexp} (/root/reference/src/evv.erl:193-194)
                 clauses.append(
-                    VClause(F.lit(True), F.lit(E.ERR_BAD_REGEXP), error_kind=True)
+                    VClause(F.lit(True), lambda: F.lit(E.ERR_BAD_REGEXP), error_kind=True)
                 )
         elif isinstance(v, Allowed):
             vals = [x for x in v.values]
             lits = _isin_literals(vals, dt)
             cond = ~col.isin(lits) if lits else F.lit(True)
-            msg = F.concat(
-                F.lit("Value '"),
-                c_unscriptize(c_p_repr(col, dt)),
-                F.lit("' is not valid. Value is not in allowed list %s" % E.fmt_p(vals)),
-            )
-            clauses.append(VClause(cond, msg))
+            tail = "Value is not in allowed list %s" % E.fmt_p(vals)
+            clauses.append(VClause(cond, value_msg(c_p_repr, tail)))
         elif isinstance(v, OrV):
             clauses.append(_compile_or_validator(v, col, dt, scope, in_hof))
         elif isinstance(v, EqualToObjectOfOtherKeys):
@@ -411,11 +410,14 @@ def _compile_validators(
             ok = conds[0]
             for c in conds[1:]:
                 ok = ok & c
-            clauses.append(VClause(~ok, F.lit(E.V_ERR_DEFAULT)))
+            clauses.append(VClause(~ok, lambda: F.lit(E.V_ERR_DEFAULT)))
         elif isinstance(v, Native):
             for cond, message, err in v.build(col, dt):
-                msg_col = F.lit(message) if isinstance(message, str) else message
-                clauses.append(VClause(cond, msg_col, error_kind=err))
+                clauses.append(VClause(
+                    cond,
+                    lambda m=message: F.lit(m) if isinstance(m, str) else m,
+                    error_kind=err,
+                ))
         elif isinstance(v, CustomValidator):
             if in_hof or scope.in_element:
                 raise SpecError(
@@ -423,9 +425,9 @@ def _compile_validators(
                     "supported; lift the check to an array-level custom rule"
                 )
             marked = _custom_validator_col(v, col, dt, scope)
-            tail = F.substring(marked, 3, 2 ** 24)
-            clauses.append(VClause(marked.startswith("E:"), tail, error_kind=True))
-            clauses.append(VClause(marked.startswith("F:"), tail))
+            tail_msg = lambda m=marked: F.substring(m, 3, 2 ** 24)  # noqa: E731
+            clauses.append(VClause(marked.startswith("E:"), tail_msg, error_kind=True))
+            clauses.append(VClause(marked.startswith("F:"), tail_msg))
         else:
             raise SpecError("Unknown validator '%r'" % (v,))
     return clauses
@@ -568,7 +570,7 @@ def _compile_converter(
                 "converter %s cannot convert a %s value" % (conv, dt.simpleString())
             )
         if conv == "to_int":
-            out = col.try_cast("bigint") if not _is_string(dt) else col.try_cast("bigint")
+            out = col.try_cast("bigint")
             return ConvResult(out, T.LongType(), fail=col.isNotNull() & out.isNull())
         if conv == "to_float":
             out = col.try_cast("double")
@@ -706,61 +708,70 @@ def _compile_or_validator(
     """Validator-level {'or', conds}: alternatives tried in order; a pass
     wins; an {error,_} propagates; all-false → generic default
     (/root/reference/src/evv.erl:30-36,89-97)."""
-    msg: Column = F.lit(E.V_ERR_DEFAULT)
     any_ok = F.lit(False)
-    err_msg: Column = F.lit(None).cast("string")
     err_found = F.lit(False)
+    # per alternative: (tried, its error-kind clauses as (cond, message))
+    errs: List[Tuple[Column, List[Tuple[Column, Callable[[], Column]]]]] = []
     for alt in v.alternatives:
         clauses = _compile_validators([alt], col, dt, scope, in_hof=in_hof)
         alt_fail = F.lit(False)
         alt_err_cond = F.lit(False)
-        alt_err_msg: Column = F.lit(None).cast("string")
+        alt_errs = []
         for cl in clauses:
             c = F.coalesce(cl.cond, F.lit(False))
             if cl.error_kind:
-                alt_err_cond = alt_err_cond | (~alt_fail & c)
-                alt_err_msg = F.when(~alt_fail & c, cl.message).otherwise(alt_err_msg)
+                hit = ~alt_fail & c
+                alt_errs.append((hit, cl.message))
+                alt_err_cond = alt_err_cond | hit
             alt_fail = alt_fail | c
         # error only counts if encountered before this alt passed; once an
         # error alternative is hit the loop stops in the reference
-        err_msg = F.when(~err_found & ~any_ok & alt_err_cond, alt_err_msg).otherwise(err_msg)
+        if alt_errs:
+            errs.append((~err_found & ~any_ok & alt_err_cond, alt_errs))
         err_found = err_found | (~any_ok & alt_err_cond)
         any_ok = any_ok | (~err_found & ~alt_fail)
-    cond = ~any_ok
-    message = F.when(err_found, err_msg).otherwise(F.lit(E.V_ERR_DEFAULT))
-    # error_kind is dynamic here; approximate: treat as false-kind unless an
-    # error fired — handled by returning message directly
-    return VClause(cond, message)
+
+    def message(err_found: Column = err_found) -> Column:
+        err_msg: Column = F.lit(None).cast("string")
+        for tried, alt_errs in errs:
+            alt_err_msg: Column = F.lit(None).cast("string")
+            for cond, msg in alt_errs:
+                alt_err_msg = F.when(cond, msg()).otherwise(alt_err_msg)
+            err_msg = F.when(tried, alt_err_msg).otherwise(err_msg)
+        # error_kind is dynamic here; approximate: treat as false-kind unless
+        # an error fired — handled by returning the error message directly
+        return F.when(err_found, err_msg).otherwise(F.lit(E.V_ERR_DEFAULT))
+
+    return VClause(~any_ok, message)
 
 
 # --------------------------------------------------------------------------
 # rule compilation
 # --------------------------------------------------------------------------
-def compile_spec(
-    rules: Any,
-    schema: T.StructType,
-    opts: Optional[Options] = None,
-    *,
-    gate_elements: bool = False,
-) -> Compiled:
-    """Compile *rules* against *schema*.  ``gate_elements`` is internal to
-    ``validate``'s gated path: each array element builds its violation
-    structs only when its predicate-only fail condition holds
-    (:func:`evalidate_spark.fastpath.element_fail`).  The violations are
-    the same either way; the default stays the ungated reference."""
+def compile_spec(rules: Any, schema: T.StructType, opts: Optional[Options] = None) -> Compiled:
+    """Compile *rules* against *schema*."""
+    return _compile(rules, schema, opts)[0]
+
+
+def _compile(
+    rules: Any, schema: T.StructType, opts: Optional[Options] = None
+) -> Tuple[Compiled, Column]:
+    """One walk of *rules* against *schema*: the compiled violations and
+    outputs, and the row's message-free fail predicate (``fail ≡
+    size(violations) > 0``, NULL-free only after a coalesce) in the pruned
+    form :func:`evalidate_spark.fastpath.compile_fail_predicate` gives."""
     opts = opts or Options()
-    rules = normalize_rules(rules)
-    seq = _Seq(gate_elements)
-    scope = _root_scope(schema)
-    arrays, outputs = _compile_rules(rules, scope, opts, seq)
+    arrays, fail, outputs = _compile_rules(
+        normalize_rules(rules), _root_scope(schema), opts, _Seq()
+    )
     outputs = _merge_outputs(outputs)
-    viols = F.concat(*arrays) if arrays else _empty_viols()
+    viols = _concat_viols(arrays)
     if opts.keep_unruled:
         ruled = {o.name for o in outputs}
         for f_ in schema.fields:
             if f_.name not in ruled:
                 outputs.append(OutCol(f_.name, F.col("`%s`" % f_.name), f_.dataType))
-    return Compiled(violations=viols, outputs=outputs, opts=opts)
+    return Compiled(violations=viols, outputs=outputs, opts=opts), fail
 
 
 def _merge_outputs(outputs: List[OutCol]) -> List[OutCol]:
@@ -809,10 +820,17 @@ def _root_scope(schema: T.StructType) -> Scope:
             raise KeyError(k)
         return F.col("`%s`" % k)
 
-    return Scope(get=get, dtype_of=lambda k: names[k], has=lambda k: k in names)
+    return Scope(get=get, dtype_of=lambda k: names[k], has=lambda k: k in names, rooted=True)
 
 
-def _struct_scope(parent: Column, dt: T.StructType, parents: Tuple[str, ...], in_element: bool, span_index: Optional[Column]) -> Scope:
+def _struct_scope(
+    parent: Column,
+    dt: T.StructType,
+    parents: Tuple[str, ...],
+    in_element: bool,
+    span_index: Optional[Column],
+    rooted: bool,
+) -> Scope:
     names = {f.name: f.dataType for f in dt.fields}
 
     def get(k: str) -> Column:
@@ -829,6 +847,7 @@ def _struct_scope(parent: Column, dt: T.StructType, parents: Tuple[str, ...], in
         parents=parents,
         in_element=in_element,
         span_index=span_index,
+        rooted=rooted,
     )
 
 
@@ -872,14 +891,30 @@ def _child_scope(
     parents: Tuple[str, ...],
     in_element: bool,
     span_index: Optional[Column],
+    rooted: bool = False,
 ) -> Optional[Scope]:
     """Scope for recursing childs into a struct (fixed keys) or map
-    (dynamic keys) value; None if the type cannot host childs."""
+    (dynamic keys) value; None if the type cannot host childs.  A map's
+    values are never *rooted*: no dotted column path reaches them."""
     if isinstance(dt, T.StructType):
-        return _struct_scope(val, dt, parents, in_element, span_index)
-    if isinstance(dt, T.MapType) and isinstance(dt.keyType, T.StringType):
+        return _struct_scope(val, dt, parents, in_element, span_index, rooted)
+    if _string_keyed_map(dt):
         return _map_scope(val, dt, parents, in_element, span_index)
     return None
+
+
+def _string_keyed_map(dt: T.DataType) -> bool:
+    return isinstance(dt, T.MapType) and isinstance(dt.keyType, T.StringType)
+
+
+def _any(conds: Sequence[Column]) -> Column:
+    """OR of *conds*; False when there are none."""
+    return functools.reduce(operator.or_, conds) if conds else F.lit(False)
+
+
+def _all(conds: Sequence[Column]) -> Column:
+    """AND of *conds*; True when there are none."""
+    return functools.reduce(operator.and_, conds) if conds else F.lit(True)
 
 
 def _key_path(key: Optional[str], scope: Scope, opts: Options) -> str:
@@ -889,10 +924,18 @@ def _key_path(key: Optional[str], scope: Scope, opts: Options) -> str:
     return ".".join(parts)
 
 
+def _concat_viols(arrays: Sequence[Column]) -> Column:
+    return F.concat(*arrays) if arrays else _empty_viols()
+
+
 def _compile_rules(
     rules: Sequence[Any], scope: Scope, opts: Options, seq: _Seq
-) -> Tuple[List[Column], List[OutCol]]:
+) -> Tuple[List[Column], Column, List[OutCol]]:
+    """Compile *rules* in depth-first order: their violation arrays and
+    outputs (none in a fail-only walk), and their fail Column, the OR of
+    the nodes' fails."""
     arrays: List[Column] = []
+    fails: List[Column] = []
     outputs: List[OutCol] = []
     for node in rules:
         if isinstance(node, Rule):
@@ -904,12 +947,17 @@ def _compile_rules(
             else:
                 keys = list(node.key)
             for k in keys:
-                arr, outs = _compile_rule(replace(node, key=k), scope, opts, seq)
-                arrays.append(arr)
+                viols, fail, outs = _compile_rule(replace(node, key=k), scope, opts, seq)
+                fails.append(fail)
+                if viols is not None:
+                    arrays.append(viols)
                 outputs.extend(outs)
         elif isinstance(node, RuleAnd):
-            sub_arrays, sub_outputs = _compile_rules(list(node.rules), scope, opts, seq)
-            combined = F.concat(*sub_arrays) if sub_arrays else _empty_viols()
+            sub_arrays, sub_fail, sub_outputs = _compile_rules(list(node.rules), scope, opts, seq)
+            fails.append(sub_fail)
+            if seq.fail_only:
+                continue
+            combined = _concat_viols(sub_arrays)
             if node.on_error is not None:
                 s = seq.next()
                 entry = F.when(
@@ -922,28 +970,36 @@ def _compile_rules(
                 arrays.append(combined)
             outputs.extend(sub_outputs)
         elif isinstance(node, RuleOr):
-            arrays.append(_compile_rule_or(node, scope, opts, seq, outputs))
+            viols, fail = _compile_rule_or(node, scope, opts, seq, outputs)
+            fails.append(fail)
+            if viols is not None:
+                arrays.append(viols)
         else:
             raise SpecError("Unknown rule(s) '%r'" % (node,))
-    return arrays, outputs
+    return arrays, _any(fails), outputs
 
 
 def _compile_rule_or(
     node: RuleOr, scope: Scope, opts: Options, seq: _Seq, outputs: List[OutCol]
-) -> Column:
+) -> Tuple[Optional[Column], Column]:
     """First passing alternative wins; all-fail → first-error messages of
     each alternative deduped + joined ' or ' in reverse trial order
     (/root/reference/src/evalidate.erl:74-84,251-265).  Output columns:
     alternatives usually target the same key; we emit each alternative's
-    outputs guarded by that alternative being the winner."""
+    outputs guarded by that alternative being the winner.  Its fail is the
+    AND of the alternatives' fails."""
     s = seq.next()
-    alt_viols: List[Column] = []
+    alt_arrays: List[List[Column]] = []
+    alt_fails: List[Column] = []
     alt_outs: List[List[OutCol]] = []
     for alt in node.rules:
-        sub_arrays, sub_outputs = _compile_rules([alt], scope, opts, seq)
-        av = F.concat(*sub_arrays) if sub_arrays else _empty_viols()
-        alt_viols.append(av)
+        sub_arrays, sub_fail, sub_outputs = _compile_rules([alt], scope, opts, seq)
+        alt_arrays.append(sub_arrays)
+        alt_fails.append(sub_fail)
         alt_outs.append(sub_outputs)
+    if seq.fail_only:
+        return None, _all(alt_fails)
+    alt_viols = [_concat_viols(a) for a in alt_arrays]
 
     fails = [F.size(v) > 0 for v in alt_viols]
     # winner = first passing alternative (reference tries them in order,
@@ -988,19 +1044,44 @@ def _compile_rule_or(
             present = present | emitted
         if chain is not None:
             outputs.append(OutCol(name, chain, dtype, present))
-    return _entry_array(entry)
+    return _entry_array(entry), _all(alt_fails)
+
+
+def _childs_conv_fail(conv: Any, dt: T.DataType) -> bool:
+    """Does a childs rule's converter fail on every present value?
+
+    The violations run the converter over the child-shaped output (the
+    child struct, or the converted element array).  A fail-only walk builds
+    no outputs, and over a converted element array the converter's fail
+    Column reads whole element structs, which would widen the pruned scan.
+    So the fail half states the outcome statically: over struct-childs
+    output, ``filter_duplicates`` / ``Each`` take the non-array branch whose
+    fail is ``input.isNotNull()`` ≡ present; every other built-in has no
+    fail condition or is a SpecError of the violations compile.  Over an
+    element array no built-in converter fails."""
+    if not (isinstance(dt, T.StructType) or _string_keyed_map(dt)):
+        return False
+    return conv == "filter_duplicates" or isinstance(conv, Each)
 
 
 def _compile_rule(
     rule: Rule, scope: Scope, opts: Options, seq: _Seq
-) -> Tuple[Column, List[OutCol]]:
-    """One #rule: presence → validators → childs → convert
+) -> Tuple[Optional[Column], Column, List[OutCol]]:
+    """A rule's violations (None in a fail-only walk), its fail Column —
+    the OR of the conditions that guard its violation entries — and its
+    outputs.  One #rule: presence → validators → childs → convert
     (/root/reference/src/evalidate.erl:112-161)."""
+    from . import fastpath  # the fail half's pruned forms; it imports this module
+
     s = seq.next()
+    full = not seq.fail_only
     key = rule.key
     rule_id = "rule:%s" % (key if key is not None else "<top>")
     kp = _key_path(key, scope, opts)
-    kp_col = F.lit(kp if kp else None)
+    kp_col = F.lit(kp if kp else None) if full else None
+
+    def viol(message: Column, value_repr: Optional[Column] = None) -> Column:
+        return _viol_struct(s, rule_id, kp_col, message, value_repr, scope.span_index)
 
     # ---- resolve value
     if key is None:
@@ -1017,90 +1098,82 @@ def _compile_rule(
         missing_static = True
 
     entries: List[Column] = []
+    fails: List[Column] = []
     outs: List[OutCol] = []
 
     # ---- presence (/root/reference/src/evalidate.erl:112-128)
     if missing_static:
         if rule.presence == REQUIRED:
-            entries.append(
-                _entry_array(
-                    _viol_struct(
-                        s, rule_id, kp_col, F.lit(E.key_required_msg(kp)), None,
-                        scope.span_index,
-                    ).alias("v")
-                )
-            )
-        elif isinstance(rule.presence, Default):
+            fails.append(F.lit(True))
+            if full:
+                entries.append(_entry_array(viol(F.lit(E.key_required_msg(kp))).alias("v")))
+        elif isinstance(rule.presence, Default) and full:
             outs.append(_lit_out(key, rule.presence.value))
-        return (
-            F.concat(*entries) if entries else _empty_viols(),
-            outs,
-        )
+        return (_concat_viols(entries) if full else None), _any(fails), outs
 
-    is_missing = val.isNull() if key is not None else F.lit(False)
+    # the fail half may read a root array<struct>'s nullness and size from
+    # one subfield array (the pruned scan); the violations read the value
+    proxy = None
+    if scope.rooted and key is not None:
+        proxy = fastpath._proxy(rule, dt, scope.parents + (key,))
+    fval, fdt = proxy or (val, dt)
+    f_missing = fval.isNull() if key is not None else F.lit(False)
+    is_missing = val.isNull() if proxy and full else f_missing
+    present = ~is_missing
+    f_present = present if is_missing is f_missing else ~f_missing
 
     if rule.presence == REQUIRED:
-        entries.append(
-            _entry_array(
-                F.when(
-                    is_missing,
-                    _viol_struct(
-                        s, rule_id, kp_col, F.lit(E.key_required_msg(kp)), None,
-                        scope.span_index,
-                    ),
-                )
+        fails.append(f_missing)
+        if full:
+            entries.append(
+                _entry_array(F.when(is_missing, viol(F.lit(E.key_required_msg(kp)))))
             )
-        )
     elif rule.presence == DEPRECATED:
         # present → deprecated error; message uses the bare key
         # (/root/reference/src/evalidate.erl:123-124)
-        entries.append(
-            _entry_array(
-                F.when(
-                    ~is_missing,
-                    _viol_struct(
-                        s, rule_id, kp_col,
-                        F.lit(E.key_deprecated_msg(str(key))), None, scope.span_index,
-                    ),
-                )
+        if full:
+            entries.append(
+                _entry_array(F.when(present, viol(F.lit(E.key_deprecated_msg(str(key))))))
             )
-        )
-        return F.concat(*entries), []  # deprecated keys never reach output
+        # deprecated keys never reach output
+        return (_concat_viols(entries) if full else None), f_present, []
 
     # ---- validators
-    present = ~is_missing
     if rule.validators:
-        clauses = _compile_validators(list(rule.validators), val, dt, scope)
-        chain: Optional[Column] = None
-        for cl in clauses:
-            msg = cl.message
-            if rule.on_error is not None and not cl.error_kind:
-                msg = _render_on_error(rule.on_error, kp if key is not None else "none", val, dt)
-            cond = present & F.coalesce(cl.cond, F.lit(False))
-            chain = F.when(cond, msg) if chain is None else chain.when(cond, msg)
-        if chain is not None:
-            vrepr = c_maybe_cut(c_unscriptize(c_ts_repr(val, dt)))
-            entries.append(
-                _entry_array(
-                    F.when(
-                        chain.isNotNull(),
-                        _viol_struct(s, rule_id, kp_col, chain, vrepr, scope.span_index),
+        clauses = _compile_validators(list(rule.validators), fval, fdt, scope)
+        conds = [F.coalesce(cl.cond, F.lit(False)) for cl in clauses]
+        if conds:
+            fails.append(f_present & _any(conds))
+        if full:
+            if proxy:
+                clauses = _compile_validators(list(rule.validators), val, dt, scope)
+                conds = [F.coalesce(cl.cond, F.lit(False)) for cl in clauses]
+            chain: Optional[Column] = None
+            for cl, c in zip(clauses, conds):
+                if rule.on_error is not None and not cl.error_kind:
+                    msg = _render_on_error(
+                        rule.on_error, kp if key is not None else "none", val, dt
                     )
-                )
-            )
+                else:
+                    msg = cl.message()
+                chain = F.when(present & c, msg) if chain is None else chain.when(present & c, msg)
+            if chain is not None:
+                vrepr = c_maybe_cut(c_unscriptize(c_ts_repr(val, dt)))
+                entries.append(_entry_array(F.when(chain.isNotNull(), viol(chain, vrepr))))
 
     # ---- childs (/root/reference/src/evalidate.erl:145-155)
     child_struct_out: Optional[Column] = None
     child_struct_dt: Optional[T.DataType] = None
     if rule.childs:
+        parents = scope.parents + ((key,) if key else ())
         cscope = _child_scope(
-            val, dt, scope.parents + ((key,) if key else ()), scope.in_element,
-            scope.span_index,
+            val, dt, parents, scope.in_element, scope.span_index, scope.rooted
         )
         if cscope is not None:  # struct (fixed keys) or map (dynamic keys)
-            carrays, couts = _compile_rules(list(rule.childs), cscope, opts, seq)
-            child_v = F.concat(*carrays) if carrays else _empty_viols()
-            entries.append(F.when(present, child_v).otherwise(_empty_viols()))
+            carrays, cfail, couts = _compile_rules(list(rule.childs), cscope, opts, seq)
+            fails.append(f_present & cfail)
+            if full:
+                entries.append(F.when(present, _concat_viols(carrays)).otherwise(_empty_viols()))
             if couts:
                 child_struct_out = F.when(
                     present, F.struct(*[o.col.alias(o.name) for o in couts])
@@ -1109,68 +1182,56 @@ def _compile_rule(
                     [T.StructField(o.name, o.dtype) for o in couts]
                 )
         elif isinstance(dt, T.ArrayType) and (
-            isinstance(dt.elementType, T.StructType)
-            or (
-                isinstance(dt.elementType, T.MapType)
-                and isinstance(dt.elementType.keyType, T.StringType)
-            )
+            isinstance(dt.elementType, T.StructType) or _string_keyed_map(dt.elementType)
         ):
             edt = dt.elementType
-            parents = scope.parents + ((key,) if key else ())
-            carr, conv_elem, conv_dt = _compile_element_rules(
-                list(rule.childs), val, edt, parents, opts, seq
-            )
-            entries.append(F.when(present, carr).otherwise(_empty_viols()))
-            if conv_elem is not None:
-                child_struct_out = F.when(present, conv_elem)
-                child_struct_dt = T.ArrayType(conv_dt)
+            fails.append(f_present & fastpath._element_rules_fail(
+                list(rule.childs), val, edt, parents if scope.rooted else None, opts
+            ))
+            if full:
+                carr, conv_elem, conv_dt = _compile_element_rules(
+                    list(rule.childs), val, edt, parents, opts, seq
+                )
+                entries.append(F.when(present, carr).otherwise(_empty_viols()))
+                if conv_elem is not None:
+                    child_struct_out = F.when(present, conv_elem)
+                    child_struct_dt = T.ArrayType(conv_dt)
         else:
             # wrong childs (/root/reference/src/evalidate.erl:153-155)
-            entries.append(
-                _entry_array(
-                    F.when(
-                        present,
-                        _viol_struct(
-                            s, rule_id, kp_col,
-                            F.lit(E.TPL_WRONG_CHILDS.format(key=kp)), None,
-                            scope.span_index,
-                        ),
-                    )
-                )
-            )
+            fails.append(f_present)
+            if full:
+                entries.append(_entry_array(
+                    F.when(present, viol(F.lit(E.TPL_WRONG_CHILDS.format(key=kp))))
+                ))
+        if rule.converter != "no_return" and _childs_conv_fail(rule.converter, dt):
+            fails.append(f_present)
 
     # ---- converter (/root/reference/src/evalidate.erl:157-206)
-    if rule.converter == "no_return":
-        pass  # key dropped from output
-    else:
+    # a no_return key is dropped from output; a childs rule's converter
+    # fail is above
+    if rule.converter != "no_return" and (full or not rule.childs):
         conv_in = child_struct_out if child_struct_out is not None else val
         conv_dt_in = child_struct_dt if child_struct_dt is not None else dt
         cres = _compile_converter(rule.converter, conv_in, conv_dt_in, scope)
         if cres.fail is not None:
-            vrepr_ts = c_ts_repr(val, dt)
-            msg = F.concat(
-                F.lit("Couldn't convert value '"),
-                vrepr_ts,
-                F.lit("' for key '%s' " % (key if key is not None else "none")),
-            )
-            entries.append(
-                _entry_array(
-                    F.when(
-                        present & F.coalesce(cres.fail, F.lit(False)),
-                        _viol_struct(s, rule_id, kp_col, msg, None, scope.span_index),
-                    )
+            conv_fail = F.coalesce(cres.fail, F.lit(False))
+            guard = present & conv_fail
+            if not rule.childs:
+                fails.append(guard if f_present is present else f_present & conv_fail)
+            if full:
+                msg = F.concat(
+                    F.lit("Couldn't convert value '"),
+                    c_ts_repr(val, dt),
+                    F.lit("' for key '%s' " % (key if key is not None else "none")),
                 )
-            )
+                entries.append(_entry_array(F.when(guard, viol(msg))))
         if cres.custom_err is not None:
-            entries.append(
-                _entry_array(
-                    F.when(
-                        present & cres.custom_err.isNotNull(),
-                        _viol_struct(s, rule_id, kp_col, cres.custom_err, None,
-                                     scope.span_index),
-                    )
-                )
-            )
+            err = present & cres.custom_err.isNotNull()
+            fails.append(err)
+            if full:
+                entries.append(_entry_array(F.when(err, viol(cres.custom_err))))
+        if not full:
+            return None, _any(fails), outs
         out_expr = cres.out
         out_dt = cres.out_dtype
         if isinstance(rule.presence, Default):
@@ -1197,8 +1258,7 @@ def _compile_rule(
             # top-level rule: converted whole-row struct exposed as _root
             outs.append(OutCol("_root", out_expr, out_dt))
 
-    viols = F.concat(*entries) if entries else _empty_viols()
-    return viols, outs
+    return (_concat_viols(entries) if full else None), _any(fails), outs
 
 
 def _default_fits(value: Any, dt: T.DataType) -> bool:
@@ -1268,22 +1328,20 @@ def _compile_element_rules(
     violation arrays, flattened into the row's violations.  Catalyst keeps
     this in the same fused projection.  PySpark calls ``build`` exactly once
     to build the lambda, so that one compile advances the shared rule-seq
-    counter in depth-first order and names the converted element fields."""
+    counter in depth-first order and names the converted element fields.
+    Each element builds its violation structs only where the fail half of
+    that same compile holds."""
     elem_outs: List[OutCol] = []
 
     def build(e: Column, i: Column) -> Column:
         escope = _child_scope(e, edt, parents, True, i.cast("int"))
-        arrays, outs = _compile_rules(list(childs), escope, opts, seq)
+        arrays, fail, outs = _compile_rules(list(childs), escope, opts, seq)
         elem_outs.extend(outs)
         if not arrays:
             return _empty_viols()
-        v = F.concat(*arrays)
-        if seq.gate_elements:
-            from .fastpath import element_fail
-
-            fail = F.coalesce(element_fail(childs, e, edt, opts, parents), F.lit(False))
-            v = F.when(fail, v).otherwise(_empty_viols())
-        return v
+        return F.when(F.coalesce(fail, F.lit(False)), F.concat(*arrays)).otherwise(
+            _empty_viols()
+        )
 
     viols = F.flatten(F.transform(arr, build))
 
@@ -1294,7 +1352,7 @@ def _compile_element_rules(
         def conv_one(e: Column) -> Column:
             escope = _child_scope(e, edt, parents, True, None)
             # outputs carry no rule-seq, so a throwaway counter will do
-            _, outs = _compile_rules(list(childs), escope, opts, _Seq())
+            _, _, outs = _compile_rules(list(childs), escope, opts, _Seq())
             return F.struct(*[o.col.alias(o.name) for o in outs])
 
         conv_elem = F.transform(arr, conv_one)

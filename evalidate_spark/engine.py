@@ -36,8 +36,8 @@ from typing import Any, List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compiler import Compiled, Options, _empty_viols, compile_spec
-from .fastpath import _has_custom, compile_fail_predicate, partition_verdicts
+from .compiler import Compiled, Options, _compile, _empty_viols
+from .fastpath import _has_custom, partition_verdicts
 from .session import _require_ansi
 from .spec import normalize_rules
 
@@ -156,28 +156,26 @@ def validate(
     ``/root/reference/src/evv.erl:86-87,124-125``).
 
     ``gate_fast`` (default on) gates the rich path on the cheap
-    message-free fail predicate (:mod:`evalidate_spark.fastpath`): rows
-    with zero violations — the overwhelming majority at corpus scale —
-    evaluate only the boolean and skip message/struct building entirely,
-    and inside a failing row each array element builds its violation
-    structs only if its own fail condition holds.  ``verdicts``, ``clean``,
+    message-free fail predicate, the fail half of the same compile
+    (:mod:`evalidate_spark.fastpath`): rows with zero violations — the
+    overwhelming majority at corpus scale — evaluate only the boolean and
+    skip message/struct building entirely.  ``verdicts``, ``clean``,
     ``failed`` and ``enforce`` read the same predicate, so none of them
     builds a violation array to decide pass/fail; ``violations`` explodes
-    the gated array, so each row evaluates the predicate once.  The two
-    compilations are equivalence-tested, row by row and element by
-    element, so results are identical.  Gating is
-    skipped automatically for specs with custom pandas-UDF validators (the
-    UDF must not run twice); ``gate_fast=False`` is the fully ungated
-    reference."""
+    the gated array, so each row evaluates the predicate once.  Inside a
+    row, each array element builds its violation structs only if its own
+    fail half holds, gated or not.  Row gating is skipped automatically
+    for specs with custom pandas-UDF validators (the UDF must not run
+    twice); ``gate_fast=False`` is the row-ungated reference, tested row by
+    row against the gated path."""
     _require_ansi(df)
     opts = Options(mode=mode, parent_key=parent_key, keep_unruled=keep_unruled)
-    gate = gate_fast and not any(_has_custom(n) for n in normalize_rules(rules))
-    compiled = compile_spec(rules, df.schema, opts, gate_elements=gate)
+    compiled, row_fail = _compile(rules, df.schema, opts)
     ids = list(id_cols) if id_cols else [df.schema.fields[0].name]
     viols = compiled.violations
     fail = None
-    if gate:
-        fail = F.coalesce(compile_fail_predicate(rules, df.schema, opts), F.lit(False))
+    if gate_fast and not any(_has_custom(n) for n in normalize_rules(rules)):
+        fail = F.coalesce(row_fail, F.lit(False))
         viols = F.when(fail, viols).otherwise(_empty_viols())
     annotated = df.withColumn(VIOLATIONS_COL, viols).withColumn(
         FIRST_ERROR_COL, F.try_element_at(F.col(VIOLATIONS_COL), F.lit(1))
@@ -219,20 +217,20 @@ def validate_zipped(
 
     _require_ansi(df)
     opts = Options(mode=mode, parent_key=parent_key)
-    compiled = [compile_spec(rs, df.schema, opts) for rs in rulesets]
     rid = F.col("`%s`" % ruleset_id_col)
     # per-ruleset fast gating (same trick as validate()): passing rows —
-    # the vast majority — evaluate only the boolean predicate of their own
-    # rule-set and skip message/struct construction
-    viol_cols = [c.violations for c in compiled]
-    if gate_fast:
-        for i, rs in enumerate(rulesets):
-            if any(_has_custom(n) for n in normalize_rules(rs)):
-                continue
-            fail = compile_fail_predicate(rs, df.schema, opts)
-            viol_cols[i] = F.when(
-                F.coalesce(fail, F.lit(False)), viol_cols[i]
-            ).otherwise(_empty_viols())
+    # the vast majority — evaluate only the fail half of their own
+    # rule-set's compile and skip message/struct construction
+    compiled, viol_cols = [], []
+    for rs in rulesets:
+        c, fail = _compile(rs, df.schema, opts)
+        compiled.append(c)
+        if gate_fast and not any(_has_custom(n) for n in normalize_rules(rs)):
+            viol_cols.append(
+                F.when(F.coalesce(fail, F.lit(False)), c.violations).otherwise(_empty_viols())
+            )
+        else:
+            viol_cols.append(c.violations)
     bad_id = _entry_array(
         F.when(
             rid.isNull() | (rid < 0) | (rid >= len(rulesets)),

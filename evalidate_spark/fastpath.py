@@ -1,16 +1,28 @@
 """Predicate-only compilation — the full-corpus verdict scan path.
 
 ``compile_fail_predicate(rules, schema)`` compiles a rule tree to ONE
-boolean Column ("this row violates something") with **no message or
-value-repr construction**, and — crucially for scan cost — accesses
-array-of-struct children through *subfield array projections*
+boolean Column ("this row violates something") with **no violation struct,
+message or value-repr construction**, and — crucially for scan cost —
+accesses array-of-struct children through *subfield array projections*
 (``col("spans.kind")``) instead of element-struct lambdas, so Spark's
 nested schema pruning drops every unreferenced span field from the
 parquet scan.
 
-Why it exists: the rich path (:mod:`evalidate_spark.compiler`) builds a
-typed violations array whose ``value_repr`` references whole values, which
-(a) keeps all columns in the scan and (b) pays per-row struct/string
+One walk, two halves: the compiler's rule walk
+(:func:`evalidate_spark.compiler._compile_rules`) returns each rule node's
+fail Column next to its violations — for a rule the OR of the conditions
+guarding its violation entries, for a ``RuleOr`` the AND of its
+alternatives, for a ``RuleAnd`` the OR of its children.
+``compile_fail_predicate`` is a fail-only run of that walk; ``validate``
+takes the same fail half from the compile that builds its violations, and
+each array element gates its violation structs on its own fail half.
+This module holds the walk's pruned forms for root-addressable values:
+the subfield proxy of an ``array<struct>``'s ``Size``/``Type``
+(:func:`_proxy`) and the element checks over subfield arrays
+(:func:`_element_rules_fail`).
+
+Why it exists: the violations reference whole values in ``value_repr``,
+which (a) keeps all columns in the scan and (b) pays per-row struct/string
 construction.  For the 10^12-doc "did the corpus pass" scan none of that
 is needed.  Measured on the 2M-doc interleaved fixture (local[32]): rich
 verdicts ≈ 11 s, predicate-only ≈ 1.7 s with ReadSchema pruned from all
@@ -37,15 +49,13 @@ interpreter, so it is kept for what has no built-in form:
   one for its converter's failures, and one per presence check on a
   map/array/struct subfield.
 
-Semantics: ``fail_predicate == (size(violations) > 0)`` of the rich path
-— asserted in tests over the fixture with injected violations.  The same
-equivalence holds per array element: :func:`element_fail` of one element
-≡ ``size(that element's violations) > 0``, which is what lets the gated
-rich compile build violation structs only for failing elements.  Rules the
-predicate-only walker cannot express field-locally (cross-field checks
-inside array elements, custom pandas UDF validators, deep nesting inside
-arrays) fall back to an element-struct ``exists`` — still message-free,
-only the pruning narrows.
+Element rules with no field-local form (``RuleOr``/``RuleAnd``, childs,
+multi-key rules, map elements, and every element rule of an array that is
+not root-addressable — inside another array or a map) share one
+``exists`` over the element structs whose lambda runs the fail-only walk:
+still message-free, only the pruning narrows.  Specs with custom
+pandas-UDF validators or converters are rejected with ``SpecError``: their
+fail condition would run the UDF, so ``validate`` leaves them ungated.
 """
 
 from __future__ import annotations
@@ -58,10 +68,16 @@ from pyspark.sql import types as T
 from .compiler import (
     Options,
     Scope,
+    _any,
+    _child_scope,
     _compile_converter,
+    _compile_rules,
     _compile_validators,
     _is_number,
     _is_string,
+    _root_scope,
+    _Seq,
+    _string_keyed_map,
     _type_matches,
 )
 from .session import _require_ansi
@@ -71,7 +87,6 @@ from .spec import (
     Allowed,
     CustomConverter,
     CustomValidator,
-    Default,
     Each,
     Rule,
     RuleAnd,
@@ -83,32 +98,12 @@ from .spec import (
 )
 
 
-def _field_scope(names: dict, get) -> Scope:
-    return Scope(get=get, dtype_of=lambda k: names[k], has=lambda k: k in names)
-
-
-def _map_value_scope(parent: Column, dt: T.MapType) -> Scope:
-    """Dynamic-key scope over a map value (compiler parity: any key
-    resolves via try_element_at, typed as the map's value type)."""
-    vt = dt.valueType
-    return Scope(
-        get=lambda k, p=parent: p if k == "__row__" else F.try_element_at(p, F.lit(k)),
-        dtype_of=lambda k: vt,
-        has=lambda k: True,
-    )
-
-
-def _string_keyed_map(dt: T.DataType) -> bool:
-    return isinstance(dt, T.MapType) and isinstance(dt.keyType, T.StringType)
-
-
 def _clauses_fail(validators: Sequence[Any], col: Column, dt: T.DataType, scope: Scope) -> Column:
-    """OR of all validator fail conditions (messages built but never
-    referenced → they never reach the plan)."""
-    fail = F.lit(False)
-    for cl in _compile_validators(list(validators), col, dt, scope):
-        fail = fail | F.coalesce(cl.cond, F.lit(False))
-    return fail
+    """OR of all validator fail conditions."""
+    return _any([
+        F.coalesce(cl.cond, F.lit(False))
+        for cl in _compile_validators(list(validators), col, dt, scope)
+    ])
 
 
 def _custom_conv(conv: Any) -> bool:
@@ -137,15 +132,9 @@ def _has_custom(node: Any) -> bool:
 def _convert_fail(conv: Any, col: Column, dt: T.DataType, scope: Scope) -> Column:
     """Converter crash condition ("Couldn't convert …",
     /root/reference/src/evalidate.erl:176-178) — part of the row's fail
-    predicate.  Custom converters are rejected by :func:`_has_custom`
-    before we get here."""
-    if conv is None or conv == "no_return":
-        return F.lit(False)
+    predicate."""
     cres = _compile_converter(conv, col, dt, scope)
-    fail = F.lit(False)
-    if cres.fail is not None:
-        fail = fail | F.coalesce(cres.fail, F.lit(False))
-    return fail
+    return F.lit(False) if cres.fail is None else F.coalesce(cres.fail, F.lit(False))
 
 
 def _proxyable(v: Any) -> bool:
@@ -166,121 +155,22 @@ def _proxy_field(rule: Rule, edt: T.StructType) -> T.StructField:
     return edt.fields[0]
 
 
-def _rule_fail(
-    rule: Rule, scope: Scope, opts: Options, path: Tuple[str, ...],
-    in_element: bool = False,
-) -> Column:
-    keys: List[Optional[str]]
-    if rule.key is None:
-        keys = [None]
-    elif isinstance(rule.key, str):
-        keys = [rule.key]
-    else:
-        keys = list(rule.key)
-    fail = F.lit(False)
-    for k in keys:
-        fail = fail | _one_key_fail(rule, k, scope, opts, path, in_element)
-    return fail
-
-
-def _childs_conv_fail(conv: Any, dt: T.DataType) -> bool:
-    """Does the converter fail-condition fire for a rule WITH childs?
-
-    The rich path applies the converter to the child-shaped output
-    (``compiler._compile_rule`` conv_in = child struct / converted element
-    array).  Statically derivable: over a struct-childs output,
-    ``filter_duplicates`` / ``Each`` hit the non-array branch whose fail is
-    ``input.isNotNull()`` ≡ present; every other built-in either has no fail
-    condition (casts to string) or is rejected with a SpecError by the rich
-    compile before gating can matter.  Over array-childs output no built-in
-    converter produces a fail condition."""
-    if not (isinstance(dt, T.StructType) or _string_keyed_map(dt)):
-        return False
-    return conv == "filter_duplicates" or isinstance(conv, Each)
-
-
-def _one_key_fail(
-    rule: Rule, key: Optional[str], scope: Scope, opts: Options, path: Tuple[str, ...],
-    in_element: bool = False,
-) -> Column:
-    if key is None:
-        val, dt = scope.get("__row__"), T.StructType()
-        missing_static = False
-    elif scope.has(key):
-        val, dt = scope.get(key), scope.dtype_of(key)
-        missing_static = False
-    else:
-        if rule.presence == REQUIRED:
-            return F.lit(True)
-        return F.lit(False)
-
-    # Pruning proxy: for an array<struct> column whose own validators only
-    # look at nullness/size (Size, plain Type), swap in a subfield array —
-    # same size, same nullness — so the scan needn't read every span field.
-    orig_val = val  # childs fallback needs the real struct array
-    vval, vdt = val, dt
-    if (
-        not in_element  # root-relative F.col paths invalid inside HOF lambdas
-        and key is not None
-        and isinstance(dt, T.ArrayType)
+def _proxy(
+    rule: Rule, dt: T.DataType, path: Tuple[str, ...]
+) -> Optional[Tuple[Column, T.DataType]]:
+    """For the root-addressable ``array<struct>`` value at *path* whose own
+    validators only look at nullness and size (``Size``, plain ``Type``): a
+    subfield array — same size, same nullness — and its type, so the scan
+    needn't read every element field.  None otherwise."""
+    if not (
+        isinstance(dt, T.ArrayType)
         and isinstance(dt.elementType, T.StructType)
         and dt.elementType.fields
         and all(_proxyable(v) for v in (rule.validators or ()))
     ):
-        pf = _proxy_field(rule, dt.elementType)
-        vval = F.col(".".join(path + (key, pf.name)))
-        vdt = T.ArrayType(pf.dataType)
-        val = vval  # null/size checks below go through the proxy
-
-    is_missing = val.isNull() if key is not None else F.lit(False)
-    fail = F.lit(False)
-    if rule.presence == REQUIRED:
-        fail = fail | is_missing
-    elif rule.presence == DEPRECATED:
-        return ~is_missing  # present → deprecated violation; nothing else runs
-
-    present = ~is_missing
-    if rule.validators:
-        fail = fail | (present & _clauses_fail(rule.validators, vval, vdt, scope))
-    if not rule.childs:
-        fail = fail | (present & _convert_fail(rule.converter, orig_val, dt, scope))
-
-    if rule.childs:
-        if isinstance(dt, T.StructType) or _string_keyed_map(dt):
-            if isinstance(dt, T.StructType):
-                names = {f.name: f.dataType for f in dt.fields}
-                cscope = _field_scope(
-                    names, lambda k, v=val: v if k == "__row__" else v.getField(k)
-                )
-            else:
-                cscope = _map_value_scope(val, dt)
-            sub = F.lit(False)
-            for c in rule.childs:
-                sub = sub | _node_fail(
-                    c, cscope, opts, path + ((key,) if key else ()),
-                    in_element or _string_keyed_map(dt),
-                )
-            fail = fail | (present & sub)
-            # parent converter over the child-struct output (rich path:
-            # compiler._compile_rule conv over child_struct_out)
-            if _childs_conv_fail(rule.converter, dt):
-                fail = fail | present
-        elif isinstance(dt, T.ArrayType) and (
-            isinstance(dt.elementType, T.StructType)
-            or _string_keyed_map(dt.elementType)
-        ):
-            fail = fail | (
-                present
-                & _element_rules_fail(
-                    list(rule.childs), orig_val, dt.elementType,
-                    path + ((key,) if key else ()), opts, in_element
-                )
-            )
-            # no built-in converter has a fail condition over the converted
-            # element array (see _childs_conv_fail)
-        else:
-            fail = fail | present  # wrong childs
-    return fail
+        return None
+    pf = _proxy_field(rule, dt.elementType)
+    return F.col(".".join(path + (pf.name,))), T.ArrayType(pf.dataType)
 
 
 # ``array_except`` rebuilds a hash set of its right-hand array on every row,
@@ -343,11 +233,12 @@ def _element_rules_fail(
     childs: Sequence[Any],
     arr: Column,
     edt: T.DataType,
-    path: Tuple[str, ...],
+    path: Optional[Tuple[str, ...]],
     opts: Options,
-    in_element: bool = False,
 ) -> Column:
-    """Child rules over array<struct> elements.
+    """Fail half of child rules over the elements of the array *arr*
+    (``array<struct>`` or ``array<map<string,_>>``), found at the dotted
+    column *path*, or None when no column path reaches it.
 
     Pruning-friendly path: a child that is a plain single-key Rule with no
     further nesting gets compiled against the SUBFIELD ARRAY
@@ -355,18 +246,16 @@ def _element_rules_fail(
     subfields.  Its presence checks and :func:`_vector_fail` validators
     become collection built-ins that stay inside whole-stage codegen; its
     other validators share one ``exists``, its converter gets another.
-    Anything else falls back to an ``exists`` over the element struct
-    (correct, just unpruned)."""
+    Anything else falls back to an ``exists`` over the element struct whose
+    lambda runs the compiler's walk in fail-only mode (correct, just
+    unpruned)."""
     is_map = _string_keyed_map(edt)
     names = {} if is_map else {f.name: f.dataType for f in edt.fields}
-    fail = F.lit(False)
+    fails: List[Column] = []
     fallback: List[Any] = []
     for c in childs:
-        # the F.col(dotted-path) subfield-array form is only valid when the
-        # array itself is root-addressable; inside an element lambda (and
-        # over dynamic map elements) all childs go through the fallback
         simple = (
-            not in_element
+            path is not None
             and not is_map
             and isinstance(c, Rule)
             and isinstance(c.key, str)
@@ -379,16 +268,18 @@ def _element_rules_fail(
         k = c.key
         if k not in names:
             if c.presence == REQUIRED:
-                fail = fail | (F.size(arr) > 0)
+                fails.append(F.size(arr) > 0)
             continue
         sub = F.col(".".join(path + (k,)))  # array of the element field → pruned scan
         fdt = names[k]
-        fscope = _field_scope({k: fdt}, lambda kk, s=sub: s)
+        # validators that look up their own key get the subfield array
+        one = {k: fdt}
+        fscope = Scope(get=lambda kk, s=sub: s, dtype_of=one.__getitem__, has=one.__contains__)
         atomic = isinstance(fdt, _SET_TYPES)
         if c.presence == REQUIRED:
-            fail = fail | (_has_null(sub, fdt) if atomic else F.exists(sub, lambda e: e.isNull()))
+            fails.append(_has_null(sub, fdt) if atomic else F.exists(sub, lambda e: e.isNull()))
         elif c.presence == DEPRECATED:
-            fail = fail | (
+            fails.append(
                 _has_other(sub, (), fdt) if atomic else F.exists(sub, lambda e: e.isNotNull())
             )
             continue
@@ -398,87 +289,39 @@ def _element_rules_fail(
             if vf is None:
                 rest.append(v)
             else:
-                fail = fail | vf
+                fails.append(vf)
         if rest:
-            fail = fail | F.exists(
+            fails.append(F.exists(
                 sub, lambda e: e.isNotNull() & _clauses_fail(rest, e, fdt, fscope)
-            )
+            ))
         if c.converter not in (None, "no_return"):
             conv = c.converter
-            fail = fail | F.exists(
+            fails.append(F.exists(
                 sub, lambda e: e.isNotNull() & _convert_fail(conv, e, fdt, fscope)
-            )
+            ))
     if fallback:
-        fail = fail | F.exists(arr, lambda e: element_fail(fallback, e, edt, opts, path))
-    return fail
+        def fallback_fail(e: Column) -> Column:
+            escope = _child_scope(e, edt, (), True, None)
+            return _compile_rules(fallback, escope, opts, _Seq(fail_only=True))[1]
 
-
-def element_fail(
-    childs: Sequence[Any], e: Column, edt: T.DataType, opts: Options,
-    path: Tuple[str, ...] = (),
-) -> Column:
-    """Fail condition of ONE array element *e* (inside a higher-order
-    function lambda) under the element *childs* rules — message-free, and
-    ``≡ size(element's violations) > 0`` of the rich element compile
-    (``compiler._compile_element_rules`` gates each element's violation
-    builder on it)."""
-    if _string_keyed_map(edt):
-        escope = _map_value_scope(e, edt)
-    else:
-        names = {f.name: f.dataType for f in edt.fields}
-        escope = _field_scope(names, lambda k: e if k == "__row__" else e.getField(k))
-    fail = F.lit(False)
-    for c in childs:
-        fail = fail | _node_fail(c, escope, opts, path, in_element=True)
-    return fail
-
-
-def _node_fail(
-    node: Any, scope: Scope, opts: Options, path: Tuple[str, ...],
-    in_element: bool = False,
-) -> Column:
-    if isinstance(node, Rule):
-        return _rule_fail(node, scope, opts, path, in_element)
-    if isinstance(node, RuleAnd):
-        fail = F.lit(False)
-        for r in node.rules:
-            fail = fail | _node_fail(r, scope, opts, path, in_element)
-        return fail
-    if isinstance(node, RuleOr):
-        fail = F.lit(True)
-        for r in node.rules:
-            fail = fail & _node_fail(r, scope, opts, path, in_element)
-        return fail
-    raise SpecError("Unknown rule(s) '%r'" % (node,))
+        fails.append(F.exists(arr, fallback_fail))
+    return _any(fails)
 
 
 def compile_fail_predicate(
     rules: Any, schema: T.StructType, opts: Optional[Options] = None
 ) -> Column:
     """One boolean Column: True iff the row has ≥1 violation — message-free,
-    nested-pruning-friendly.  Custom pandas-UDF validators are supported at
-    the top level (their fail condition is kept, messages dropped)."""
-    opts = opts or Options()
+    nested-pruning-friendly: a fail-only run of the compiler's rule walk.
+    Raises ``SpecError`` on custom pandas-UDF validators or converters
+    (anywhere in the tree): their fail condition would run the UDF."""
     rules = normalize_rules(rules)
     if any(_has_custom(n) for n in rules):
         raise SpecError(
             "predicate-only compilation cannot express custom pandas-UDF "
             "validators/converters — use the rich validate() path"
         )
-    names = {f.name: f.dataType for f in schema.fields}
-
-    def get(k: str) -> Column:
-        if k == "__row__":
-            return F.struct(*[F.col("`%s`" % f.name) for f in schema.fields])
-        if k not in names:
-            raise KeyError(k)
-        return F.col("`%s`" % k)
-
-    scope = _field_scope(names, get)
-    fail = F.lit(False)
-    for node in rules:
-        fail = fail | _node_fail(node, scope, opts, ())
-    return fail
+    return _compile_rules(rules, _root_scope(schema), opts or Options(), _Seq(fail_only=True))[1]
 
 
 def _passes(fail: Column) -> Column:

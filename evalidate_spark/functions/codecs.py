@@ -243,4 +243,6 @@ def decode_wav(data: bytes) -> Tuple[np.ndarray, int]:
         pos += 8 + size + (size % 2)
     if rate is None or samples is None:
         raise ValueError("missing fmt/data chunk")
+    if rate == 0:
+        raise ValueError("WAV sample rate is 0")
     return samples, rate

@@ -33,6 +33,10 @@ from pyspark.sql import types as T
 
 from . import avi, codecs, mp4
 
+#: what the decoders raise on malformed or unsupported bytes: such a payload
+#: becomes a flagged stub row; anything else is a bug and propagates
+_BAD_BYTES = (ValueError, IndexError, struct.error, NotImplementedError)
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType()),
@@ -104,7 +108,7 @@ def decode_media(kind: str, payload: bytes, strict: bool = False) -> dict:
                     duration_ms=int(info.duration_ms),
                 )
                 return out
-        except Exception:
+        except _BAD_BYTES:
             pass
     if kind == "video" and mp4.is_mp4(payload):
         # MP4/ISO-BMFF: the box walk yields REAL header metadata (dims,
@@ -124,12 +128,11 @@ def decode_media(kind: str, payload: bytes, strict: bool = False) -> dict:
                     decoded=False,
                 )
                 return out
-        except (ValueError, IndexError, struct.error):
+        except _BAD_BYTES:
             # probe_mp4 raises ValueError on contract violations but can
             # surface IndexError/struct.error on truncated box payloads
             # (e.g. ftyp + empty mvhd) — a malformed payload must fall
-            # through to the stub path, never crash the Arrow stage.
-            # Anything else is a bug in the probe and propagates.
+            # through to the stub path, never crash the Arrow stage
             pass
     if kind == "audio" and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         try:
@@ -145,7 +148,7 @@ def decode_media(kind: str, payload: bytes, strict: bool = False) -> dict:
                 rms=round(rms, 6),
             )
             return out
-        except Exception:
+        except _BAD_BYTES:
             pass
     if strict:
         raise NotImplementedError(
@@ -322,7 +325,7 @@ def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                 if avi.is_avi(payload):
                     try:
                         frames, fps = avi.decode_avi(payload)
-                    except Exception:  # corrupt/unsupported → flagged stub
+                    except _BAD_BYTES:  # corrupt/unsupported → flagged stub
                         frames = None
                 if frames:
                     dur = int(round(len(frames) * 1000 / fps))
@@ -563,7 +566,7 @@ def probe_containers(media: DataFrame) -> DataFrame:
                     height=info.height,
                     duration_ms=info.duration_ms,
                 )
-        except Exception:
+        except _BAD_BYTES:
             out = dict.fromkeys(out, None)
             out["container"] = "corrupt:%s" % sniff
         return out

@@ -116,7 +116,7 @@ def _compile_value_rule(
         chain = F.when(col.isNull(), msg)
     if rule.validators:
         for cl in _compile_validators(list(rule.validators), col, dt, scope):
-            m = cl.message
+            m = cl.message()
             if rule.on_error is not None and not cl.error_kind:
                 m = _render_on_error(rule.on_error, "none", col, dt)
             cond = col.isNotNull() & F.coalesce(cl.cond, F.lit(False))

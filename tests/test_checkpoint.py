@@ -102,6 +102,18 @@ def test_profile_states_resume_and_merge(spark, input_dir, tmp_path):
     os.remove(os.path.join(mdir, sorted(os.listdir(mdir))[0]))
     run.run()
 
+    # the units holding a state are the state table's partition directories,
+    # and its schema is read from a part file's footer: no Spark job runs
+    sc = spark.sparkContext
+    sc.setJobGroup("states", "read-back of the profile states")
+    try:
+        states, done = run._states("profile")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("states") == []
+    assert done == sorted(run.completed_units()) == ["unit-%05d" % i for i in range(4)]
+    assert states.schema == spark.read.parquet(str(tmp_path / "p" / "profile_states")).schema
+
     merged = {r["column"]: r for r in run.profile().collect()}
     direct = {
         r["column"]: r

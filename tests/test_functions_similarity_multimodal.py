@@ -618,6 +618,31 @@ class TestCodecs:
         d = multimodal.decode_media("video", b"\x00opaque")
         assert d["decoded"] is False and d["duration_ms"] >= 1000
 
+    def test_wav_sample_rate_zero_is_bad_bytes(self):
+        # a zero rate used to reach len(samples) * 1000 / rate
+        from evalidate_spark.functions import codecs, multimodal
+
+        wav = codecs.encode_wav(np.zeros(100, dtype=np.int16), 0)
+        with pytest.raises(ValueError, match="sample rate is 0"):
+            codecs.decode_wav(wav)
+        assert multimodal.decode_media("audio", wav)["decoded"] is False
+
+    @pytest.mark.parametrize("kind, decoder", [("audio", "decode_wav"), ("video", "probe_avi")])
+    def test_decoder_bug_propagates(self, monkeypatch, kind, decoder):
+        # only bad bytes fall back to the stub; a bug in a decoder (here an
+        # AttributeError) must surface, not become a "corrupt" row
+        from evalidate_spark.functions import avi, codecs, multimodal
+
+        def broken(_data):
+            raise AttributeError("decoder bug")
+
+        frames = [np.zeros((4, 4, 3), dtype=np.uint8)]
+        payload = (codecs.encode_wav(np.zeros(100, dtype=np.int16), 4000) if kind == "audio"
+                   else avi.encode_avi_dib(frames))
+        monkeypatch.setattr(codecs if kind == "audio" else avi, decoder, broken)
+        with pytest.raises(AttributeError, match="decoder bug"):
+            multimodal.decode_media(kind, payload)
+
 
 class TestAviCodec:
     def _frames(self, n=3, h=10, w=13, seed=7):
