@@ -16,6 +16,13 @@ violations, so one compile also gives the row's fail predicate; a fail-only
 walk (:func:`evalidate_spark.fastpath.compile_fail_predicate`) builds
 nothing else.
 
+A session compiles a spec once: both walks are memoised on the canonical
+spec JSON, the schema JSON, the options, the walk and the Py4J gateway that
+owns the Columns (:func:`_cached`), so a repeat ``validate()`` of an equal
+spec builds no Column.  Specs whose JSON could stand for a different spec
+(custom pandas-UDF callables, hand-built ``Native`` validators, literals JSON
+cannot tell apart) compile afresh on every call.
+
 Fail-fast parity: the reference throws at the first violating rule in
 depth-first order (``/root/reference/src/evalidate.erl:211-212``).  We compute
 *all* violations per row (richer), ordered by depth-first ``rule_seq``, so the
@@ -28,8 +35,11 @@ bit-for-bit; see :mod:`evalidate_spark.errors`.
 from __future__ import annotations
 
 import functools
+import json
 import operator
-from dataclasses import dataclass, replace
+import threading
+from collections import OrderedDict
+from dataclasses import astuple, dataclass, replace
 from typing import Any, Callable, List, Optional, Sequence, Tuple
 
 import pandas as pd  # module-level so pandas_udf type hints resolve
@@ -38,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import errors as E
+from .spec_json import LIB_REGISTRY, rules_to_json
 from .spec import (
     DEPRECATED,
     OPTIONAL,
@@ -155,14 +166,20 @@ class Options:
     keep_unruled: bool = False  # reference drops unruled keys (suite :1703-1716)
 
 
-class _Seq:
-    """Per-compile state: the depth-first rule-seq counter, and whether the
-    walk builds only the fail half (no violation, message or output
-    Column)."""
+# what a walk builds: violations, fail halves and outputs (FULL); only the
+# fail halves (FAIL); only the outputs (OUTS)
+FULL, FAIL, OUTS = "full", "fail", "outs"
 
-    def __init__(self, fail_only: bool = False) -> None:
+
+class _Seq:
+    """Per-compile state: the depth-first rule-seq counter, and what the
+    walk builds (:data:`FULL`, :data:`FAIL` or :data:`OUTS`)."""
+
+    def __init__(self, walk: str = FULL) -> None:
         self.n = 0
-        self.fail_only = fail_only
+        self.viols = walk == FULL
+        self.fails = walk != OUTS
+        self.outs = walk != FAIL
 
     def next(self) -> int:
         self.n += 1
@@ -227,13 +244,21 @@ def _viol_struct(
     )
 
 
+_VIOLS_TYPE = T.ArrayType(T.StructType([
+    T.StructField(n, T.IntegerType() if n in ("rule_seq", "span_index") else T.StringType())
+    for n in VIOLATION_FIELDS
+]))
+_empty_viols_col: Tuple[Any, Optional[Column]] = (None, None)  # (gateway, Column)
+
+
 def _empty_viols() -> Column:
-    return F.expr(
-        "array()"
-    ).cast(
-        "array<struct<rule_seq:int,rule_id:string,key_path:string,"
-        "span_index:int,message:string,value_repr:string>>"
-    )
+    """The typed empty violations array, built once per gateway."""
+    global _empty_viols_col
+    owner, col = _empty_viols_col
+    if col is None or owner is not _owner():
+        col = F.array().cast(_VIOLS_TYPE)
+        _empty_viols_col = (_owner(), col)
+    return col
 
 
 def _entry_array(entry: Column) -> Column:
@@ -756,14 +781,26 @@ def compile_spec(rules: Any, schema: T.StructType, opts: Optional[Options] = Non
 def _compile(
     rules: Any, schema: T.StructType, opts: Optional[Options] = None
 ) -> Tuple[Compiled, Column]:
-    """One walk of *rules* against *schema*: the compiled violations and
-    outputs, and the row's message-free fail predicate (``fail ≡
+    """One walk of *rules* against *schema*, or the cached result of an
+    equal one: the compiled violations and outputs, and the row's
+    message-free fail predicate (``fail ≡
     size(violations) > 0``, NULL-free only after a coalesce) in the pruned
     form :func:`evalidate_spark.fastpath.compile_fail_predicate` gives."""
     opts = opts or Options()
+    compiled, fail = _cached(FULL, rules, schema, opts)
+    # a fresh Compiled and outputs, so no caller can change a cache entry
+    return replace(compiled, outputs=[replace(o) for o in compiled.outputs], opts=opts), fail
+
+
+def _walk(rules: Any, schema: T.StructType, opts: Options, walk: str) -> Any:
+    """The uncached walk of :func:`_cached`: for FULL the compiled
+    violations and outputs and the fail predicate, for FAIL the fail
+    predicate alone."""
     arrays, fail, outputs = _compile_rules(
-        normalize_rules(rules), _root_scope(schema), opts, _Seq()
+        normalize_rules(rules), _root_scope(schema), opts, _Seq(walk)
     )
+    if walk == FAIL:
+        return fail
     outputs = _merge_outputs(outputs)
     viols = _concat_viols(arrays)
     if opts.keep_unruled:
@@ -772,6 +809,150 @@ def _compile(
             if f_.name not in ruled:
                 outputs.append(OutCol(f_.name, F.col("`%s`" % f_.name), f_.dataType))
     return Compiled(violations=viols, outputs=outputs, opts=opts), fail
+
+
+# --------------------------------------------------------------------------
+# compile cache
+# --------------------------------------------------------------------------
+# entries kept, least recently used dropped first; a span-rules entry holds
+# a few thousand Py4J references
+_CACHE_SIZE = 32
+_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
+_cache_lock = threading.Lock()  # foreachBatch validates on Py4J's callback thread
+
+
+def _owner() -> Any:
+    """The Py4J gateway whose JVM holds the Columns built now (None with no
+    JVM).  A stopped JVM's Columns are dead, so entries are bound to it."""
+    from pyspark import SparkContext
+
+    return SparkContext._gateway
+
+
+def _cached(walk: str, rules: Any, schema: T.StructType, opts: Options) -> Any:
+    """:func:`_walk`, memoised while the spec key is exact and the gateway
+    the entry was built on is the current one (compared by identity)."""
+    key = _cache_key(walk, rules, schema, opts)
+    if key is None:
+        return _walk(rules, schema, opts, walk)
+    owner = _owner()
+    with _cache_lock:
+        hit = _cache.get(key)
+        if hit is not None and hit[0] is owner:
+            _cache.move_to_end(key)
+            return hit[1]
+    value = _walk(rules, schema, opts, walk)
+    with _cache_lock:
+        _cache[key] = (owner, value)
+        _cache.move_to_end(key)
+        if len(_cache) > _CACHE_SIZE:
+            _cache.popitem(last=False)
+    return value
+
+
+def _clear_cache() -> None:
+    with _cache_lock:
+        _cache.clear()
+
+
+def _cache_key(walk: str, rules: Any, schema: T.StructType, opts: Options) -> Optional[tuple]:
+    """The cache key of a compile, or None when two specs with this key
+    might compile differently."""
+    try:
+        nodes = normalize_rules(rules)
+        if not all(_exact_node(n) for n in nodes):
+            return None
+        key = (walk, rules_to_json(nodes, indent=None), schema.json(), astuple(opts))
+        hash(key)
+    except (TypeError, ValueError):  # SpecError is a ValueError
+        return None
+    return key
+
+
+_SCALARS = (str, int, float, bool, type(None))
+
+
+def _plain(x: Any) -> bool:
+    """JSON gives *x* back as it was: a str, int, float, bool or None, or a
+    list of those (a tuple or a dict key would come back changed)."""
+    if type(x) is list:
+        return all(_plain(y) for y in x)
+    return type(x) in _SCALARS
+
+
+def _plain_seq(xs: Any) -> bool:
+    return type(xs) in (list, tuple) and all(_plain(x) for x in xs)
+
+
+def _exact_node(node: Any) -> bool:
+    """Does the JSON of *node* say everything its compile reads?"""
+    if type(node) in (RuleAnd, RuleOr):
+        return (
+            type(node.rules) in (list, tuple)
+            and all(_exact_node(r) for r in node.rules)
+            and _plain(node.on_error)
+        )
+    if type(node) is not Rule:
+        return False
+    presence = node.presence
+    return (
+        (_plain(node.key) or _plain_seq(node.key))
+        and (type(presence) is str or (type(presence) is Default and _plain(presence.value)))
+        and type(node.validators) in (list, tuple)
+        and all(_exact_validator(v) for v in node.validators)
+        and _exact_converter(node.converter)
+        and type(node.childs) in (list, tuple)
+        and all(_exact_node(c) for c in node.childs)
+        and _plain(node.on_error)
+    )
+
+
+def _exact_converter(conv: Any) -> bool:
+    if type(conv) is Each:
+        return _exact_converter(conv.conv)
+    return conv is None or type(conv) is str
+
+
+def _exact_validator(v: Any) -> bool:
+    t = type(v)
+    if t is Type:
+        of = v.of
+        if type(of) is tuple and len(of) == 2 and of[0] == "list":
+            return type(of[1]) in (list, tuple) and all(_exact_validator(x) for x in of[1])
+        return _plain(of)
+    if t is Size:
+        return _plain(v.min) and _plain(v.max)
+    if t is Regexp:
+        return _plain(v.pattern)
+    if t is Allowed:
+        return _plain_seq(v.values)
+    if t is EqualToObjectOfOtherKeys:
+        return _plain_seq(v.keys)
+    if t is OrV:
+        return type(v.alternatives) in (list, tuple) and all(
+            _exact_validator(a) for a in v.alternatives
+        )
+    if t is Native:
+        return _registry_native(v)
+    return False  # CustomValidator: a Python callable
+
+
+def _registry_native(v: Native) -> bool:
+    """Was *v* built by its registry constructor from its recorded params?
+    A hand-built ``Native`` may reuse a registry name with another builder."""
+    ctor = LIB_REGISTRY.get(v.name) if type(v.name) is str else None
+    if ctor is None or not _plain_seq(v.params):
+        return False
+    try:
+        fresh = ctor(*v.params)
+    except (TypeError, ValueError):
+        return False
+    if fresh.name != v.name or getattr(v.build, "__code__", None) is not fresh.build.__code__:
+        return False
+    # the builder's closure holds what it was built from (bounds, values)
+    mine = [c.cell_contents for c in v.build.__closure__ or ()]
+    theirs = [c.cell_contents for c in fresh.build.__closure__ or ()]
+    return _plain(mine) and json.dumps(mine) == json.dumps(theirs)
 
 
 def _merge_outputs(outputs: List[OutCol]) -> List[OutCol]:
@@ -931,9 +1112,9 @@ def _concat_viols(arrays: Sequence[Column]) -> Column:
 def _compile_rules(
     rules: Sequence[Any], scope: Scope, opts: Options, seq: _Seq
 ) -> Tuple[List[Column], Column, List[OutCol]]:
-    """Compile *rules* in depth-first order: their violation arrays and
-    outputs (none in a fail-only walk), and their fail Column, the OR of
-    the nodes' fails."""
+    """Compile *rules* in depth-first order: their violation arrays, their
+    fail Column (the OR of the nodes' fails) and their outputs, each where
+    the walk builds it (None for an unbuilt fail)."""
     arrays: List[Column] = []
     fails: List[Column] = []
     outputs: List[OutCol] = []
@@ -955,7 +1136,8 @@ def _compile_rules(
         elif isinstance(node, RuleAnd):
             sub_arrays, sub_fail, sub_outputs = _compile_rules(list(node.rules), scope, opts, seq)
             fails.append(sub_fail)
-            if seq.fail_only:
+            outputs.extend(sub_outputs)
+            if not seq.viols:
                 continue
             combined = _concat_viols(sub_arrays)
             if node.on_error is not None:
@@ -968,7 +1150,6 @@ def _compile_rules(
                 arrays.append(_entry_array(entry))
             else:
                 arrays.append(combined)
-            outputs.extend(sub_outputs)
         elif isinstance(node, RuleOr):
             viols, fail = _compile_rule_or(node, scope, opts, seq, outputs)
             fails.append(fail)
@@ -976,7 +1157,7 @@ def _compile_rules(
                 arrays.append(viols)
         else:
             raise SpecError("Unknown rule(s) '%r'" % (node,))
-    return arrays, _any(fails), outputs
+    return arrays, _any(fails) if seq.fails else None, outputs
 
 
 def _compile_rule_or(
@@ -989,15 +1170,18 @@ def _compile_rule_or(
     outputs guarded by that alternative being the winner.  Its fail is the
     AND of the alternatives' fails."""
     s = seq.next()
+    # the winner is read off the alternatives' violations, so an
+    # outputs-only walk builds them too (it numbers nothing: a new counter)
+    alt_seq = seq if seq.fails else _Seq()
     alt_arrays: List[List[Column]] = []
     alt_fails: List[Column] = []
     alt_outs: List[List[OutCol]] = []
     for alt in node.rules:
-        sub_arrays, sub_fail, sub_outputs = _compile_rules([alt], scope, opts, seq)
+        sub_arrays, sub_fail, sub_outputs = _compile_rules([alt], scope, opts, alt_seq)
         alt_arrays.append(sub_arrays)
         alt_fails.append(sub_fail)
         alt_outs.append(sub_outputs)
-    if seq.fail_only:
+    if not seq.outs:
         return None, _all(alt_fails)
     alt_viols = [_concat_viols(a) for a in alt_arrays]
 
@@ -1010,17 +1194,6 @@ def _compile_rule_or(
         wins.append(prior_fail & ~f_)
         prior_fail = prior_fail & f_
     all_fail = prior_fail
-
-    if node.on_error is not None:
-        message: Column = F.lit(node.on_error)
-    else:
-        first_msgs = [F.try_element_at(v, F.lit(1)).getField("message") for v in alt_viols]
-        message = F.array_join(
-            F.array_distinct(F.reverse(F.array(*first_msgs))), " or "
-        )
-    entry = F.when(
-        all_fail, _viol_struct(s, "rule_or", None, message, None, scope.span_index)
-    )
 
     # winner-guarded outputs: only the WINNING alternative's outputs appear
     # (the oracle returns the first passing alternative's pairs alone)
@@ -1044,6 +1217,19 @@ def _compile_rule_or(
             present = present | emitted
         if chain is not None:
             outputs.append(OutCol(name, chain, dtype, present))
+    if not seq.viols:
+        return None, None
+
+    if node.on_error is not None:
+        message: Column = F.lit(node.on_error)
+    else:
+        first_msgs = [F.try_element_at(v, F.lit(1)).getField("message") for v in alt_viols]
+        message = F.array_join(
+            F.array_distinct(F.reverse(F.array(*first_msgs))), " or "
+        )
+    entry = F.when(
+        all_fail, _viol_struct(s, "rule_or", None, message, None, scope.span_index)
+    )
     return _entry_array(entry), _all(alt_fails)
 
 
@@ -1066,15 +1252,16 @@ def _childs_conv_fail(conv: Any, dt: T.DataType) -> bool:
 
 def _compile_rule(
     rule: Rule, scope: Scope, opts: Options, seq: _Seq
-) -> Tuple[Optional[Column], Column, List[OutCol]]:
-    """A rule's violations (None in a fail-only walk), its fail Column —
-    the OR of the conditions that guard its violation entries — and its
-    outputs.  One #rule: presence → validators → childs → convert
+) -> Tuple[Optional[Column], Optional[Column], List[OutCol]]:
+    """A rule's violations, its fail Column — the OR of the conditions that
+    guard its violation entries — and its outputs, each where the walk
+    builds it (else None or no outputs).  One #rule: presence → validators
+    → childs → convert
     (/root/reference/src/evalidate.erl:112-161)."""
     from . import fastpath  # the fail half's pruned forms; it imports this module
 
     s = seq.next()
-    full = not seq.fail_only
+    full = seq.viols
     key = rule.key
     rule_id = "rule:%s" % (key if key is not None else "<top>")
     kp = _key_path(key, scope, opts)
@@ -1101,20 +1288,25 @@ def _compile_rule(
     fails: List[Column] = []
     outs: List[OutCol] = []
 
+    def result(fail: Optional[Column] = None) -> Tuple[Any, Any, List[OutCol]]:
+        if fail is None and seq.fails:
+            fail = _any(fails)
+        return (_concat_viols(entries) if full else None), fail, outs
+
     # ---- presence (/root/reference/src/evalidate.erl:112-128)
     if missing_static:
-        if rule.presence == REQUIRED:
+        if rule.presence == REQUIRED and seq.fails:
             fails.append(F.lit(True))
             if full:
                 entries.append(_entry_array(viol(F.lit(E.key_required_msg(kp))).alias("v")))
-        elif isinstance(rule.presence, Default) and full:
+        elif isinstance(rule.presence, Default) and seq.outs:
             outs.append(_lit_out(key, rule.presence.value))
-        return (_concat_viols(entries) if full else None), _any(fails), outs
+        return result()
 
     # the fail half may read a root array<struct>'s nullness and size from
     # one subfield array (the pruned scan); the violations read the value
     proxy = None
-    if scope.rooted and key is not None:
+    if seq.fails and scope.rooted and key is not None:
         proxy = fastpath._proxy(rule, dt, scope.parents + (key,))
     fval, fdt = proxy or (val, dt)
     f_missing = fval.isNull() if key is not None else F.lit(False)
@@ -1136,10 +1328,10 @@ def _compile_rule(
                 _entry_array(F.when(present, viol(F.lit(E.key_deprecated_msg(str(key))))))
             )
         # deprecated keys never reach output
-        return (_concat_viols(entries) if full else None), f_present, []
+        return result(f_present)
 
     # ---- validators
-    if rule.validators:
+    if rule.validators and seq.fails:
         clauses = _compile_validators(list(rule.validators), fval, fdt, scope)
         conds = [F.coalesce(cl.cond, F.lit(False)) for cl in clauses]
         if conds:
@@ -1171,7 +1363,8 @@ def _compile_rule(
         )
         if cscope is not None:  # struct (fixed keys) or map (dynamic keys)
             carrays, cfail, couts = _compile_rules(list(rule.childs), cscope, opts, seq)
-            fails.append(f_present & cfail)
+            if seq.fails:
+                fails.append(f_present & cfail)
             if full:
                 entries.append(F.when(present, _concat_viols(carrays)).otherwise(_empty_viols()))
             if couts:
@@ -1185,14 +1378,16 @@ def _compile_rule(
             isinstance(dt.elementType, T.StructType) or _string_keyed_map(dt.elementType)
         ):
             edt = dt.elementType
-            fails.append(f_present & fastpath._element_rules_fail(
-                list(rule.childs), val, edt, parents if scope.rooted else None, opts
-            ))
-            if full:
+            if seq.fails:
+                fails.append(f_present & fastpath._element_rules_fail(
+                    list(rule.childs), val, edt, parents if scope.rooted else None, opts
+                ))
+            if seq.outs:
                 carr, conv_elem, conv_dt = _compile_element_rules(
                     list(rule.childs), val, edt, parents, opts, seq
                 )
-                entries.append(F.when(present, carr).otherwise(_empty_viols()))
+                if full:
+                    entries.append(F.when(present, carr).otherwise(_empty_viols()))
                 if conv_elem is not None:
                     child_struct_out = F.when(present, conv_elem)
                     child_struct_dt = T.ArrayType(conv_dt)
@@ -1209,11 +1404,11 @@ def _compile_rule(
     # ---- converter (/root/reference/src/evalidate.erl:157-206)
     # a no_return key is dropped from output; a childs rule's converter
     # fail is above
-    if rule.converter != "no_return" and (full or not rule.childs):
+    if rule.converter != "no_return" and (seq.outs or not rule.childs):
         conv_in = child_struct_out if child_struct_out is not None else val
         conv_dt_in = child_struct_dt if child_struct_dt is not None else dt
         cres = _compile_converter(rule.converter, conv_in, conv_dt_in, scope)
-        if cres.fail is not None:
+        if cres.fail is not None and seq.fails:
             conv_fail = F.coalesce(cres.fail, F.lit(False))
             guard = present & conv_fail
             if not rule.childs:
@@ -1225,13 +1420,13 @@ def _compile_rule(
                     F.lit("' for key '%s' " % (key if key is not None else "none")),
                 )
                 entries.append(_entry_array(F.when(guard, viol(msg))))
-        if cres.custom_err is not None:
+        if cres.custom_err is not None and seq.fails:
             err = present & cres.custom_err.isNotNull()
             fails.append(err)
             if full:
                 entries.append(_entry_array(F.when(err, viol(cres.custom_err))))
-        if not full:
-            return None, _any(fails), outs
+        if not seq.outs:
+            return result()
         out_expr = cres.out
         out_dt = cres.out_dtype
         if isinstance(rule.presence, Default):
@@ -1258,7 +1453,7 @@ def _compile_rule(
             # top-level rule: converted whole-row struct exposed as _root
             outs.append(OutCol("_root", out_expr, out_dt))
 
-    return (_concat_viols(entries) if full else None), _any(fails), outs
+    return result()
 
 
 def _default_fits(value: Any, dt: T.DataType) -> bool:
@@ -1318,43 +1513,44 @@ def _compile_element_rules(
     parents: Tuple[str, ...],
     opts: Options,
     seq: _Seq,
-) -> Tuple[Column, Optional[Column], T.DataType]:
+) -> Tuple[Optional[Column], Optional[Column], T.DataType]:
     """Child rules mapped over every element of an array<struct> (the spans
     pattern — reference 'rules over object lists',
     /root/reference/src/evalidate.erl:48-49, suite :1231-1279) or
-    array<map<string,_>> (dynamic-key objects).
+    array<map<string,_>> (dynamic-key objects): the row's element
+    violations (None unless the walk builds violations), and the converted
+    elements and their type (None when the element rules output nothing).
 
     Explode-free: one `transform` with an index lambda produces per-element
     violation arrays, flattened into the row's violations.  Catalyst keeps
     this in the same fused projection.  PySpark calls ``build`` exactly once
     to build the lambda, so that one compile advances the shared rule-seq
-    counter in depth-first order and names the converted element fields.
-    Each element builds its violation structs only where the fail half of
-    that same compile holds."""
+    counter in depth-first order.  Each element builds its violation
+    structs only where the fail half of that same compile holds.  The
+    converted elements come from a second, outputs-only walk."""
+    viols: Optional[Column] = None
+    if seq.viols:
+
+        def build(e: Column, i: Column) -> Column:
+            escope = _child_scope(e, edt, parents, True, i.cast("int"))
+            arrays, fail, _ = _compile_rules(list(childs), escope, opts, seq)
+            if not arrays:
+                return _empty_viols()
+            return F.when(F.coalesce(fail, F.lit(False)), F.concat(*arrays)).otherwise(
+                _empty_viols()
+            )
+
+        viols = F.flatten(F.transform(arr, build))
+
     elem_outs: List[OutCol] = []
 
-    def build(e: Column, i: Column) -> Column:
-        escope = _child_scope(e, edt, parents, True, i.cast("int"))
-        arrays, fail, outs = _compile_rules(list(childs), escope, opts, seq)
-        elem_outs.extend(outs)
-        if not arrays:
-            return _empty_viols()
-        return F.when(F.coalesce(fail, F.lit(False)), F.concat(*arrays)).otherwise(
-            _empty_viols()
-        )
+    def conv_one(e: Column) -> Column:
+        escope = _child_scope(e, edt, parents, True, None)
+        # outputs carry no rule-seq, so a throwaway counter will do
+        elem_outs.extend(_compile_rules(list(childs), escope, opts, _Seq(OUTS))[2])
+        return F.struct(*[o.col.alias(o.name) for o in elem_outs])
 
-    viols = F.flatten(F.transform(arr, build))
-
-    conv_elem: Optional[Column] = None
-    conv_dt: T.DataType = edt
-    if elem_outs:
-
-        def conv_one(e: Column) -> Column:
-            escope = _child_scope(e, edt, parents, True, None)
-            # outputs carry no rule-seq, so a throwaway counter will do
-            _, _, outs = _compile_rules(list(childs), escope, opts, _Seq())
-            return F.struct(*[o.col.alias(o.name) for o in outs])
-
-        conv_elem = F.transform(arr, conv_one)
-        conv_dt = T.StructType([T.StructField(o.name, o.dtype) for o in elem_outs])
-    return viols, conv_elem, conv_dt
+    conv_elem = F.transform(arr, conv_one)
+    if not elem_outs:
+        return viols, None, edt
+    return viols, conv_elem, T.StructType([T.StructField(o.name, o.dtype) for o in elem_outs])

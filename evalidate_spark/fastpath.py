@@ -66,16 +66,17 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from .compiler import (
+    FAIL,
     Options,
     Scope,
     _any,
     _child_scope,
+    _cached,
     _compile_converter,
     _compile_rules,
     _compile_validators,
     _is_number,
     _is_string,
-    _root_scope,
     _Seq,
     _string_keyed_map,
     _type_matches,
@@ -302,7 +303,7 @@ def _element_rules_fail(
     if fallback:
         def fallback_fail(e: Column) -> Column:
             escope = _child_scope(e, edt, (), True, None)
-            return _compile_rules(fallback, escope, opts, _Seq(fail_only=True))[1]
+            return _compile_rules(fallback, escope, opts, _Seq(FAIL))[1]
 
         fails.append(F.exists(arr, fallback_fail))
     return _any(fails)
@@ -321,7 +322,7 @@ def compile_fail_predicate(
             "predicate-only compilation cannot express custom pandas-UDF "
             "validators/converters — use the rich validate() path"
         )
-    return _compile_rules(rules, _root_scope(schema), opts or Options(), _Seq(fail_only=True))[1]
+    return _cached(FAIL, rules, schema, opts or Options())
 
 
 def _passes(fail: Column) -> Column:

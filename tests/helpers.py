@@ -10,11 +10,16 @@ Runs the Spark engine and the pure-Python oracle on the same rows and asserts:
   throws a structured payload the key path matches too.
 
 Rows are keyed by a synthetic ``__idx`` column so matching is exact.
+
+Also :func:`py4j_round_trips`, a count of the commands a block sends to the
+JVM.
 """
 
 from __future__ import annotations
 
-from typing import Any, List
+from contextlib import contextmanager
+from types import SimpleNamespace
+from typing import Any, Iterator, List
 
 from evalidate_spark import validate
 from evalidate_spark import oracle as O
@@ -115,3 +120,25 @@ def assert_parity(spark, rules: Any, rows: List[dict], schema: str, parent_key: 
                 assert first["key_path"] == expect_err["key"], (
                     f"row {i}: key path {first['key_path']!r} != {expect_err['key']!r}"
                 )
+
+
+@contextmanager
+def py4j_round_trips(spark) -> Iterator[SimpleNamespace]:
+    """Count the Py4J commands (round trips) the block sends to the JVM, as
+    ``.n`` of the yielded object.  Memory-release commands (``m\\n…``) are
+    not counted: the finalizer sends them whenever Python collects a
+    JavaObject, so their number follows GC timing, not the code."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    count = SimpleNamespace(n=0)
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            count.n += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield count
+    finally:
+        del client.send_command
