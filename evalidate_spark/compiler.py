@@ -34,7 +34,9 @@ bit-for-bit; see :mod:`evalidate_spark.errors`.
 
 from __future__ import annotations
 
+import copy
 import functools
+import itertools
 import json
 import operator
 import threading
@@ -161,7 +163,6 @@ def c_ts_repr(col: Column, dt: T.DataType) -> Column:
 # --------------------------------------------------------------------------
 @dataclass
 class Options:
-    mode: str = "soft"  # 'soft' | 'hard'  (/root/reference/src/evalidate.erl:22-34)
     parent_key: bool = True  # dotted key paths in messages (:267-279)
     keep_unruled: bool = False  # reference drops unruled keys (suite :1703-1716)
 
@@ -176,14 +177,19 @@ class _Seq:
     walk builds (:data:`FULL`, :data:`FAIL` or :data:`OUTS`)."""
 
     def __init__(self, walk: str = FULL) -> None:
-        self.n = 0
+        self._count = itertools.count(1)
         self.viols = walk == FULL
         self.fails = walk != OUTS
         self.outs = walk != FAIL
 
     def next(self) -> int:
-        self.n += 1
-        return self.n
+        return next(self._count)
+
+    def checks(self) -> "_Seq":
+        """This walk without its outputs, numbering on the same counter."""
+        seq = copy.copy(self)
+        seq.outs = False
+        return seq
 
 
 @dataclass
@@ -221,7 +227,6 @@ class Compiled:
 
     violations: Column  # array<struct<...>> in depth-first order
     outputs: List[OutCol]
-    opts: Options
 
 
 def _viol_struct(
@@ -789,7 +794,7 @@ def _compile(
     opts = opts or Options()
     compiled, fail = _cached(FULL, rules, schema, opts)
     # a fresh Compiled and outputs, so no caller can change a cache entry
-    return replace(compiled, outputs=[replace(o) for o in compiled.outputs], opts=opts), fail
+    return replace(compiled, outputs=[replace(o) for o in compiled.outputs]), fail
 
 
 def _walk(rules: Any, schema: T.StructType, opts: Options, walk: str) -> Any:
@@ -801,14 +806,13 @@ def _walk(rules: Any, schema: T.StructType, opts: Options, walk: str) -> Any:
     )
     if walk == FAIL:
         return fail
-    outputs = _merge_outputs(outputs)
     viols = _concat_viols(arrays)
     if opts.keep_unruled:
         ruled = {o.name for o in outputs}
         for f_ in schema.fields:
             if f_.name not in ruled:
                 outputs.append(OutCol(f_.name, F.col("`%s`" % f_.name), f_.dataType))
-    return Compiled(violations=viols, outputs=outputs, opts=opts), fail
+    return Compiled(violations=viols, outputs=outputs), fail
 
 
 # --------------------------------------------------------------------------
@@ -955,38 +959,42 @@ def _registry_native(v: Native) -> bool:
     return _plain(mine) and json.dumps(mine) == json.dumps(theirs)
 
 
-def _merge_outputs(outputs: List[OutCol]) -> List[OutCol]:
-    """Collapse duplicate output keys the way ``dict(pairs)`` does over the
-    reference's proplist: per row, the LAST rule that actually emitted a
-    pair for the key wins; keys keep their first position.  Conflicting
-    Spark types across duplicates cannot share one typed column — config
-    error (documented divergence from the untyped reference)."""
+def _merge_outputs(branches: Sequence[Tuple[Optional[Column], OutCol]]) -> List[OutCol]:
+    """The one rule for same-named outputs, over ``(guard, output)``
+    branches in emission order (a None guard always holds).  The
+    reference's output is a proplist read as ``dict(pairs)`` at every
+    depth: per row, the LAST branch that emitted a pair for the key wins,
+    and keys keep their first position.  A key emitted once, unguarded,
+    keeps its OutCol.  Conflicting Spark types cannot share one typed
+    column — a config error (documented divergence from the untyped
+    reference)."""
     groups: dict = {}
-    order: List[str] = []
-    for o in outputs:
-        if o.name not in groups:
-            order.append(o.name)
-        groups.setdefault(o.name, []).append(o)
+    for guard, o in branches:
+        groups.setdefault(o.name, []).append((guard, o))
     merged: List[OutCol] = []
-    for name in order:
-        occ = groups[name]
-        if len(occ) == 1:
-            merged.append(occ[0])
+    for name, occ in groups.items():
+        if len(occ) == 1 and occ[0][0] is None:
+            merged.append(occ[0][1])
             continue
-        dts = {o.dtype.simpleString() for o in occ if not isinstance(o.dtype, T.NullType)}
+        dts = {o.dtype.simpleString() for _, o in occ if not isinstance(o.dtype, T.NullType)}
         if len(dts) > 1:
             raise SpecError(
                 "conflicting output types for key '%s': %s" % (name, sorted(dts))
             )
         expr: Column = F.lit(None)
         present: Optional[Column] = F.lit(False)
-        for o in occ:  # earliest → latest; later wraps earlier as fallback
-            if o.present is None:
+        for guard, o in occ:  # earliest → latest; later wraps earlier as fallback
+            emitted = o.present if guard is None else (
+                guard if o.present is None else guard & o.present
+            )
+            if emitted is None:
                 expr, present = o.col, None
             else:
-                expr = F.when(o.present, o.col).otherwise(expr)
-                present = None if present is None else (present | o.present)
-        dtype = next((o.dtype for o in occ if not isinstance(o.dtype, T.NullType)), occ[-1].dtype)
+                expr = F.when(emitted, o.col).otherwise(expr)
+                present = None if present is None else (present | emitted)
+        dtype = next(
+            (o.dtype for _, o in occ if not isinstance(o.dtype, T.NullType)), occ[-1][1].dtype
+        )
         merged.append(OutCol(name, expr, dtype, present))
     return merged
 
@@ -1113,8 +1121,9 @@ def _compile_rules(
     rules: Sequence[Any], scope: Scope, opts: Options, seq: _Seq
 ) -> Tuple[List[Column], Column, List[OutCol]]:
     """Compile *rules* in depth-first order: their violation arrays, their
-    fail Column (the OR of the nodes' fails) and their outputs, each where
-    the walk builds it (None for an unbuilt fail)."""
+    fail Column (the OR of the nodes' fails) and their merged outputs
+    (:func:`_merge_outputs`), each where the walk builds it (None for an
+    unbuilt fail)."""
     arrays: List[Column] = []
     fails: List[Column] = []
     outputs: List[OutCol] = []
@@ -1151,86 +1160,67 @@ def _compile_rules(
             else:
                 arrays.append(combined)
         elif isinstance(node, RuleOr):
-            viols, fail = _compile_rule_or(node, scope, opts, seq, outputs)
+            viols, fail, outs = _compile_rule_or(node, scope, opts, seq)
             fails.append(fail)
             if viols is not None:
                 arrays.append(viols)
+            outputs.extend(outs)
         else:
             raise SpecError("Unknown rule(s) '%r'" % (node,))
-    return arrays, _any(fails) if seq.fails else None, outputs
+    merged = _merge_outputs([(None, o) for o in outputs])
+    return arrays, _any(fails) if seq.fails else None, merged
 
 
-def _compile_rule_or(
-    node: RuleOr, scope: Scope, opts: Options, seq: _Seq, outputs: List[OutCol]
-) -> Tuple[Optional[Column], Column]:
-    """First passing alternative wins; all-fail → first-error messages of
-    each alternative deduped + joined ' or ' in reverse trial order
-    (/root/reference/src/evalidate.erl:74-84,251-265).  Output columns:
-    alternatives usually target the same key; we emit each alternative's
-    outputs guarded by that alternative being the winner.  Its fail is the
-    AND of the alternatives' fails."""
-    s = seq.next()
-    # the winner is read off the alternatives' violations, so an
-    # outputs-only walk builds them too (it numbers nothing: a new counter)
-    alt_seq = seq if seq.fails else _Seq()
-    alt_arrays: List[List[Column]] = []
-    alt_fails: List[Column] = []
-    alt_outs: List[List[OutCol]] = []
-    for alt in node.rules:
-        sub_arrays, sub_fail, sub_outputs = _compile_rules([alt], scope, opts, alt_seq)
-        alt_arrays.append(sub_arrays)
-        alt_fails.append(sub_fail)
-        alt_outs.append(sub_outputs)
-    if not seq.outs:
-        return None, _all(alt_fails)
-    alt_viols = [_concat_viols(a) for a in alt_arrays]
-
-    fails = [F.size(v) > 0 for v in alt_viols]
-    # winner = first passing alternative (reference tries them in order,
-    # /root/reference/src/evalidate.erl:251-259)
+def _rule_or_outcome(
+    node: RuleOr,
+    alt_viols: Sequence[Column],
+    s: int,
+    key_path: Optional[Column],
+    span_index: Optional[Column],
+    viols: bool = True,
+) -> Tuple[List[Column], Optional[Column]]:
+    """A RuleOr's per-row winner flags (the first passing alternative wins,
+    reference ``src/evalidate.erl:251-259``) and, where *viols*, its
+    violation array: on all-fail, ``on_error`` or the alternatives' first
+    messages deduped and joined ``" or "`` in reverse trial order
+    (``src/evalidate.erl:74-84,260-265``)."""
     wins: List[Column] = []
-    prior_fail: Column = F.lit(True)
-    for f_ in fails:
-        wins.append(prior_fail & ~f_)
-        prior_fail = prior_fail & f_
-    all_fail = prior_fail
-
-    # winner-guarded outputs: only the WINNING alternative's outputs appear
-    # (the oracle returns the first passing alternative's pairs alone)
-    names = []
-    for outs in alt_outs:
-        for o in outs:
-            if o.name not in names:
-                names.append(o.name)
-    for name in names:
-        dtype: T.DataType = T.NullType()
-        chain = None
-        present: Column = F.lit(False)
-        for win, outs in zip(wins, alt_outs):
-            match = [o for o in outs if o.name == name]
-            if not match:
-                continue
-            o = match[0]
-            dtype = o.dtype
-            emitted = win if o.present is None else (win & o.present)
-            chain = F.when(emitted, o.col) if chain is None else chain.when(emitted, o.col)
-            present = present | emitted
-        if chain is not None:
-            outputs.append(OutCol(name, chain, dtype, present))
-    if not seq.viols:
-        return None, None
-
+    all_fail: Column = F.lit(True)
+    for v in alt_viols:
+        failed = F.size(v) > 0
+        wins.append(all_fail & ~failed)
+        all_fail = all_fail & failed
+    if not viols:
+        return wins, None
     if node.on_error is not None:
         message: Column = F.lit(node.on_error)
     else:
         first_msgs = [F.try_element_at(v, F.lit(1)).getField("message") for v in alt_viols]
-        message = F.array_join(
-            F.array_distinct(F.reverse(F.array(*first_msgs))), " or "
-        )
-    entry = F.when(
-        all_fail, _viol_struct(s, "rule_or", None, message, None, scope.span_index)
+        message = F.array_join(F.array_distinct(F.reverse(F.array(*first_msgs))), " or ")
+    entry = F.when(all_fail, _viol_struct(s, "rule_or", key_path, message, None, span_index))
+    return wins, _entry_array(entry)
+
+
+def _compile_rule_or(
+    node: RuleOr, scope: Scope, opts: Options, seq: _Seq
+) -> Tuple[Optional[Column], Optional[Column], List[OutCol]]:
+    """A RuleOr's violations (:func:`_rule_or_outcome`), its fail — the AND
+    of the alternatives' fails — and the winning alternative's outputs
+    alone, each where the walk builds it."""
+    s = seq.next()
+    # the winner is read off the alternatives' violations, so an
+    # outputs-only walk builds them too (it numbers nothing: a new counter)
+    alts = [
+        _compile_rules([alt], scope, opts, seq if seq.fails else _Seq()) for alt in node.rules
+    ]
+    fail = _all([a[1] for a in alts]) if seq.fails else None
+    if not (seq.viols or seq.outs):
+        return None, fail, []
+    wins, viols = _rule_or_outcome(
+        node, [_concat_viols(a[0]) for a in alts], s, None, scope.span_index, seq.viols
     )
-    return _entry_array(entry), _all(alt_fails)
+    outs = [(win, o) for win, a in zip(wins, alts) for o in a[2]] if seq.outs else []
+    return viols, fail, _merge_outputs(outs)
 
 
 def _childs_conv_fail(conv: Any, dt: T.DataType) -> bool:
@@ -1382,7 +1372,7 @@ def _compile_rule(
                 fails.append(f_present & fastpath._element_rules_fail(
                     list(rule.childs), val, edt, parents if scope.rooted else None, opts
                 ))
-            if seq.outs:
+            if seq.viols or seq.outs:
                 carr, conv_elem, conv_dt = _compile_element_rules(
                     list(rule.childs), val, edt, parents, opts, seq
                 )
@@ -1403,8 +1393,10 @@ def _compile_rule(
 
     # ---- converter (/root/reference/src/evalidate.erl:157-206)
     # a no_return key is dropped from output; a childs rule's converter
-    # fail is above
-    if rule.converter != "no_return" and (seq.outs or not rule.childs):
+    # fail is above.  A walk without outputs converts a childs rule's
+    # input, not its childs' outputs: no built-in converter fails
+    # differently on the two (see _childs_conv_fail)
+    if rule.converter != "no_return" and (seq.viols or seq.outs or not rule.childs):
         conv_in = child_struct_out if child_struct_out is not None else val
         conv_dt_in = child_struct_dt if child_struct_dt is not None else dt
         cres = _compile_converter(rule.converter, conv_in, conv_dt_in, scope)
@@ -1519,21 +1511,24 @@ def _compile_element_rules(
     /root/reference/src/evalidate.erl:48-49, suite :1231-1279) or
     array<map<string,_>> (dynamic-key objects): the row's element
     violations (None unless the walk builds violations), and the converted
-    elements and their type (None when the element rules output nothing).
+    elements and their type (None when the walk builds no outputs or the
+    element rules output nothing).
 
     Explode-free: one `transform` with an index lambda produces per-element
     violation arrays, flattened into the row's violations.  Catalyst keeps
     this in the same fused projection.  PySpark calls ``build`` exactly once
     to build the lambda, so that one compile advances the shared rule-seq
-    counter in depth-first order.  Each element builds its violation
-    structs only where the fail half of that same compile holds.  The
-    converted elements come from a second, outputs-only walk."""
+    counter in depth-first order; it builds no outputs.  Each element
+    builds its violation structs only where the fail half of that same
+    compile holds.  The converted elements come from a second,
+    outputs-only walk."""
     viols: Optional[Column] = None
     if seq.viols:
+        checks = seq.checks()
 
         def build(e: Column, i: Column) -> Column:
             escope = _child_scope(e, edt, parents, True, i.cast("int"))
-            arrays, fail, _ = _compile_rules(list(childs), escope, opts, seq)
+            arrays, fail, _ = _compile_rules(list(childs), escope, opts, checks)
             if not arrays:
                 return _empty_viols()
             return F.when(F.coalesce(fail, F.lit(False)), F.concat(*arrays)).otherwise(
@@ -1541,6 +1536,8 @@ def _compile_element_rules(
             )
 
         viols = F.flatten(F.transform(arr, build))
+    if not seq.outs:
+        return viols, None, edt
 
     elem_outs: List[OutCol] = []
 

@@ -30,13 +30,22 @@ partial agg → final agg; AQE handles output coalescing.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Any, List, Optional, Sequence
+from dataclasses import dataclass, replace
+from typing import Any, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compiler import Compiled, Options, _compile, _empty_viols
+from .compiler import (
+    Compiled,
+    Options,
+    OutCol,
+    _compile,
+    _empty_viols,
+    _entry_array,
+    _merge_outputs,
+    _viol_struct,
+)
 from .fastpath import _has_custom, partition_verdicts
 from .session import _require_ansi
 from .spec import normalize_rules
@@ -144,7 +153,6 @@ def validate(
     df: DataFrame,
     rules: Any,
     *,
-    mode: str = "soft",
     parent_key: bool = True,
     keep_unruled: bool = False,
     id_cols: Optional[Sequence[str]] = None,
@@ -169,19 +177,42 @@ def validate(
     twice); ``gate_fast=False`` is the row-ungated reference, tested row by
     row against the gated path."""
     _require_ansi(df)
-    opts = Options(mode=mode, parent_key=parent_key, keep_unruled=keep_unruled)
+    opts = Options(parent_key=parent_key, keep_unruled=keep_unruled)
+    compiled, fail = _gated(df, rules, opts, gate_fast)
+    return _result(df, compiled, id_cols, fail)
+
+
+def _gated(
+    df: DataFrame, rules: Any, opts: Options, gate_fast: bool
+) -> Tuple[Compiled, Optional[Column]]:
+    """Compile *rules* against ``df.schema``: the compiled spec with its
+    violations gated on its fail predicate, and that never-NULL predicate
+    (ungated and None without gating)."""
     compiled, row_fail = _compile(rules, df.schema, opts)
-    ids = list(id_cols) if id_cols else [df.schema.fields[0].name]
-    viols = compiled.violations
-    fail = None
-    if gate_fast and not any(_has_custom(n) for n in normalize_rules(rules)):
-        fail = F.coalesce(row_fail, F.lit(False))
-        viols = F.when(fail, viols).otherwise(_empty_viols())
-    annotated = df.withColumn(VIOLATIONS_COL, viols).withColumn(
+    if not gate_fast or any(_has_custom(n) for n in normalize_rules(rules)):
+        return compiled, None
+    fail = F.coalesce(row_fail, F.lit(False))
+    viols = F.when(fail, compiled.violations).otherwise(_empty_viols())
+    return replace(compiled, violations=viols), fail
+
+
+def _result(
+    df: DataFrame,
+    compiled: Compiled,
+    id_cols: Optional[Sequence[str]],
+    fail: Optional[Column] = None,
+    value_col: Optional[str] = None,
+) -> ValidationResult:
+    """*df* annotated with ``compiled.violations`` and their first error.
+    The id columns default to the first column other than *value_col*.  An
+    input column named like an annotation drops *fail*: the predicate would
+    read the replaced column."""
+    annotated = df.withColumn(VIOLATIONS_COL, compiled.violations).withColumn(
         FIRST_ERROR_COL, F.try_element_at(F.col(VIOLATIONS_COL), F.lit(1))
     )
     if {VIOLATIONS_COL, FIRST_ERROR_COL} & set(df.columns):
-        fail = None  # the predicate would read the replaced input column
+        fail = None
+    ids = list(id_cols or [next((c for c in df.columns if c != value_col), value_col)])
     return ValidationResult(annotated=annotated, compiled=compiled, id_cols=ids, fail=fail)
 
 
@@ -190,7 +221,6 @@ def validate_zipped(
     rulesets: Sequence[Any],
     ruleset_id_col: str = "ruleset_id",
     *,
-    mode: str = "soft",
     parent_key: bool = True,
     id_cols: Optional[Sequence[str]] = None,
     gate_fast: bool = True,
@@ -207,31 +237,15 @@ def validate_zipped(
     ``0..len(rulesets)-1`` get a config-error violation (the reference
     would crash on a length mismatch).
 
-    Output columns are the union of all rule-sets' outputs; a row populates
-    only its own rule-set's keys (others NULL), with conflicting Spark
-    types across rule-sets rejected at compile time."""
-    from pyspark.sql import types as TT
-
-    from .compiler import OutCol, _entry_array, _viol_struct
-    from .spec import SpecError
-
+    Output columns are the union of all rule-sets' outputs, merged by
+    :func:`evalidate_spark.compiler._merge_outputs` with each rule-set's
+    outputs guarded by its dispatch: a row populates only its own
+    rule-set's keys (others NULL), and conflicting Spark types across
+    rule-sets are rejected at compile time."""
     _require_ansi(df)
-    opts = Options(mode=mode, parent_key=parent_key)
+    opts = Options(parent_key=parent_key)
     rid = F.col("`%s`" % ruleset_id_col)
-    # per-ruleset fast gating (same trick as validate()): passing rows —
-    # the vast majority — evaluate only the fail half of their own
-    # rule-set's compile and skip message/struct construction
-    compiled, viol_cols = [], []
-    for rs in rulesets:
-        c, fail = _compile(rs, df.schema, opts)
-        compiled.append(c)
-        if gate_fast and not any(_has_custom(n) for n in normalize_rules(rs)):
-            viol_cols.append(
-                F.when(F.coalesce(fail, F.lit(False)), c.violations).otherwise(_empty_viols())
-            )
-        else:
-            viol_cols.append(c.violations)
-    bad_id = _entry_array(
+    viols = _entry_array(
         F.when(
             rid.isNull() | (rid < 0) | (rid >= len(rulesets)),
             _viol_struct(
@@ -246,50 +260,19 @@ def validate_zipped(
             ),
         )
     )
-    chain = None
-    for i, vc in enumerate(viol_cols):
-        chain = F.when(rid == i, vc) if chain is None else chain.when(rid == i, vc)
-    viols = chain.otherwise(bad_id) if chain is not None else bad_id
-
-    # union of outputs, each guarded by its rule-set winning the dispatch
-    names: List[str] = []
-    for c in compiled:
-        for o in c.outputs:
-            if o.name not in names:
-                names.append(o.name)
-    merged: List[OutCol] = []
-    for name in names:
-        dts = {
-            o.dtype.simpleString()
-            for c in compiled
-            for o in c.outputs
-            if o.name == name and not isinstance(o.dtype, TT.NullType)
-        }
-        if len(dts) > 1:
-            raise SpecError(
-                "conflicting output types for key '%s' across rule-sets: %s"
-                % (name, sorted(dts))
-            )
-        expr = F.lit(None)
-        present = F.lit(False)
-        dtype: Any = TT.NullType()
-        for i, c in enumerate(compiled):
-            match = [o for o in c.outputs if o.name == name]
-            if not match:
-                continue
-            o = match[0]
-            dtype = o.dtype if not isinstance(o.dtype, TT.NullType) else dtype
-            emitted = (rid == i) if o.present is None else ((rid == i) & o.present)
-            expr = F.when(emitted, o.col).otherwise(expr)
-            present = present | emitted
-        merged.append(OutCol(name, expr, dtype, present))
-
-    annotated = df.withColumn(VIOLATIONS_COL, viols).withColumn(
-        FIRST_ERROR_COL, F.try_element_at(F.col(VIOLATIONS_COL), F.lit(1))
-    )
-    comp = Compiled(violations=viols, outputs=merged, opts=opts)
-    ids = list(id_cols) if id_cols else [df.schema.fields[0].name]
-    return ValidationResult(annotated=annotated, compiled=comp, id_cols=ids)
+    dispatch = None
+    branches: List[Tuple[Optional[Column], OutCol]] = []
+    for i, rs in enumerate(rulesets):
+        # per-ruleset fast gating (same trick as validate()): passing rows —
+        # the vast majority — evaluate only the fail half of their own
+        # rule-set's compile and skip message/struct construction
+        compiled, _ = _gated(df, rs, opts, gate_fast)
+        vc = compiled.violations
+        dispatch = F.when(rid == i, vc) if dispatch is None else dispatch.when(rid == i, vc)
+        branches.extend((rid == i, o) for o in compiled.outputs)
+    if dispatch is not None:
+        viols = dispatch.otherwise(viols)
+    return _result(df, Compiled(violations=viols, outputs=_merge_outputs(branches)), id_cols)
 
 
 def validate_and_convert(df: DataFrame, rules: Any, **kw: Any) -> DataFrame:

@@ -1059,9 +1059,10 @@ def ivf_topk_partitioned(
     The union of all probes' cells (a tiny driver-side set — probes are a
     probe *set*) becomes a partition-pruning filter, so only the probed
     cells' files are scanned; scoring then joins each probe to its own
-    cells only, exactly like :func:`ivf_topk` (same NULL/length contract)."""
+    cells only, exactly like :func:`ivf_topk` (same NULL/length/finite
+    contract: a probe with a NULL/NaN/±Inf element is not scored)."""
     probes = probes.filter(
-        F.col("`%s`" % probe_id_col).isNotNull() & F.col("`%s`" % vec_col).isNotNull()
+        F.col("`%s`" % probe_id_col).isNotNull() & _finite_vec(F.col("`%s`" % vec_col))
     )
     probe_cells = ivf_probe_cells(probes, centroids, nprobe, vec_col, probe_id_col)
     cells = sorted(

@@ -32,21 +32,22 @@ from . import errors as E
 from . import oracle as O
 from .compiler import (
     Compiled,
-    Options,
     OutCol,
     Scope,
     _compile_converter,
     _compile_validators,
     _empty_viols,
     _entry_array,
+    _merge_outputs,
     _render_on_error,
+    _rule_or_outcome,
     _Seq,
     _viol_struct,
     c_maybe_cut,
     c_ts_repr,
     c_unscriptize,
 )
-from .engine import ValidationError, ValidationResult
+from .engine import ValidationError, ValidationResult, _result
 from .spec import Rule, RuleAnd, RuleOr, SpecError, normalize_rules
 
 
@@ -188,39 +189,10 @@ def _compile_value_node(
     if isinstance(node, RuleOr):
         s = seq.next()
         parts = [_compile_value_node(r, col, dt, seq) for r in node.rules]
-        fails = [F.size(p[0]) > 0 for p in parts]
-        all_fail = F.lit(True)
-        wins: List[Column] = []
-        prior_fail: Column = F.lit(True)
-        for f_ in fails:
-            wins.append(prior_fail & ~f_)
-            prior_fail = prior_fail & f_
-        all_fail = prior_fail
-        if node.on_error is not None:
-            message: Column = F.lit(node.on_error)
-        else:
-            first_msgs = [
-                F.try_element_at(p[0], F.lit(1)).getField("message") for p in parts
-            ]
-            message = F.array_join(
-                F.array_distinct(F.reverse(F.array(*first_msgs))), " or "
-            )
-        entry = _entry_array(
-            F.when(all_fail, _viol_struct(s, "rule_or", F.lit("none"), message, None))
-        )
-        dts = {p[2].simpleString() for p in parts if not isinstance(p[2], T.NullType)}
-        if len(dts) > 1:
-            raise SpecError(
-                "rule_or alternatives produce conflicting value types: %s" % sorted(dts)
-            )
-        out: Column = F.lit(None)
-        for win, p in zip(wins, parts):
-            out = F.when(win, p[1]).otherwise(out)
-        out_dt = next(
-            (p[2] for p in parts if not isinstance(p[2], T.NullType)),
-            parts[-1][2] if parts else dt,
-        )
-        return entry, out, out_dt
+        wins, entry = _rule_or_outcome(node, [p[0] for p in parts], s, F.lit("none"), None)
+        outs = _merge_outputs([(w, OutCol("none", p[1], p[2])) for w, p in zip(wins, parts)])
+        out = outs[0] if outs else OutCol("none", F.lit(None), dt)
+        return entry, out.col, out.dtype
     raise SpecError("Unknown rule(s) '%r'" % (node,))
 
 
@@ -251,17 +223,10 @@ def validate_values(
         v, out, out_dt = _compile_value_node(node, col, dt, seq)
         arrays.append(v)
     viols = F.concat(*arrays) if arrays else _empty_viols()
-    annotated = df.withColumn("violations", viols).withColumn(
-        "first_error", F.try_element_at(F.col("violations"), F.lit(1))
-    )
     outputs = (
         [] if isinstance(out_dt, T.NullType) else [OutCol(value_col, out, out_dt)]
     )
-    compiled = Compiled(violations=viols, outputs=outputs, opts=Options())
-    ids = list(id_cols) if id_cols else []
-    if not ids:
-        ids = [f.name for f in df.schema.fields if f.name != value_col][:1] or [value_col]
-    return ValidationResult(annotated=annotated, compiled=compiled, id_cols=ids)
+    return _result(df, Compiled(violations=viols, outputs=outputs), id_cols, value_col=value_col)
 
 
 def _infer_dtype(value: Any) -> T.DataType:

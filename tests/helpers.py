@@ -9,7 +9,8 @@ Runs the Spark engine and the pure-Python oracle on the same rows and asserts:
   ``/root/reference/src/evalidate.erl:211-212``), and where the reference
   throws a structured payload the key path matches too.
 
-Rows are keyed by a synthetic ``__idx`` column so matching is exact.
+Rows are keyed by a synthetic ``__idx`` column so matching is exact, and
+no struct in the ``clean`` schema may repeat a field name.
 
 Also :func:`py4j_round_trips`, a count of the commands a block sends to the
 JVM.
@@ -88,9 +89,30 @@ def run_parity(spark, rules: Any, rows: List[dict], schema: str, parent_key: boo
     return res, ann, clean
 
 
+def repeated_fields(dt: Any) -> List[str]:
+    """Field names that a struct anywhere inside *dt* repeats.  ``Row.asDict``
+    keeps only the last of a repeated name, so the value comparison alone
+    cannot see them."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        names = [f.name for f in dt.fields]
+        out = sorted({n for n in names if names.count(n) > 1})
+        return out + [n for f in dt.fields for n in repeated_fields(f.dataType)]
+    if isinstance(dt, T.ArrayType):
+        return repeated_fields(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return repeated_fields(dt.keyType) + repeated_fields(dt.valueType)
+    return []
+
+
 def assert_parity(spark, rules: Any, rows: List[dict], schema: str, parent_key: bool = True):
     res, ann, clean = run_parity(spark, rules, rows, schema, parent_key)
     outs = {o.name for o in res.compiled.outputs}
+    repeated = repeated_fields(res.clean.schema)
+    assert not repeated, (
+        f"clean repeats struct fields {repeated}: {res.clean.schema.simpleString()}"
+    )
     for i, row in enumerate(rows):
         expect_err = O.first_error(rules, dict(row), parent_key=parent_key)
         srow = ann[i]

@@ -1,6 +1,10 @@
 """rule_and / rule_or combinators (suite :820-936, :1665-1701) and childs
-nesting incl. the spans-array pattern (suite :941-1279, :1869-1939)."""
+nesting incl. the spans-array pattern (suite :941-1279, :1869-1939), and
+same-named outputs at every depth: the last emitted pair wins."""
 
+import pytest
+
+from evalidate_spark import validate
 from evalidate_spark.spec import (
     Allowed,
     Default,
@@ -9,9 +13,10 @@ from evalidate_spark.spec import (
     RuleAnd,
     RuleOr,
     Size,
+    SpecError,
     Type,
 )
-from helpers import assert_parity, run_parity
+from helpers import assert_parity, repeated_fields, run_parity
 
 
 def test_rule_and_group(spark):
@@ -162,3 +167,46 @@ def test_wrong_childs(spark):
     rules = [Rule(key="k", childs=[Rule(key="nk")])]
     res, ann, clean = run_parity(spark, rules, [{"k": "scalar"}], "k string")
     assert ann[0]["first_error"]["message"] == "Wrong childs for key 'k'"
+
+
+def test_rule_or_alternative_repeats_a_key(spark):
+    # the winning alternative's pairs are a proplist too: its last pair wins
+    rules = [
+        RuleOr([
+            RuleAnd([Rule(key="a", converter="lowercase"), Rule(key="a", validators=[Size(1, 2)])]),
+            RuleAnd([Rule(key="a", converter="lowercase"), Rule(key="a")]),
+        ])
+    ]
+    rows = [{"a": "X"}, {"a": "XYZ"}]
+    assert_parity(spark, rules, rows, "a string")
+    res, ann, clean = run_parity(spark, rules, rows, "a string")
+    assert [clean[i]["a"] for i in (0, 1)] == ["X", "XYZ"]
+
+
+@pytest.mark.parametrize(
+    "schema, value, want_type, want",
+    [
+        ("s struct<a string>", {"a": "X"}, "struct<a:string>", {"a": "X"}),
+        ("s array<struct<a string>>", [{"a": "X"}], "array<struct<a:string>>", [{"a": "X"}]),
+    ],
+    ids=["struct", "elements"],
+)
+def test_childs_repeat_a_converted_key(spark, schema, value, want_type, want):
+    rules = [Rule(key="s", childs=[Rule(key="a", converter="lowercase"), Rule(key="a")])]
+    res, ann, clean = run_parity(spark, rules, [{"s": value}], schema)
+    assert res.clean.schema["s"].dataType.simpleString() == want_type
+    assert not repeated_fields(res.clean.schema)
+    got = clean[0]["s"]
+    got = [e.asDict() for e in got] if isinstance(got, list) else got.asDict()
+    assert got == want
+    assert_parity(spark, rules, [{"s": value}], schema)
+
+
+def test_rule_or_conflicting_output_types_rejected(spark):
+    # the same rules at top level or in two zipped rule-sets raise too
+    df = spark.createDataFrame([("X",)], "a string")
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(None)
+    with pytest.raises(SpecError, match="conflicting output types for key 'a'"):
+        validate(df, [RuleOr([Rule(key="a", converter="to_int"), Rule(key="a")])])
+    assert tracker.getJobIdsForGroup(None) == jobs

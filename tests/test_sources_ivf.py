@@ -135,6 +135,31 @@ class TestIvfPartitioned:
         firsts = {r["query_id"]: r["neighbor_id"] for r in got.collect() if r["rank"] == 1}
         assert firsts == {0: 0, 1: 1, 2: 2}
 
+    def test_non_finite_probe_is_not_scored(self, spark, tmp_path):
+        """Like ivf_topk, a probe holding a NaN or an infinity is dropped:
+        Spark sorts a NaN cosine greatest, so it would rank engine-divergently."""
+        rng = np.random.default_rng(7)
+        vecs = rng.standard_normal((40, 4))
+        corpus = spark.createDataFrame(
+            [(int(i), [float(v) for v in vecs[i]]) for i in range(40)],
+            "vec_id long, embedding array<double>",
+        )
+        probes = spark.createDataFrame(
+            [
+                (1, [float(v) for v in vecs[1]]),
+                (100, [float("nan"), 0.0, 1.0, 0.0]),
+                (101, [float("inf"), 0.0, 1.0, 0.0]),
+            ],
+            "query_id long, embedding array<double>",
+        )
+        path = str(tmp_path / "ivf")
+        cents = similarity.ivf_write(corpus, path, n_centroids=4, sample_n=40, seed=5)
+        got = similarity.ivf_topk_partitioned(spark, path, cents, probes, k=3, nprobe=4)
+        rows = got.collect()
+        assert {r["query_id"] for r in rows} == {1}
+        want = similarity.ivf_topk(corpus, probes, k=3, n_centroids=4, nprobe=4, sample_n=40, seed=5)
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))
+
 
 def test_zorder_write_clusters_both_dimensions(spark, tmp_path):
     """After write_zordered on (x, y), each output file covers a small
