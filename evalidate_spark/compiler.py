@@ -634,12 +634,13 @@ def _compile_converter(
     if isinstance(conv, Each):
         if not isinstance(dt, T.ArrayType):
             return ConvResult(col, dt, fail=col.isNotNull())
+        escope = replace(scope, in_element=True)  # the elements convert in a lambda
         inner = _compile_converter(
-            conv.conv, F.lit(None), dt.elementType, scope
+            conv.conv, F.lit(None), dt.elementType, escope
         )  # probe for dtype only
 
         def apply_elem(e: Column) -> Column:
-            return _compile_converter(conv.conv, e, dt.elementType, scope).out
+            return _compile_converter(conv.conv, e, dt.elementType, escope).out
 
         out = F.transform(col, apply_elem)
         fail = F.exists(
@@ -647,6 +648,11 @@ def _compile_converter(
         ) if inner.fail is not None else None
         return ConvResult(out, T.ArrayType(inner.out_dtype), fail=fail)
     if isinstance(conv, CustomConverter):
+        if scope.in_element:
+            raise SpecError(
+                "custom converters inside array-element rules are not "
+                "supported; lift the conversion to an array-level custom converter"
+            )
         return _custom_converter(conv, col, dt, scope)
     raise SpecError("Wrong converter")
 
@@ -964,15 +970,18 @@ def _merge_outputs(branches: Sequence[Tuple[Optional[Column], OutCol]]) -> List[
     branches in emission order (a None guard always holds).  The
     reference's output is a proplist read as ``dict(pairs)`` at every
     depth: per row, the LAST branch that emitted a pair for the key wins,
-    and keys keep their first position.  A key emitted once, unguarded,
-    keeps its OutCol.  Conflicting Spark types cannot share one typed
-    column — a config error (documented divergence from the untyped
-    reference)."""
+    and keys keep their first position.  A branch that always emits
+    shadows every earlier one, and a key left with one such branch keeps
+    its OutCol.  Conflicting Spark types of the branches left cannot share
+    one typed column — a config error (documented divergence from the
+    untyped reference)."""
     groups: dict = {}
     for guard, o in branches:
         groups.setdefault(o.name, []).append((guard, o))
     merged: List[OutCol] = []
     for name, occ in groups.items():
+        last = [i for i, (guard, o) in enumerate(occ) if guard is None and o.present is None]
+        occ = occ[last[-1]:] if last else occ
         if len(occ) == 1 and occ[0][0] is None:
             merged.append(occ[0][1])
             continue

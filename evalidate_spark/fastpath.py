@@ -35,9 +35,12 @@ predicate and the verdict roll-up's partial aggregate run as one generated
 stage.  ``exists`` is a higher-order function that codegen leaves to the
 interpreter, so it is kept for what has no built-in form:
 
-- ``required`` / ``deprecated`` on an atomic subfield: a NULL element is
-  ``array_intersect(sub, [NULL])``, a non-NULL one ``array_except(sub,
-  [NULL])``;
+- ``required`` / ``deprecated`` on an atomic subfield, as linear scans
+  with no per-row hash set: a NULL element is ``array_contains(sub,
+  probe)`` returning NULL, with a probe value real data rarely holds (the
+  NUL string, an integral type's minimum; a row that holds it, and a type
+  with none, take ``array_intersect(sub, [NULL])``); a non-NULL one is
+  ``array_max(sub) IS NOT NULL``;
 - ``Allowed`` of at most ``_SET_FORM_MAX_VALUES`` strings on a string
   subfield: ``array_except(sub, [vals…, NULL])``;
 - ``Size`` on a numeric subfield: ``array_min`` / ``array_max`` against the
@@ -197,9 +200,35 @@ def _null_of(dt: T.DataType) -> Column:
     return F.lit(None).cast(dt)
 
 
+# per element type, a probe value real data rarely holds: the NUL string,
+# the minimum of each integral type
+_PROBES = {
+    T.StringType: "\u0000",
+    T.ByteType: -(2 ** 7), T.ShortType: -(2 ** 15),
+    T.IntegerType: -(2 ** 31), T.LongType: -(2 ** 63),
+}
+
+
 def _has_null(sub: Column, fdt: T.DataType) -> Column:
-    """Some element of the subfield array *sub* is NULL."""
-    return F.size(F.array_intersect(sub, F.array(_null_of(fdt)))) > 0
+    """Some element of the subfield array *sub* is NULL (NULL for a NULL
+    *sub*).  ``array_contains(sub, probe)`` is a linear scan that allocates
+    nothing: False means no NULL, NULL means a NULL but not the probe.  A
+    row with neither scans once; only a row that holds the probe value, or
+    a type with no probe, pays for the hash set of ``array_intersect(sub,
+    [NULL])``."""
+    in_set = F.size(F.array_intersect(sub, F.array(_null_of(fdt)))) > 0
+    probe = _PROBES.get(type(fdt))
+    if probe is None:
+        return in_set
+    hit = F.array_contains(sub, F.lit(probe).cast(fdt))
+    return F.when(~hit, F.lit(False)).when(hit, in_set).when(sub.isNotNull(), F.lit(True))
+
+
+def _has_value(sub: Column) -> Column:
+    """Some element of the subfield array *sub* is not NULL (NULL for a NULL
+    *sub*): ``array_max`` skips NULLs, and every ``_SET_TYPES`` type is
+    orderable."""
+    return F.when(sub.isNotNull(), F.array_max(sub).isNotNull())
 
 
 def _has_other(sub: Column, vals: Sequence[Any], fdt: T.DataType) -> Column:
@@ -281,7 +310,7 @@ def _element_rules_fail(
             fails.append(_has_null(sub, fdt) if atomic else F.exists(sub, lambda e: e.isNull()))
         elif c.presence == DEPRECATED:
             fails.append(
-                _has_other(sub, (), fdt) if atomic else F.exists(sub, lambda e: e.isNotNull())
+                _has_value(sub) if atomic else F.exists(sub, lambda e: e.isNotNull())
             )
             continue
         rest = []

@@ -88,9 +88,9 @@ def _null_probe(rule: Rule) -> Tuple[Optional[str], Optional[str], bool]:
 
 def _compile_value_rule(
     rule: Rule, col: Column, dt: T.DataType, seq: _Seq
-) -> Tuple[Column, Column, T.DataType]:
-    """One keyless rule over a value column → (violations array, converted
-    output, output dtype).  Order: validators → convert
+) -> Tuple[Column, List[OutCol]]:
+    """One keyless rule over a value column → (violations array, its
+    ``none`` output: none for ``no_return``).  Order: validators → convert
     (``/root/reference/src/evalidate.erl:97-98,157-206``)."""
     if rule.key is not None:
         raise SpecError(
@@ -133,11 +133,9 @@ def _compile_value_rule(
         )
 
     # ---- converter (crash → "Couldn't convert … for key 'none' ")
-    out: Column = col
-    out_dt: T.DataType = dt
+    outs = [OutCol("none", col, dt)]
     if rule.converter == "no_return":
-        out = F.lit(None)
-        out_dt = T.NullType()
+        outs = []
     elif rule.converter is not None:
         cres = _compile_converter(rule.converter, col, dt, scope)
         conv_msg = F.concat(
@@ -164,14 +162,16 @@ def _compile_value_rule(
                     )
                 )
             )
-        out, out_dt = cres.out, cres.out_dtype
+        outs = [OutCol("none", cres.out, cres.out_dtype)]
     viols = F.concat(*entries) if entries else _empty_viols()
-    return viols, out, out_dt
+    return viols, outs
 
 
 def _compile_value_node(
     node: Any, col: Column, dt: T.DataType, seq: _Seq
-) -> Tuple[Column, Column, T.DataType]:
+) -> Tuple[Column, List[OutCol]]:
+    """One keyless node → (violations array, its ``none`` output merged by
+    :func:`_merge_outputs`: empty when no part of it emits a pair)."""
     if isinstance(node, Rule):
         return _compile_value_rule(node, col, dt, seq)
     if isinstance(node, RuleAnd):
@@ -184,15 +184,12 @@ def _compile_value_node(
                 _viol_struct(s, "rule_and", F.lit("none"), F.lit(node.on_error), None),
             )
             combined = _entry_array(entry)
-        out, out_dt = (parts[-1][1], parts[-1][2]) if parts else (col, dt)
-        return combined, out, out_dt
+        return combined, _merge_outputs([(None, o) for p in parts for o in p[1]])
     if isinstance(node, RuleOr):
         s = seq.next()
         parts = [_compile_value_node(r, col, dt, seq) for r in node.rules]
         wins, entry = _rule_or_outcome(node, [p[0] for p in parts], s, F.lit("none"), None)
-        outs = _merge_outputs([(w, OutCol("none", p[1], p[2])) for w, p in zip(wins, parts)])
-        out = outs[0] if outs else OutCol("none", F.lit(None), dt)
-        return entry, out.col, out.dtype
+        return entry, _merge_outputs([(w, o) for w, p in zip(wins, parts) for o in p[1]])
     raise SpecError("Unknown rule(s) '%r'" % (node,))
 
 
@@ -209,23 +206,20 @@ def validate_values(
     With MULTIPLE top-level rules every rule's validators and converter-
     fail conditions contribute violations (each rule sees the ORIGINAL
     value, like the reference's ``rules/3`` mapping each rule over the same
-    data), but the converted OUTPUT is the last rule's — the proplist
-    ``dict(pairs)`` overwrite the oracle applies to duplicate ``none`` keys
-    (asserted engine ≡ oracle in tests)."""
+    data), and the converted OUTPUT is the last EMITTED one — the proplist
+    ``dict(pairs)`` overwrite the oracle applies to duplicate ``none`` keys,
+    so a trailing ``no_return`` keeps the output before it (asserted
+    engine ≡ oracle in tests)."""
     nodes = normalize_rules(rules)
     col = F.col("`%s`" % value_col)
     dt = df.schema[value_col].dataType
     seq = _Seq()
-    arrays: List[Column] = []
-    out: Column = col
-    out_dt: T.DataType = dt
-    for node in nodes:
-        v, out, out_dt = _compile_value_node(node, col, dt, seq)
-        arrays.append(v)
-    viols = F.concat(*arrays) if arrays else _empty_viols()
-    outputs = (
-        [] if isinstance(out_dt, T.NullType) else [OutCol(value_col, out, out_dt)]
-    )
+    parts = [_compile_value_node(node, col, dt, seq) for node in nodes]
+    viols = F.concat(*[p[0] for p in parts]) if parts else _empty_viols()
+    outputs = [
+        OutCol(value_col, o.col, o.dtype, o.present)
+        for o in _merge_outputs([(None, o) for p in parts for o in p[1]])
+    ]
     return _result(df, Compiled(violations=viols, outputs=outputs), id_cols, value_col=value_col)
 
 

@@ -202,8 +202,18 @@ def test_childs_repeat_a_converted_key(spark, schema, value, want_type, want):
     assert_parity(spark, rules, [{"s": value}], schema)
 
 
+def test_shadowed_output_type_is_no_conflict(spark):
+    # a later rule that always emits the key shadows the earlier one, so
+    # its type is the output's: the oracle's last pair wins
+    rules = [Rule(key="a", converter="to_int"), Rule(key="a")]
+    res, ann, clean = run_parity(spark, rules, [{"a": "7"}, {"a": "X"}], "a string")
+    assert res.clean.schema["a"].dataType.simpleString() == "string"
+    assert_parity(spark, rules, [{"a": "7"}, {"a": "X"}], "a string")
+
+
 def test_rule_or_conflicting_output_types_rejected(spark):
-    # the same rules at top level or in two zipped rule-sets raise too
+    # the same rules in two zipped rule-sets raise too; at top level the
+    # later rule shadows the earlier (test above)
     df = spark.createDataFrame([("X",)], "a string")
     tracker = spark.sparkContext.statusTracker()
     jobs = tracker.getJobIdsForGroup(None)

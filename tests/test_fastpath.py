@@ -120,8 +120,10 @@ class TestFastPath:
         res.collect()  # the final (adaptive) plan carries the codegen stage ids
         plan = res._jdf.queryExecution().executedPlan().toString()
         assert "lambdafunction" not in plan, plan
-        pred = re.search(r"(\*\(\d+\) )?Project \[SPARK_PARTITION_ID\(\)", plan)
+        pred = re.search(r"(\*\(\d+\) )?Project \[SPARK_PARTITION_ID\(\).*", plan)
         assert pred and pred.group(1), plan
+        # required finds NULL elements with linear array_contains scans
+        assert "array_contains(" in pred.group(0), plan
         stage = pred.group(1)
         assert stage + "ColumnarToRow" in plan and stage + "HashAggregate" in plan, plan
         assert re.findall(r"ReadSchema: (\S+)", plan)[0] == (
@@ -442,6 +444,12 @@ _VECTOR_ROWS = [
     ("s_regexp", [_it(s="Ab")]),
     ("s_allowed", [_it(s="zz")]),
     ("s_size", [_it(s="abcd")]),
+    # the presence probes' own values: the fallback set form decides
+    ("nul_kind", [_it(kind="\u0000")]),
+    ("nul_kind_null", [_it(kind="\u0000"), _it(kind=None)]),
+    ("min_n", [_it(n=-2 ** 31)]),
+    ("min_n_null", [_it(n=-2 ** 31), _it(n=None)]),
+    ("null_subfields", [_it(kind=None, n=None), _it(kind=None, n=None)]),
 ]
 
 
@@ -457,7 +465,15 @@ def _items_rule(*childs):
 _VECTOR_CASES = {
     "required_allowed2": (
         Rule(key="kind", presence="required", validators=[Type("binary"), Allowed(["a", "b"])]),
-        {"null_elems", "null_fields", "bad_kind"}, 0,
+        {"null_elems", "null_fields", "bad_kind", "nul_kind", "nul_kind_null", "null_subfields"}, 0,
+    ),
+    "required_string": (
+        Rule(key="kind", presence="required"),
+        {"null_elems", "null_fields", "nul_kind_null", "null_subfields"}, 0,
+    ),
+    "required_int": (
+        Rule(key="n", presence="required"),
+        {"null_elems", "null_fields", "min_n_null", "null_subfields"}, 0,
     ),
     "allowed_at_cut": (
         Rule(key="tag", presence="optional", validators=[_tags(_SET_FORM_MAX_VALUES)]),
@@ -468,12 +484,17 @@ _VECTOR_CASES = {
         {"bad_tag"}, 1,
     ),
     "mixed_allowed_fallback": (
-        Rule(key="n", presence="optional", validators=[Allowed([1, 2.5])]), {"bad_n"}, 1,
+        Rule(key="n", presence="optional", validators=[Allowed([1, 2.5])]),
+        {"bad_n", "min_n", "min_n_null"}, 1,
     ),
     "float_size": (
         Rule(key="x", presence="optional", validators=[Size(0, 10)]), {"nan", "inf", "ninf", "negative"}, 0,
     ),
     "deprecated": (Rule(key="gone", presence="deprecated"), {"gone"}, 0),
+    "deprecated_int": (
+        Rule(key="n", presence="deprecated"),
+        {d for d, items in _VECTOR_ROWS if any(it and it[2] is not None for it in items or ())}, 0,
+    ),
 }
 
 

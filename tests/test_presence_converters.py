@@ -1,11 +1,15 @@
 """Presence (suite :738-815) and converter (suite :646-733) parity tests."""
 
+import pytest
+
+from evalidate_spark import validate
 from evalidate_spark.spec import (
     CustomConverter,
     Default,
     Each,
     Rule,
     Size,
+    SpecError,
     Type,
 )
 from helpers import assert_parity, run_parity
@@ -121,6 +125,22 @@ def test_custom_converter_crash(spark):
     ]
     res, ann, clean = run_parity(spark, rules, [{"k": "x"}], "k string")
     assert ann[0]["first_error"]["message"] == "Couldn't convert value 'x' for key 'k' "
+
+
+@pytest.mark.parametrize("shape", ["element_child", "each"])
+def test_custom_converter_inside_elements_rejected(spark, shape):
+    # a pandas UDF cannot run inside the element lambda: a SpecError at
+    # compile time, worded like the custom-validator one, not Spark's
+    # LAMBDA_FUNCTION_WITH_PYTHON_UDF analysis error
+    upper = CustomConverter(lambda v: v.upper(), out_type="string")
+    if shape == "element_child":
+        rules = [Rule(key="s", childs=[Rule(key="k", converter=upper)])]
+        df = spark.createDataFrame([("d", [("a",)])], "id string, s array<struct<k:string>>")
+    else:
+        rules = [Rule(key="t", converter=Each(upper))]
+        df = spark.createDataFrame([("d", ["a"])], "id string, t array<string>")
+    with pytest.raises(SpecError, match="custom converters inside array-element rules"):
+        validate(df, rules)
 
 
 def test_multiple_keys(spark):

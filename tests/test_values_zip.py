@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from evalidate_spark import (
     Each,
     Rule,
+    RuleAnd,
     RuleOr,
     Size,
     SpecError,
@@ -112,6 +113,13 @@ class TestSingleValue:
         assert res[1]["message"] == (
             expect["message"] if isinstance(expect, dict) else expect
         )
+
+    @pytest.mark.parametrize("shape", ["top_level", "rule_and"])
+    def test_trailing_no_return_keeps_last_emitted_output(self, spark, shape):
+        # a no_return part emits no pair, so the output before it stands
+        parts = [Rule(converter="to_int"), Rule(converter="no_return")]
+        rules = parts if shape == "top_level" else RuleAnd(rules=parts)
+        assert validate_value(spark, rules, "5") == O.validate_and_convert(rules, "5")[None] == 5
 
     def test_column_of_values(self, spark):
         df = spark.createDataFrame(
